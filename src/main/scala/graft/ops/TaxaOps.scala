@@ -27,29 +27,23 @@ object TaxaOps {
   def taxaRows(reports: DataFrame, rank: String): DataFrame =
     reports.filter(!col(TaxId).isin(TotalTaxIds: _*) && col(Rank) === rank)
 
-  /** Per-(sample, taxID) stats carried to tophits, with e_val =
-    * (kmers/reads)·cov (F1, `bigbugdata.py:268–284`). The reference
-    * overwrites on duplicate rows (dict assignment ⇒ last row wins); we
-    * reproduce that with max_by over the file-order row id. reads = 0
-    * would crash the reference with ZeroDivisionError — we yield null and
-    * keep going (documented divergence, SURVEY §7.4).
+  /** A2 and F1 in one `(taxID, sample)` aggregate: summed `reads`
+    * (duplicate rows accumulate, `+=`, `bigbugdata.py:300–302`) and the
+    * `stats` struct carried to tophits, with e_val = (kmers/reads)·cov
+    * (`bigbugdata.py:268–284`). The reference overwrites stats on
+    * duplicate rows (dict assignment ⇒ last row wins); we reproduce that
+    * with max_by over the file-order row id. reads = 0 would crash the
+    * reference with ZeroDivisionError — we yield null and keep going
+    * (documented divergence, SURVEY §7.4).
     */
-  def sampleOrganismStats(taxa: DataFrame): DataFrame =
-    taxa
-      .withColumn("e_val",
-        when(col(Reads) =!= 0, (col(Kmers).cast("double") / col(Reads)) * col(Cov)))
-      .groupBy(col(Sample), col(TaxId))
-      .agg(
-        max_by(struct(col(Kmers), col(Dup), col(Reads), col(Cov), col("e_val")),
-          col(OrderKey)).as("s"))
-      .select(col(Sample), col(TaxId), col("s.kmers"), col("s.dup"),
-        col("s.reads"), col("s.cov"), col("s.e_val"))
-
-  /** A2 (long form): per-(taxID, sample) summed reads; duplicate rows
-    * accumulate (`+=`, `bigbugdata.py:300–302`). */
-  def longCounts(taxa: DataFrame): DataFrame =
+  def cellCounts(taxa: DataFrame): DataFrame =
     taxa.groupBy(col(TaxId), col(Sample))
-      .agg(sum(col(Reads)).as(Reads))
+      .agg(
+        sum(col(Reads)).as(Reads),
+        max_by(struct(col(Kmers), col(Dup), col(Reads), col(Cov),
+          when(col(Reads) =!= 0,
+            (col(Kmers).cast("double") / col(Reads)) * col(Cov)).as("e_val")),
+          col(OrderKey)).as("stats"))
 
   /** Per-organism metadata: taxName = FIRST-seen value across the scan,
     * whitespace-trimmed (`bigbugdata.py:294–297` — ".strip()  # damn you
@@ -61,7 +55,8 @@ object TaxaOps {
         sum(col(Reads)).as("total_reads_organism"))
 
   /** Densify to the full organism × sample grid with 0-filled missing
-    * cells (`bigbugdata.py:289–291` pre-fills every sample with 0) — the
+    * reads (`bigbugdata.py:289–291` pre-fills every sample with 0; any
+    * other `counts` column stays null there) — the
     * dense grid is semantic: z-scores and rRPM run over zero cells too.
     * `samples` must be ALL batch samples (even ones with no taxa rows).
     */

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.schema.ReportSchema.{Sample, TaxId, TaxName}
 
-/** W1+J1: per-sample top-K by rRPM joined to per-cell stats
+/** W1+J1: per-sample top-K by rRPM with per-cell stats
   * (`bigbugdata.py:166–205`).
   */
 object TopHits {
@@ -14,35 +14,34 @@ object TopHits {
     * (`sorted(..., reverse=True)[0:n]`, `:178–181`) — Python's stable sort
     * over taxID-ascending input makes ties resolve taxID-ascending, which
     * `desc(rrpm), asc(taxID)` reproduces exactly. Rank ordinals are
-    * assigned BEFORE the inner stats join: a top-K cell with no stats
-    * (0-filled grid cell) is dropped but its ordinal stays consumed —
-    * rank gaps are part of the contract (`:183–188` + TODO comment).
-    */
-  /** @param native use the bounded-heap [[graft.plans.TopKPerKey]]
+    * assigned over every grid cell, and only then are cells without
+    * `stats` (0-filled grid cells, no report row) dropped: such a top-K
+    * cell consumes its ordinal — rank gaps are part of the contract
+    * (`:183–188` + TODO comment).
+    *
+    * @param grid the dense grid with `rrpm`, `z_score` and the per-cell
+    *   `stats` struct (kmers, dup, reads, cov, e_val)
+    * @param native use the bounded-heap [[graft.plans.TopKPerKey]]
     *   physical operator instead of the window formulation — identical
     *   output (PipelineSpec parity test), O(k) memory per sample instead
     *   of a full per-sample sort; the right choice when the organism
     *   universe (per-sample group size) is large. */
-  def tophits(rrpmGrid: DataFrame, stats: DataFrame, k: Int,
-      native: Boolean = false): DataFrame = {
-    val topk = (if (native) nativeTopK(rrpmGrid, k)
+  def tophits(grid: DataFrame, k: Int, native: Boolean = false): DataFrame =
+    (if (native) nativeTopK(grid, k)
       else {
         val w = Window.partitionBy(col(Sample))
           .orderBy(col("rrpm").desc, col(TaxId).asc)
-        rrpmGrid.withColumn("rank", row_number().over(w))
+        grid.withColumn("rank", row_number().over(w))
       })
       .filter(col("rank") <= k)
-      // stats carry the authoritative kmers/dup/reads/cov columns
-      .select(col(Sample), col(TaxId), col(TaxName), col("rank"), col("rrpm"))
-    topk.join(stats, Seq(Sample, TaxId), "inner")
+      .filter(col("stats").isNotNull)
       .select(col(Sample).as("sampleName"), col(TaxId), col(TaxName),
         col("rank"), col("rrpm").as("rRPM"),
-        col("kmers"), col("dup"), col("reads"), col("cov"),
-        col("e_val"), col("z_score"))
-  }
+        col("stats.kmers"), col("stats.dup"), col("stats.reads"),
+        col("stats.cov"), col("stats.e_val"), col("z_score"))
 
-  private def nativeTopK(rrpmGrid: DataFrame, k: Int): DataFrame =
-    graft.plans.TopKPerKey.of(rrpmGrid, Seq(Sample),
+  private def nativeTopK(grid: DataFrame, k: Int): DataFrame =
+    graft.plans.TopKPerKey.of(grid, Seq(Sample),
       Seq("rrpm" -> false, TaxId -> true), k)
       .withColumn("rank", col("rk").cast("int")).drop("rk")
 }

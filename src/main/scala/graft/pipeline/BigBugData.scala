@@ -18,8 +18,11 @@ import graft.schema.ReportSchema._
   *                                           the file list — never data)
   *
   * Shuffle boundaries land exactly where the math demands: groupBy
-  * (sample), groupBy (taxID, sample), window over taxID, window over
-  * sample, join on (sample, taxID).
+  * (sample) for the collected totals, groupBy (taxID) for the organism
+  * metadata, groupBy (taxID, sample) for reads and stats and its left
+  * join onto the organism × sample grid, one window over taxID (z-score
+  * and control rpm), one window over sample (tophits). One cached grid
+  * feeds all three outputs.
   */
 object BigBugData {
 
@@ -34,8 +37,8 @@ object BigBugData {
       nativeTopK: Boolean = false)
 
   final case class Outputs(
-      combined: DataFrame,   // long: taxID, taxName, total, sample, reads
-      rrpm: DataFrame,       // long: + rpm, rrpm
+      combined: DataFrame,   // long: taxID, sample, taxName, total, reads
+      rrpm: DataFrame,       // long: + total_reads, rpm, z_score, nc_*, rrpm
       tophits: DataFrame,    // sampleName, taxID, taxName, rank, rRPM, stats…
       orderedSamples: Seq[String])
 
@@ -45,37 +48,41 @@ object BigBugData {
     val sampleIds = samplePaths.map(_._1)
     val ordered = ReportReader.orderedSampleIds(sampleIds)
 
-    val reports = ReportReader.readReports(spark, samplePaths.map(_._2)).cache()
+    // cache only the columns the pipeline reads: the verbatim text twins
+    // stay out of the cache, and CSV column pruning skips pct/taxReads
+    val reports = ReportReader.readReports(spark, samplePaths.map(_._2))
+      .select(Sample, TaxId, Rank, TaxName, Reads, Kmers, Dup, Cov,
+        ReportReader.OrderKey)
+      .cache()
 
-    val totals = TaxaOps.sampleTotals(reports)
+    // one job collects the totals for both the trap-10 check and rpm
+    val totalsAgg = TaxaOps.sampleTotals(reports)
+    val totalRows = totalsAgg.collect()
     // fail loudly where the reference would KeyError (§7.4 trap 10)
-    val withTotals = totals.select(Sample).collect().map(_.getString(0)).toSet
-    val missingTotals = sampleIds.filterNot(withTotals)
+    val missingTotals = sampleIds.filterNot(totalRows.map(_.getString(0)).toSet)
     if (missingTotals.nonEmpty)
       throw new IllegalStateException(
         "No taxID 0/1 rows (cannot compute total reads) for sample(s): " +
           missingTotals.mkString(", "))
+    val totals = spark.createDataFrame(
+      java.util.Arrays.asList(totalRows: _*), totalsAgg.schema)
 
     val taxa = TaxaOps.taxaRows(reports, params.rank)
-    val counts = TaxaOps.longCounts(taxa)
-    val meta = TaxaOps.taxaMeta(taxa)
-    val grid = TaxaOps.denseGrid(spark, counts, meta, sampleIds)
-
-    val rpmGrid = Normalize.rpm(grid, totals)
-    val zGrid = Normalize.zscore(rpmGrid).cache()
+    val dense = TaxaOps.denseGrid(spark, TaxaOps.cellCounts(taxa),
+      TaxaOps.taxaMeta(taxa), sampleIds)
 
     val groups = NcGroups.resolve(sampleIds, params.groupPatterns)
     val sampleToNc = NcGroups.sampleToControl(sampleIds, groups)
-    // cached: the rrpm sink and the tophits window both consume this
-    val rrpmGrid = Normalize.rrpm(spark, zGrid, sampleToNc).cache()
+    // the one cached grid: all three outputs read it
+    val grid = Normalize.zscoreRrpm(spark, Normalize.rpm(dense, totals),
+      sampleToNc).cache()
 
-    val stats = TaxaOps.sampleOrganismStats(taxa)
-      .join(zGrid.select(col(Sample), col(TaxId), col("z_score")),
-        Seq(Sample, TaxId), "left")
-    val tops = TopHits.tophits(rrpmGrid, stats, params.nTophits,
-      native = params.nativeTopK)
-
-    Outputs(grid, rrpmGrid, tops, ordered)
+    Outputs(
+      grid.select(TaxId, Sample, TaxName, "total_reads_organism", Reads),
+      grid.select(Sample, TaxId, TaxName, "total_reads_organism", Reads,
+        "total_reads", "rpm", "z_score", "nc_sample", "nc_rpm", "rrpm"),
+      TopHits.tophits(grid, params.nTophits, native = params.nativeTopK),
+      ordered)
   }
 
   /** Pivot long → wide for the CSV contract: columns

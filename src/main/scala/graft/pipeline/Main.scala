@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI-equivalent of the reference's `bigbugdata` entry point
   * (`bigbugdata.py:369–429`):
   *
@@ -53,8 +51,7 @@ object Main {
     }
     require(reports.nonEmpty, "-r/--reports is required")
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
+    val spark = graft.SparkEnv.builder(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
       .appName("bigbugdata-spark")
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))

@@ -160,6 +160,121 @@ class PipelineSpec extends SparkSuite {
     assert(native == windowed && native.nonEmpty)
   }
 
+  test("output schemas: names, types and order stay fixed (the parquet " +
+      "sink writes these frames as they are)") {
+    def shape(df: org.apache.spark.sql.DataFrame) = df.schema.fields
+      .map(f => s"${f.name}:${f.dataType.simpleString}").mkString(", ")
+    val out = fixture._1
+    assert(shape(out.combined) == "taxID:bigint, sample:string, " +
+      "taxName:string, total_reads_organism:bigint, reads:bigint")
+    assert(shape(out.rrpm) == "sample:string, taxID:bigint, taxName:string, " +
+      "total_reads_organism:bigint, reads:bigint, total_reads:bigint, " +
+      "rpm:double, z_score:double, nc_sample:string, nc_rpm:double, rrpm:double")
+    assert(shape(out.tophits) == "sampleName:string, taxID:bigint, " +
+      "taxName:string, rank:int, rRPM:double, kmers:bigint, dup:double, " +
+      "reads:bigint, cov:double, e_val:double, z_score:double")
+  }
+
+  /** two groups with different controls; control A_NC has only taxID 0/1
+    * rows, so every cell of it is 0-filled */
+  private lazy val twoGroups: BigBugData.Outputs = {
+    val dir = Files.createTempDirectory("graft_two_groups")
+    val totals = (unclassified: Long, root: Long) => Seq(
+      s"40.0\t$unclassified\t$unclassified\t0\t0\t0\t0\tunclassified\tunclassified",
+      s"60.0\t$root\t$root\t100\t0\t0\t1\troot\troot")
+    val paths = Seq(
+      writeReport(dir, "A_NC_report.tsv", totals(400000, 600000)),
+      writeReport(dir, "A_1_report.tsv", totals(400000, 600000) ++ Seq(
+        "0.1\t7\t7\t70\t1.0\t0.5\t10\tspecies\tTen",
+        "0.1\t3\t3\t30\t1.0\t0.5\t20\tspecies\tTwenty")),
+      writeReport(dir, "B_NC_report.tsv", totals(800000, 1200000) ++ Seq(
+        "0.1\t9\t9\t90\t1.0\t0.5\t10\tspecies\tTen",
+        "0.1\t11\t11\t110\t1.0\t0.5\t20\tspecies\tTwenty")),
+      writeReport(dir, "B_1_report.tsv", totals(400000, 600000) ++ Seq(
+        "0.1\t9\t9\t90\t1.0\t0.5\t10\tspecies\tTen",
+        "0.1\t12\t12\t120\t1.0\t0.5\t20\tspecies\tTwenty")))
+    BigBugData.build(spark, BigBugData.Params(
+      reportPaths = paths,
+      resultsDir = Files.createTempDirectory("graft_two_groups_out").toString,
+      nTophits = 2,
+      groupPatterns = Seq(("A_NC", "A_"), ("B_NC", "B_"))))
+  }
+
+  test("rRPM: a control with only taxID 0/1 rows is all 0-filled, so " +
+      "every denominator of its group clamps to 1") {
+    val rows = twoGroups.rrpm.collect().toSeq
+    assert(rows.size == 8) // 2 taxa x 4 samples
+    for (s <- Seq("A_NC", "A_1"); t <- Seq(10L, 20L)) {
+      assert(cell(rows, t, s, "nc_sample") == "A_NC")
+      assert(cell(rows, t, s, "nc_rpm") == 0.0)
+    }
+    assert(cell(rows, 10, "A_1", "rrpm") == 7.0) // floor(7) over clamp 1
+    assert(cell(rows, 20, "A_1", "rrpm") == 3.0)
+    assert(cell(rows, 10, "A_NC", "rrpm") == 0.0)
+    assert(cell(rows, 20, "A_NC", "rrpm") == 0.0)
+  }
+
+  test("rRPM: two groups in one batch each divide by their own control") {
+    val rows = twoGroups.rrpm.collect().toSeq
+    // B_NC's total is 2e6: rpm 4.5 (taxID 10) and 5.5 (taxID 20)
+    assert(cell(rows, 10, "B_1", "nc_sample") == "B_NC")
+    assert(cell(rows, 10, "B_1", "nc_rpm") == 4.5)
+    assert(cell(rows, 20, "B_1", "nc_rpm") == 5.5)
+    assert(cell(rows, 10, "B_1", "rrpm") == 2.25) // floor(9) over floor(4.5)
+    assert(cell(rows, 20, "B_1", "rrpm") == 2.4)  // floor(12) over floor(5.5)
+    assert(cell(rows, 10, "B_NC", "rrpm") == 1.0) // floor(4.5) over itself
+    assert(cell(rows, 20, "B_NC", "rrpm") == 1.0)
+    val tops = twoGroups.tophits.collect()
+      .map(r => (r.getAs[String]("sampleName"), r.getAs[Long]("taxID"),
+        r.getAs[Int]("rank"), r.getAs[Double]("rRPM"))).toSet
+    assert(tops == Set(("A_1", 10L, 1, 7.0), ("A_1", 20L, 2, 3.0),
+      ("B_1", 20L, 1, 2.4), ("B_1", 10L, 2, 2.25),
+      ("B_NC", 10L, 1, 1.0), ("B_NC", 20L, 2, 1.0)))
+  }
+
+  test("plan shape: the pruned report cache feeds ONE cached grid that " +
+      "all three outputs read, and rrpm needs no self-join of the rpm grid") {
+    import org.apache.spark.sql.catalyst.expressions.Alias
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    // every physical node, including those inside adaptive plans and
+    // behind cached relations
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case s: InMemoryTableScanExec => nodes(s.relation.cacheBuilder.cachedPlan)
+      case _ => p.children.flatMap(nodes)
+    })
+    val out = fixture._1
+    val read = Seq(out.combined, out.rrpm, out.tophits).map(
+      _.queryExecution.withCachedData.collect { case r: InMemoryRelation => r.cacheBuilder })
+    assert(read.forall(_.size == 1), read.map(_.map(_.cachedName)))
+    assert(read.flatten.forall(_ eq read.head.head),
+      "combined, rrpm and tophits must read the same cached grid")
+
+    val rrpmNodes = nodes(out.rrpm.queryExecution.executedPlan)
+    val reportCache = rrpmNodes.collect { case s: InMemoryTableScanExec => s.relation }
+      .filter(_.output.exists(_.name == ReportReader.OrderKey))
+    assert(reportCache.nonEmpty, "the report scan must be cached")
+    reportCache.foreach { r =>
+      val names = r.output.map(_.name)
+      assert(!names.exists(n => n.startsWith(ReportReader.RawPrefix) ||
+        n == "pct" || n == "taxReads"), names)
+    }
+
+    def fromRpmGrid(side: SparkPlan): Boolean = nodes(side).exists(
+      _.expressions.exists(_.exists {
+        case a: Alias => a.name == "rpm"
+        case _ => false
+      }))
+    rrpmNodes.collect { case j: BaseJoinExec => j }.foreach { j =>
+      assert(!(fromRpmGrid(j.left) && fromRpmGrid(j.right)),
+        s"rrpm plan self-joins the rpm grid:\n$j")
+    }
+  }
+
   test("single-sample batch: zero stddev yields NaN z-score like scipy (trap 4)") {
     val dir = Files.createTempDirectory("graft_single")
     val p = writeReport(dir, "SOLO_1_report.tsv", Seq(

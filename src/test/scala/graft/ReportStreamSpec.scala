@@ -44,7 +44,7 @@ class ReportStreamSpec extends SparkSuite {
 
     // final streaming state == batch pipeline scan+aggregate on the same dir
     val paths = Seq("S1_r.tsv", "S2_r.tsv", "S3_r.tsv").map(n => s"$dir/$n")
-    val batch = graft.ops.TaxaOps.longCounts(graft.ops.TaxaOps.taxaRows(
+    val batch = graft.ops.TaxaOps.cellCounts(graft.ops.TaxaOps.taxaRows(
       graft.io.ReportReader.readReports(spark, paths), "species"))
       .collect()
       .map(r => (r.getAs[Long]("taxID"), r.getAs[String]("sample")) ->
