@@ -3,12 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Session bootstrap shared by the runnable drivers (Verify, Bench,
-  * StressPipeline) and the test session (SparkSuite): ONE place resolves
-  * the `SPARK_GRAFT_MASTER` override and ships `SPARK_GRAFT_JARS`, so
-  * the cross-executor gate (`local-cluster[2,16,4096]`, see
-  * CORRECTNESS_CLUSTER.md) always sees the same session shape from every
-  * entry point — a config added for the gate cannot be missed by one of
-  * the drivers.
+  * pipeline.Main, StressPipeline, BenchOne, Explain) and the test session
+  * (SparkSuite): ONE place resolves the `SPARK_GRAFT_MASTER` override
+  * and ships `SPARK_GRAFT_JARS`, so the cross-executor gate
+  * (`local-cluster[2,16,4096]`, see CORRECTNESS_CLUSTER.md) always sees
+  * the same session shape from every entry point — a config added for
+  * the gate cannot be missed by one of the drivers.
   */
 object SparkEnv {
   def builder(defaultMaster: String): SparkSession.Builder = {

@@ -19,13 +19,8 @@ object Extended {
     * carries the `__GRAFT_JSON_STAGE__` token, which Verify substitutes
     * with this same value at dump time. */
   def jsonStageDir(sfDir: String): String =
-    s"/root/repo/target/graft_json_src_${Integer.toHexString(sfDir.hashCode)}"
+    s"/root/repo/target/graft_json_src_${Staging.tag(sfDir)}"
   val JsonStageToken = "__GRAFT_JSON_STAGE__"
-
-  /** q65's landing-zone fixture memo: session → sfDirs already staged.
-    * Weak keys keep retired sessions collectable (E2E discipline). */
-  private val compactZones = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, java.util.Set[String]]())
 
   val queries: Seq[QueryDef] = Seq(
 
@@ -1029,25 +1024,17 @@ object Extended {
         // computes the same frame from the ORIGINAL table, so any row
         // lost, duplicated, or corrupted by the rewrite diverges it.
         // Staging is keyed to the SF dir (same discipline as q61).
-        val root = s"/root/repo/target/graft_compact_${
-          Integer.toHexString(dir.hashCode)}"
+        val root = s"/root/repo/target/graft_compact_${Staging.tag(dir)}"
         // The 64-small-file landing zone is FIXTURE, not the operator
-        // under test — write it once per (session, sfDir) (same
-        // memoization discipline as E2E.writeAndRead); the compaction
-        // rewrite itself still runs on every invocation.
-        val staged = Extended.compactZones.computeIfAbsent(s,
-          _ => java.util.Collections.synchronizedSet(
-            new java.util.HashSet[String]()))
-        if (!staged.contains(dir)
-            || !java.nio.file.Files.exists(
-              java.nio.file.Paths.get(s"$root/small"))) {
+        // under test — write it once per (session, sfDir); the
+        // compaction rewrite itself still runs on every invocation.
+        Staging.once(s, s"q65:$dir", dir, s"$root/small/_SUCCESS") {
           t(s, dir, "lineitem")
             .select(col("l_orderkey"), col("l_linenumber"),
               col("l_returnflag"), col("l_linestatus"),
               col("l_quantity"), col("l_extendedprice"), col("l_shipdate"))
             .repartition(64) // simulate the many-small-files landing zone
             .write.mode("overwrite").parquet(s"$root/small")
-          staged.add(dir)
         }
         graft.io.Compaction.compact(
           s, s"$root/small", s"$root/compacted", targetBytes = 8L << 20)

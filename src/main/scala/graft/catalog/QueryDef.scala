@@ -42,9 +42,11 @@ final case class QueryDef(
   * inputs at least once.
   */
 object Staging {
+  /** per session: slot → the cell that serializes its staging */
+  private final class Slot { var want: String = null }
   private val staged = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, String]]())
+      java.util.concurrent.ConcurrentHashMap[String, Slot]]())
 
   /** Run `write` unless this session already staged `slot` for exactly
     * `want` (normally the sfDir) and `marker` still exists on disk.
@@ -52,93 +54,37 @@ object Staging {
     * q53's root is SHARED across sfDirs (its oracle hard-codes the
     * path), so its slot is global and `want` tracks which dir the
     * root currently holds — switching dirs rewrites, same-dir repeats
-    * skip. */
+    * skip. Entrants for one (session, slot) are serialized, so
+    * concurrent queries never write the same root twice at once; other
+    * slots stage in parallel. */
   def once(s: SparkSession, slot: String, want: String, marker: String)(
       write: => Unit): Unit = {
-    val m = staged.computeIfAbsent(s,
-      _ => new java.util.concurrent.ConcurrentHashMap[String, String]())
-    if (m.get(slot) != want ||
-        !java.nio.file.Files.exists(java.nio.file.Paths.get(marker))) {
-      write
-      m.put(slot, want)
+    val cell = staged.computeIfAbsent(s,
+      _ => new java.util.concurrent.ConcurrentHashMap[String, Slot]())
+      .computeIfAbsent(slot, _ => new Slot)
+    cell.synchronized {
+      if (cell.want != want ||
+          !java.nio.file.Files.exists(java.nio.file.Paths.get(marker))) {
+        write
+        cell.want = want
+      }
     }
   }
+
+  /** Path- and table-name-safe key of an sfDir for staging roots: the
+    * first 16 hex digits (64 bits) of the dir's SHA-256. Unlike
+    * `String.hashCode` (`"Aa"` and `"BB"` share one), two dirs collide
+    * only with probability ~n²/2⁶⁵ for n dirs. */
+  def tag(dir: String): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .take(8).map(b => f"${b & 0xff}%02x").mkString
 }
 
 object Tables {
-  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df =
-      if (name == "events") events(spark, dir)
-      else spark.read.parquet(s"$dir/$name.parquet")
-    parallelizeScan(spark, df, s"$dir/$name.parquet", name)
-  }
-
-  /** Natural high-cardinality key per corpus table — the hash-repartition
-    * key for `parallelizeScan`. A keyed repartition (vs round-robin) is
-    * deterministic under task retry (guide §2.5: round-robin re-draws on
-    * retry unless Spark's sort-before-repartition pays a per-partition
-    * sort) and aligns with `spark.sql.shuffle.partitions`, so a
-    * downstream join/groupBy on the same key reuses the exchange.
-    */
-  private val scanKeys = Map(
-    "lineitem" -> "l_orderkey", "orders" -> "o_orderkey",
-    "customer" -> "c_custkey", "supplier" -> "s_suppkey",
-    "part" -> "p_partkey", "documents" -> "doc_id",
-    "embeddings" -> "vec_id", "events" -> "event_id")
-
-  /** Scan parallelization for the single-split regime — OFF by default
-    * since round 16 (measured net regression; evidence below). The
-    * corpus ships as ONE parquet file per table with ONE row group, so
-    * every scan — and everything Spark pipelines into the scan stage —
-    * runs in exactly ONE task regardless of core count;
-    * `spark.sql.files.maxPartitionBytes` cannot split below a row
-    * group. Round 15 hash-repartitioned every single-split read
-    * ≥ 512 KiB on the table's natural key to parallelize the post-scan
-    * work. Round-16 measurement (OPTIMIZATION_r16.md) showed this is a
-    * net LOSS at the driver's bench point: the idle-to-idle catalog
-    * total went 130.2 s (r14, feature absent) → 143.7 s (r15), geomean
-    * per-query ×1.08, and a 36-query 3-way A/B (512 KiB / 4 MiB / off)
-    * measured "off" 13% faster than "on" — only pure scan→aggregate
-    * shapes (q1) gain from the repartition, while every join /
-    * multi-pass / broadcast-build query pays one extra Exchange per
-    * scan (ADVICE r15: a table that lands on a broadcast build side
-    * shuffles for nothing). Honest caveats the r15 comment overstated:
-    *   - the repartition key is FORCED into the scan's ReadSchema even
-    *     for queries that never reference it (pruning cannot drop a
-    *     partitioning expression), widening decode + shuffle;
-    *   - `bytes < filesMaxPartitionBytes` is a single-split PROXY, not
-    *     a guarantee: Spark's split size is min(maxPartitionBytes,
-    *     max(openCost, totalBytes/defaultParallelism)), and a
-    *     single-row-group file just over maxPartitionBytes still
-    *     serializes yet is skipped by this gate.
-    * At production scale (many files / many row groups) the gate never
-    * fires, so the feature's ONLY observable effect is at the
-    * single-file bench scale — where it is measured slower. Default is
-    * therefore disabled; a user with a genuinely serialized single-file
-    * scan and scan-stage-dominated work can opt in by setting
-    * `spark.graft.scan.parallelizeMinBytes` to a byte threshold
-    * (fires when minBytes ≤ fileBytes < maxPartitionBytes).
-    */
-  private def parallelizeScan(spark: SparkSession, df: DataFrame,
-      path: String, name: String): DataFrame = {
-    val keyOpt = scanKeys.get(name)
-    if (keyOpt.isEmpty) return df
-    // default Long.MaxValue = disabled (no file satisfies bytes >= min);
-    // see the design note above for the measured evidence
-    val minBytes = spark.conf
-      .get("spark.graft.scan.parallelizeMinBytes", Long.MaxValue.toString)
-      .toLong
-    val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
-    val f = new java.io.File(path)
-    // testdata tables are single files; a directory (staged fixtures go
-    // through their own readers) or a missing local path is left alone
-    if (!f.isFile) return df
-    val bytes = f.length
-    if (bytes >= minBytes && bytes < maxSplit)
-      df.repartition(spark.sessionState.conf.numShufflePartitions,
-        org.apache.spark.sql.functions.col(keyOpt.get))
-    else df
-  }
+  def t(spark: SparkSession, dir: String, name: String): DataFrame =
+    if (name == "events") events(spark, dir)
+    else spark.read.parquet(s"$dir/$name.parquet")
 
   /** `events.ts` has shipped as BOTH parquet TIMESTAMP(NANOS) (earlier
     * corpora) and TIMESTAMP(MICROS) (current corpora), so the reader

@@ -16,10 +16,9 @@ import org.apache.spark.sql.types._
   */
 object Warehouse {
   import Tables.t
+  import Staging.tag
 
   private def d2(c: Column): Column = c.cast(DecimalType(12, 2))
-
-  private def tag(dir: String): String = Integer.toHexString(dir.hashCode)
 
   val queries: Seq[QueryDef] = Seq(
 

@@ -2,7 +2,7 @@ package graft.io
 
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** CSV sinks (reference K1/K2): fixed column order, header row, ONE file
@@ -16,7 +16,8 @@ import org.apache.spark.sql.functions._
   * upstream stage — including the final sort — keeps full parallelism;
   * the only sequential step is a byte copy, which is I/O-bound and cheap
   * relative to a one-task pivot+sort+stringify (the round-3 measured
-  * bottleneck: ~123 s of a 260 s run at 40M cells).
+  * bottleneck: ~123 s of a 260 s run at 40M cells). [[writeSingleCsv]] is
+  * the one sink: all three pipeline outputs go through it.
   */
 object CsvSink {
 
@@ -29,23 +30,6 @@ object CsvSink {
     if (s.exists(c => c == ',' || c == '"' || c == '\n' || c == '\r'))
       "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     else s
-
-  /** [[csvCell]] as a Column expression — the CSV dialect applied to DATA
-    * cells inside the plan, matching Spark's writer byte-for-byte: null →
-    * empty, empty string → `""` (the writer's emptyValue), quote+escape
-    * only when the value contains a delimiter, quote, or line break.
-    * Numeric inputs stringify via cast, which is the same toString the
-    * CSV writer's per-type converters use. */
-  def csvCellExpr(c: Column): Column = {
-    val s = c.cast("string")
-    when(s.isNull, lit(""))
-      .when(s === "", lit("\"\""))
-      .when(s.rlike("[,\"\n\r]"),
-        concat(lit("\""),
-          replace(replace(s, lit("\\"), lit("\\\\")), lit("\""), lit("\\\"")),
-          lit("\"")))
-      .otherwise(s)
-  }
 
   /** K1: write `df` with exactly `fieldnames` in order to a single CSV. */
   def writeSingleCsv(df: DataFrame, fieldnames: Seq[String], target: String): Unit = {
@@ -60,18 +44,6 @@ object CsvSink {
       .option("ignoreLeadingWhiteSpace", "false")
       .option("ignoreTrailingWhiteSpace", "false")
       .csv(tmp.toString)
-    concatParts(tmp, fieldnames, target)
-  }
-
-  /** K1, long-format fast path: `lines` is ONE string column of fully
-    * assembled CSV rows (csvCellExpr + concat_ws upstream) in final row
-    * order. Written headerless-parallel as text, then driver-concatenated
-    * exactly like writeSingleCsv — but the plan never materializes a
-    * samples-wide frame (see BigBugData.csvLines). */
-  def writeSingleLines(lines: DataFrame, fieldnames: Seq[String],
-      target: String): Unit = {
-    val tmp = Files.createTempDirectory("graft_csv")
-    lines.write.mode("overwrite").text(tmp.toString)
     concatParts(tmp, fieldnames, target)
   }
 

@@ -20,28 +20,16 @@ object TopHits {
     * (`:183–188` + TODO comment).
     *
     * @param grid the dense grid with `rrpm`, `z_score` and the per-cell
-    *   `stats` struct (kmers, dup, reads, cov, e_val)
-    * @param native use the bounded-heap [[graft.plans.TopKPerKey]]
-    *   physical operator instead of the window formulation — identical
-    *   output (PipelineSpec parity test), O(k) memory per sample instead
-    *   of a full per-sample sort; the right choice when the organism
-    *   universe (per-sample group size) is large. */
-  def tophits(grid: DataFrame, k: Int, native: Boolean = false): DataFrame =
-    (if (native) nativeTopK(grid, k)
-      else {
-        val w = Window.partitionBy(col(Sample))
-          .orderBy(col("rrpm").desc, col(TaxId).asc)
-        grid.withColumn("rank", row_number().over(w))
-      })
+    *   `stats` struct (kmers, dup, reads, cov, e_val) */
+  def tophits(grid: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col(Sample))
+      .orderBy(col("rrpm").desc, col(TaxId).asc)
+    grid.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .filter(col("stats").isNotNull)
       .select(col(Sample).as("sampleName"), col(TaxId), col(TaxName),
         col("rank"), col("rrpm").as("rRPM"),
         col("stats.kmers"), col("stats.dup"), col("stats.reads"),
         col("stats.cov"), col("stats.e_val"), col("z_score"))
-
-  private def nativeTopK(grid: DataFrame, k: Int): DataFrame =
-    graft.plans.TopKPerKey.of(grid, Seq(Sample),
-      Seq("rrpm" -> false, TaxId -> true), k)
-      .withColumn("rank", col("rk").cast("int")).drop("rk")
+  }
 }

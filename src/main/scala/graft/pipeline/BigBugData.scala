@@ -31,10 +31,7 @@ object BigBugData {
       resultsDir: String,
       rank: String = "species",
       nTophits: Int = 15,
-      groupPatterns: Seq[(String, String)] = Nil,
-      /** plan tophits with the bounded-heap TopKPerKey operator instead of
-        * the window — identical output, O(k) memory per sample */
-      nativeTopK: Boolean = false)
+      groupPatterns: Seq[(String, String)] = Nil)
 
   final case class Outputs(
       combined: DataFrame,   // long: taxID, sample, taxName, total, reads
@@ -81,15 +78,15 @@ object BigBugData {
       grid.select(TaxId, Sample, TaxName, "total_reads_organism", Reads),
       grid.select(Sample, TaxId, TaxName, "total_reads_organism", Reads,
         "total_reads", "rpm", "z_score", "nc_sample", "nc_rpm", "rrpm"),
-      TopHits.tophits(grid, params.nTophits, native = params.nativeTopK),
+      TopHits.tophits(grid, params.nTophits),
       ordered)
   }
 
   /** Pivot long → wide for the CSV contract: columns
     * [taxID, taxName, Total # of Reads] ++ orderedSamples, rows sorted by
     * taxID (O1/O2). Explicit pivot values skip Spark's distinct-collect
-    * job and pin column order. (Kept as the readable twin / parity
-    * reference for [[csvLines]] — the sinks use the long path.) */
+    * job and pin column order. The combined and rrpm sinks write this
+    * frame. */
   def pivotWide(long: DataFrame, valueCol: String,
       orderedSamples: Seq[String]): DataFrame =
     long.groupBy(col(TaxId), col(TaxName),
@@ -98,128 +95,19 @@ object BigBugData {
       .agg(first(col(valueCol)))
       .orderBy(col(TaxId))
 
-  /** Long-format CSV assembly: ONE output line per organism, built from a
-    * single range-partition + sort of the long grid and a streaming
-    * per-group concat — byte-identical to pivotWide + Spark's CSV writer
-    * (PipelineSpec pins it), but the plan never materializes an
-    * S-thousand-column frame at the sink.
-    *
-    * Why this exact shape (measured at 320M cells, local[32]):
-    *   - groupBy + collect_list plans as ObjectHashAggregate, which
-    *     falls back to SORT-BASED aggregation past 128 groups — it
-    *     external-sorts every cell anyway, then still pays per-group
-    *     8000-struct array materialization + array_sort, then a second
-    *     global orderBy of megabyte row strings (982 s write phase).
-    *   - the wide pivot keeps fixed-width HashAggregate buffers but
-    *     materializes + codegens an 8000-column frame (468 s, round 4).
-    *   - here the one unavoidable external sort is stated EXPLICITLY
-    *     (repartitionByRange(taxID) + sortWithinPartitions(taxID, idx)),
-    *     and line assembly is a single streaming pass per partition —
-    *     constant memory, no per-group arrays, and the range order makes
-    *     part-file name order the global row order, so the sink needs no
-    *     further sort.
-    *
-    * Cell strings are pre-quoted by csvCellExpr INSIDE the plan
-    * (codegen'd); the iterator only concatenates. Rows must be unique
-    * per (taxID, sample) — denseGrid guarantees it (pivotWide's first()
-    * would dedupe; this path would emit both). Samples missing from a
-    * group (impossible on the dense grid, possible on ad-hoc input)
-    * yield empty cells, exactly like the pivot's null. */
-  def csvLines(long: DataFrame, valueCol: String,
-      orderedSamples: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.types.{StructField, StructType, StringType}
-    val nSamples = orderedSamples.size
-    val idx = coalesce(element_at(
-      map(orderedSamples.zipWithIndex.flatMap { case (s, i) =>
-        Seq(lit(s), lit(i)) }: _*), col(Sample)), lit(Int.MaxValue))
-    val prefix = concat_ws(",",
-      CsvSink.csvCellExpr(col(TaxId)),
-      CsvSink.csvCellExpr(col(TaxName)),
-      CsvSink.csvCellExpr(col("total_reads_organism")))
-    val sorted = long
-      .select(col(TaxId).as("k"), prefix.as("prefix"), idx.as("idx"),
-        CsvSink.csvCellExpr(col(valueCol)).as("cell"))
-      .repartitionByRange(col("k"))
-      .sortWithinPartitions(col("k"), col("idx"))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(StructType(Seq(StructField("line", StringType))))
-    sorted.mapPartitions { rows =>
-      val it = rows.buffered
-      new Iterator[org.apache.spark.sql.Row] {
-        def hasNext: Boolean = it.hasNext
-        def next(): org.apache.spark.sql.Row = {
-          val first = it.head
-          val k = first.getLong(0)
-          val sb = new java.lang.StringBuilder(first.getString(1))
-          var expect = 0
-          while (it.hasNext && it.head.getLong(0) == k) {
-            val r = it.next()
-            val i = r.getInt(2)
-            while (expect < i) { sb.append(','); expect += 1 } // gap → empty cell
-            sb.append(',').append(r.getString(3))
-            expect = i + 1
-          }
-          while (expect < nSamples) { sb.append(','); expect += 1 }
-          org.apache.spark.sql.Row(sb.toString)
-        }
-      }
-    }(enc)
-  }
-
-  /** Execute and write the three CSVs (K1/K2).
-    *
-    * Two byte-identical grid-sink strategies (PipelineSpec pins parity):
-    *   - `pivot` (default): hash-aggregate the long grid into an S-wide
-    *     frame, write via the parallel single-CSV sink. The aggregation
-    *     collapses S cells per organism into one row BEFORE anything is
-    *     sorted or spilled, so shuffle bytes are ~rows/S of the long
-    *     path's. Measured fastest through S=8,000 (320M cells: 468 s
-    *     round 4 vs 1297 s for the long path under identical config).
-    *   - `lines` (`spark.graft.sink.strategy=lines`): range-sort the
-    *     LONG grid and stream-concat lines per partition — never
-    *     materializes an S-wide frame, so it stays viable past the
-    *     S ~ tens-of-thousands point where a pivot's fixed-width
-    *     aggregation buffers (S × 8 B per group per task) outgrow
-    *     executor memory. The price is shuffling every cell through one
-    *     external sort.
-    * The crossover is governed by S (columns), not cell count — prefer
-    * pivot until S-wide buffers threaten memory, then switch.
-    *
-    * A third strategy, `parquet`, drops the single-file-CSV contract
-    * entirely and writes the grids in LONG format as parquet with
-    * whatever partitioning they already carry — what a cluster
-    * deployment actually wants (no driver concat, no S-wide frame, no
-    * global sort, no extra shuffle; columnar + compressed, splittable
-    * for the next consumer). The reference-compatible outputs remain
-    * the other two. Measured sink phase (StressPipeline, zstd + 64 g,
-    * same box/day): 160M cells pivot 285.2 s vs parquet 131.7 s
-    * (2.2×) — at 40M both ~60 s (grid recompute dominates, the sink
-    * format is noise there). */
+  /** Execute and write the three CSVs (K1/K2). combined and rrpm go
+    * through [[pivotWide]], whose hash aggregation collapses the S cells
+    * of an organism into one row before anything is sorted. */
   def write(spark: SparkSession, params: Params): Outputs = {
     val out = build(spark, params)
     val (combinedPath, rrpmPath, tophitsPath) =
       CsvSink.outputPaths(params.resultsDir, params.rank)
     val header = Seq(TaxId, TaxName, "Total # of Reads") ++ out.orderedSamples
 
-    val strategy = spark.conf.getOption("spark.graft.sink.strategy")
-      .getOrElse("pivot")
-    strategy match {
-      case "lines" =>
-        CsvSink.writeSingleLines(
-          csvLines(out.combined, Reads, out.orderedSamples), header, combinedPath)
-        CsvSink.writeSingleLines(
-          csvLines(out.rrpm, "rrpm", out.orderedSamples), header, rrpmPath)
-      case "parquet" =>
-        out.combined.write.mode("overwrite")
-          .parquet(s"${params.resultsDir}/combined_${params.rank}.parquet")
-        out.rrpm.write.mode("overwrite")
-          .parquet(s"${params.resultsDir}/rrpm_${params.rank}.parquet")
-      case _ =>
-        CsvSink.writeSingleCsv(
-          pivotWide(out.combined, Reads, out.orderedSamples), header, combinedPath)
-        CsvSink.writeSingleCsv(
-          pivotWide(out.rrpm, "rrpm", out.orderedSamples), header, rrpmPath)
-    }
+    CsvSink.writeSingleCsv(
+      pivotWide(out.combined, Reads, out.orderedSamples), header, combinedPath)
+    CsvSink.writeSingleCsv(
+      pivotWide(out.rrpm, "rrpm", out.orderedSamples), header, rrpmPath)
 
     // tophits rows emit in ordered-sample order, then rank (reference
     // iterates samples in order, `bigbugdata.py:176`); literal map
@@ -227,23 +115,11 @@ object BigBugData {
     val idxExpr = coalesce(element_at(
       map(out.orderedSamples.zipWithIndex.flatMap { case (s, i) =>
         Seq(lit(s), lit(i)) }: _*), col("sampleName")), lit(Int.MaxValue))
-    strategy match {
-      case "parquet" =>
-        // the strategy governs ALL THREE outputs: at cluster scale a
-        // single-file tophits CSV would reintroduce exactly the driver
-        // bottleneck the parquet strategy exists to remove. tophits is
-        // already long/line-shaped — no pivot to undo; the emit order is
-        // recoverable by any consumer from (sampleName, rank), so no
-        // global sort is paid either.
-        out.tophits.write.mode("overwrite")
-          .parquet(s"${params.resultsDir}/tophits_${params.rank}.parquet")
-      case _ =>
-        CsvSink.writeSingleCsv(
-          out.tophits.orderBy(idxExpr, col("rank")),
-          Seq("sampleName", TaxId, TaxName, "rank", "rRPM", "kmers", "dup",
-            "reads", "cov", "e_val", "z_score"),
-          tophitsPath)
-    }
+    CsvSink.writeSingleCsv(
+      out.tophits.orderBy(idxExpr, col("rank")),
+      Seq("sampleName", TaxId, TaxName, "rank", "rRPM", "kmers", "dup",
+        "reads", "cov", "e_val", "z_score"),
+      tophitsPath)
     out
   }
 }

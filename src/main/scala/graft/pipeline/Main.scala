@@ -5,7 +5,7 @@ package graft.pipeline
   *
   *   runMain graft.pipeline.Main -r report1.tsv report2.tsv …
   *     [-o results] [-R species] [-t 15] [-n CONTROL GROUP]…
-  *     [--native-topk] [-v|--version]
+  *     [-v|--version]
   */
 object Main {
 
@@ -23,7 +23,6 @@ object Main {
     var rank = "species"
     var k = 15
     var groups = Vector.empty[(String, String)]
-    var nativeTopK = false
     var i = 0
     def values(from: Int): (Vector[String], Int) = {
       var j = from
@@ -44,7 +43,6 @@ object Main {
         case f @ ("-t" | "--tophits") => req(f, i + 1, 1); k = args(i + 1).toInt; i += 2
         case f @ ("-n" | "--nc-group") =>
           req(f, i + 1, 2); groups :+= (args(i + 1) -> args(i + 2)); i += 3
-        case "--native-topk" => nativeTopK = true; i += 1
         case other =>
           throw new IllegalArgumentException(s"unknown argument: $other")
       }
@@ -61,7 +59,7 @@ object Main {
     spark.sparkContext.setLogLevel("WARN")
     try {
       val o = BigBugData.write(spark,
-        BigBugData.Params(reports, out, rank, k, groups, nativeTopK))
+        BigBugData.Params(reports, out, rank, k, groups))
       println(s"[graft] wrote combined/rrpm/tophits for rank '$rank' " +
         s"(${o.orderedSamples.size} samples) under $out")
     } finally spark.stop()

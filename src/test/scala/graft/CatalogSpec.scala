@@ -1101,4 +1101,34 @@ class CatalogSpec extends SparkSuite {
       (4L, "xa b", "xab", 3L)),
       s"boundary-anchored merge order diverged: $got")
   }
+
+  test("Staging.once: concurrent entrants for one slot write once") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    val marker = java.nio.file.Files.createTempDirectory("graft_stage")
+      .resolve("_SUCCESS")
+    val writes = new AtomicInteger()
+    // each write waits (bounded) for a second writer, so two unserialized
+    // entrants are sure to overlap inside the write
+    val bothWriting = new CountDownLatch(2)
+    val threads = (1 to 2).map { _ =>
+      val th = new Thread(() =>
+        graft.catalog.Staging.once(spark, "once-race", "dir", marker.toString) {
+          writes.incrementAndGet()
+          bothWriting.countDown()
+          bothWriting.await(2, TimeUnit.SECONDS)
+          java.nio.file.Files.write(marker, Array.emptyByteArray)
+        })
+      th.start(); th
+    }
+    threads.foreach(_.join())
+    assert(writes.get == 1, s"${writes.get} writes for one staged slot")
+  }
+
+  test("Staging.tag: hashCode-colliding dirs get distinct roots") {
+    val (a, b) = ("/data/sf/Aa", "/data/sf/BB")
+    assert(a.hashCode == b.hashCode)
+    assert(graft.catalog.Staging.tag(a) != graft.catalog.Staging.tag(b))
+    assert(graft.catalog.Staging.tag(a).matches("[0-9a-f]{16}"))
+  }
 }

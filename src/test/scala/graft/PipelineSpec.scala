@@ -143,25 +143,8 @@ class PipelineSpec extends SparkSuite {
     assert(r.getAs[Double]("e_val") == (50.0 / 5) * 0.4)
   }
 
-  test("nativeTopK: the bounded-heap operator produces the identical " +
-      "tophits rows as the window formulation") {
-    val params = BigBugData.Params(
-      reportPaths = fixture._2,
-      resultsDir = Files.createTempDirectory("graft_native_out").toString,
-      rank = "species", nTophits = 2,
-      groupPatterns = Seq(("Negative", "CF_DNA")),
-      nativeTopK = true)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getAs[String]("sampleName"),
-        r.getAs[Long]("taxID"), r.getAs[Int]("rank"),
-        r.getAs[Double]("rRPM"), r.getAs[Long]("kmers"))).toSet
-    val native = rows(BigBugData.build(spark, params).tophits)
-    val windowed = rows(fixture._1.tophits)
-    assert(native == windowed && native.nonEmpty)
-  }
-
-  test("output schemas: names, types and order stay fixed (the parquet " +
-      "sink writes these frames as they are)") {
+  // Outputs is public, and the bb_* catalog queries read these frames
+  test("output schemas stay fixed: bb_* queries read public Outputs") {
     def shape(df: org.apache.spark.sql.DataFrame) = df.schema.fields
       .map(f => s"${f.name}:${f.dataType.simpleString}").mkString(", ")
     val out = fixture._1
@@ -367,34 +350,7 @@ class PipelineSpec extends SparkSuite {
       "sampleName,taxID,taxName,rank,rRPM,kmers,dup,reads,cov,e_val,z_score")
   }
 
-  test("parquet sink strategy writes the long grids losslessly (content " +
-      "== the combined/rrpm frames; no CSV files produced)") {
-    val params = BigBugData.Params(
-      reportPaths = fixture._2,
-      resultsDir = Files.createTempDirectory("graft_pq_out").toString,
-      rank = "species", nTophits = 2,
-      groupPatterns = Seq(("Negative", "CF_DNA")))
-    spark.conf.set("spark.graft.sink.strategy", "parquet")
-    try BigBugData.write(spark, params)
-    finally spark.conf.unset("spark.graft.sink.strategy")
-    val outs = fixture._1
-    // the strategy governs ALL THREE outputs (a single-file tophits CSV
-    // would reintroduce the driver bottleneck at cluster scale)
-    for ((name, frame) <- Seq("combined" -> outs.combined,
-        "rrpm" -> outs.rrpm, "tophits" -> outs.tophits)) {
-      val path = s"${params.resultsDir}/${name}_species.parquet"
-      val back = spark.read.parquet(path)
-      assert(back.count() == frame.count(), s"$name row count")
-      assert(back.exceptAll(frame).isEmpty && frame.exceptAll(back).isEmpty,
-        s"$name content must round-trip losslessly")
-      assert(!Files.exists(
-        java.nio.file.Paths.get(s"${params.resultsDir}/${name}_species.csv")),
-        "parquet strategy must not also write the CSV")
-    }
-  }
-
-  test("csvLines (long-format sink) is byte-identical to pivotWide + " +
-      "Spark's CSV writer, including pathological taxNames and doubles") {
+  test("pivot sink golden bytes: CSV dialect on hard cells") {
     val s2 = spark; import s2.implicits._
     import graft.schema.ReportSchema.{Sample, TaxId, TaxName}
     val samples = Seq("s1", "s2", "s3")
@@ -419,14 +375,19 @@ class PipelineSpec extends SparkSuite {
       (5L, "  padded  ", 2L, "s3", 7.0))
       .toDF(TaxId, TaxName, "total_reads_organism", Sample, "v")
     val header = Seq(TaxId, TaxName, "Total # of Reads") ++ samples
-    val viaPivot = Files.createTempDirectory("graft_parity").resolve("p.csv")
-    val viaLines = viaPivot.resolveSibling("l.csv")
+    val path = Files.createTempDirectory("graft_golden").resolve("p.csv")
     graft.io.CsvSink.writeSingleCsv(
-      BigBugData.pivotWide(long, "v", samples), header, viaPivot.toString)
-    graft.io.CsvSink.writeSingleLines(
-      BigBugData.csvLines(long, "v", samples), header, viaLines.toString)
-    val a = new String(Files.readAllBytes(viaPivot), "UTF-8")
-    val b = new String(Files.readAllBytes(viaLines), "UTF-8")
-    assert(a == b, s"sink paths diverged:\n--- pivot\n$a--- lines\n$b")
+      BigBugData.pivotWide(long, "v", samples), header, path.toString)
+    // quote only on delimiter/quote (escape `\`), `""` for the empty
+    // string, padding kept, doubles in Java's toString form
+    val expected = Seq(
+      "taxID,taxName,Total # of Reads,s1,s2,s3",
+      "1,plain name,7,0.5,1.0E7,0.30000000000000004",
+      "2,\"has,comma\",9,1.0,-3.25,1.23456789123456E8",
+      "3,\"q\\\"uote \\\\ba,ck\",0,0.0,2.0,4.5",
+      "4,\"\",3,1.5,2.5,3.5",
+      "5,  padded  ,2,9.0,8.0,7.0").mkString("", "\n", "\n")
+    val got = new String(Files.readAllBytes(path), "UTF-8")
+    assert(got == expected, s"pivot sink bytes changed:\n$got")
   }
 }

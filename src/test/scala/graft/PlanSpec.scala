@@ -449,7 +449,7 @@ class PlanSpec extends SparkSuite {
     // materializing q69 (re)creates the bucketed tables in the shared
     // catalog; the aggregation below then plans off the bucketed scan
     SparkEntry.queries("q69_bucketed_join")(spark, sf).collect()
-    val tg = Integer.toHexString(sf.hashCode)
+    val tg = graft.catalog.Staging.tag(sf)
     val agg = spark.table(s"graft_bkt_orders_$tg")
       .groupBy("o_custkey")
       .agg(count(lit(1)).as("n"), sum(col("o_totalprice")).as("tot"))

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import graft.pipeline.BigBugData
 
 /** Stress driver for the reference pipeline at a scale the reference's
@@ -34,8 +33,6 @@ object StressPipeline {
       .config("spark.io.compression.codec",
         sys.env.getOrElse("SPARK_GRAFT_CODEC", "lz4"))
       .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.graft.sink.strategy",
-        sys.env.getOrElse("SPARK_GRAFT_SINK", "pivot"))
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -71,8 +68,7 @@ object StressPipeline {
     val outDir = Files.createTempDirectory("graft_stress_out").toString
     val params = BigBugData.Params(
       paths, outDir, nTophits = 15,
-      groupPatterns = Seq(("SAMPLE_0000", "SAMPLE_00")),
-      nativeTopK = sys.env.get("SPARK_GRAFT_NATIVE_TOPK").contains("1"))
+      groupPatterns = Seq(("SAMPLE_0000", "SAMPLE_00")))
     // split timing: distributed pipeline (through the noop sink, so every
     // stage executes) vs the single-file wide-CSV sink concession
     val tB = System.nanoTime()
@@ -90,13 +86,7 @@ object StressPipeline {
     println(f"[stress] pipeline: $sActual samples x ${gridRows / sActual} taxa -> " +
       f"$gridRows dense cells, $topRows tophits, 3 CSVs in $dt%.1f s")
     val csvPath = Paths.get(s"$outDir/combined_species.csv")
-    if (Files.exists(csvPath))
-      println(f"[stress] combined_species.csv = ${Files.size(csvPath) / 1024} KiB")
-    else { // parquet sink strategy: report the directory's total size
-      val dir = new java.io.File(s"$outDir/combined_species.parquet")
-      val bytes = Option(dir.listFiles()).map(_.map(_.length).sum).getOrElse(0L)
-      println(f"[stress] combined_species.parquet = ${bytes / 1024} KiB")
-    }
+    println(f"[stress] combined_species.csv = ${Files.size(csvPath) / 1024} KiB")
     spark.stop()
   }
 }
