@@ -14,12 +14,17 @@ object Extended {
 
   private def d2(c: Column): Column = c.cast(DecimalType(12, 2))
 
+  /** The build's target/ dir, absolute so oracle SQL that embeds a
+    * staging path resolves it the same way (run from the repo root). */
+  private val targetDir =
+    java.nio.file.Paths.get("target").toAbsolutePath.toString
+
   /** q61's JSON staging dir, keyed to the scale-factor dir so dumps for
     * two SFs can never race each other's oracle reads. The oracle SQL
     * carries the `__GRAFT_JSON_STAGE__` token, which Verify substitutes
     * with this same value at dump time. */
   def jsonStageDir(sfDir: String): String =
-    s"/root/repo/target/graft_json_src_${Staging.tag(sfDir)}"
+    s"$targetDir/graft_json_src_${Staging.tag(sfDir)}"
   val JsonStageToken = "__GRAFT_JSON_STAGE__"
 
   val queries: Seq[QueryDef] = Seq(
@@ -1024,7 +1029,7 @@ object Extended {
         // computes the same frame from the ORIGINAL table, so any row
         // lost, duplicated, or corrupted by the rewrite diverges it.
         // Staging is keyed to the SF dir (same discipline as q61).
-        val root = s"/root/repo/target/graft_compact_${Staging.tag(dir)}"
+        val root = s"$targetDir/graft_compact_${Staging.tag(dir)}"
         // The 64-small-file landing zone is FIXTURE, not the operator
         // under test — write it once per (session, sfDir); the
         // compaction rewrite itself still runs on every invocation.
