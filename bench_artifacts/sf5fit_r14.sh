@@ -16,7 +16,4 @@ echo "=== B: same-JVM fit, e16b (ivfDecontam noop), same shape" >> $OUT
 SPARK_GRAFT_IVF_CMAX=16384 sbt -batch "Test/runMain graft.E8Probe /root/repo/target/sf5 m1024@/root/repo/target/sf0.5,m2048@/root/repo/target/sf1,m4096@/root/repo/target/sf2,m4096@/root/repo/target/sf5,m8192@/root/repo/target/sf5,m4096@/root/repo/target/sf5,m8192@/root/repo/target/sf5" 2>&1 | grep e8probe >> $OUT
 echo B_DONE >> $OUT
 
-echo "=== C: candidate-volume diagnostics at sf5, clamped vs escaped" >> $OUT
-SPARK_GRAFT_IVF_CMAX=16384 sbt -batch "Test/runMain graft.E8Probe /root/repo/target/sf5 c4096@/root/repo/target/sf5,c8192@/root/repo/target/sf5" 2>&1 | grep e8probe >> $OUT
-echo C_DONE >> $OUT
 echo SF5FIT_ALL_DONE >> $OUT

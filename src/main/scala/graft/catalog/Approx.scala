@@ -565,7 +565,7 @@ object Approx {
   }
 
   /** the IVF multi-probe CTE prefix shared by e8 and e16 (C=16, P=4,
-    * tau=0.4, the ivfCellsAndPairs recipe): v → sims → cells → probes →
+    * tau=0.4, the FixedC(16) tier): v → sims → cells → probes →
     * bare-id candidates → cosine-confirmed `pairs` */
   private def ivfPairCtes: String = {
     val dims = 64
@@ -640,7 +640,78 @@ object Approx {
     s"(CAST(($z4) // 2048 AS DOUBLE) / 9007199254740992.0)" // >>> 11, / 2^53
   }
 
-  /** the e8b CTE prefix: corpus count → scaledC ladder → the TWO-LEVEL
+  /** the powers of two from `lo` up to `hi` as a VALUES list — the
+    * C, S and K ladders the IVF oracles take a MIN over */
+  private def pow2Values(lo: Int, hi: Int): String =
+    Iterator.iterate(lo)(_ << 1).takeWhile(_ <= hi).map(p => s"($p)")
+      .mkString(",")
+
+  /** the splitmix64 centroids and super-centroids, generated in SQL up
+    * to the SQL scalars `cMax`/`sMax` (range() cannot take a subquery,
+    * so the literal bound is the cap and the WHERE trims it) */
+  private def centsSupersCtes(cMax: String, sMax: String): String =
+    s"""cents AS (
+        SELECT cell, list(val ORDER BY d) AS cv
+        FROM (
+          SELECT CAST(i // 64 + 1 AS BIGINT) AS cell, i % 64 AS d,
+            ${mixToUnitSql(s"CAST(${0x49564600L} + i AS HUGEINT)")} - 0.5 AS val
+          FROM range(${ivfCmax * 64L}) t(i)
+          WHERE i // 64 < ($cMax))
+        GROUP BY cell),
+      supers AS (
+        SELECT sup, list(val ORDER BY d) AS sv
+        FROM (
+          SELECT CAST(i // 64 + 1 AS BIGINT) AS sup, i % 64 AS d,
+            ${mixToUnitSql(s"CAST($IvfSuperSeedBase + i AS HUGEINT)")} - 0.5 AS val
+          FROM range(${ivfSmax * 64L}) t(i)
+          WHERE i // 64 < ($sMax))
+        GROUP BY sup)"""
+
+  /** the shard-tier parameter CTEs shared by e8c/e16c/e18c: corpus
+    * count, K from the shardCountAt VALUES ladder, per-shard counts,
+    * and each shard's C from its own count (COALESCE to the cap for a
+    * modulo-skewed shard that still clamps) */
+  private def shardParamCtes: String =
+    s"""nn AS (SELECT COUNT(*) AS n FROM embeddings),
+      kparam AS (
+        SELECT COALESCE(MIN(k), $IvfShardMax) AS K
+        FROM (VALUES ${pow2Values(1, IvfShardMax)}) t(k), nn
+        WHERE (nn.n + k - 1) // k <= ${ivfCmax.toLong * 32L}),
+      shn AS (
+        SELECT vec_id % K AS shard, COUNT(*) AS ns
+        FROM embeddings, kparam GROUP BY 1),
+      cparam AS (
+        SELECT shard, COALESCE(MIN(pw), $ivfCmax) AS C
+        FROM shn LEFT JOIN (VALUES ${pow2Values(8, ivfCmax)}) t(pw)
+          ON pw >= (ns + 31) // 32
+        GROUP BY shard)"""
+
+  /** e18/e18c's temperature-mix tail over the per-source weights `per`:
+    * sqrt-weight shares, then largest-remainder apportionment of the
+    * 100k budget (d28's) */
+  private def mixTailSql: String =
+    """tot AS (
+        SELECT list_reduce(list_prepend(0.0, list(w ORDER BY source)),
+          (a, b) -> a + b) AS total
+        FROM per),
+      px AS (
+        SELECT source, tokens, w, w / total AS p,
+          (w / total) * 100000.0 AS raw
+        FROM per, tot),
+      fb AS (
+        SELECT *, CAST(floor(raw) AS BIGINT) AS base,
+          raw - floor(raw) AS rem
+        FROM px),
+      rk AS (
+        SELECT *, ROW_NUMBER() OVER (ORDER BY rem DESC, source) AS rk,
+          (SELECT SUM(base) FROM fb) AS sum_base
+        FROM fb)
+      SELECT source, tokens, p,
+        CAST(base + CASE WHEN rk <= 100000 - sum_base THEN 1 ELSE 0 END
+          AS BIGINT) AS alloc
+      FROM rk ORDER BY source"""
+
+  /** the e8b CTE prefix: corpus count → scaledCAt ladder → the TWO-LEVEL
     * coarse quantizer re-derived entirely in SQL — S = scaledSuperC(C)
     * as an integer-square ladder, splitmix64 supers at IvfSuperSeedBase,
     * parent(cell) = argmax over supers (sim DESC, sup ASC — the engine's
@@ -659,30 +730,13 @@ object Approx {
     s"""nn AS (SELECT COUNT(*) AS n FROM embeddings),
       cparam AS (
         SELECT COALESCE(MIN(pw), $ivfCmax) AS C
-        FROM (VALUES ${Iterator.iterate(8)(_ << 1).takeWhile(_ <= ivfCmax)
-          .map(p => s"($p)").mkString(",")}) t(pw), nn
+        FROM (VALUES ${pow2Values(8, ivfCmax)}) t(pw), nn
         WHERE pw >= (nn.n + 31) // 32),
       sparam AS (
         SELECT COALESCE(MIN(sq), $ivfSmax) AS S
-        FROM (VALUES ${Iterator.iterate(2)(_ << 1).takeWhile(_ <= ivfSmax)
-          .map(s => s"($s)").mkString(",")}) t(sq), cparam
+        FROM (VALUES ${pow2Values(2, ivfSmax)}) t(sq), cparam
         WHERE sq * sq >= cparam.C),
-      cents AS (
-        SELECT cell, list(val ORDER BY d) AS cv
-        FROM (
-          SELECT CAST(i // 64 + 1 AS BIGINT) AS cell, i % 64 AS d,
-            ${mixToUnitSql(s"CAST(${0x49564600L} + i AS HUGEINT)")} - 0.5 AS val
-          FROM range(${ivfCmax * 64L}) t(i)
-          WHERE i // 64 < (SELECT C FROM cparam))
-        GROUP BY cell),
-      supers AS (
-        SELECT sup, list(val ORDER BY d) AS sv
-        FROM (
-          SELECT CAST(i // 64 + 1 AS BIGINT) AS sup, i % 64 AS d,
-            ${mixToUnitSql(s"CAST($IvfSuperSeedBase + i AS HUGEINT)")} - 0.5 AS val
-          FROM range(${ivfSmax * 64L}) t(i)
-          WHERE i // 64 < (SELECT S FROM sparam))
-        GROUP BY sup),
+      ${centsSupersCtes("SELECT C FROM cparam", "SELECT S FROM sparam")},
       parent AS (
         SELECT cell, sup FROM (
           SELECT c.cell, s.sup,
@@ -751,43 +805,14 @@ object Approx {
     * range() literals generated from ivfCmax/ivfSmax/IvfShardMax in
     * the same JVM — the established lockstep guarantee. */
   private def ivfShardedPairCtes(p: Int, tau: Double): String =
-    s"""nn AS (SELECT COUNT(*) AS n FROM embeddings),
-      kparam AS (
-        SELECT COALESCE(MIN(k), $IvfShardMax) AS K
-        FROM (VALUES ${Iterator.iterate(1)(_ << 1).takeWhile(_ <= IvfShardMax)
-          .map(k => s"($k)").mkString(",")}) t(k), nn
-        WHERE (nn.n + k - 1) // k <= ${ivfCmax.toLong * 32L}),
-      shn AS (
-        SELECT vec_id % K AS shard, COUNT(*) AS ns
-        FROM embeddings, kparam GROUP BY 1),
-      cparam AS (
-        SELECT shard, COALESCE(MIN(pw), $ivfCmax) AS C
-        FROM shn LEFT JOIN (VALUES ${Iterator.iterate(8)(_ << 1)
-          .takeWhile(_ <= ivfCmax).map(c => s"($c)").mkString(",")}) t(pw)
-          ON pw >= (ns + 31) // 32
-        GROUP BY shard),
+    s"""$shardParamCtes,
       sparam AS (
         SELECT shard, COALESCE(MIN(sq), $ivfSmax) AS S
-        FROM cparam LEFT JOIN (VALUES ${Iterator.iterate(2)(_ << 1)
-          .takeWhile(_ <= ivfSmax).map(s => s"($s)").mkString(",")}) u(sq)
+        FROM cparam LEFT JOIN (VALUES ${pow2Values(2, ivfSmax)}) u(sq)
           ON sq * sq >= C
         GROUP BY shard),
-      cents AS (
-        SELECT cell, list(val ORDER BY d) AS cv
-        FROM (
-          SELECT CAST(i // 64 + 1 AS BIGINT) AS cell, i % 64 AS d,
-            ${mixToUnitSql(s"CAST(${0x49564600L} + i AS HUGEINT)")} - 0.5 AS val
-          FROM range(${ivfCmax * 64L}) t(i)
-          WHERE i // 64 < (SELECT MAX(C) FROM cparam))
-        GROUP BY cell),
-      supers AS (
-        SELECT sup, list(val ORDER BY d) AS sv
-        FROM (
-          SELECT CAST(i // 64 + 1 AS BIGINT) AS sup, i % 64 AS d,
-            ${mixToUnitSql(s"CAST($IvfSuperSeedBase + i AS HUGEINT)")} - 0.5 AS val
-          FROM range(${ivfSmax * 64L}) t(i)
-          WHERE i // 64 < (SELECT MAX(S) FROM sparam))
-        GROUP BY sup),
+      ${centsSupersCtes("SELECT MAX(C) FROM cparam",
+        "SELECT MAX(S) FROM sparam")},
       parent AS (
         SELECT shard, cell, sup FROM (
           SELECT cp.shard, c.cell, s.sup,
@@ -859,8 +884,8 @@ object Approx {
     * parent argmax) is a pure function of C alone, so keying on C is
     * what lets the EVAL side be replicated across shards at the cost of
     * one branch per distinct C (the engine's byC map, expressed as the
-    * cdist CTE). kparam/shn/cparam are byte-identical to
-    * ivfShardedPairCtes'; sofc/parentc are its sparam/parent with C as
+    * cdist CTE). kparam/shn/cparam are ivfShardedPairCtes' (both read
+    * shardParamCtes); sofc/parentc are its sparam/parent with C as
     * the key; member assignment (vc/vtop/sims/cells) lands on the same
     * values because a member's geometry was always C_s-determined.
     * evtop/evsims/evprobes assign EVERY eval vector under EVERY
@@ -871,44 +896,15 @@ object Approx {
     * ivfCmax/ivfSmax/IvfShardMax in the same JVM — the established
     * lockstep guarantee. */
   private def ivfShardedDecontamCtes(p: Int, tau: Double): String =
-    s"""nn AS (SELECT COUNT(*) AS n FROM embeddings),
-      kparam AS (
-        SELECT COALESCE(MIN(k), $IvfShardMax) AS K
-        FROM (VALUES ${Iterator.iterate(1)(_ << 1).takeWhile(_ <= IvfShardMax)
-          .map(k => s"($k)").mkString(",")}) t(k), nn
-        WHERE (nn.n + k - 1) // k <= ${ivfCmax.toLong * 32L}),
-      shn AS (
-        SELECT vec_id % K AS shard, COUNT(*) AS ns
-        FROM embeddings, kparam GROUP BY 1),
-      cparam AS (
-        SELECT shard, COALESCE(MIN(pw), $ivfCmax) AS C
-        FROM shn LEFT JOIN (VALUES ${Iterator.iterate(8)(_ << 1)
-          .takeWhile(_ <= ivfCmax).map(c => s"($c)").mkString(",")}) t(pw)
-          ON pw >= (ns + 31) // 32
-        GROUP BY shard),
+    s"""$shardParamCtes,
       cdist AS (SELECT DISTINCT C FROM cparam),
       sofc AS (
         SELECT C, COALESCE(MIN(sq), $ivfSmax) AS S
-        FROM cdist LEFT JOIN (VALUES ${Iterator.iterate(2)(_ << 1)
-          .takeWhile(_ <= ivfSmax).map(s => s"($s)").mkString(",")}) u(sq)
+        FROM cdist LEFT JOIN (VALUES ${pow2Values(2, ivfSmax)}) u(sq)
           ON sq * sq >= C
         GROUP BY C),
-      cents AS (
-        SELECT cell, list(val ORDER BY d) AS cv
-        FROM (
-          SELECT CAST(i // 64 + 1 AS BIGINT) AS cell, i % 64 AS d,
-            ${mixToUnitSql(s"CAST(${0x49564600L} + i AS HUGEINT)")} - 0.5 AS val
-          FROM range(${ivfCmax * 64L}) t(i)
-          WHERE i // 64 < (SELECT MAX(C) FROM cparam))
-        GROUP BY cell),
-      supers AS (
-        SELECT sup, list(val ORDER BY d) AS sv
-        FROM (
-          SELECT CAST(i // 64 + 1 AS BIGINT) AS sup, i % 64 AS d,
-            ${mixToUnitSql(s"CAST($IvfSuperSeedBase + i AS HUGEINT)")} - 0.5 AS val
-          FROM range(${ivfSmax * 64L}) t(i)
-          WHERE i // 64 < (SELECT MAX(S) FROM sofc))
-        GROUP BY sup),
+      ${centsSupersCtes("SELECT MAX(C) FROM cparam",
+        "SELECT MAX(S) FROM sofc")},
       parentc AS (
         SELECT C, cell, sup FROM (
           SELECT cd.C, c.cell, s.sup,
@@ -1034,26 +1030,7 @@ object Approx {
         SELECT source, CAST(SUM(n_chars) AS BIGINT) AS tokens,
           sqrt(CAST(SUM(n_chars) AS DOUBLE)) AS w
         FROM gated GROUP BY source),
-      tot AS (
-        SELECT list_reduce(list_prepend(0.0, list(w ORDER BY source)),
-          (a, b) -> a + b) AS total
-        FROM per),
-      px AS (
-        SELECT source, tokens, w, w / total AS p,
-          (w / total) * 100000.0 AS raw
-        FROM per, tot),
-      fb AS (
-        SELECT *, CAST(floor(raw) AS BIGINT) AS base,
-          raw - floor(raw) AS rem
-        FROM px),
-      rk AS (
-        SELECT *, ROW_NUMBER() OVER (ORDER BY rem DESC, source) AS rk,
-          (SELECT SUM(base) FROM fb) AS sum_base
-        FROM fb)
-      SELECT source, tokens, p,
-        CAST(base + CASE WHEN rk <= 100000 - sum_base THEN 1 ELSE 0 END
-          AS BIGINT) AS alloc
-      FROM rk ORDER BY source"""
+      $mixTailSql"""
 
   /** e2b's oracle: P from COUNT(*) (the scaledPlanes ladder as a MIN
     * over VALUES), the 8·P hyperplanes regenerated via the HUGEINT
@@ -1181,26 +1158,7 @@ object Approx {
         SELECT source, CAST(SUM(n_chars) AS BIGINT) AS tokens,
           sqrt(CAST(SUM(n_chars) AS DOUBLE)) AS w
         FROM gated GROUP BY source),
-      tot AS (
-        SELECT list_reduce(list_prepend(0.0, list(w ORDER BY source)),
-          (a, b) -> a + b) AS total
-        FROM per),
-      px AS (
-        SELECT source, tokens, w, w / total AS p,
-          (w / total) * 100000.0 AS raw
-        FROM per, tot),
-      fb AS (
-        SELECT *, CAST(floor(raw) AS BIGINT) AS base,
-          raw - floor(raw) AS rem
-        FROM px),
-      rk AS (
-        SELECT *, ROW_NUMBER() OVER (ORDER BY rem DESC, source) AS rk,
-          (SELECT SUM(base) FROM fb) AS sum_base
-        FROM fb)
-      SELECT source, tokens, p,
-        CAST(base + CASE WHEN rk <= 100000 - sum_base THEN 1 ELSE 0 END
-          AS BIGINT) AS alloc
-      FROM rk ORDER BY source"""
+      $mixTailSql"""
 
   private def e16OracleSql: String =
     s"""WITH $ivfPairCtes,
@@ -1221,256 +1179,227 @@ object Approx {
       WHERE c.vec_id % 50 <> 0
       ORDER BY c.vec_id"""
 
-  /** FULL-CORPUS embedding near-dup dedup — the SemDeDup shape (cluster,
-    * then dedup within cluster): every vector is assigned to its top-P of
-    * C deterministic coarse centroids (multi-probe MEMBERSHIP, the e3
-    * recipe turned symmetric — single-cell assignment caps pair recall
-    * near 0.17 on a uniform corpus because barely-similar vectors
-    * straddle cell boundaries), candidate pairs are generated ONLY inside
-    * a shared cell (equi-join on the cell id — never a corpus x corpus
-    * join), bare id pairs are deduped BEFORE the cosine (a pair sharing
-    * several probe cells costs one cosine), and each vector's
-    * representative is the lowest id among its confirmed cosine>=tau
-    * neighbors (itself when none). Unlike e4 there is NO vec_id bound:
-    * this is the query a user points at a full corpus.
-    *
-    * C is THE scale knob: within-cell pairwise work is O(n²·P²/C), so
-    * growing C ∝ n keeps it linear (cells stay near-constant size). The
-    * catalog entry pins C=16 to share e3's oracle-centroid recipe at toy
-    * scale; EdgeSpec exercises C=64 over a 5k synthetic clustered corpus
-    * to pin the knob's correctness (near-copies collapse to their
-    * cluster minimum regardless of C).
-    *
-    * Exact oracle at C=16: centroids embed as SQL literals, probe
-    * ranking and cell argmax compare bit-identical doubles, and the
-    * cosine tree is identical on both engines.
-    */
-  private[graft] def ivfDedup(embIn: DataFrame, C: Int, P: Int,
-      tau: Double, kernel: Boolean = false): DataFrame = {
-    val (cells, pairs) = ivfCellsAndPairs(embIn, C, P, tau, kernel)
-    val reps = pairs.select("id_b", "id_a")
-      .groupBy(col("id_b").as("vec_id"))
-      .agg(min(col("id_a")).as("rep_min"))
-    cells.select("vec_id", "cell")
-      .join(reps, Seq("vec_id"), "left")
-      .select(col("vec_id"), col("cell"),
-        coalesce(col("rep_min"), col("vec_id")).as("rep_id"))
-      .orderBy("vec_id")
-  }
+  /** How an IVF catalog entry picks its cell count C and shard count K.
+    * Each entry sets its tier; no user option reaches it.
+    *   - FixedC (e8, e16): C fixed when the query is written (the oracles
+    *     embed the centroids as literals), one shard, flat scoring over
+    *     every centroid, no count job.
+    *   - ScaledC(sharded = false) (e8b, e16b, e18): C = scaledCAt(n,
+    *     cmax) from the one corpus count, one shard, two-level scoring.
+    *   - ScaledC(sharded = true) (e8c, e16c, e18c): K = shardCountAt(n,
+    *     cmax) modulo-id shards, each with C from its OWN count. */
+  private[graft] sealed trait IvfTier
+  private[graft] final case class FixedC(c: Int) extends IvfTier
+  private[graft] final case class ScaledC(cmax: Int, sharded: Boolean)
+    extends IvfTier
 
-  /** SHARD TIER above the cell-count cap (e8c): the corpus is split
-    * into K = shardCountAt(n, cmax) modulo-id shards, each shard runs
-    * its OWN scaledC ladder from its OWN count, and near-dup candidates
-    * are generated strictly within a shard — the standard way every
-    * production IVF system crosses its per-index size ceiling, and the
-    * design SCALE.md round-14 argued survives COUNT(*)-derivability
-    * ("each shard's C derives from its own count"). Semantics are the
-    * deliberate sharding trade: a cross-shard near-dup pair is NOT a
-    * candidate (recall is bought per shard, exactly as in a sharded
-    * FAISS/SCANN deployment); the oracle mirrors the same within-shard
-    * candidate rule, so this is its own operator with its own contract,
-    * not an approximation of e8b.
+  /** the IVF assignment every vector-tier entry runs: K modulo-id
+    * shards, C per shard from the tier, one probe branch per DISTINCT C
+    * (the codebook is a function of C alone, so shards sharing a C
+    * share a compiled branch and the union stays O(#C)). `cells`
+    * carries (vec_id, shard, dv, probes, cell, n_cells=C_s); `probes`
+    * builds the probe column at a given C, for members here and for the
+    * replicated eval side in evalProbesByC.
     *
-    * Scale shape: per-shard within-cell pair work is linear at
-    * C_s ∝ n_s, so total work is linear in n for ANY K; assignment is
-    * O(n·√C_s·dims); the id-modulo shard column rides the existing
-    * shuffle keys ((shard, pcell) replaces (pcell) in the candidate
-    * equi-join — same exchange count, finer keys). The ONLY driver-side
-    * step is the K-row per-shard count collect (plan-time metadata,
-    * K <= 4096), the per-shard generalization of the scaledC count().
-    * A modulo-skewed shard (sparse ids) that still clamps at the cap
-    * gets the same loud clampEnforce diagnostic as the unsharded
-    * ladder. */
-  /** the sharded assignment shared by every shard-tier operator
-    * (e8c dedup, e16c decontam, e18c composed pipeline): K modulo-id
-    * shards, per-shard C from each shard's OWN count (the K-row
-    * metadata collect), one kernel branch per DISTINCT C. `cells`
-    * carries (vec_id, shard, dv, probes, cell, n_cells=C_s). */
+    * Sharding is the standard way an IVF index crosses its per-index
+    * size ceiling (SCALE.md round-14: "each shard's C derives from its
+    * own count"). Candidates are generated strictly within a shard: a
+    * cross-shard near-dup pair is deliberately NOT a candidate, exactly
+    * as in a sharded FAISS/SCANN deployment, and the oracles mirror the
+    * same rule. Per-shard within-cell pair work is linear at C_s ∝ n_s,
+    * so total work is linear in n for ANY K; the shard column joins the
+    * probe-cell equi-join key (same exchange count, finer keys). The
+    * driver-side steps are the scaled tiers' one count() and, only when
+    * K > 1, the K-row per-shard count collect (K <= 4096); at K=1 the
+    * corpus count is the shard count. A modulo-skewed shard that still
+    * clamps at the cap gets the clampEnforce diagnostic. */
   private[graft] final case class ShardedIndex(cells: DataFrame, k: Long,
-      byC: Map[Int, Seq[Long]], smax: Int)
-  private[graft] def shardedAssign(embIn: DataFrame, P: Int, cmax: Int,
+      byC: Map[Int, Seq[Long]], probes: Int => Column)
+  private[graft] def shardedAssign(embIn: DataFrame, P: Int, tier: IvfTier,
       dims: Int = 64): ShardedIndex = {
-    val n = embIn.count()
-    val k = shardCountAt(n, cmax)
+    val (n, k) = tier match {
+      case FixedC(_) => (0L, 1)
+      case ScaledC(cmax, sharded) =>
+        val n = embIn.count()
+        (n, if (sharded) shardCountAt(n, cmax) else 1)
+    }
     val emb = embIn
       .withColumn("dv", transform(col("embedding"), x => x.cast("double")))
       .withColumn("shard", col("vec_id") % k)
       .select("vec_id", "shard", "dv").cache()
-    val counts = emb.groupBy("shard").agg(count(lit(1)).as("ns"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val cOf = counts.map { case (s, ns) =>
-      clampEnforce(ns, cmax, ivfStrict)
-      s -> scaledCAt(ns, cmax)
+    val (cOf, probes) = tier match {
+      case FixedC(fixed) =>
+        // flat top-P over every centroid: bit-identical to the literal
+        // dot_product + array_sort formulation the e8/e16 oracles state
+        // (pinned in ExtensionsSpec)
+        (Map(0L -> fixed), (c: Int) => graft.functions.IvfKernels.ivf_probes(
+          col("dv"), ivfFlatCentroids(c, dims), dims, P))
+      case ScaledC(cmax, _) =>
+        val counts = if (k == 1) Map(0L -> n)
+          else emb.groupBy("shard").agg(count(lit(1)).as("ns"))
+            .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        (counts.map { case (s, ns) =>
+          clampEnforce(ns, cmax, ivfStrict)
+          s -> scaledCAt(ns, cmax)
+        }, (c: Int) => probes2Col(embIn.sparkSession, c, smaxFor(cmax),
+          dims, P))
     }
-    // one assignment branch per DISTINCT per-shard C (usually exactly
-    // one — modulo shards of dense ids differ by <= 1 vector), not per
-    // shard: the kernel codebook is a function of C alone, so shards
-    // sharing a C share a compiled branch and the union stays O(#C)
     val byC = cOf.groupBy(_._2).view.mapValues(_.keys.toSeq.sorted).toMap
-    val smax = smaxFor(cmax)
     val assigned = byC.toSeq.sortBy(_._1).map { case (c, shards) =>
       val base = if (byC.size == 1) emb
         else emb.filter(col("shard").isin(shards: _*))
-      base.withColumn("probes",
-          probes2Col(embIn.sparkSession, c, smax, dims, P))
+      // probes(0) IS the cell argmax (first index attaining the max)
+      base.withColumn("probes", probes(c))
         .withColumn("cell", element_at(col("probes"), lit(1)))
         .withColumn("n_cells", lit(c.toLong))
     }.reduce(_ union _)
-    ShardedIndex(assigned.cache(), k, byC, smax)
+    ShardedIndex(assigned.cache(), k, byC, probes)
   }
 
-  /** the replicated-eval probe frame shared by e16c and e18c: every
-    * eval vector assigned under every DISTINCT per-shard C — the
-    * geometry is a function of C alone, so this is how "the eval suite
-    * probes every shard" costs n_eval·#distinctC, not n_eval·K. */
-  private[graft] def evalProbesByC(idx: ShardedIndex, P: Int,
-      dims: Int = 64): DataFrame = {
+  /** the replicated-eval probe frame of the decontam and composed
+    * bodies: every eval vector assigned under every DISTINCT per-shard
+    * C — the geometry is a function of C alone, so this is how "the
+    * eval suite probes every shard" costs n_eval·#distinctC, not
+    * n_eval·K. */
+  private[graft] def evalProbesByC(idx: ShardedIndex): DataFrame = {
     val evBase = idx.cells.filter(col("vec_id") % 50 === 0)
       .select("vec_id", "dv")
     idx.byC.keys.toSeq.sorted.map { c =>
-      evBase.withColumn("probes",
-          probes2Col(idx.cells.sparkSession, c, idx.smax, dims, P))
+      evBase.withColumn("probes", idx.probes(c))
         .select(lit(c.toLong).as("n_cells"), col("vec_id").as("eval_id"),
           explode(col("probes")).as("pcell"))
     }.reduce(_ union _)
   }
 
-  private[graft] def ivfDedupShardedAt(embIn: DataFrame, P: Int,
-      tau: Double, cmax: Int): DataFrame = {
-    val idx = shardedAssign(embIn, P, cmax)
-    val (cells, k) = (idx.cells, idx.k)
-    val members = cells.select(col("shard"), col("vec_id"),
+  /** one row per (vector, probe cell) of `cells` */
+  private def probeMembers(cells: DataFrame): DataFrame =
+    cells.select(col("shard"), col("n_cells"), col("vec_id"),
       explode(col("probes")).as("pcell"))
-    // candidates within (shard, pcell) ONLY — the shard column joins
-    // the existing probe-cell equi-join key, so this is the same
-    // shuffle with a finer key, never a new exchange
+
+  /** confirmed near-dup pairs (id_a < id_b, cosine >= tau) among
+    * `members`: candidates only inside a shared (shard, probe cell),
+    * bare id pairs deduped before any vector math */
+  private def withinShardPairs(idx: ShardedIndex, members: DataFrame,
+      tau: Double): DataFrame = {
     val cand = members
       .select(col("shard"), col("pcell"), col("vec_id").as("id_a"))
       .join(members.select(col("shard"), col("pcell"),
         col("vec_id").as("id_b")), Seq("shard", "pcell"))
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
-    val va = cells.select(col("vec_id").as("id_a"), col("dv").as("va"))
-    val vb = cells.select(col("vec_id").as("id_b"), col("dv").as("vb"))
-    val pairs = cand.join(va, Seq("id_a")).join(vb, Seq("id_b"))
+    val va = idx.cells.select(col("vec_id").as("id_a"), col("dv").as("va"))
+    val vb = idx.cells.select(col("vec_id").as("id_b"), col("dv").as("vb"))
+    cand.join(va, Seq("id_a")).join(vb, Seq("id_b"))
       .filter(Vectors.cosine(col("va"), col("vb")) >= tau)
       .select("id_a", "id_b")
-    val reps = pairs.groupBy(col("id_b").as("vec_id"))
+  }
+
+  /** confirmed (eval_id, train_id) pairs at cosine >= tau: each train
+    * member meets the replicated eval probes of its shard's C on
+    * (n_cells, pcell) */
+  private def evalTrainPairs(idx: ShardedIndex, trainMembers: DataFrame,
+      tau: Double): DataFrame = {
+    val cand = trainMembers
+      .select(col("n_cells"), col("pcell"), col("vec_id").as("train_id"))
+      .join(evalProbesByC(idx), Seq("n_cells", "pcell"))
+      .select("eval_id", "train_id").distinct()
+    val ve = idx.cells.select(col("vec_id").as("eval_id"), col("dv").as("evv"))
+    val vt = idx.cells.select(col("vec_id").as("train_id"), col("dv").as("tvv"))
+    cand.join(ve, Seq("eval_id")).join(vt, Seq("train_id"))
+      .filter(Vectors.cosine(col("evv"), col("tvv")) >= tau)
+      .select("eval_id", "train_id")
+  }
+
+  /** FULL-CORPUS embedding near-dup dedup — the SemDeDup shape (cluster,
+    * then dedup within cluster): every vector is assigned to its top-P
+    * cells (multi-probe MEMBERSHIP, the e3 recipe turned symmetric —
+    * single-cell assignment caps pair recall near 0.17 on a uniform
+    * corpus because barely-similar vectors straddle cell boundaries),
+    * candidate pairs are generated ONLY inside a shared (shard, cell)
+    * (an equi-join — never a corpus x corpus join), bare id pairs are
+    * deduped BEFORE the cosine (a pair sharing several probe cells
+    * costs one cosine), and each vector's representative is the lowest
+    * id among its confirmed cosine>=tau neighbors (itself when none).
+    * Unlike e4 there is NO vec_id bound.
+    *
+    * C is THE scale knob: within-cell pairwise work is O(n²·P²/C), so
+    * growing C ∝ n (the ScaledC tiers) keeps it linear. e8 pins C=16 to
+    * share e3's literal-centroid oracle recipe; EdgeSpec drives C=64
+    * over a 5k clustered corpus to pin that the dedup semantics do not
+    * depend on the cell count. Output: (vec_id, shard, cell, rep_id,
+    * n_shards, n_cells); each entry projects its own schema. */
+  private[graft] def ivfDedupShardedAt(embIn: DataFrame, P: Int,
+      tau: Double, tier: IvfTier): DataFrame = {
+    val idx = shardedAssign(embIn, P, tier)
+    val reps = withinShardPairs(idx, probeMembers(idx.cells), tau)
+      .groupBy(col("id_b").as("vec_id"))
       .agg(min(col("id_a")).as("rep_min"))
-    cells.select("vec_id", "shard", "cell", "n_cells")
+    idx.cells.select("vec_id", "shard", "cell", "n_cells")
       .join(reps, Seq("vec_id"), "left")
       .select(col("vec_id"), col("shard"), col("cell"),
         coalesce(col("rep_min"), col("vec_id")).as("rep_id"),
-        lit(k.toLong).as("n_shards"), col("n_cells"))
+        lit(idx.k).as("n_shards"), col("n_cells"))
       .orderBy("vec_id")
   }
-  private[graft] def ivfDedupSharded(embIn: DataFrame, P: Int,
-      tau: Double): DataFrame =
-    ivfDedupShardedAt(embIn, P, tau, ivfCmax)
 
-  /** SHARD TIER for semantic decontamination (e16c): e8c's contract
-    * applied to e16b, with the one asymmetry a deployment actually has
-    * — the corpus shards, the eval suite does NOT. K modulo-id shards
-    * each run their own UN-clamped scaledC ladder from their own
-    * count; a TRAIN vector probes within its own shard; the (small,
-    * fixed) eval suite probes EVERY shard. Because the cell geometry
-    * is a pure function of C alone (fixed-seed centroids/supers), an
-    * eval vector's probes under shard s are a function of C_s only, so
-    * replication costs one assignment branch per DISTINCT per-shard C
-    * (usually exactly one — modulo shards of dense ids differ by <= 1
-    * vector), and the candidate join keys on (C, pcell): a probe cell
-    * occupied by train members of several same-C shards meets the same
-    * eval probe rows once each, which IS the replication.
+  /** semantic decontamination (e16/e16b/e16c): d18's eval-overlap gate
+    * in embedding space. Eval split = vec_id % 50 == 0; a TRAINING
+    * vector is flagged iff some eval vector sits within cosine >= tau,
+    * and the output keeps the witness eval id and neighbor count so a
+    * curation review can audit every drop.
     *
-    * The semantic point vs e8c: sharding near-dup DEDUP trades recall
-    * (a cross-shard pair is deliberately not a candidate), but sharding
-    * DECONTAMINATION must not — a missed eval×train contamination is a
-    * benchmark leak, not a recall trade — so the eval side is the one
-    * frame that crosses every shard boundary. It is the designed-small
-    * side (n/50 here; a fixed benchmark suite in production), the same
-    * structural-smallness argument as ivfDecontam's asymmetric join.
+    * ONE asymmetric eval-probes × train-probes equi-join on the shared
+    * probe cell, not a union of two oppositely-filtered views of the
+    * all-pairs pipeline: the eval split is the designed-small side (a
+    * fixed benchmark suite in production), so AQE's broadcast choice
+    * lands on it, and candidate volume is Σ_cell eval_occ·train_occ,
+    * computed once. Cosine is symmetric with an unchanged fold order,
+    * so the confirmed set is the union form's bit for bit.
     *
-    * Scale shape: per-shard candidate volume is Σ_cell eval·train_s,
-    * linear at C_s ∝ n_s and independent of K; eval assignment work is
-    * n_eval·#distinctC — effectively constant. K=1 degenerates to
-    * exactly e16b's pipeline plus shard metadata columns (same ladder,
-    * same geometry, same candidates — pinned by spec). */
+    * Sharded, the corpus shards and the eval suite does NOT: a train
+    * vector probes within its own shard, the eval suite probes every
+    * shard (evalProbesByC), and the candidate join keys on (C, pcell).
+    * Sharding dedup trades recall by contract, but a missed eval×train
+    * contamination is a benchmark leak, so the eval side is the one
+    * frame that crosses every shard boundary. */
   private[graft] def ivfDecontamShardedAt(embIn: DataFrame, P: Int,
-      tau: Double, cmax: Int): DataFrame = {
-    val idx = shardedAssign(embIn, P, cmax)
-    val (cells, k) = (idx.cells, idx.k)
-    // train members probe within their own shard's geometry; n_cells
-    // (= the shard's C) rides along as the join key to the replicated
-    // eval side — (C, pcell) is the within-shard rule stated in the
-    // coordinates that make the eval replication free
-    val trainMem = cells.filter(col("vec_id") % 50 =!= 0)
-      .select(col("n_cells"), col("vec_id").as("train_id"),
-        explode(col("probes")).as("pcell"))
-    val evProbes = evalProbesByC(idx, P)
-    val cand = trainMem.join(evProbes, Seq("n_cells", "pcell"))
-      .select("eval_id", "train_id").distinct()
-    val ve = cells.select(col("vec_id").as("eval_id"), col("dv").as("evv"))
-    val vt = cells.select(col("vec_id").as("train_id"), col("dv").as("tvv"))
-    val contam = cand.join(ve, Seq("eval_id")).join(vt, Seq("train_id"))
-      .filter(Vectors.cosine(col("evv"), col("tvv")) >= tau)
-      .select(col("train_id").as("vec_id"), col("eval_id"))
-    val flags = contam.groupBy("vec_id")
+      tau: Double, tier: IvfTier): DataFrame = {
+    val idx = shardedAssign(embIn, P, tier)
+    val train = idx.cells.filter(col("vec_id") % 50 =!= 0)
+    val flags = evalTrainPairs(idx, probeMembers(train), tau)
+      .groupBy(col("train_id").as("vec_id"))
       .agg(count(lit(1)).as("n_near_eval"),
         min(col("eval_id")).as("witness_eval"))
-    cells.filter(col("vec_id") % 50 =!= 0)
-      .select("vec_id", "shard", "cell", "n_cells")
+    train.select("vec_id", "shard", "cell", "n_cells")
       .join(flags, Seq("vec_id"), "left")
       .select(col("vec_id"), col("shard"), col("cell"),
         coalesce(col("n_near_eval"), lit(0L)).as("n_near_eval"),
         coalesce(col("witness_eval"), lit(-1L)).as("witness_eval"),
         when(col("n_near_eval").isNull, 1L).otherwise(0L).as("keep"),
-        lit(k.toLong).as("n_shards"), col("n_cells"))
+        lit(idx.k).as("n_shards"), col("n_cells"))
       .orderBy("vec_id")
   }
-  private[graft] def ivfDecontamSharded(embIn: DataFrame, P: Int,
-      tau: Double): DataFrame =
-    ivfDecontamShardedAt(embIn, P, tau, ivfCmax)
 
-  /** e18c's body, cmax-parameterized so the spec can bind sharding at
-    * test scale: e18's composed ingest pipeline where each quality
-    * surface keeps its OWN sharding contract — within-shard train×train
-    * dedup (e8c), shard-replicated eval decontam (e16c) — over ONE
-    * shared sharded assignment. The two candidate joins cannot share a
-    * pair pass (disjoint pair populations under different contracts);
-    * what they share is the expensive part: the assignment, the
-    * per-shard ladders, and the kernel branches. */
+  /** the composed vector-side ingest pipeline (e18, e18c): each quality
+    * surface keeps its own contract — within-shard train×train dedup,
+    * shard-replicated eval decontam — over ONE shared assignment. The
+    * two candidate joins are disjoint pair populations; what they share
+    * is the expensive part: the assignment, the ladders, and the kernel
+    * branches. */
   private[graft] def e2eShardedAt(embIn: DataFrame, docs: DataFrame,
-      cmax: Int): DataFrame = {
-    val idx = shardedAssign(embIn, P = 4, cmax = cmax)
-    val trainMem = idx.cells.filter(col("vec_id") % 50 =!= 0)
-      .select(col("shard"), col("n_cells"),
-        col("vec_id").as("train_id"), explode(col("probes")).as("pcell"))
-    val tcand = trainMem
-      .select(col("shard"), col("pcell"), col("train_id").as("id_a"))
-      .join(trainMem.select(col("shard"), col("pcell"),
-        col("train_id").as("id_b")), Seq("shard", "pcell"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    val va = idx.cells.select(col("vec_id").as("id_a"), col("dv").as("va"))
-    val vb = idx.cells.select(col("vec_id").as("id_b"), col("dv").as("vb"))
-    val ddrop = tcand.join(va, Seq("id_a")).join(vb, Seq("id_b"))
-      .filter(Vectors.cosine(col("va"), col("vb")) >= 0.4)
+      tier: IvfTier): DataFrame = {
+    val idx = shardedAssign(embIn, P = 4, tier)
+    val train = idx.cells.filter(col("vec_id") % 50 =!= 0)
+    val trainMem = probeMembers(train)
+    // a train vector is dropped as the higher id of a confirmed
+    // train×train pair or as the train side of a confirmed eval×train
+    // pair; the keep set only needs the union of the two drop sets
+    val dropped = withinShardPairs(idx, trainMem, 0.4)
       .select(col("id_b").as("vec_id"))
-    val evProbes = evalProbesByC(idx, P = 4)
-    val ccand = trainMem
-      .select(col("n_cells"), col("pcell"), col("train_id"))
-      .join(evProbes, Seq("n_cells", "pcell"))
-      .select("eval_id", "train_id").distinct()
-    val ve = idx.cells.select(col("vec_id").as("eval_id"),
-      col("dv").as("evv"))
-    val vt = idx.cells.select(col("vec_id").as("train_id"),
-      col("dv").as("tvv"))
-    val cdrop = ccand.join(ve, Seq("eval_id")).join(vt, Seq("train_id"))
-      .filter(Vectors.cosine(col("evv"), col("tvv")) >= 0.4)
-      .select(col("train_id").as("vec_id"))
-    val dropped = ddrop.unionByName(cdrop).distinct()
-    val clean = idx.cells.select("vec_id")
-      .filter(col("vec_id") % 50 =!= 0)
+      .unionByName(evalTrainPairs(idx, trainMem, 0.4)
+        .select(col("train_id").as("vec_id")))
+      .distinct()
+    val clean = train.select("vec_id")
       .join(dropped, Seq("vec_id"), "left_anti")
     val gated = docs
       .join(clean, col("doc_id") === col("vec_id"))
@@ -1481,54 +1410,7 @@ object Approx {
       100000L)
   }
 
-  /** e16b's semantic decontamination over the IVF probe machinery,
-    * built as ONE explicit eval-probes × train-probes equi-join on the
-    * shared probe cell instead of a union of two oppositely-filtered
-    * views of the generic all-pairs pipeline. Three reasons, all
-    * scale-shaped: (1) the union form traverses the candidate join +
-    * exact-cosine pipeline TWICE (once per branch) and only stays cheap
-    * if Catalyst pushes each branch's one-sided `% 50` filter below the
-    * join — an optimization this form states directly; (2) the
-    * asymmetric join makes the small side STRUCTURAL (the eval split is
-    * the designed-small side of a decontamination — a fixed benchmark
-    * suite in production), so AQE's runtime broadcast choice lands on
-    * the right frame instead of occasionally broadcasting a branch-join
-    * output (measured 2-4 s of run-to-run variance at 100k vectors);
-    * (3) candidate volume is Σ_cell eval_occ·train_occ ≈ 16n²/(50·C) —
-    * linear at C ∝ n, and computed once. Semantics are IDENTICAL to the
-    * union form (a candidate is an (eval, train) pair sharing a probed
-    * cell; cosine is symmetric and its fold order unchanged, so the
-    * confirmed set is bit-exact) — the oracle (e16bOracleSql) is
-    * untouched and stays green at every scale factor. */
-  private[graft] def ivfDecontam(embIn: DataFrame, C: Int, P: Int,
-      tau: Double, kernel: Boolean = false): DataFrame = {
-    val (cells, _) = ivfCellsAndPairs(embIn, C, P, tau, kernel)
-    val members = cells.select(col("vec_id"), explode(col("probes")).as("pcell"))
-    val ev = members.filter(col("vec_id") % 50 === 0)
-      .select(col("pcell"), col("vec_id").as("eval_id"))
-    val tr = members.filter(col("vec_id") % 50 =!= 0)
-      .select(col("pcell"), col("vec_id").as("train_id"))
-    val cand = ev.join(tr, Seq("pcell"))
-      .select("eval_id", "train_id").distinct()
-    val ve = cells.select(col("vec_id").as("eval_id"), col("dv").as("evv"))
-    val vt = cells.select(col("vec_id").as("train_id"), col("dv").as("tvv"))
-    val contam = cand.join(ve, Seq("eval_id")).join(vt, Seq("train_id"))
-      .filter(Vectors.cosine(col("evv"), col("tvv")) >= tau)
-      .select(col("train_id").as("vec_id"), col("eval_id"))
-    val flags = contam.groupBy("vec_id")
-      .agg(count(lit(1)).as("n_near_eval"),
-        min(col("eval_id")).as("witness_eval"))
-    cells.filter(col("vec_id") % 50 =!= 0)
-      .select("vec_id", "cell")
-      .join(flags, Seq("vec_id"), "left")
-      .select(col("vec_id"), col("cell"),
-        coalesce(col("n_near_eval"), lit(0L)).as("n_near_eval"),
-        coalesce(col("witness_eval"), lit(-1L)).as("witness_eval"),
-        when(col("n_near_eval").isNull, 1L).otherwise(0L).as("keep"))
-      .orderBy("vec_id")
-  }
-
-  /** deployment cell-count cap for the scaledC ladder — the cluster
+  /** deployment cell-count cap for the scaledCAt ladder — the cluster
     * escape for the clamp regime (SCALE.md round-14). The single-box
     * default (4096) bounds the driver-side codebook and the kernel's
     * literal centroid array; above ~131k vectors the clamp binds, mean
@@ -1583,7 +1465,7 @@ object Approx {
     * point, doubling per octave (SCALE.md round-14 sf5 fit) — so a
     * default-config run above cmax·32 vectors must say so out loud.
     * Pure function of (n, cmax) so the spec asserts the message without
-    * touching the process environment; scaledC wires it to stderr or,
+    * touching the process environment; clampEnforce wires it to stderr or,
     * under SPARK_GRAFT_IVF_STRICT, to a failure. */
   private[graft] def clampDiagnostic(n: Long, cmax: Int): Option[String] = {
     val target = math.max(1L, (n + 31) / 32)
@@ -1614,7 +1496,7 @@ object Approx {
   /** corpus-scaled cell count: the smallest power of two with a mean
     * cell size <= 32, clamped to [8, ivfCmax] (4096 unless the
     * deployment raises SPARK_GRAFT_IVF_CMAX — see its scaladoc). C ∝ n
-    * keeps within-cell pair work linear (see ivfDedup); the
+    * keeps within-cell pair work linear (see ivfDedupShardedAt); the
     * power-of-two ladder makes the choice expressible EXACTLY in the
     * oracle (a MIN over a VALUES ladder vs COUNT(*) — no float log2
     * edge cases). Both engines compute it from the same corpus count.
@@ -1622,7 +1504,9 @@ object Approx {
     * the assignment's O(√C) cost barely notices the doubled C, while
     * the within-cell pair work (the dominant term, ~mean-cell/2 exact
     * cosines per probe row) halves — measured before/after in SCALE.md
-    * round-13, recall gates unchanged. */
+    * round-13, recall gates unchanged. The ScaledC tiers of
+    * shardedAssign call it with each shard's count (the corpus count
+    * at K=1), after clampEnforce. */
   private[graft] def scaledCAt(n: Long, cmax: Int): Int = {
     val target = math.max(1L, (n + 31) / 32)
     var c = 8
@@ -1636,21 +1520,16 @@ object Approx {
       if (strict) sys.error(msg) else System.err.println(msg)
     }
 
-  private[graft] def scaledC(n: Long): Int = {
-    clampEnforce(n, ivfCmax, ivfStrict)
-    scaledCAt(n, ivfCmax)
-  }
-
   /** shard-count ladder for the tier ABOVE the cell-count cap — the
     * design SCALE.md round-14 closed with as prose, now code
     * (e8c_embed_dedup_sharded): K = the smallest power of two with
     * ceil(n/K) <= cmax·32 vectors per shard, i.e. small enough that
-    * each shard's own scaledC ladder stays UN-clamped. Capped at
+    * each shard's own scaledCAt ladder stays UN-clamped. Capped at
     * IvfShardMax=4096 shards — at CMAX=65536 that extends the ceiling
     * from ~2.1M vectors/box to ~8.6G vectors before anything silently
     * degrades again (and the per-shard clampEnforce in
-    * ivfDedupShardedAt speaks if a modulo-skewed shard still clamps).
-    * Power-of-two ladder for the same reason as scaledC: exactly
+    * shardedAssign speaks if a modulo-skewed shard still clamps).
+    * Power-of-two ladder for the same reason as scaledCAt: exactly
     * expressible in the oracle as a MIN over VALUES against COUNT(*),
     * no float log2. */
   private[graft] val IvfShardMax = 4096
@@ -1661,7 +1540,6 @@ object Approx {
     while ((n + k - 1) / k > cap && k < shmax) k <<= 1
     k
   }
-  private[graft] def shardCount(n: Long): Int = shardCountAt(n, ivfCmax)
 
   /** minimum C at which the probe kernel's CHILD codebook ships as a
     * SparkContext.broadcast instead of a task-binary reference object.
@@ -1676,9 +1554,9 @@ object Approx {
 
   /** one broadcast per (SparkContext, C): the codebook is a pure
     * function of C (fixed seed base, ivfFlatCentroids), so the memo key
-    * needs no content fingerprint; sharing one instance across call
-    * sites (e8b/e16b/e18 in one session, shards sharing a C in e8c)
-    * keeps case-class equality on IvfProbes2B — and with it codegen
+    * needs no content fingerprint; sharing one instance across every
+    * ScaledC assignment at that C (the member and eval probe columns,
+    * and every scaled entry in one session) keeps case-class equality on IvfProbes2B — and with it codegen
     * CSE — intact, and re-broadcasts nothing. applicationId scopes the
     * memo to the live SparkContext (a fresh context gets fresh
     * broadcasts; entries of a stopped context are a few stale handles,
@@ -1691,11 +1569,10 @@ object Approx {
     cbBcastMemo.computeIfAbsent((spark.sparkContext.applicationId, c),
       _ => spark.sparkContext.broadcast(ivfFlatCentroids(c, dims)))
 
-  /** the two-level probe-kernel column shared by both scaled assignment
-    * call sites (ivfCellsAndPairs kernel path, ivfDedupShardedAt):
-    * identical arithmetic either way — below BcastCMin the child
-    * codebook rides inline exactly as before; at/above it ships as a
-    * broadcast (IvfProbes2B) so a corpus-scaled C doesn't serialize
+  /** the two-level probe-kernel column of the ScaledC tiers (built by
+    * shardedAssign for members and reused by evalProbesByC): identical
+    * arithmetic either way — below BcastCMin the child codebook rides
+    * inline; at/above it ships as a broadcast (IvfProbes2B) so a corpus-scaled C doesn't serialize
     * megabytes into every task binary. */
   private[graft] def probes2Col(spark: SparkSession, c: Int, smax: Int,
       dims: Int, p: Int): Column = {
@@ -1755,7 +1632,7 @@ object Approx {
     * with the corpus, so per-query probe cost does too; growing P with
     * n keeps buckets near-constant and recall is bought back with
     * Hamming-1 multiprobe (P+1 probes per table) instead of deeper
-    * scans. Same oracle-expressibility discipline as scaledC: an
+    * scans. Same oracle-expressibility discipline as scaledCAt: an
     * integer ladder derivable from COUNT(*) with no float log2. A
     * binding cap speaks (or fails, under strict) like the IVF side. */
   private[graft] def scaledPlanesAt(n: Long, pmax: Int): Int = {
@@ -1879,7 +1756,7 @@ object Approx {
     Array.tabulate(C * dims)(i => mixToUnit(0x49564600L + i) - 0.5)
 
   // ---- two-level coarse quantizer (e8b/e16b assignment) ----------------
-  // scaledC grows C ∝ n to keep within-cell pair work linear, which made
+  // scaledCAt grows C ∝ n to keep within-cell pair work linear, which made
   // the FLAT coarse assignment O(n·C·dims) = O(n²·dims/64) — the one
   // remaining 100 TB scale-killer (SCALE.md round-11). The standard IVF
   // answer is hierarchical: rank S ≈ √C super-centroids, then score only
@@ -1962,67 +1839,6 @@ object Approx {
     }
     childStart(nonEmpty.length) = off
     (superCb, childStart, childIds)
-  }
-
-  /** the IVF multi-probe machinery shared by e8 (dedup reps) and e16
-    * (semantic decontamination): (cells, confirmed pairs). `cells` =
-    * (vec_id, dv, cell, probes) cached; `pairs` = (id_a < id_b) with
-    * cosine >= tau, bare-id-deduped before the cosine. `kernel` swaps
-    * the C literal dot-product expressions for the compiled IvfSims
-    * codebook kernel (required beyond small C — the literal form puts
-    * C·dims doubles into the plan); the declarative argmax/probe tail
-    * is shared, so tie-break semantics are identical by construction. */
-  private[graft] def ivfCellsAndPairs(embIn: DataFrame, C: Int, P: Int,
-      tau: Double, kernel: Boolean = false): (DataFrame, DataFrame) = {
-    val dims = 64
-    val emb = embIn
-      .withColumn("dv", transform(col("embedding"), x => x.cast("double")))
-      .select("vec_id", "dv").cache() // barrier: cast once, not per centroid
-    def centroid(c: Int) = array((0 until dims).map { d =>
-      lit(mixToUnit(0x49564600L + c.toLong * dims + d) - 0.5)
-    }: _*)
-    val cells = (if (kernel) {
-      // compiled TWO-LEVEL top-P selection: rank S ≈ √C super-centroids,
-      // then score only the top-2 supers' children — O(√C·dims) per row
-      // instead of the flat kernel's O(C·dims), which at corpus-scaled
-      // C (C ∝ n) was O(n²) end to end (SCALE.md round-11's named
-      // scale-killer). probes(0) IS the cell argmax among the probed
-      // children (first index attaining the max), so one kernel call
-      // still replaces sims array + argmax + struct sort, and the row
-      // stays inside whole-stage codegen. The oracle re-derives the
-      // supers, the parent map, and the two-stage ranking in SQL from
-      // COUNT(*) alone (see ivfScaledPairCtes).
-      emb.withColumn("probes",
-          probes2Col(embIn.sparkSession, C, ivfSmax, dims, P))
-        .withColumn("cell", element_at(col("probes"), lit(1)))
-    } else {
-      val sims = array((0 until C).map(c =>
-        graft.functions.DotProduct.dot_product(col("dv"), centroid(c))): _*)
-      // top-P probe cells per vector: (−sim, cell-index) structs sort
-      // without a comparator lambda (the e3 trick)
-      val simsRanked = zip_with(col("_sims"),
-        transform(sequence(lit(1), lit(C)), i => i.cast("long")),
-        (sim, idx) => struct((-sim).as("neg"), idx.as("cell")))
-      val probeCells = transform(slice(array_sort(simsRanked), 1, P),
-        x => x.getField("cell"))
-      emb.withColumn("_sims", sims)
-        .withColumn("cell", array_position(col("_sims"), array_max(col("_sims"))))
-        .withColumn("probes", probeCells)
-        .drop("_sims")
-    }).cache() // reused by pair gen (both sides) + final join
-    val members = cells.select(col("vec_id"), explode(col("probes")).as("pcell"))
-    // equi-join on the shared probe cell; dedup bare id pairs before
-    // any vector math
-    val cand = members.select(col("pcell"), col("vec_id").as("id_a"))
-      .join(members.select(col("pcell"), col("vec_id").as("id_b")), Seq("pcell"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    val va = cells.select(col("vec_id").as("id_a"), col("dv").as("va"))
-    val vb = cells.select(col("vec_id").as("id_b"), col("dv").as("vb"))
-    val pairs = cand.join(va, Seq("id_a")).join(vb, Seq("id_b"))
-      .filter(Vectors.cosine(col("va"), col("vb")) >= tau)
-      .select("id_a", "id_b")
-    (cells, pairs)
   }
 
   // ---- product quantization constants (e6/e7) --------------------------
@@ -2591,9 +2407,10 @@ object Approx {
       (s, dir) =>
         // FULL-CORPUS embedding near-dup dedup — the SemDeDup shape.
         // C=16/P=4 match e3 so catalog entry and oracle share the
-        // centroid recipe; C is the scale knob (see ivfDedup — EdgeSpec
-        // drives C=64 on a 5k synthetic corpus).
-        ivfDedup(t(s, dir, "embeddings"), C = 16, P = 4, tau = 0.4),
+        // centroid recipe; C is the scale knob (see ivfDedupShardedAt —
+        // EdgeSpec drives C=64 on a 5k synthetic corpus).
+        ivfDedupShardedAt(t(s, dir, "embeddings"), P = 4, tau = 0.4,
+          FixedC(16)).select("vec_id", "cell", "rep_id"),
       Some(e8OracleSql),
       "full-corpus embedding near-dup dedup, SemDeDup shape: IVF cell " +
         "assignment (e3's literal centroids) + within-cell pairwise " +
@@ -2602,10 +2419,10 @@ object Approx {
 
     QueryDef(
       "e8b_embed_dedup_scaled",
-      (s, dir) => {
+      (s, dir) =>
         // e8 at the setting a user would actually run: C grows with the
-        // corpus (scaledC: mean cell <= 32 on a power-of-two ladder), so
-        // within-cell pair work stays linear instead of N²/C at fixed
+        // corpus (scaledCAt: mean cell <= 32 on a power-of-two ladder),
+        // so within-cell pair work stays linear instead of N²/C at fixed
         // C=16 — measured 225 s → ~2 s at sf0.5. Coarse scoring runs
         // through the compiled TWO-LEVEL IvfProbes2 kernel: S ≈ √C
         // supers, then only the top-2 supers' children — O(√C·dims) per
@@ -2615,11 +2432,9 @@ object Approx {
         // centroids/supers by emulating mixToUnit in HUGEINT SQL, so one
         // static oracle string stays bit-exact at every scale factor.
         // The count() is a metadata-scale action (parquet row counts).
-        val emb = t(s, dir, "embeddings")
-        val c = scaledC(emb.count())
-        ivfDedup(emb, C = c, P = 4, tau = 0.4, kernel = true)
-          .withColumn("n_cells", lit(c.toLong))
-      },
+        ivfDedupShardedAt(t(s, dir, "embeddings"), P = 4, tau = 0.4,
+          ScaledC(ivfCmax, sharded = false))
+          .select("vec_id", "cell", "rep_id", "n_cells"),
       Some(e8bOracleSql),
       "corpus-scaled-C embedding near-dup dedup: e8's SemDeDup shape " +
         "with C chosen from the corpus count (cell size <= 32) and " +
@@ -2631,22 +2446,20 @@ object Approx {
 
     QueryDef(
       "e8c_embed_dedup_sharded",
-      (s, dir) => {
+      (s, dir) =>
         // the tier ABOVE the cell-count cap: when ceil(n/32) would
         // exceed SPARK_GRAFT_IVF_CMAX, e8b's ladder clamps and pair
         // work re-enters the measured quadratic regime (4.1x at 2x
         // past binding, SCALE.md round-14). e8c is the deployment
         // answer: K modulo-id shards, each running its own UN-clamped
-        // scaledC ladder from its own COUNT, candidates within-shard —
-        // the standard sharded-ANN contract (a cross-shard near-dup is
-        // deliberately not a candidate). Below the binding point K=1
-        // and e8c degenerates to exactly e8b's pipeline plus shard
-        // metadata columns; the forced-CMAX gates make sharding bind
-        // at test scale (check_shard_r15). The K-row per-shard count
-        // collect is plan-time metadata, the per-shard generalization
-        // of e8b's count().
-        ivfDedupSharded(t(s, dir, "embeddings"), P = 4, tau = 0.4)
-      },
+        // scaledCAt ladder from its own COUNT, candidates within-shard
+        // — the standard sharded-ANN contract (a cross-shard near-dup
+        // is deliberately not a candidate). Below the binding point K=1
+        // and e8c is e8b's pipeline plus shard metadata columns; the
+        // forced-CMAX gates make sharding bind at test scale
+        // (check_shard_r15).
+        ivfDedupShardedAt(t(s, dir, "embeddings"), P = 4, tau = 0.4,
+          ScaledC(ivfCmax, sharded = true)),
       Some(e8cOracleSql),
       "sharded IVF near-dup dedup — the tier above the cell-count cap: " +
         "K = smallest power of two with <= CMAX*32 vectors/shard, " +
@@ -2658,21 +2471,16 @@ object Approx {
 
     QueryDef(
       "e16b_decontam_scaled",
-      (s, dir) => {
+      (s, dir) =>
         // e16's semantic decontamination at the e8b setting: same
         // corpus-scaled C, same compiled coarse-assignment kernel, same
         // flag/witness/keep semantics — so BOTH ingest-quality surfaces
         // (dedup and decontamination) carry a deployment-shaped entry,
-        // not just the didactic C=16 twins. Round 13: the body moved to
-        // ivfDecontam — ONE explicit eval-probes × train-probes
-        // equi-join instead of a union of two oppositely-filtered views
-        // of the all-pairs pipeline (see its scaladoc; bit-exact same
-        // result). Oracle = the shared scaled CTE prefix + e16's tail,
-        // exact at every scale factor.
-        val emb = t(s, dir, "embeddings")
-        val c = scaledC(emb.count())
-        ivfDecontam(emb, C = c, P = 4, tau = 0.4, kernel = true)
-      },
+        // not just the didactic C=16 twins. Oracle = the shared scaled
+        // CTE prefix + e16's tail, exact at every scale factor.
+        ivfDecontamShardedAt(t(s, dir, "embeddings"), P = 4, tau = 0.4,
+          ScaledC(ivfCmax, sharded = false))
+          .select("vec_id", "cell", "n_near_eval", "witness_eval", "keep"),
       Some(e16bOracleSql),
       "corpus-scaled-C semantic decontamination: e16's flag/witness/" +
         "keep gate through e8b's scaled IVF machinery (shared kernel, " +
@@ -2681,7 +2489,7 @@ object Approx {
 
     QueryDef(
       "e16c_decontam_sharded",
-      (s, dir) => {
+      (s, dir) =>
         // the decontamination tier ABOVE the cell-count cap — e8c's
         // shard contract applied to e16b, with the one asymmetry a
         // deployment actually has: the corpus shards, the eval suite
@@ -2691,11 +2499,10 @@ object Approx {
         // per-shard C, because the geometry is a function of C alone —
         // so sharding trades near-dup recall (e8c, by contract) but
         // NEVER decontamination coverage: a cross-shard eval×train
-        // contamination cannot be missed. K=1 degenerates to exactly
-        // e16b plus shard metadata columns (spec-pinned); the forced-
-        // CMAX gates make sharding bind at test scale.
-        ivfDecontamSharded(t(s, dir, "embeddings"), P = 4, tau = 0.4)
-      },
+        // contamination cannot be missed. The forced-CMAX gates make
+        // sharding bind at test scale.
+        ivfDecontamShardedAt(t(s, dir, "embeddings"), P = 4, tau = 0.4,
+          ScaledC(ivfCmax, sharded = true)),
       Some(e16cOracleSql),
       "sharded semantic decontamination — the tier above the cell-count " +
         "cap: K modulo-id shards with per-shard scaled C, train probes " +
@@ -2707,7 +2514,7 @@ object Approx {
 
     QueryDef(
       "e18c_e2e_sharded_pipeline",
-      (s, dir) => {
+      (s, dir) =>
         // e18's composed vector-side ingest pipeline in the tier ABOVE
         // the cell-count cap: ONE sharded assignment pass feeds both
         // quality surfaces with their OWN sharding contracts —
@@ -2718,15 +2525,10 @@ object Approx {
         //     vector, the eval suite REPLICATED across every distinct
         //     shard geometry (coverage is never traded);
         // then d30's doc-quality gate and d28's temperature mix exactly
-        // as e18. The two candidate joins cannot share a pair pass
-        // (disjoint pair populations under different contracts), but
-        // they share the expensive sharded assignment, the per-shard
-        // C ladders, and the kernel branches. K=1 degenerates to
-        // exactly e18 (spec-pinned); the forced-CMAX gates make both
-        // sharding contracts bind at test scale.
+        // as e18. The forced-CMAX gates make both sharding contracts
+        // bind at test scale.
         e2eShardedAt(t(s, dir, "embeddings"), t(s, dir, "documents"),
-          ivfCmax)
-      },
+          ScaledC(ivfCmax, sharded = true)),
       Some(e18cOracleSql),
       "composed vector-side ingest pipeline ABOVE the cell-count cap: " +
         "eval holdout -> within-shard near-dup dedup (e8c's contract) " +
@@ -2738,103 +2540,59 @@ object Approx {
 
     QueryDef(
       "e18_e2e_vector_pipeline",
-      (s, dir) => {
+      (s, dir) =>
         // The vector-side capstone (d30's composition proof for the
         // embedding tier): the full embedding-ingest chain as ONE
         // composed query, each stage the semantics of its standalone
-        // sibling, sharing ONE IVF cells+pairs pass:
+        // sibling, sharing ONE corpus-scaled IVF assignment:
         //   1. eval holdout: vec_id % 50 == 0 is the benchmark suite
         //      (the d18/e16 convention) — never training data;
         //   2. scaled near-dup dedup (e8b): drop a training vector iff
         //      a LOWER-ID training vector sits within cosine >= 0.4 of
         //      it in a shared probe cell. e8b's rep rule is
         //      non-cascading (keep iff no lower-id neighbor, not "no
-        //      SURVIVING lower-id neighbor"), so restricting the
-        //      full-corpus pairs to train×train endpoints gives the
-        //      exact staged result — IVF assignment is per-vector, so
-        //      dropping vectors never changes anyone else's cells;
-        //   3. semantic decontam (e16/ivfDecontam): drop a survivor
-        //      near ANY eval vector;
+        //      SURVIVING lower-id neighbor"), so the train×train
+        //      candidate join gives the exact staged result — IVF
+        //      assignment is per-vector, so dropping vectors never
+        //      changes anyone else's cells;
+        //   3. semantic decontam (e16b): drop a survivor near ANY eval
+        //      vector, via the eval×train candidate join;
         //   4. doc-quality gate (d30's): the aligned documents row
         //      (doc_id == vec_id) must be in the 4 target langs with
         //      >= 20 whitespace tokens;
         //   5. temperature mix (d28, shared code): per-source token
         //      mass of the survivors -> sqrt weights ->
         //      largest-remainder apportionment of the 100k budget.
-        // Scale shape: one ivfCellsAndPairs pass (linear at C ∝ n,
-        // clamp escape via SPARK_GRAFT_IVF_CMAX), two id-set anti-joins
-        // on vec_id, one doc equi-join on the id, then a #sources-row
-        // tail — the composition is exactly as linear as its worst
-        // stage, and the final mix depends on every upstream stage.
-        val emb = t(s, dir, "embeddings")
-        val c = scaledC(emb.count())
-        val (cells, pairs) =
-          ivfCellsAndPairs(emb, C = c, P = 4, tau = 0.4, kernel = true)
-        val evalA = col("id_a") % 50 === 0
-        val evalB = col("id_b") % 50 === 0
-        // ONE pass over the candidate-pair pipeline (two independent
-        // dedup/decontam consumers would run the expensive probe-cell
-        // join twice): a pair yields a dropped TRAINING id — the higher
-        // id when both are train (e8b's rep rule), the train side when
-        // exactly one is eval (e16's rule), nothing when both are eval
-        // — and the keep set only needs the UNION of the drops
-        val dropped = pairs.filter(!(evalA && evalB))
-          .select(when(evalA, col("id_b")).when(evalB, col("id_a"))
-            .otherwise(col("id_b")).as("vec_id")).distinct()
-        val clean = cells.select("vec_id")
-          .filter(col("vec_id") % 50 =!= 0)
-          .join(dropped, Seq("vec_id"), "left_anti")
-        val gated = t(s, dir, "documents")
-          .join(clean, col("doc_id") === col("vec_id"))
-          .filter(col("lang").isin("en", "de", "fr", "es") &&
-            size(split(trim(col("text")), " +")).cast("long") >= 20)
-        TextDocs.temperatureMix(
-          gated.groupBy("source").agg(sum(col("n_chars")).as("tokens")),
-          100000L)
-      },
+        // Scale shape: one assignment (linear at C ∝ n, clamp escape
+        // via SPARK_GRAFT_IVF_CMAX), two disjoint candidate joins, an
+        // id-set anti-join, one doc equi-join on the id, then a
+        // #sources-row tail.
+        e2eShardedAt(t(s, dir, "embeddings"), t(s, dir, "documents"),
+          ScaledC(ivfCmax, sharded = false)),
       Some(e18OracleSql),
       "composed vector-side ingest pipeline: eval holdout -> scaled " +
         "IVF near-dup dedup (e8b) -> semantic decontam (e16) -> doc " +
         "quality gate (d30) -> temperature mix (d28) as ONE query " +
-        "over embeddings+documents, sharing a single cells+pairs pass " +
+        "over embeddings+documents, sharing a single IVF assignment " +
         "— the user-shaped proof that the vector-tier operators " +
         "compose, fully oracle-checked at every scale factor"),
 
     QueryDef(
       "e16_semantic_decontam",
-      (s, dir) => {
+      (s, dir) =>
         // SEMANTIC decontamination — d18's eval-overlap gate lifted to
         // embedding space (the FineWeb/SemDeDup-era concern n-gram
         // checks miss: paraphrased eval data): eval split = vec_id % 50
         // == 0 (the d18 convention), and a TRAINING vector is dropped
         // iff some eval vector sits within cosine >= 0.4. Same IVF
-        // multi-probe machinery as e8 (shared ivfCellsAndPairs —
-        // candidates only inside shared probe cells, bare-id dedup
-        // before the cosine, never corpus x corpus), same shared CTE
-        // prefix in the oracle; the output keeps the witness eval id
-        // and neighbor count so a curation review can audit every drop.
-        // Scale: eval sets are tiny relative to the corpus — at 100 TB
-        // the eval side's bands broadcast and the train side streams.
-        val (cells, pairs) = ivfCellsAndPairs(
-          t(s, dir, "embeddings"), C = 16, P = 4, tau = 0.4)
-        val contam = pairs
-          .filter(col("id_a") % 50 === 0 && col("id_b") % 50 =!= 0)
-          .select(col("id_b").as("vec_id"), col("id_a").as("eval_id"))
-          .unionByName(pairs
-            .filter(col("id_b") % 50 === 0 && col("id_a") % 50 =!= 0)
-            .select(col("id_a").as("vec_id"), col("id_b").as("eval_id")))
-        val flags = contam.groupBy("vec_id")
-          .agg(count(lit(1)).as("n_near_eval"),
-            min(col("eval_id")).as("witness_eval"))
-        cells.filter(col("vec_id") % 50 =!= 0)
-          .select("vec_id", "cell")
-          .join(flags, Seq("vec_id"), "left")
-          .select(col("vec_id"), col("cell"),
-            coalesce(col("n_near_eval"), lit(0L)).as("n_near_eval"),
-            coalesce(col("witness_eval"), lit(-1L)).as("witness_eval"),
-            when(col("n_near_eval").isNull, 1L).otherwise(0L).as("keep"))
-          .orderBy("vec_id")
-      },
+        // multi-probe machinery as e8 (candidates only inside shared
+        // probe cells, bare-id dedup before the cosine, never corpus x
+        // corpus), same shared CTE prefix in the oracle; the output
+        // keeps the witness eval id and neighbor count so a curation
+        // review can audit every drop.
+        ivfDecontamShardedAt(t(s, dir, "embeddings"), P = 4, tau = 0.4,
+          FixedC(16))
+          .select("vec_id", "cell", "n_near_eval", "witness_eval", "keep"),
       Some(e16OracleSql),
       "semantic decontamination: training vectors within cosine 0.4 of " +
         "any eval vector (vec_id % 50 == 0) are dropped with witness " +

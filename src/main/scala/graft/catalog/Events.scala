@@ -755,9 +755,12 @@ object Events {
           .valueAtRanksFromHist(hist, srcBytes, "event_type", "c",
             medTargets.select(col("event_type"), col("k")))
           .select(col("event_type"), col("c").as("c_med"))
+        // c_med is a function of event_type, so it rides the dev
+        // histogram's grouping key and the final aggregate reads it from
+        // the checkpoint instead of re-running the median pick
         val devHist = hist.join(broadcast(med), "event_type")
           .withColumn("dev", abs(col("c") - col("c_med")))
-          .groupBy(col("event_type"), col("dev"))
+          .groupBy(col("event_type"), col("c_med"), col("dev"))
           .agg(sum(col("_c")).as("_c"))
           .stableCheckpoint() // read twice: MAD selection + final agg
         val mad = graft.operators.RankSelect
@@ -765,7 +768,6 @@ object Events {
             medTargets.select(col("event_type"), col("k")))
           .select(col("event_type"), col("dev").as("dev_med"))
         devHist
-          .join(broadcast(med), "event_type")
           .join(broadcast(mad), "event_type")
           .groupBy(col("event_type"))
           .agg(sum(col("_c")).as("n"),

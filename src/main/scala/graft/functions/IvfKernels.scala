@@ -8,25 +8,27 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-/** Compiled IVF coarse-assignment kernel (the PqKernels discipline
-  * applied to centroid scoring): the C=16 catalog entries score each
-  * vector against every centroid as C separate literal-array dot-product
-  * expressions — fine at 16, but a corpus-scaled C (hundreds to
-  * thousands of cells, the knob that keeps within-cell pair work linear;
-  * see Approx.ivfDedup) would put C·dims literal doubles into the plan
-  * and blow both the analyzer and the 64 KB codegen method limit. This
-  * kernel runs the IDENTICAL arithmetic as one tight loop over a
+/** Compiled IVF coarse-assignment kernels (the PqKernels discipline
+  * applied to centroid scoring). Scoring each vector against every
+  * centroid as C separate literal-array dot-product expressions is fine
+  * at C=16, but a corpus-scaled C (hundreds to thousands of cells, the
+  * knob that keeps within-cell pair work linear; see
+  * Approx.ivfDedupShardedAt) would put C·dims literal doubles into the
+  * plan and blow both the analyzer and the 64 KB codegen method limit.
+  * These kernels run the IDENTICAL arithmetic as one tight loop over a
   * flattened centroid codebook that rides as a reference object in the
-  * generated class — O(C·dims) per row, plan size O(1).
+  * generated class — plan size O(1). Approx.shardedAssign scores every
+  * IVF catalog entry through them: the flat IvfProbes for the fixed-C
+  * tier (e8/e16), the two-level IvfProbes2/IvfProbes2B for the
+  * count-scaled tiers.
   *
-  * Bit-exactness contract (what keeps the e8b oracle green): each
+  * Bit-exactness contract (what keeps the e8/e8b oracles green): each
   * per-centroid dot product accumulates sequentially from 0.0 in
   * ascending dim order — exactly the fold order of both the literal
   * dot_product expressions (DotProduct) and the oracle's
-  * list_reduce(list_transform(...)). The kernel returns the raw sims
-  * array; cell argmax and top-P probe selection stay in the shared
-  * declarative tail (array_position / array_sort), so tie-break
-  * semantics are inherited, not re-implemented. ExtensionsSpec pins
+  * list_reduce(list_transform(...)) — and top-P selection ranks by
+  * (sim DESC, cell ASC), the order of the declarative zip_with →
+  * array_sort tail and of the oracles' ROW_NUMBER. ExtensionsSpec pins
   * interpreted == codegen and kernel == the literal formulation.
   */
 object IvfKernels {
@@ -113,7 +115,7 @@ object IvfKernels {
     GraftBridge.column(IvfProbes(GraftBridge.expression(dv), cb, dims, p))
 
   /** Two-level coarse assignment — the sub-quadratic replacement for the
-    * flat scan at corpus-scaled C (Approx.scaledC grows C ∝ n, so the
+    * flat scan at corpus-scaled C (Approx.scaledCAt grows C ∝ n, so the
     * flat O(n·C·dims) assignment was O(n²·dims/64) end to end; SCALE.md
     * round-11 named it the one remaining scale-killer). The hierarchical
     * form is the standard IVF answer (two-level coarse quantizers /

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Root-cause instrument for d17's in-bench inflation (r13: 16.77 s
   * in-bench vs 3.51 s isolated at sf0.5 — adjudicated "harness noise"
@@ -19,7 +18,7 @@ import org.apache.spark.sql.SparkSession
 object D17Probe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val spark = SparkSession.builder().master("local[32]")
+    val spark = SparkEnv.builder("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()

@@ -1,19 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.catalog.Approx.ScaledC
 object E8Probe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val spark = SparkSession.builder().master("local[32]")
+    val spark = SparkEnv.builder("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // "64" = literal-centroid path; "k64" = kernel path (two-level since
-    // r12); "f64"/"t64" = ASSIGNMENT-ONLY timing (probes + cell through a
-    // noop sink) for the flat IvfProbes vs two-level IvfProbes2 kernels —
-    // the isolated before/after of the r12 quantizer fix, since the
-    // downstream pair/rep tail is shared between the two; "c64" =
-    // candidate-volume diagnostics (probe-cell occupancy skew + distinct
-    // candidate pairs) for the r13 mean-cell ladder experiment
+    // specs are <mode><C>[@dir], comma-separated: "n"/"m" = e8b/e16b's
+    // one-shard count-scaled tier at cap C; "s"/"q"/"x" = the sharded
+    // e8c/e16c/e18c tiers at cap C; "y" = e18 as the catalog runs it;
+    // "l" = e2b's scaled LSH; "f64"/"t64" = ASSIGNMENT-ONLY timing
+    // (probes + cell through a noop sink) for the flat IvfProbes vs
+    // two-level IvfProbes2 kernels — the isolated before/after of the
+    // r12 quantizer fix
     import org.apache.spark.sql.functions._
     for (specRaw <- args(1).split(",")) {
       // optional per-spec corpus override ("n4096@/path/sf2") so a
@@ -31,33 +31,11 @@ object E8Probe {
           (s, d)
         case _ => (specRaw, args(0))
       }
-      val mode = if (spec.head.isDigit) "d" else spec.take(1)
-      val c = spec.stripPrefix(mode).toInt
+      val mode = spec.take(1)
+      val c = spec.drop(1).toInt
       val dims = 64
       val t0 = System.nanoTime()
       val n = mode match {
-        case "c" =>
-          val emb = graft.catalog.Tables.t(spark, dir, "embeddings")
-          val (cells, _) = graft.catalog.Approx.ivfCellsAndPairs(
-            emb, C = c, P = 4, tau = 0.4, kernel = true)
-          val members = cells.select(col("vec_id"),
-            explode(col("probes")).as("pcell"))
-          val occ = members.groupBy("pcell").count()
-            .agg(count(lit(1)).as("cells_hit"), max("count").as("max_occ"),
-              expr("percentile(count, 0.99)").as("p99"),
-              avg("count").as("mean"),
-              sum(col("count") * (col("count") - 1) / 2).as("pair_bound"))
-            .collect().head
-          val cand = members.select(col("pcell"), col("vec_id").as("id_a"))
-            .join(members.select(col("pcell"), col("vec_id").as("id_b")),
-              Seq("pcell"))
-            .filter(col("id_a") < col("id_b"))
-            .select("id_a", "id_b").distinct().count()
-          println(s"[e8probe-cand] C=$c cells_hit=${occ.getLong(0)} " +
-            s"max_occ=${occ.getLong(1)} p99=${occ.getDouble(2)} " +
-            f"mean=${occ.getDouble(3)}%.1f pair_bound=${occ.getDouble(4)}%.0f " +
-            s"distinct_cand=$cand")
-          cand
         case "l" =>
           // e2b's corpus-scaled LSH ANN (lshScaledTop3) through the
           // noop sink — the same-JVM cross-scale harness for the LSH
@@ -70,46 +48,42 @@ object E8Probe {
             .write.format("noop").mode("overwrite").save()
           -1L
         case "n" =>
-          // full ivfDedup at an EXPLICIT C through the noop sink — the
-          // apples-to-apples harness for ladder experiments (count()
-          // would eliminate the rep left-join and the pair pipeline
-          // with it; see SCALE.md round-12 root cause)
-          graft.catalog.Approx.ivfDedup(
+          // e8b's one-shard count-scaled dedup with the cell-count cap
+          // at C, through the noop sink — above 32·C vectors the ladder
+          // clamps at C, the clamped arm of the sharded-vs-clamped A/B
+          // (count() would eliminate the rep left-join and the pair
+          // pipeline with it; see SCALE.md round-12 root cause)
+          graft.catalog.Approx.ivfDedupShardedAt(
               graft.catalog.Tables.t(spark, dir, "embeddings"),
-              C = c, P = 4, tau = 0.4, kernel = true)
+              P = 4, tau = 0.4, ScaledC(c, sharded = false))
             .write.format("noop").mode("overwrite").save()
           -1L
         case "m" =>
-          // e16b's decontamination shape at an EXPLICIT C (noop sink) —
-          // the r13 ladder experiment's harness for the asymmetric
-          // eval × train plan (Approx.ivfDecontam)
-          val out16 = graft.catalog.Approx.ivfDecontam(
+          // e16b's one-shard count-scaled decontam with the cap at C
+          // (noop sink) — the asymmetric eval × train plan
+          val out16 = graft.catalog.Approx.ivfDecontamShardedAt(
             graft.catalog.Tables.t(spark, dir, "embeddings"),
-            C = c, P = 4, tau = 0.4, kernel = true)
+            P = 4, tau = 0.4, ScaledC(c, sharded = false))
           if (sys.env.get("SPARK_GRAFT_EXPLAIN").contains("1"))
             out16.explain("formatted")
           else out16.write.format("noop").mode("overwrite").save()
           -1L
         case "s" =>
           // e8c's SHARD TIER at an explicit cell-count cap (noop sink):
-          // "s4096" runs ivfDedupShardedAt with cmax=4096 — the sharded
-          // arm of the sharded-vs-clamped A/B (the clamped arm is
-          // "n4096", which pins C at the cap the way e8b's default
-          // config does above the binding point)
+          // "s4096" runs the sharded tier at cap 4096 — the sharded arm
+          // of the sharded-vs-clamped A/B (the clamped arm is "n4096")
           graft.catalog.Approx.ivfDedupShardedAt(
               graft.catalog.Tables.t(spark, dir, "embeddings"),
-              P = 4, tau = 0.4, cmax = c)
+              P = 4, tau = 0.4, ScaledC(c, sharded = true))
             .write.format("noop").mode("overwrite").save()
           -1L
         case "q" =>
           // e16c's SHARDED decontam at an explicit cap (noop sink) —
           // the sharded arm of the decontam clamped-vs-sharded A/B
-          // (the clamped arm is "m4096": ivfDecontam pinned at the cap
-          // the way e16b's default config clamps above the binding
-          // point)
+          // (the clamped arm is "m4096")
           graft.catalog.Approx.ivfDecontamShardedAt(
               graft.catalog.Tables.t(spark, dir, "embeddings"),
-              P = 4, tau = 0.4, cmax = c)
+              P = 4, tau = 0.4, ScaledC(c, sharded = true))
             .write.format("noop").mode("overwrite").save()
           -1L
         case "x" =>
@@ -117,11 +91,12 @@ object E8Probe {
           // sink) — the sharded arm of the composed A/B
           graft.catalog.Approx.e2eShardedAt(
               graft.catalog.Tables.t(spark, dir, "embeddings"),
-              graft.catalog.Tables.t(spark, dir, "documents"), cmax = c)
+              graft.catalog.Tables.t(spark, dir, "documents"),
+              ScaledC(c, sharded = true))
             .write.format("noop").mode("overwrite").save()
           -1L
         case "y" =>
-          // e18 exactly as the catalog runs it (scaledC under the
+          // e18 exactly as the catalog runs it (scaledCAt under the
           // process env — CLAMPED at the default cap above 131k
           // vectors), the clamped arm of the composed A/B; the numeric
           // suffix is ignored ("y0")
@@ -148,10 +123,7 @@ object E8Probe {
           // noop convention, same as BenchOne's noop mode
           out.write.format("noop").mode("overwrite").save()
           -1L
-        case _ =>
-          graft.catalog.Approx.ivfDedup(
-            graft.catalog.Tables.t(spark, dir, "embeddings"),
-            C = c, P = 4, tau = 0.4, kernel = mode == "k").count()
+        case _ => sys.error(s"unknown E8Probe mode in '$spec'")
       }
       println(f"[e8probe] C=$spec%6s  ${(System.nanoTime()-t0)/1e9}%8.2f s  rows=$n")
       spark.catalog.clearCache()

@@ -281,12 +281,14 @@ class EdgeSpec extends SparkSuite {
 
   test("ivfDedup: the C scale knob — C=64 over a 5k clustered corpus " +
       "collapses every near-copy group to its minimum id") {
+    import graft.catalog.Approx
+    import graft.catalog.Approx.{FixedC, ScaledC}
     val s2 = spark; import s2.implicits._
     // 1000 clusters x 5 near-copies: copies differ by a tiny per-dim
     // delta (cosine vs their base ≈ 1), different clusters are random
     // uniform 64-dim vectors (cosine concentrates near 0 << tau). The
-    // oracle-pinned catalog entry uses C=16; this drives the SAME code
-    // at C=64 — correctness of the dedup semantics must not depend on
+    // oracle-pinned catalog entry uses the fixed tier at C=16; this
+    // drives the SAME code at C=64 — correctness of the dedup semantics must not depend on
     // the cell count, only recall does (copies nearly share all probe
     // cells, so within-cluster recall stays ~1 at any C).
     def unit(seed: Long): Double = {
@@ -305,22 +307,23 @@ class EdgeSpec extends SparkSuite {
       }
     }
     val emb = rows.toDF("vec_id", "embedding").repartition(8)
-    val got = graft.catalog.Approx.ivfDedup(emb, C = 64, P = 4, tau = 0.9)
+    val got = Approx.ivfDedupShardedAt(emb, P = 4, tau = 0.9, FixedC(64))
       .collect().map(r => r.getAs[Long]("vec_id") -> r.getAs[Long]("rep_id"))
     assert(got.length == 5000)
     val wrong = got.count { case (v, rep) => rep != (v / 5) * 5 }
     // copies can only miss if none of their probe cells overlap — with a
     // shared base vector the top-4 cells are essentially identical
     assert(wrong <= 50, s"$wrong/5000 vectors missed their cluster minimum")
-    // the SAME corpus through the two-level kernel path (e8b/e16b's
-    // production assignment: top-2 of scaledSuperC(64)=8 supers, then
-    // their children): near-copies still share their probe cells — the
-    // two vectors are nearly identical, so they rank the SAME supers
-    // and the SAME children — and must collapse identically. Recall may
-    // differ from the flat path only for barely-similar CROSS-cluster
-    // pairs, which tau=0.9 excludes anyway.
-    val got2 = graft.catalog.Approx
-      .ivfDedup(emb, C = 64, P = 4, tau = 0.9, kernel = true)
+    // the SAME corpus through the count-scaled tier (e8b/e16b's
+    // production assignment: C = scaledCAt(5000) = 256 from the count,
+    // top-2 of scaledSuperC(256)=16 supers, then their children):
+    // near-copies still share their probe cells — the two vectors are
+    // nearly identical, so they rank the SAME supers and the SAME
+    // children — and must collapse identically. Recall may differ from
+    // the flat path only for barely-similar CROSS-cluster pairs, which
+    // tau=0.9 excludes anyway.
+    val got2 = Approx.ivfDedupShardedAt(emb, P = 4, tau = 0.9,
+        ScaledC(4096, sharded = false))
       .collect().map(r => r.getAs[Long]("vec_id") -> r.getAs[Long]("rep_id"))
     assert(got2.length == 5000)
     val wrong2 = got2.count { case (v, rep) => rep != (v / 5) * 5 }

@@ -441,14 +441,14 @@ class ExtensionsSpec extends SparkSuite {
     assert(codegenNaN.isNullAt(0), "codegen IvfSims on NaN dv")
     assert(codegenNaN.isNullAt(1), "codegen IvfProbes on NaN dv")
     // 3) the power-of-two ladder both engines derive C from
-    assert(Approx.scaledC(1L) == 8)
-    assert(Approx.scaledC(256L) == 8)   // ceil(256/32) = 8 = floor
-    assert(Approx.scaledC(257L) == 16)  // ceil(257/32) = 9 > 8
-    assert(Approx.scaledC(500L) == 16)
-    assert(Approx.scaledC(512L) == 16)  // ceil(512/32) = 16 exactly
-    assert(Approx.scaledC(513L) == 32)  // ceiling division, not floor
-    assert(Approx.scaledC(2000L) == 64)
-    assert(Approx.scaledC(25000L) == 1024)
+    assert(Approx.scaledCAt(1L, 4096) == 8)
+    assert(Approx.scaledCAt(256L, 4096) == 8)   // ceil(256/32) = 8 = floor
+    assert(Approx.scaledCAt(257L, 4096) == 16)  // ceil(257/32) = 9 > 8
+    assert(Approx.scaledCAt(500L, 4096) == 16)
+    assert(Approx.scaledCAt(512L, 4096) == 16)  // ceil(512/32) = 16 exactly
+    assert(Approx.scaledCAt(513L, 4096) == 32)  // ceiling division, not floor
+    assert(Approx.scaledCAt(2000L, 4096) == 64)
+    assert(Approx.scaledCAt(25000L, 4096) == 1024)
     // 3b) the cluster-escape ladders (SPARK_GRAFT_IVF_CMAX lockstep
     //     helpers): identical at the default cap; a raised cap keeps
     //     the C ladder climbing and S tracks sqrt(C) via smaxFor
@@ -468,7 +468,8 @@ class ExtensionsSpec extends SparkSuite {
     // failing a suite that is deliberately running at a raised cap
     // (ADVICE round 14 — e.g. the cluster-escape gate exports it)
     if (!sys.env.contains("SPARK_GRAFT_IVF_CMAX")) {
-      assert(Approx.scaledC(10000000L) == 4096) // default clamp binds
+      // default clamp binds
+      assert(Approx.scaledCAt(10000000L, Approx.ivfCmax) == 4096)
       assert(Approx.ivfCmax == 4096, "suite must run at the default cap")
       assert(Approx.ivfSmax == 64)
     }
@@ -507,10 +508,11 @@ class ExtensionsSpec extends SparkSuite {
         s"'$bad' must die in the descriptive message, got: ${e.getMessage}")
     }
     assert(parse(Some("3000"), pow2 = false) == 3000) // non-pow2 shape
-    // 4) the kernel=true ivfDedup path is now TWO-LEVEL (IvfProbes2) —
-    //    its parity pins live in the dedicated IvfProbes2 test below
-    //    (degenerate sProbes=S == this flat kernel bit-for-bit, and the
-    //    production sProbes=2 path == a driver-side reference).
+    // 4) the count-scaled tiers score through the TWO-LEVEL kernel
+    //    (IvfProbes2) — its parity pins live in the dedicated IvfProbes2
+    //    test below (degenerate sProbes=S == this flat kernel
+    //    bit-for-bit, and the production sProbes=2 path == a driver-side
+    //    reference).
   }
 
   test("IvfProbes2 two-level kernel: degenerate sProbes=S equals the " +
@@ -753,10 +755,10 @@ class ExtensionsSpec extends SparkSuite {
   }
 
   test("shard tier (e8c): shardCountAt ladder pins; a forced-small cap " +
-      "makes sharding bind and the sharded output equals running " +
-      "ivfDedup independently per shard at each shard's own C; the " +
-      "unbound cap degenerates to K=1 == e8b's pipeline") {
+      "makes sharding bind and the sharded output equals the K=1 " +
+      "count-scaled tier run on each modulo slice at that slice's cap") {
     import graft.catalog.Approx
+    import graft.catalog.Approx.ScaledC
     // ladder: smallest power of two K with ceil(n/K) <= cmax*32,
     // clamped at IvfShardMax — mirrors the oracle's kparam VALUES
     assert(Approx.IvfShardMax == 4096)
@@ -777,69 +779,60 @@ class ExtensionsSpec extends SparkSuite {
     val n = emb.count()
     val k = Approx.shardCountAt(n, 8)
     assert(k == 2, s"n=$n at cmax=8 must shard (got K=$k)")
-    val got = Approx.ivfDedupShardedAt(emb, P = 4, tau = 0.4, cmax = 8)
+    val got = Approx.ivfDedupShardedAt(emb, P = 4, tau = 0.4,
+        ScaledC(8, sharded = true))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5)))
     assert(got.nonEmpty)
-    // independent reference: run the UNSHARDED ivfDedup on each modulo
-    // slice at that slice's own scaledCAt — "each shard runs its own
-    // C <= CMAX index" is literally this
+    // reference: the one-shard count-scaled tier on each modulo slice
+    // at the same cap — "each shard runs its own C <= CMAX index" is
+    // literally this
     val expect = (0L until k.toLong).flatMap { s =>
-      val slice = emb.filter(col("vec_id") % k === s)
-      val c = Approx.scaledCAt(slice.count(), 8)
-      Approx.ivfDedup(slice, C = c, P = 4, tau = 0.4, kernel = true)
-        .collect().map(r => (r.getLong(0), s, r.getLong(1), r.getLong(2),
-          k.toLong, c.toLong))
+      Approx.ivfDedupShardedAt(emb.filter(col("vec_id") % k === s), P = 4,
+          tau = 0.4, ScaledC(8, sharded = false))
+        .collect().map(r => (r.getLong(0), s, r.getLong(2), r.getLong(3),
+          k.toLong, r.getLong(5)))
     }.sortBy(_._1)
     assert(got.toSeq == expect,
-      s"sharded output must equal per-shard ivfDedup (got ${got.length} " +
-        s"rows vs ${expect.length})")
+      s"sharded output must equal the per-shard K=1 tier (got " +
+        s"${got.length} rows vs ${expect.length})")
     // shards must actually differ in membership (binding, not vacuous)
     assert(got.map(_._2).distinct.sorted.toSeq == Seq(0L, 1L))
-    // degenerate K=1 at an unbound cap: e8b's pipeline plus metadata
-    val degen = Approx.ivfDedupShardedAt(emb, P = 4, tau = 0.4, cmax = 4096)
-    val e8b = Approx.ivfDedup(emb, C = Approx.scaledCAt(n, 4096), P = 4,
-      tau = 0.4, kernel = true)
-    val dRows = degen.select("vec_id", "cell", "rep_id", "n_shards")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3)))
-    val bRows = e8b.collect().map(r => (r.getLong(0), r.getLong(1),
-      r.getLong(2), 1L))
-    assert(dRows.toSeq == bRows.toSeq,
-      "K=1 sharded must degenerate to the unsharded pipeline bit-exactly")
   }
 
   test("shard tier (e16c): a forced-small cap makes sharding bind and " +
-      "the sharded decontam equals running ivfDecontam independently " +
-      "per shard with the FULL eval suite replicated in; the unbound " +
-      "cap degenerates to K=1 == e16b's pipeline") {
+      "the sharded decontam equals the K=1 count-scaled tier run per " +
+      "shard with the FULL eval suite replicated in") {
     import graft.catalog.Approx
+    import graft.catalog.Approx.ScaledC
     val emb = graft.catalog.Tables.t(spark, "/root/testdata/sf0.01",
       "embeddings")
     val n = emb.count()
     val k = Approx.shardCountAt(n, 8)
     assert(k == 2, s"n=$n at cmax=8 must shard (got K=$k)")
-    val got = Approx.ivfDecontamShardedAt(emb, P = 4, tau = 0.4, cmax = 8)
+    val got = Approx.ivfDecontamShardedAt(emb, P = 4, tau = 0.4,
+        ScaledC(8, sharded = true))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6),
         r.getLong(7)))
     assert(got.nonEmpty)
-    // independent reference per shard: that shard's members PLUS the
-    // full eval suite, decontaminated at the shard's own scaledCAt —
+    // reference per shard: that shard's members PLUS the full eval
+    // suite through the one-shard count-scaled tier at the same cap —
     // "the eval suite probes every shard" is literally this. The slice
-    // keeps the shard's own eval members once (set union), and
-    // ivfDecontam only emits train rows, all of which are the shard's.
+    // keeps the shard's own eval members once (set union), and the
+    // decontam emits only train rows, all of which are the shard's. At
+    // cap 8 the slice's C is 8 whether counted with or without the
+    // other shard's eval vectors, as the shard's own C is.
     val expect = (0L until k.toLong).flatMap { s =>
       val slice = emb.filter(col("vec_id") % k === s ||
         col("vec_id") % 50 === 0)
-      val ns = emb.filter(col("vec_id") % k === s).count()
-      val c = Approx.scaledCAt(ns, 8)
-      Approx.ivfDecontam(slice, C = c, P = 4, tau = 0.4, kernel = true)
-        .collect().map(r => (r.getLong(0), s, r.getLong(1), r.getLong(2),
-          r.getLong(3), r.getLong(4), k.toLong, c.toLong))
+      Approx.ivfDecontamShardedAt(slice, P = 4, tau = 0.4,
+          ScaledC(8, sharded = false))
+        .collect().map(r => (r.getLong(0), s, r.getLong(2), r.getLong(3),
+          r.getLong(4), r.getLong(5), k.toLong, r.getLong(7)))
     }.sortBy(_._1)
     assert(got.toSeq == expect,
-      s"sharded decontam must equal per-shard ivfDecontam with the " +
+      s"sharded decontam must equal the per-shard K=1 tier with the " +
         s"replicated eval suite (got ${got.length} rows vs " +
         s"${expect.length})")
     // shards must actually differ in membership (binding, not vacuous)
@@ -853,56 +846,35 @@ class ExtensionsSpec extends SparkSuite {
     assert(crossed,
       "no contamination crossed a shard boundary - the corpus does not " +
         "exercise eval replication; pick a different forced cap")
-    // degenerate K=1 at an unbound cap: e16b's pipeline plus metadata
-    val degen = Approx.ivfDecontamShardedAt(emb, P = 4, tau = 0.4,
-      cmax = 4096)
-    val e16b = Approx.ivfDecontam(emb, C = Approx.scaledCAt(n, 4096),
-      P = 4, tau = 0.4, kernel = true)
-    val dRows = degen.select("vec_id", "cell", "n_near_eval",
-      "witness_eval", "keep", "n_shards")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4), r.getLong(5)))
-    val bRows = e16b.collect().map(r => (r.getLong(0), r.getLong(1),
-      r.getLong(2), r.getLong(3), r.getLong(4), 1L))
-    assert(dRows.toSeq == bRows.toSeq,
-      "K=1 sharded decontam must degenerate to e16b bit-exactly")
   }
 
-  test("shard tier (e18c): K=1 degenerates to e18 bit-exactly, and at " +
-      "a forced-small cap the composed pipeline equals the staged " +
-      "composition of per-shard dedup drops + e16c decontam drops + " +
-      "the doc gate + the temperature mix") {
+  test("shard tier (e18c): at a forced-small cap the composed pipeline " +
+      "equals the staged composition of per-shard dedup drops + e16c " +
+      "decontam drops + the doc gate + the temperature mix") {
     import graft.catalog.{Approx, Tables, TextDocs}
+    import graft.catalog.Approx.ScaledC
     val dir = "/root/testdata/sf0.01"
     val emb = Tables.t(spark, dir, "embeddings")
     val docs = Tables.t(spark, dir, "documents")
     def mixRows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getString(0), r.getLong(1),
         r.getDouble(2), r.getLong(3))).sortBy(_._1).toSeq
-    // K=1 at the unbound cap == e18 (same geometry, same candidate
-    // sets: within-shard == global, replicated eval == member eval)
-    val degen = mixRows(Approx.e2eShardedAt(emb, docs, 4096))
-    val e18 = mixRows(
-      graft.SparkEntry.queries("e18_e2e_vector_pipeline")(spark, dir))
-    assert(degen == e18,
-      "K=1 sharded pipeline must degenerate to e18 bit-exactly")
     // binding regime at cmax=8 (K=2): staged reference — dedup drops
-    // from per-shard ivfDedup over TRAIN members at the shard's own C
-    // (from the FULL shard count, eval members included), decontam
+    // from the one-shard tier over each shard's TRAIN members at the
+    // same cap (C=8 with or without the shard's eval members), decontam
     // drops from e16c itself, then the gate + mix on the survivor set
     val n = emb.count()
     val k = Approx.shardCountAt(n, 8)
     assert(k == 2)
     val ddrops = (0L until k.toLong).flatMap { s =>
-      val slice = emb.filter(col("vec_id") % k === s)
-      val c = Approx.scaledCAt(slice.count(), 8)
-      Approx.ivfDedup(slice.filter(col("vec_id") % 50 =!= 0), C = c,
-          P = 4, tau = 0.4, kernel = true)
+      Approx.ivfDedupShardedAt(emb.filter(col("vec_id") % k === s &&
+          col("vec_id") % 50 =!= 0), P = 4, tau = 0.4,
+          ScaledC(8, sharded = false))
         .filter(col("rep_id") < col("vec_id"))
         .collect().map(_.getLong(0))
     }.toSet
     val cdrops = Approx.ivfDecontamShardedAt(emb, P = 4, tau = 0.4,
-        cmax = 8)
+        ScaledC(8, sharded = true))
       .filter(col("keep") === 0)
       .collect().map(_.getLong(0)).toSet
     assert(ddrops.nonEmpty && cdrops.nonEmpty,
@@ -917,12 +889,16 @@ class ExtensionsSpec extends SparkSuite {
     val expect = mixRows(TextDocs.temperatureMix(
       gated.groupBy("source").agg(sum(col("n_chars")).as("tokens")),
       100000L))
-    val got = mixRows(Approx.e2eShardedAt(emb, docs, 8))
+    val got = mixRows(Approx.e2eShardedAt(emb, docs,
+      ScaledC(8, sharded = true)))
     assert(got == expect,
       "bound sharded pipeline must equal the staged composition")
-    // and the bound result must differ from K=1 somewhere, or the
-    // forced cap never actually changed a drop decision
-    assert(got != degen,
+    // and the bound result must differ from the unsharded e18
+    // somewhere, or the forced cap never actually changed a drop
+    // decision
+    val unbound = mixRows(
+      graft.SparkEntry.queries("e18_e2e_vector_pipeline")(spark, dir))
+    assert(got != unbound,
       "forcing the cap changed no allocation - the gate is vacuous")
   }
 }

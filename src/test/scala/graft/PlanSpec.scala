@@ -701,4 +701,70 @@ class PlanSpec extends SparkSuite {
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoop"),
       s"the pair join must stay keyed on the order id:\n$p")
   }
+
+  test("q91: the median pick runs once — c_med rides the dev histogram, " +
+      "so the executed plan holds one Window (the MAD pick), not two") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.window.WindowExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case _ => p.children.flatMap(nodes)
+    })
+    val q = SparkEntry.queries("q91_mad_outliers")(spark, sf)
+    assert(q.collect().nonEmpty)
+    val windows = nodes(q.queryExecution.executedPlan)
+      .count(_.isInstanceOf[WindowExec])
+    assert(windows == 1,
+      s"expected one Window (MAD) after the checkpoints, got $windows:\n" +
+        q.queryExecution.executedPlan)
+  }
+
+  test("IVF tier entries: schemas and sorted-row SHA-256 at sf0.01 stay " +
+      "pinned for e8/e8b/e8c/e16/e16b/e16c/e18/e18c") {
+    // the literals came from the separate per-tier implementations this
+    // operator replaced, so they are a reference independent of it;
+    // doubles hash by their raw bits, so any drift in a cell, a pair or
+    // the mix allocation changes the digest
+    assume(!sys.env.contains("SPARK_GRAFT_IVF_CMAX"),
+      "digests are pinned at the default cell-count cap")
+    val expect: Map[String, (String, String)] = Map(
+      "e16_semantic_decontam" -> ("vec_id:bigint,cell:bigint,n_near_eval:bigint,witness_eval:bigint,keep:bigint",
+        "678b0d9a340177e7bfeaed617546d4af4898becec0114c5f1def15712bac6103"),
+      "e16b_decontam_scaled" -> ("vec_id:bigint,cell:bigint,n_near_eval:bigint,witness_eval:bigint,keep:bigint",
+        "f83bddb5feb715766412a7a7f8c08783acf976d1fd9ae9d088ba2a629ce3d61b"),
+      "e16c_decontam_sharded" -> ("vec_id:bigint,shard:bigint,cell:bigint,n_near_eval:bigint,witness_eval:bigint,keep:bigint,n_shards:bigint,n_cells:bigint",
+        "01d1b43dc1e2067ef1272bae16a0412c04524288de607f85623e61a8a142b4d7"),
+      "e18_e2e_vector_pipeline" -> ("source:string,tokens:bigint,p:double,alloc:bigint",
+        "64bdd3d827e15514b45e0c21193aa2090d150ab617927e4c554c29371ba1b4e2"),
+      "e18c_e2e_sharded_pipeline" -> ("source:string,tokens:bigint,p:double,alloc:bigint",
+        "64bdd3d827e15514b45e0c21193aa2090d150ab617927e4c554c29371ba1b4e2"),
+      "e8_embed_dedup_ivf" -> ("vec_id:bigint,cell:bigint,rep_id:bigint",
+        "0f7e20120af5b5c380c99df846e89fabecaaa9ef397a3439a266fe9de58aab37"),
+      "e8b_embed_dedup_scaled" -> ("vec_id:bigint,cell:bigint,rep_id:bigint,n_cells:bigint",
+        "e55ad55e20ba918df407c74e2fd5ba9eff201df950e4c405c4e9f8b27bf2d8ac"),
+      "e8c_embed_dedup_sharded" -> ("vec_id:bigint,shard:bigint,cell:bigint,rep_id:bigint,n_shards:bigint,n_cells:bigint",
+        "38e833f6a7cfd65c3642a0c02867002227cd4f68fda44719a40cf52f22ba55cf"))
+    def digest(df: org.apache.spark.sql.DataFrame): (String, String) = {
+      val schema = df.schema.fields
+        .map(f => s"${f.name}:${f.dataType.simpleString}").mkString(",")
+      val rows = df.collect().map(_.toSeq.map {
+        case d: Double => java.lang.Long.toHexString(
+          java.lang.Double.doubleToRawLongBits(d))
+        case x => String.valueOf(x)
+      }.mkString("|")).sorted.mkString("\n")
+      val sha = java.security.MessageDigest.getInstance("SHA-256")
+        .digest(rows.getBytes("UTF-8")).map(b => f"$b%02x").mkString
+      (schema, sha)
+    }
+    val got = Seq("e8_embed_dedup_ivf", "e8b_embed_dedup_scaled",
+        "e8c_embed_dedup_sharded", "e16_semantic_decontam",
+        "e16b_decontam_scaled", "e16c_decontam_sharded",
+        "e18_e2e_vector_pipeline", "e18c_e2e_sharded_pipeline")
+      .map(q => q -> digest(SparkEntry.queries(q)(spark, sf))).toMap
+    assert(got == expect, got.toSeq.sortBy(_._1).map { case (q, (sc, h)) =>
+      s"""      "$q" -> ("$sc",\n        "$h"),"""
+    }.mkString("\n", "\n", ""))
+  }
 }

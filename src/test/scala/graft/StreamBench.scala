@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 import scala.collection.mutable.ArrayBuffer
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import graft.streaming.{DocStreams, VecStreams}
@@ -22,7 +21,7 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val nBatches = if (args.length > 1) args(1).toInt else 100
-    val spark = SparkSession.builder().master("local[32]")
+    val spark = SparkEnv.builder("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
@@ -120,7 +119,7 @@ object StreamBench2 {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val nBatches = if (args.length > 1) args(1).toInt else 60
-    val spark = SparkSession.builder().master("local[32]")
+    val spark = SparkEnv.builder("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
