@@ -46,11 +46,11 @@ object E2E {
       nTophits = 3,
       groupPatterns = Seq(("Negative", "CF_"))))
 
-  /** fixed output dir for the sink round-trip queries: Verify runs the
+  /** output dir for the sink round-trip queries: Verify runs the
     * Spark side (which writes the CSVs here) before the driver evaluates
     * the oracle SQL, so the path must survive until the DuckDB compare —
-    * the repo's gitignored target/ is safer than /tmp */
-  private val sinkDir = "/root/repo/target/graft_e2e_sink"
+    * the checkout's gitignored target/ is safer than /tmp */
+  private val sinkDir = s"${Staging.targetDir}/graft_e2e_sink"
 
   /** one BigBugData.write per SESSION for the three sink queries (the
     * round-3 review point: three catalog entries each re-ran the full

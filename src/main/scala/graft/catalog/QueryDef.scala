@@ -42,6 +42,13 @@ final case class QueryDef(
   * inputs at least once.
   */
 object Staging {
+  /** The build's target/ dir, resolved from the working directory and
+    * absolute, so oracle SQL that embeds a staging path resolves it the
+    * same way (run from the repo root), and two checkouts never share a
+    * staging or output root. */
+  val targetDir: String =
+    java.nio.file.Paths.get("target").toAbsolutePath.toString
+
   /** per session: slot → the cell that serializes its staging */
   private final class Slot { var want: String = null }
   private val staged = java.util.Collections.synchronizedMap(

@@ -35,7 +35,7 @@ object Scripts {
 
   private val synthDir = "/root/repo/data/e2e_synth"
   private val filterDir = "/root/repo/data/e2e_filter"
-  private val synthOut = "/root/repo/target/graft_e2e_synth"
+  private val synthOut = s"${Staging.targetDir}/graft_e2e_synth"
 
   /** deterministic clock for F10: local midnight, Jan 1 2026 — formats as
     * `Thu Jan 01 00:00:00 2026` in EVERY system timezone, so the oracle

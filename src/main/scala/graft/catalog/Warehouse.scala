@@ -39,7 +39,7 @@ object Warehouse {
         val s2 = s.newSession()
         s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         val tg = tag(dir)
-        val root = s"/root/repo/target/graft_bucket_$tg"
+        val root = s"${Staging.targetDir}/graft_bucket_$tg"
         // bucketed layout = ingest-time fixture (this query's own doc:
         // "the shuffle is paid once at ingest") — staged once per
         // (session, sfDir); the exchange-free SMJ is what's measured
@@ -87,7 +87,7 @@ object Warehouse {
         // K is the partition count the layout designer chose. The
         // aggregate result is oracled against the UNPARTITIONED
         // original filtered the ordinary way.
-        val root = s"/root/repo/target/graft_part_${tag(dir)}"
+        val root = s"${Staging.targetDir}/graft_part_${tag(dir)}"
         // partitioned layout = ingest-time fixture ("the layout
         // designer chose" it once) — staged once per (session, sfDir);
         // the pruned scan is what's measured
@@ -176,7 +176,7 @@ object Warehouse {
         // parquet skips row groups). Content oracled against the
         // parquet original: same rows in, same aggregate out, or the
         // format round-trip broke something.
-        val root = s"/root/repo/target/graft_orc_${tag(dir)}"
+        val root = s"${Staging.targetDir}/graft_orc_${tag(dir)}"
         // ORC copy = ingest-time fixture — staged once per (session,
         // sfDir); the pushed-filter ORC read is what's measured
         Staging.once(s, s"q72:$dir", dir, s"$root/_SUCCESS") {
@@ -221,7 +221,7 @@ object Warehouse {
         // rewritten here under its own staging root); dim = a tiny
         // (event_type, category) parquet table filtered on category.
         // PlanSpec pins `dynamicpruning` inside PartitionFilters.
-        val root = s"/root/repo/target/graft_dpp_${tag(dir)}"
+        val root = s"${Staging.targetDir}/graft_dpp_${tag(dir)}"
         // partitioned fact + dim = ingest-time fixture — staged once
         // per (session, sfDir); the DPP join is what's measured
         Staging.once(s, s"q73:$dir", dir, s"$root/dim/_SUCCESS") {
@@ -273,7 +273,7 @@ object Warehouse {
         // deterministic by doc_id, so DuckDB recomputes the expected
         // audit straight from the source table: any line Spark
         // mis-classifies or drops diverges the counts/sums.
-        val root = s"/root/repo/target/graft_quarantine_${tag(dir)}"
+        val root = s"${Staging.targetDir}/graft_quarantine_${tag(dir)}"
         // corrupted landing zone = ingest fixture — staged once per
         // (session, sfDir); the PERMISSIVE parse is what's measured
         Staging.once(s, s"q74:$dir", dir, s"$root/_SUCCESS") {

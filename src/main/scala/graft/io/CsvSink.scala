@@ -1,25 +1,43 @@
 package graft.io
 
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.io.{BufferedWriter, OutputStream, OutputStreamWriter}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-/** CSV sinks (reference K1/K2): fixed column order, header row, ONE file
-  * per output (`csv.DictWriter`, `bigbugdata.py:208–222`).
+/** CSV sinks (reference K1/K2/K3): fixed column order, header row, ONE
+  * file per output (`csv.DictWriter`, `bigbugdata.py:208–222`).
   *
-  * The single-file contract is met WITHOUT collapsing the job to one
-  * task: the frame is written headerless by however many tasks the plan
-  * produced (a sorted upstream is range-partitioned, so part-file name
-  * order IS global row order), then the driver streams the parts into the
-  * target in name order behind a header line it writes itself. Every
-  * upstream stage — including the final sort — keeps full parallelism;
-  * the only sequential step is a byte copy, which is I/O-bound and cheap
-  * relative to a one-task pivot+sort+stringify (the round-3 measured
-  * bottleneck: ~123 s of a 260 s run at 40M cells). [[writeSingleCsv]] is
-  * the one sink: all three pipeline outputs go through it.
+  * A sink is two halves. [[line]] renders a row's cells into one CSV line
+  * inside the executors, with Spark's own CSV generator (`to_csv`, the
+  * generator behind `DataFrameWriter.csv`) under the writer options the
+  * sink has always used, so quoting, escaping and number formatting are
+  * the CSV writer's. The driver then collects the rendered lines once,
+  * orders them where the output has an order, and writes each file behind
+  * a header line it renders itself ([[csvCell]]). All of an engine run's
+  * outputs are collected by ONE action ([[writeTagged]]): no
+  * range-sampling job, no exchange for a global sort, no committed part
+  * files to concatenate.
+  *
+  * Driver memory: the driver holds every line of the collected outputs at
+  * once — the bytes of the written CSVs plus a JVM row/string overhead per
+  * line (T + T + K·S lines for the pipeline: T organisms, S samples, K
+  * tophits). The same bytes already passed through the driver when it
+  * concatenated part files, one output at a time; outputs larger than the
+  * driver heap do not fit this sink.
   */
 object CsvSink {
+
+  /** Spark's CSV writer TRIMS cell whitespace by default; the reference's
+    * csv.DictWriter emits values verbatim (`  name  ` stays padded —
+    * filter_reports passthrough), so trimming is disabled here and any
+    * trim the pipeline wants (F4) happens upstream as an explicit
+    * expression. */
+  private val options = Map(
+    "ignoreLeadingWhiteSpace" -> "false",
+    "ignoreTrailingWhiteSpace" -> "false").asJava
 
   /** header cell quoting, matching Spark's CSV writer (Univocity,
     * default quote `"`, escape `\`): quote iff the value contains a
@@ -31,48 +49,45 @@ object CsvSink {
       "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     else s
 
-  /** K1: write `df` with exactly `fieldnames` in order to a single CSV. */
-  def writeSingleCsv(df: DataFrame, fieldnames: Seq[String], target: String): Unit = {
-    val tmp = Files.createTempDirectory("graft_csv")
-    df.select(fieldnames.map(col): _*)
-      .write.mode("overwrite").option("header", "false")
-      // Spark's CSV writer TRIMS cell whitespace by default; the
-      // reference's csv.DictWriter emits values verbatim (`  name  `
-      // stays padded — filter_reports passthrough), so trimming is
-      // disabled here and any trim the pipeline wants (F4) happens
-      // upstream as an explicit expression.
-      .option("ignoreLeadingWhiteSpace", "false")
-      .option("ignoreTrailingWhiteSpace", "false")
-      .csv(tmp.toString)
-    concatParts(tmp, fieldnames, target)
+  /** one CSV line (no terminator) of `cells`, in order */
+  def line(cells: Seq[Column]): Column = to_csv(struct(cells: _*), options)
+
+  /** `df`'s rows as rendered lines, in partition order. Columns are taken
+    * by position, so no column name is ever parsed as a reference. */
+  def collectLines(df: DataFrame): Array[String] = {
+    val byPos = df.toDF(df.columns.indices.map(i => s"_$i"): _*)
+    byPos.select(line(byPos.columns.toSeq.map(col))).collect().map(_.getString(0))
   }
 
-  /** stream the sorted part files into `target` behind the header line */
-  private def concatParts(tmp: Path, fieldnames: Seq[String],
-      target: String): Unit = {
-    val partStream = Files.list(tmp)
-    val parts =
-      try partStream.iterator().asScala
-        .filter(_.getFileName.toString.startsWith("part-"))
-        .toSeq.sortBy(_.getFileName.toString)
-      finally partStream.close()
+  /** K1 for several outputs in ONE action. `tagged` has the columns
+    * (out: Int, k1: Long, k2: Long, line: String): output `i` is written
+    * to `outputs(i)._1` behind the header `outputs(i)._2`, its lines in
+    * (k1, k2) order (null k1 first, as `orderBy` ascending puts it). */
+  def writeTagged(tagged: DataFrame, outputs: Seq[(String, Seq[String])]): Unit = {
+    val byOut = tagged.collect().groupBy(_.getInt(0))
+    val order = Ordering.by((r: Row) =>
+      (Option(r.get(1)).map(_.asInstanceOf[Long]), r.getLong(2), r.getString(3)))
+    outputs.zipWithIndex.foreach { case ((target, header), i) =>
+      val rows = byOut.getOrElse(i, Array.empty[Row]).sorted(order)
+      writeLines(target, header, rows.iterator.map(_.getString(3)))
+    }
+  }
+
+  /** `lines` into `target` behind the header line */
+  def writeLines(target: String, header: Seq[String], lines: Iterator[String]): Unit = {
     val dest = Paths.get(target)
     if (dest.getParent != null) Files.createDirectories(dest.getParent)
-    val out = Files.newOutputStream(dest, StandardOpenOption.CREATE,
-      StandardOpenOption.TRUNCATE_EXISTING, StandardOpenOption.WRITE)
-    try {
-      out.write((fieldnames.map(csvCell).mkString(",") + "\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      parts.foreach(p => Files.copy(p, out))
-    } finally out.close()
-    deleteRecursively(tmp)
+    val out = Files.newOutputStream(dest)
+    try emit(out, header, lines) finally out.close()
   }
 
-  private def deleteRecursively(root: Path): Unit = {
-    val walk = Files.walk(root)
-    try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-      .iterator().asScala.foreach(Files.deleteIfExists(_))
-    finally walk.close()
+  /** the header line, then each line, LF-terminated */
+  def emit(out: OutputStream, header: Seq[String], lines: Iterator[String]): Unit = {
+    val w = new BufferedWriter(new OutputStreamWriter(out, UTF_8))
+    w.write(header.map(csvCell).mkString(","))
+    w.write('\n')
+    lines.foreach { l => w.write(l); w.write('\n') }
+    w.flush()
   }
 
   /** K2: output layout `{out}/combined_{rank}.csv` etc.

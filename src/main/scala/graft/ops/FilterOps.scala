@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.io.CsvSink
 
 /** Semi-join filters (reference J4/P6 — both `scripts/filter_*_by_taxid.py`).
   *
@@ -26,35 +27,23 @@ object FilterOps {
   /** K3: the filter scripts' stdout-CSV contract — header + rows when any
     * row matched, NOTHING at all when none did
     * (`filter_rrpm_by_taxid.py:33–36`: the writer is never constructed
-    * for an empty result). */
+    * for an empty result). One collect of the rendered lines serves both
+    * the emptiness test and the write; rows keep partition order. */
   def writeFilteredCsv(df: DataFrame, target: String): Boolean = {
-    val cached = df.cache() // one upstream execution for the probe + write
-    try {
-      val any = !cached.isEmpty
-      if (any) graft.io.CsvSink.writeSingleCsv(cached, df.columns.toSeq, target)
-      any
-    } finally cached.unpersist()
+    val lines = CsvSink.collectLines(df)
+    if (lines.nonEmpty) CsvSink.writeLines(target, df.columns.toSeq, lines.iterator)
+    lines.nonEmpty
   }
 
   /** K3, stdout channel: the reference writes the filtered CSV to STDOUT
     * (`filter_rrpm_by_taxid.py:33–36` — "where it can be directed into a
-    * file"), emitting nothing at all on an empty result. Routed through
-    * the same single-CSV sink so quoting/stringification stay identical,
-    * then streamed to `out`. Returns true iff anything was emitted. */
+    * file"), emitting nothing at all on an empty result. Same lines and
+    * header as [[writeFilteredCsv]], written to `out`. Returns true iff
+    * anything was emitted. */
   def printFilteredCsv(df: DataFrame, out: java.io.PrintStream = System.out): Boolean = {
-    val cached = df.cache()
-    try {
-      val any = !cached.isEmpty
-      if (any) {
-        val tmp = java.nio.file.Files.createTempFile("graft_k3_stdout", ".csv")
-        try {
-          graft.io.CsvSink.writeSingleCsv(cached, df.columns.toSeq, tmp.toString)
-          val lines = java.nio.file.Files.lines(tmp)
-          try lines.forEach(l => out.println(l)) finally lines.close()
-        } finally java.nio.file.Files.deleteIfExists(tmp)
-      }
-      any
-    } finally cached.unpersist()
+    val lines = CsvSink.collectLines(df)
+    if (lines.nonEmpty) CsvSink.emit(out, df.columns.toSeq, lines.iterator)
+    lines.nonEmpty
   }
 
   /** `filter_reports_by_taxid.py`: same filter over a folder of reports,

@@ -12,8 +12,9 @@ import graft.schema.ReportSchema._
   *   fused scan (totals + stats + counts)  → one cached report scan,
   *                                           three derived frames
   *   wide dicts, eager between steps       → long-format DataFrames,
-  *                                           single lazy plan; pivot only
-  *                                           at the CSV sinks
+  *                                           single lazy plan; ONE pivot,
+  *                                           for both wide CSVs, at the
+  *                                           sink
   *   driver-side regex groups              → NcGroups (sample universe is
   *                                           the file list — never data)
   *
@@ -21,8 +22,11 @@ import graft.schema.ReportSchema._
   * (sample) for the collected totals, groupBy (taxID) for the organism
   * metadata, groupBy (taxID, sample) for reads and stats and its left
   * join onto the organism × sample grid, one window over taxID (z-score
-  * and control rpm), one window over sample (tophits). One cached grid
-  * feeds all three outputs.
+  * and control rpm), one window over sample (tophits), and groupBy
+  * (taxID, taxName, total) for the one pivot that renders both wide
+  * CSVs. One cached grid feeds all three outputs; their rendered lines
+  * reach the driver in one collect, and the driver orders them (no
+  * global sort, no range-sampling job).
   */
 object BigBugData {
 
@@ -82,44 +86,59 @@ object BigBugData {
       ordered)
   }
 
-  /** Pivot long → wide for the CSV contract: columns
-    * [taxID, taxName, Total # of Reads] ++ orderedSamples, rows sorted by
-    * taxID (O1/O2). Explicit pivot values skip Spark's distinct-collect
-    * job and pin column order. The combined and rrpm sinks write this
-    * frame. */
-  def pivotWide(long: DataFrame, valueCol: String,
-      orderedSamples: Seq[String]): DataFrame =
-    long.groupBy(col(TaxId), col(TaxName),
-        col("total_reads_organism").as("Total # of Reads"))
+  /** The wide outputs' CSV lines (O1/O2): one pivot of `long` for every
+    * output in `valueCols`, each row rendering one line per value column,
+    * [taxID, taxName, Total # of Reads] ++ that value per ordered sample.
+    * Explicit pivot values skip Spark's distinct-collect job and pin
+    * column order. Columns are (out, k1, k2, line) as
+    * [[CsvSink.writeTagged]] reads them: out = index in `valueCols`,
+    * k1 = taxID (the row order), k2 = 0. */
+  def wideLines(long: DataFrame, valueCols: Seq[String],
+      orderedSamples: Seq[String]): DataFrame = {
+    val pivoted = long.groupBy(col(TaxId), col(TaxName),
+        col("total_reads_organism"))
       .pivot(Sample, orderedSamples)
-      .agg(first(col(valueCol)))
-      .orderBy(col(TaxId))
+      .agg(first(col(valueCols.head)), valueCols.tail.map(c => first(col(c))): _*)
+    // renamed by position (sample names may hold dots or backticks); the
+    // pivot columns come sample-major: s1_v0, s1_v1, s2_v0, …
+    val wide = pivoted.toDF(pivoted.columns.indices.map(i => s"_$i"): _*)
+    val c = wide.columns.toSeq.map(col)
+    val nv = valueCols.size
+    wide.select(inline(array(valueCols.indices.map { v =>
+      struct(lit(v).as("out"), c.head.as("k1"), lit(0L).as("k2"),
+        CsvSink.line(c.take(3) ++ orderedSamples.indices.map(s => c(3 + s * nv + v)))
+          .as("line"))
+    }: _*)))
+  }
 
-  /** Execute and write the three CSVs (K1/K2). combined and rrpm go
-    * through [[pivotWide]], whose hash aggregation collapses the S cells
-    * of an organism into one row before anything is sorted. */
+  /** Execute and write the three CSVs (K1/K2) with one action after the
+    * totals collect: combined and rrpm lines come from ONE pivot of the
+    * grid (see [[wideLines]]), whose hash aggregation collapses the S
+    * cells of an organism into one row; tophits lines are tagged with
+    * (ordered-sample index, rank). The driver orders and writes them. */
   def write(spark: SparkSession, params: Params): Outputs = {
     val out = build(spark, params)
     val (combinedPath, rrpmPath, tophitsPath) =
       CsvSink.outputPaths(params.resultsDir, params.rank)
     val header = Seq(TaxId, TaxName, "Total # of Reads") ++ out.orderedSamples
-
-    CsvSink.writeSingleCsv(
-      pivotWide(out.combined, Reads, out.orderedSamples), header, combinedPath)
-    CsvSink.writeSingleCsv(
-      pivotWide(out.rrpm, "rrpm", out.orderedSamples), header, rrpmPath)
+    val tophitsHeader = Seq("sampleName", TaxId, TaxName, "rank", "rRPM",
+      "kmers", "dup", "reads", "cov", "e_val", "z_score")
 
     // tophits rows emit in ordered-sample order, then rank (reference
     // iterates samples in order, `bigbugdata.py:176`); literal map
-    // instead of a UDF keeps the sort key inside codegen
+    // instead of a UDF keeps the order tag inside codegen
     val idxExpr = coalesce(element_at(
       map(out.orderedSamples.zipWithIndex.flatMap { case (s, i) =>
         Seq(lit(s), lit(i)) }: _*), col("sampleName")), lit(Int.MaxValue))
-    CsvSink.writeSingleCsv(
-      out.tophits.orderBy(idxExpr, col("rank")),
-      Seq("sampleName", TaxId, TaxName, "rank", "rRPM", "kmers", "dup",
-        "reads", "cov", "e_val", "z_score"),
-      tophitsPath)
+    val tophitsLines = out.tophits.select(lit(2).as("out"),
+      idxExpr.cast("long").as("k1"), col("rank").cast("long").as("k2"),
+      CsvSink.line(tophitsHeader.map(col)).as("line"))
+
+    CsvSink.writeTagged(
+      wideLines(out.rrpm, Seq(Reads, "rrpm"), out.orderedSamples)
+        .union(tophitsLines),
+      Seq(combinedPath -> header, rrpmPath -> header,
+        tophitsPath -> tophitsHeader))
     out
   }
 }

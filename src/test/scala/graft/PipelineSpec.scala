@@ -350,6 +350,56 @@ class PipelineSpec extends SparkSuite {
       "sampleName,taxID,taxName,rank,rRPM,kmers,dup,reads,cov,e_val,z_score")
   }
 
+  test("BigBugData.write runs two SQL executions: the totals collect and " +
+      "one collect of all three outputs' lines") {
+    val funcs = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      private def record(f: String, qe: org.apache.spark.sql.execution.QueryExecution) =
+        funcs.put(if (qe.logical.toString.contains("graft_marker")) "marker" else f)
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = record(f, qe)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = record(f, qe)
+    }
+    // listener events arrive in order, so the executions between the two
+    // marker queries are exactly the write's
+    def marker(): Unit = spark.sql("SELECT 'graft_marker'").collect()
+    def drainToMarker(): Seq[String] =
+      Iterator.continually(funcs.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile(f => f != null && f != "marker").toList
+    spark.listenerManager.register(listener)
+    try {
+      marker()
+      drainToMarker()
+      BigBugData.write(spark, BigBugData.Params(
+        reportPaths = fixture._2,
+        resultsDir = Files.createTempDirectory("graft_jobs_out").toString,
+        rank = "species", nTophits = 2,
+        groupPatterns = Seq(("Negative", "CF_DNA"))))
+      marker()
+      assert(drainToMarker() == Seq("collect", "collect"))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("wide sink: sample names with dots and backticks are taken by position") {
+    val s2 = spark; import s2.implicits._
+    import graft.schema.ReportSchema.{Sample, TaxId, TaxName}
+    val samples = Seq("a.b", "c`d", "e")
+    val long = Seq((2L, "n2", 5L, "a.b", 1L, 0.5), (2L, "n2", 5L, "c`d", 2L, 1.5),
+      (2L, "n2", 5L, "e", 3L, 2.5), (1L, "n1", 4L, "a.b", 4L, 3.5),
+      (1L, "n1", 4L, "c`d", 5L, 4.5), (1L, "n1", 4L, "e", 6L, 5.5))
+      .toDF(TaxId, TaxName, "total_reads_organism", Sample, "r", "q")
+    val header = Seq(TaxId, TaxName, "Total # of Reads") ++ samples
+    val dir = Files.createTempDirectory("graft_dots")
+    graft.io.CsvSink.writeTagged(BigBugData.wideLines(long, Seq("r", "q"), samples),
+      Seq(s"$dir/r.csv" -> header, s"$dir/q.csv" -> header))
+    def read(f: String) = new String(Files.readAllBytes(dir.resolve(f)), "UTF-8")
+    assert(read("r.csv") ==
+      "taxID,taxName,Total # of Reads,a.b,c`d,e\n1,n1,4,4,5,6\n2,n2,5,1,2,3\n")
+    assert(read("q.csv") ==
+      "taxID,taxName,Total # of Reads,a.b,c`d,e\n1,n1,4,3.5,4.5,5.5\n2,n2,5,0.5,1.5,2.5\n")
+  }
+
   test("pivot sink golden bytes: CSV dialect on hard cells") {
     val s2 = spark; import s2.implicits._
     import graft.schema.ReportSchema.{Sample, TaxId, TaxName}
@@ -372,21 +422,27 @@ class PipelineSpec extends SparkSuite {
       (4L, "", 3L, "s3", 3.5),
       (5L, "  padded  ", 2L, "s1", 9.0),
       (5L, "  padded  ", 2L, "s2", 8.0),
-      (5L, "  padded  ", 2L, "s3", 7.0))
+      (5L, "  padded  ", 2L, "s3", 7.0),
+      (6L, null, 1L, "s1", Double.NaN),
+      (6L, null, 1L, "s2", Double.PositiveInfinity),
+      (6L, null, 1L, "s3", -0.0))
       .toDF(TaxId, TaxName, "total_reads_organism", Sample, "v")
     val header = Seq(TaxId, TaxName, "Total # of Reads") ++ samples
     val path = Files.createTempDirectory("graft_golden").resolve("p.csv")
-    graft.io.CsvSink.writeSingleCsv(
-      BigBugData.pivotWide(long, "v", samples), header, path.toString)
+    graft.io.CsvSink.writeTagged(BigBugData.wideLines(long, Seq("v"), samples),
+      Seq(path.toString -> header))
     // quote only on delimiter/quote (escape `\`), `""` for the empty
-    // string, padding kept, doubles in Java's toString form
+    // string, nothing for null, padding kept, doubles in Java's toString
+    // form; every line is what Spark's CSV writer produced for these rows
+    // before the sink rendered lines itself
     val expected = Seq(
       "taxID,taxName,Total # of Reads,s1,s2,s3",
       "1,plain name,7,0.5,1.0E7,0.30000000000000004",
       "2,\"has,comma\",9,1.0,-3.25,1.23456789123456E8",
       "3,\"q\\\"uote \\\\ba,ck\",0,0.0,2.0,4.5",
       "4,\"\",3,1.5,2.5,3.5",
-      "5,  padded  ,2,9.0,8.0,7.0").mkString("", "\n", "\n")
+      "5,  padded  ,2,9.0,8.0,7.0",
+      "6,,1,NaN,Infinity,-0.0").mkString("", "\n", "\n")
     val got = new String(Files.readAllBytes(path), "UTF-8")
     assert(got == expected, s"pivot sink bytes changed:\n$got")
   }

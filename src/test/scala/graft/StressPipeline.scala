@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import graft.pipeline.BigBugData
 
 /** Stress driver for the reference pipeline at a scale the reference's
@@ -85,8 +86,19 @@ object StressPipeline {
     val sActual = out.orderedSamples.size
     println(f"[stress] pipeline: $sActual samples x ${gridRows / sActual} taxa -> " +
       f"$gridRows dense cells, $topRows tophits, 3 CSVs in $dt%.1f s")
-    val csvPath = Paths.get(s"$outDir/combined_species.csv")
-    println(f"[stress] combined_species.csv = ${Files.size(csvPath) / 1024} KiB")
+    Seq("combined", "rrpm", "tophits").foreach { w =>
+      val csv = Paths.get(s"$outDir/${w}_species.csv")
+      println(f"[stress] ${w}_species.csv = ${Files.size(csv) / 1024} KiB")
+    }
+    // the sink holds every output line on the driver at once; report the
+    // heap pools' peak use since JVM start (summed over pools: an upper
+    // bound on peak heap) and the process's peak RSS
+    val peakHeap = java.lang.management.ManagementFactory.getMemoryPoolMXBeans
+      .asScala.filter(_.getType == java.lang.management.MemoryType.HEAP)
+      .map(_.getPeakUsage.getUsed).sum
+    val hwm = Files.readAllLines(Paths.get("/proc/self/status")).asScala
+      .find(_.startsWith("VmHWM:")).map(_.split("\\s+")(1).toLong).getOrElse(-1L)
+    println(f"[stress] peak heap ${peakHeap / 1048576} MiB, VmHWM ${hwm / 1024} MiB")
     spark.stop()
   }
 }
