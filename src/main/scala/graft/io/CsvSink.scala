@@ -1,9 +1,12 @@
 package graft.io
 
-import java.io.{BufferedWriter, OutputStream, OutputStreamWriter}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream,
+  DataOutputStream, OutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -14,19 +17,21 @@ import org.apache.spark.sql.functions._
   * inside the executors, with Spark's own CSV generator (`to_csv`, the
   * generator behind `DataFrameWriter.csv`) under the writer options the
   * sink has always used, so quoting, escaping and number formatting are
-  * the CSV writer's. The driver then collects the rendered lines once,
-  * orders them where the output has an order, and writes each file behind
-  * a header line it renders itself ([[csvCell]]). All of an engine run's
-  * outputs are collected by ONE action ([[writeTagged]]): no
-  * range-sampling job, no exchange for a global sort, no committed part
-  * files to concatenate.
+  * the CSV writer's. ONE action ([[writeTagged]], [[withLines]]) then
+  * has every task spill its partition's lines, per output, into a local
+  * run file, sorted within the partition where the output has an order.
+  * The driver merges each output's runs (a k-way merge: one open stream
+  * and one pending line per run) into the target behind a header line it
+  * renders itself ([[csvCell]]). No range-sampling job, no exchange for a
+  * global sort, no committed part files.
   *
-  * Driver memory: the driver holds every line of the collected outputs at
-  * once — the bytes of the written CSVs plus a JVM row/string overhead per
-  * line (T + T + K·S lines for the pipeline: T organisms, S samples, K
-  * tophits). The same bytes already passed through the driver when it
-  * concatenated part files, one output at a time; outputs larger than the
-  * driver heap do not fit this sink.
+  * Driver memory: no line reaches the driver through the task results
+  * (each task returns nothing), so `spark.driver.maxResultSize` never
+  * applies and the driver holds one pending line per run, not the
+  * outputs. The runs live in a temporary directory that the tasks and the
+  * driver must both see (one machine, or a shared file system), as the
+  * part files of the old concatenating sink did; it is deleted after the
+  * write.
   */
 object CsvSink {
 
@@ -52,29 +57,42 @@ object CsvSink {
   /** one CSV line (no terminator) of `cells`, in order */
   def line(cells: Seq[Column]): Column = to_csv(struct(cells: _*), options)
 
-  /** `df`'s rows as rendered lines, in partition order. Columns are taken
-    * by position, so no column name is ever parsed as a reference. */
-  def collectLines(df: DataFrame): Array[String] = {
-    val byPos = df.toDF(df.columns.indices.map(i => s"_$i"): _*)
-    byPos.select(line(byPos.columns.toSeq.map(col))).collect().map(_.getString(0))
-  }
+  /** `df` with its columns renamed `_0`, `_1`, … by position, so no
+    * column name (a sample name may hold dots or backticks) is ever
+    * parsed as a reference */
+  def byPosition(df: DataFrame): DataFrame =
+    df.toDF(df.columns.indices.map(i => s"_$i"): _*)
 
   /** K1 for several outputs in ONE action. `tagged` has the columns
     * (out: Int, k1: Long, k2: Long, line: String): output `i` is written
     * to `outputs(i)._1` behind the header `outputs(i)._2`, its lines in
-    * (k1, k2) order (null k1 first, as `orderBy` ascending puts it). */
-  def writeTagged(tagged: DataFrame, outputs: Seq[(String, Seq[String])]): Unit = {
-    val byOut = tagged.collect().groupBy(_.getInt(0))
-    val order = Ordering.by((r: Row) =>
-      (Option(r.get(1)).map(_.asInstanceOf[Long]), r.getLong(2), r.getString(3)))
-    outputs.zipWithIndex.foreach { case ((target, header), i) =>
-      val rows = byOut.getOrElse(i, Array.empty[Row]).sorted(order)
-      writeLines(target, header, rows.iterator.map(_.getString(3)))
+    * (k1, k2) order (null k1 first, as `orderBy` ascending puts it). An
+    * output without lines gets the header alone. */
+  def writeTagged(tagged: DataFrame, outputs: Seq[(String, Seq[String])]): Unit =
+    withRuns(tagged.sortWithinPartitions("out", "k1", "k2")) { runs =>
+      outputs.zipWithIndex.foreach { case ((target, header), i) =>
+        writeLines(target, header, merge(runs(i)))
+      }
+    }
+
+  /** K3 in ONE action: `df`'s rows (columns by position) as CSV lines in
+    * partition order, handed to `sink` only when there is at least one;
+    * returns whether there was. */
+  def withLines(df: DataFrame)(sink: Iterator[Array[Byte]] => Unit): Boolean = {
+    val pos = byPosition(df)
+    withRuns(pos.select(lit(0).as("out"), lit(0L).as("k1"), lit(0L).as("k2"),
+        line(pos.columns.toSeq.map(col)).as("line"))) { runs =>
+      val lines = runs(0).iterator.flatMap(r =>
+        Iterator.unfold(())(_ => if (r.advance()) Some((r.line, ())) else None))
+      val any = lines.hasNext
+      if (any) sink(lines)
+      any
     }
   }
 
   /** `lines` into `target` behind the header line */
-  def writeLines(target: String, header: Seq[String], lines: Iterator[String]): Unit = {
+  def writeLines(target: String, header: Seq[String],
+      lines: Iterator[Array[Byte]]): Unit = {
     val dest = Paths.get(target)
     if (dest.getParent != null) Files.createDirectories(dest.getParent)
     val out = Files.newOutputStream(dest)
@@ -82,12 +100,126 @@ object CsvSink {
   }
 
   /** the header line, then each line, LF-terminated */
-  def emit(out: OutputStream, header: Seq[String], lines: Iterator[String]): Unit = {
-    val w = new BufferedWriter(new OutputStreamWriter(out, UTF_8))
-    w.write(header.map(csvCell).mkString(","))
+  def emit(out: OutputStream, header: Seq[String],
+      lines: Iterator[Array[Byte]]): Unit = {
+    val w = new BufferedOutputStream(out, 1 << 16)
+    w.write(header.map(csvCell).mkString(",").getBytes(UTF_8))
     w.write('\n')
     lines.foreach { l => w.write(l); w.write('\n') }
     w.flush()
+  }
+
+  /** Run the ONE action that spills `tagged` (columns out, k1, k2, line;
+    * each partition already in its outputs' order) into run files, then
+    * hand `f` an output index's runs in partition order. */
+  private def withRuns[A](tagged: DataFrame)(f: (Int => Seq[Run]) => A): A = {
+    val dir = Files.createTempDirectory("graft_csv")
+    val d = dir.toString
+    val opened = mutable.ArrayBuffer.empty[Run]
+    try {
+      tagged.foreachPartition((rows: Iterator[Row]) => spill(d, rows))
+      val RunName = """o(\d+)-p(\d+)""".r
+      val runs = listDir(dir).flatMap { p =>
+        p.getFileName.toString match {
+          case RunName(o, part) => Some((o.toInt, part.toInt, p))
+          case _ => None
+        }
+      }
+      f { out =>
+        runs.filter(_._1 == out).sortBy(_._2).map { case (_, _, p) =>
+          val r = new Run(p)
+          opened += r
+          r
+        }
+      }
+    } finally {
+      opened.foreach(_.close())
+      listDir(dir).foreach(Files.delete)
+      Files.delete(dir)
+    }
+  }
+
+  private def listDir(dir: Path): Seq[Path] = {
+    val s = Files.list(dir)
+    try s.iterator().asScala.toList finally s.close()
+  }
+
+  /** executor side: one run file per output the partition has lines for,
+    * records (k1 is null, k1, k2, line length, line bytes); a run is
+    * published under its final name only once complete, so a retried task
+    * replaces its own runs */
+  private def spill(dir: String, rows: Iterator[Row]): Unit = {
+    val ctx = TaskContext.get()
+    val part = ctx.partitionId()
+    val runs = mutable.LinkedHashMap.empty[Int, (Path, DataOutputStream)]
+    try rows.foreach { r =>
+      val out = runs.getOrElseUpdate(r.getInt(0), {
+        val tmp = Paths.get(dir,
+          s"o${r.getInt(0)}-p$part.${ctx.attemptNumber()}.tmp")
+        tmp -> new DataOutputStream(
+          new BufferedOutputStream(Files.newOutputStream(tmp), 1 << 16))
+      })._2
+      out.writeBoolean(r.isNullAt(1))
+      out.writeLong(if (r.isNullAt(1)) 0L else r.getLong(1))
+      out.writeLong(r.getLong(2))
+      val bytes = r.getString(3).getBytes(UTF_8)
+      out.writeInt(bytes.length)
+      out.write(bytes)
+    } finally runs.values.foreach(_._2.close())
+    runs.foreach { case (o, (tmp, _)) =>
+      Files.move(tmp, Paths.get(dir, s"o$o-p$part"),
+        StandardCopyOption.ATOMIC_MOVE)
+    }
+  }
+
+  /** a run file's cursor: the pending record; the file opens at the
+    * first [[advance]] and closes at its end */
+  private final class Run(path: Path) {
+    private var in: DataInputStream = _
+    var k1Null = false
+    var k1 = 0L
+    var k2 = 0L
+    var line: Array[Byte] = _
+    def advance(): Boolean = {
+      if (in == null)
+        in = new DataInputStream(
+          new BufferedInputStream(Files.newInputStream(path), 1 << 16))
+      in.read() match {
+        case -1 => close(); false
+        case b =>
+          k1Null = b != 0
+          k1 = in.readLong()
+          k2 = in.readLong()
+          line = new Array[Byte](in.readInt())
+          in.readFully(line)
+          true
+      }
+    }
+    def close(): Unit = if (in != null) in.close()
+  }
+
+  /** (k1 nulls first, k2) — the smallest comes first */
+  private val runOrder: Ordering[Run] = (a: Run, b: Run) => {
+    var c = java.lang.Boolean.compare(!a.k1Null, !b.k1Null)
+    if (c == 0) c = java.lang.Long.compare(a.k1, b.k1)
+    if (c == 0) c = java.lang.Long.compare(a.k2, b.k2)
+    c
+  }
+
+  /** k-way merge of sorted runs: every run open at once, one pending line
+    * each */
+  private def merge(runs: Seq[Run]): Iterator[Array[Byte]] = {
+    val heap = mutable.PriorityQueue.empty[Run](runOrder.reverse)
+    runs.foreach(r => if (r.advance()) heap += r)
+    new Iterator[Array[Byte]] {
+      def hasNext: Boolean = heap.nonEmpty
+      def next(): Array[Byte] = {
+        val r = heap.dequeue()
+        val l = r.line
+        if (r.advance()) heap += r
+        l
+      }
+    }
   }
 
   /** K2: output layout `{out}/combined_{rank}.csv` etc.

@@ -27,24 +27,18 @@ object FilterOps {
   /** K3: the filter scripts' stdout-CSV contract — header + rows when any
     * row matched, NOTHING at all when none did
     * (`filter_rrpm_by_taxid.py:33–36`: the writer is never constructed
-    * for an empty result). One collect of the rendered lines serves both
+    * for an empty result). One action renders the lines and serves both
     * the emptiness test and the write; rows keep partition order. */
-  def writeFilteredCsv(df: DataFrame, target: String): Boolean = {
-    val lines = CsvSink.collectLines(df)
-    if (lines.nonEmpty) CsvSink.writeLines(target, df.columns.toSeq, lines.iterator)
-    lines.nonEmpty
-  }
+  def writeFilteredCsv(df: DataFrame, target: String): Boolean =
+    CsvSink.withLines(df)(CsvSink.writeLines(target, df.columns.toSeq, _))
 
   /** K3, stdout channel: the reference writes the filtered CSV to STDOUT
     * (`filter_rrpm_by_taxid.py:33–36` — "where it can be directed into a
     * file"), emitting nothing at all on an empty result. Same lines and
     * header as [[writeFilteredCsv]], written to `out`. Returns true iff
     * anything was emitted. */
-  def printFilteredCsv(df: DataFrame, out: java.io.PrintStream = System.out): Boolean = {
-    val lines = CsvSink.collectLines(df)
-    if (lines.nonEmpty) CsvSink.emit(out, df.columns.toSeq, lines.iterator)
-    lines.nonEmpty
-  }
+  def printFilteredCsv(df: DataFrame, out: java.io.PrintStream = System.out): Boolean =
+    CsvSink.withLines(df)(CsvSink.emit(out, df.columns.toSeq, _))
 
   /** `filter_reports_by_taxid.py`: same filter over a folder of reports,
     * with `sampleName` = FIRST underscore token of the file name (F6 —

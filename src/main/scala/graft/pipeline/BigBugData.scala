@@ -24,9 +24,10 @@ import graft.schema.ReportSchema._
   * join onto the organism × sample grid, one window over taxID (z-score
   * and control rpm), one window over sample (tophits), and groupBy
   * (taxID, taxName, total) for the one pivot that renders both wide
-  * CSVs. One cached grid feeds all three outputs; their rendered lines
-  * reach the driver in one collect, and the driver orders them (no
-  * global sort, no range-sampling job).
+  * CSVs. One cached grid feeds all three outputs; one action renders
+  * their lines, sorts them within each partition and spills them to run
+  * files, which the driver merges into the CSVs (no global sort, no
+  * range-sampling job; see [[CsvSink]]).
   */
 object BigBugData {
 
@@ -99,9 +100,8 @@ object BigBugData {
         col("total_reads_organism"))
       .pivot(Sample, orderedSamples)
       .agg(first(col(valueCols.head)), valueCols.tail.map(c => first(col(c))): _*)
-    // renamed by position (sample names may hold dots or backticks); the
-    // pivot columns come sample-major: s1_v0, s1_v1, s2_v0, …
-    val wide = pivoted.toDF(pivoted.columns.indices.map(i => s"_$i"): _*)
+    // the pivot columns come sample-major: s1_v0, s1_v1, s2_v0, …
+    val wide = CsvSink.byPosition(pivoted)
     val c = wide.columns.toSeq.map(col)
     val nv = valueCols.size
     wide.select(inline(array(valueCols.indices.map { v =>
@@ -115,7 +115,8 @@ object BigBugData {
     * totals collect: combined and rrpm lines come from ONE pivot of the
     * grid (see [[wideLines]]), whose hash aggregation collapses the S
     * cells of an organism into one row; tophits lines are tagged with
-    * (ordered-sample index, rank). The driver orders and writes them. */
+    * (ordered-sample index, rank). The driver merges them in that order
+    * into the files. */
   def write(spark: SparkSession, params: Params): Outputs = {
     val out = build(spark, params)
     val (combinedPath, rrpmPath, tophitsPath) =

@@ -182,8 +182,8 @@ class OpsSpec extends SparkSuite {
       .map(p => new String(Files.readAllBytes(p), "UTF-8"))
       .next()
     val target = Files.createTempDirectory("graft_hdr").resolve("out.csv")
-    graft.io.CsvSink.writeLines(target.toString, cols,
-      graft.io.CsvSink.collectLines(df).iterator)
+    graft.io.CsvSink.withLines(df)(
+      graft.io.CsvSink.writeLines(target.toString, cols, _))
     val got = new String(Files.readAllBytes(target), "UTF-8")
     assert(got == ref,
       s"driver-written header and lines must match Univocity:\n got $got\n ref $ref")

@@ -351,7 +351,7 @@ class PipelineSpec extends SparkSuite {
   }
 
   test("BigBugData.write runs two SQL executions: the totals collect and " +
-      "one collect of all three outputs' lines") {
+      "one action for all three outputs' lines") {
     val funcs = new java.util.concurrent.LinkedBlockingQueue[String]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       private def record(f: String, qe: org.apache.spark.sql.execution.QueryExecution) =
@@ -377,8 +377,60 @@ class PipelineSpec extends SparkSuite {
         rank = "species", nTophits = 2,
         groupPatterns = Seq(("Negative", "CF_DNA"))))
       marker()
-      assert(drainToMarker() == Seq("collect", "collect"))
+      assert(drainToMarker() == Seq("collect", "foreachPartition"))
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("CsvSink ships no line through the task results and merges the " +
+      "partitions' runs in key order") {
+    import org.apache.spark.sql.functions._
+    import scala.jdk.CollectionConverters._
+    // 4 partitions of ~400-byte hard-to-compress lines under a permuted
+    // k1, plus one null k1
+    val k1 = coalesce(col("k1"), lit(-1L))
+    val lines = spark.range(0, 20000, 1, 4)
+      .select(lit(0).as("out"), ((col("id") * 7919) % 20000).as("k1"),
+        lit(0L).as("k2"))
+      .union(spark.range(1).select(lit(0), lit(null).cast("long"), lit(0L)))
+      .select(col("out"), col("k1"), col("k2"),
+        concat(coalesce(col("k1").cast("string"), lit("null")) +: lit(",") +:
+          (0 until 6).map(i => sha2((k1 * 6 + i).cast("string"), 256)): _*)
+          .as("line"))
+    val resultBytes = new java.util.concurrent.LinkedBlockingQueue[java.lang.Long]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.job.description") == "graft_marker")
+          resultBytes.put(-1L)
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) resultBytes.put(e.taskMetrics.resultSize)
+    }
+    // listener events arrive in order: the task ends before the marker
+    // job's start are exactly the write's
+    def marker(): Unit = {
+      spark.sparkContext.setJobDescription("graft_marker")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+    }
+    def drainToMarker(): Seq[Long] =
+      Iterator.continually(resultBytes.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile(b => b != null && b != -1L).map(_.longValue).toList
+    val target = Files.createTempDirectory("graft_runs").resolve("out.csv")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      marker()
+      drainToMarker()
+      graft.io.CsvSink.writeTagged(lines, Seq(target.toString -> Seq("k1", "pad")))
+      marker()
+      val shipped = drainToMarker().sum
+      val csvBytes = Files.size(target)
+      assert(csvBytes > 7000000L)
+      assert(shipped < csvBytes / 100,
+        s"$shipped result bytes for a $csvBytes-byte CSV")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val got = Files.readAllLines(target).asScala.toSeq
+    assert(got.head == "k1,pad")
+    assert(got.tail.map(_.takeWhile(_ != ',')) ==
+      ("null" +: (0 until 20000).map(_.toString)))
   }
 
   test("wide sink: sample names with dots and backticks are taken by position") {
