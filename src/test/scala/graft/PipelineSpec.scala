@@ -115,6 +115,72 @@ class PipelineSpec extends SparkSuite {
     assert(math.abs(got - (4.5 - mean) / sd) < 1e-12)
   }
 
+  /** six samples whose argument order differs from the ordered-sample
+    * order, totals that make every rpm inexact, and 0-filled cells */
+  private val pinArgs = Seq("S4", "S1", "S6", "S3", "S2", "S5")
+  private def pinTotal(s: String): Long = {
+    val i = s.drop(1).toLong
+    1000003L + i * 7919L + i * i * 131L
+  }
+  private def pinReads(t: Long, s: String): Long = {
+    val i = s.drop(1).toLong
+    val v = (t * 37 + i * 101 + t * i * 13) % 97
+    if (v % 5 == 0) 0L else v * 3 + 1
+  }
+  private val pinTaxa = Seq(11L, 12L, 13L, 14L, 15L)
+
+  test("z-score bits: the fold visits the samples in argument order with " +
+      "Spark's avg and stddev_pop update steps (W2)") {
+    val dir = Files.createTempDirectory("graft_zpin")
+    val paths = pinArgs.map { s =>
+      val half = pinTotal(s) / 2
+      writeReport(dir, s"${s}_report.tsv", Seq(
+        s"50.0\t$half\t$half\t0\t0\t0\t0\tunclassified\tunclassified",
+        s"50.0\t${pinTotal(s) - half}\t${pinTotal(s) - half}\t9\t0\t0\t1\troot\troot") ++
+        pinTaxa.filter(pinReads(_, s) > 0).map { t =>
+          s"0.1\t${pinReads(t, s)}\t1\t5\t1.0\t0.5\t$t\tspecies\tT$t"
+        })
+    }
+    val out = BigBugData.build(spark, BigBugData.Params(
+      paths, Files.createTempDirectory("graft_zpin_out").toString))
+    assert(out.orderedSamples == pinArgs.sorted)
+    val got = out.rrpm.collect().map(r => (r.getAs[Long]("taxID"),
+      r.getAs[String]("sample")) -> r.getAs[Double]("z_score")).toMap
+    // raw bits per taxID, samples in argument order, as the window over
+    // taxID computed them
+    val pinned = Map(
+      11L -> Seq(0xbff15e49d75ca8b3L, 0x3ff4b4932a1dfd33L, 0xbfc3b376c562b10aL,
+        0x3ff5b2c8fdc06923L, 0xbfd4d16681e2fb2fL, 0xbff15e49d75ca8b3L),
+      12L -> Seq(0xbfd1ca6a917b6bb2L, 0xbf4ee73de1168970L, 0x3ff1fbf0714a42b5L,
+        0x3ff6f6532188a9c5L, 0xbff23de6035bf75dL, 0xbff23de6035bf75dL),
+      13L -> Seq(0xbfe8b302b1da4316L, 0x3ff5448934528e02L, 0x3fef282bd8824b65L,
+        0xbff1302f5f9d14e3L, 0x3fe3c281ef272f3aL, 0xbff1302f5f9d14e3L),
+      14L -> Seq(0xbfe2cb8a586ed47cL, 0xbfe447a6586d292eL, 0x4001731798173b5cL,
+        0xbfd397e432c1b0a2L, 0xbf94b2a7b65dc9d3L, 0xbfe447a6586d292eL),
+      15L -> Seq(0xbfdc9f25c5bfedd9L, 0xbfdc9f25c5bfedd9L, 0x4001e3779b97f4a7L,
+        0xbfdc9f25c5bfedd9L, 0xbfdc9f25c5bfedd9L, 0xbfdc9f25c5bfedd9L))
+    for (t <- pinTaxa; (s, b) <- pinArgs.zip(pinned(t)))
+      assert(java.lang.Double.doubleToRawLongBits(got((t, s))) == b, s"taxID $t, $s")
+
+    // the pin tells the orders apart: the same steps over the samples in
+    // ordered-sample order change the bits of some cells
+    def zs(order: Seq[String], t: Long): Map[String, Double] = {
+      val xs = order.map(s => pinReads(t, s).toDouble / (pinTotal(s).toDouble / 1e6))
+      var (sum, n, avg, m2) = (0.0, 0.0, 0.0, 0.0)
+      xs.foreach { x =>
+        sum += x
+        val delta = x - avg
+        val deltaN = delta / (n + 1.0)
+        n += 1.0; avg += deltaN; m2 += delta * (delta - deltaN)
+      }
+      val sd = math.sqrt(m2 / n)
+      order.zip(xs.map(x => (x - sum / n) / sd)).toMap
+    }
+    for (t <- pinTaxa; (s, b) <- pinArgs.zip(pinned(t)))
+      assert(java.lang.Double.doubleToRawLongBits(zs(pinArgs, t)(s)) == b)
+    assert(pinTaxa.exists(t => pinArgs.exists(s => zs(pinArgs.sorted, t)(s) != zs(pinArgs, t)(s))))
+  }
+
   test("tophits: stable tie-break by taxID ascending (W1 trap 3)") {
     val tops = fixture._1.tophits.collect().toSeq
     val nc = tops.filter(_.getAs[String]("sampleName") == "CF_DNA_Negative1")
