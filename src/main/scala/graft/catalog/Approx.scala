@@ -530,16 +530,20 @@ object Approx {
         WHERE rk <= 3 ORDER BY q_id, rk"""
   }
 
-  private def e3OracleSql: String = {
+  /** the 16 flat-centroid sims of `dv` as DuckDB SQL, e3's literal
+    * centroids (`ivfFlatCentroids(16)`) embedded as literals */
+  private def flatSimsSql: String = {
     val dims = 64
-    def centroid(c: Int): Seq[Double] =
-      (0 until dims).map(d => mixToUnit(0x49564600L + c.toLong * dims + d) - 0.5)
-    val simsList = (0 until 16).map(c => dotLitSql("dv", centroid(c)))
+    val cb = ivfFlatCentroids(16, dims)
+    (0 until 16).map(c => dotLitSql("dv", cb.slice(c * dims, (c + 1) * dims).toSeq))
       .mkString("list_value(", ",\n ", ")")
+  }
+
+  private def e3OracleSql: String =
     s"""WITH v AS (
         SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS dv
         FROM embeddings),
-      sims AS (SELECT vec_id, dv, $simsList AS sims FROM v),
+      sims AS (SELECT vec_id, dv, $flatSimsSql AS sims FROM v),
       cells AS (
         SELECT vec_id, dv, sims, list_position(sims, list_max(sims)) AS cell
         FROM sims),
@@ -562,21 +566,15 @@ object Approx {
           ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id ASC) AS rk
         FROM rer)
       SELECT q_id, c_id, rk, cos FROM ranked WHERE rk <= 3 ORDER BY q_id, rk"""
-  }
 
   /** the IVF multi-probe CTE prefix shared by e8 and e16 (C=16, P=4,
     * tau=0.4, the FixedC(16) tier): v → sims → cells → probes →
     * bare-id candidates → cosine-confirmed `pairs` */
-  private def ivfPairCtes: String = {
-    val dims = 64
-    def centroid(c: Int): Seq[Double] =
-      (0 until dims).map(d => mixToUnit(0x49564600L + c.toLong * dims + d) - 0.5)
-    val simsList = (0 until 16).map(c => dotLitSql("dv", centroid(c)))
-      .mkString("list_value(", ",\n ", ")")
+  private def ivfPairCtes: String =
     s"""v AS (
         SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS dv
         FROM embeddings),
-      sims AS (SELECT vec_id, dv, $simsList AS sims FROM v),
+      sims AS (SELECT vec_id, dv, $flatSimsSql AS sims FROM v),
       cells AS (
         SELECT vec_id, dv, sims,
           CAST(list_position(sims, list_max(sims)) AS BIGINT) AS cell
@@ -596,7 +594,6 @@ object Approx {
         JOIN v va ON va.vec_id = cand.id_a
         JOIN v vb ON vb.vec_id = cand.id_b
         WHERE ${cosineSql("va.dv", "vb.dv")} >= 0.4)"""
-  }
 
   private def e8OracleSql: String =
     s"""WITH $ivfPairCtes,
@@ -2361,44 +2358,23 @@ object Approx {
   ) ++ queriesTail
 
   /** e3's body, shared with e14's recall evaluation: IVF multi-probe
-    * exact-cosine top-3 (C=16 literal centroids, NProbe=4). */
+    * exact-cosine top-3 on the flat assignment e8/e16 run
+    * (`shardedAssign`'s FixedC(16) tier, e3's literal centroids): every
+    * vector is a candidate in its cell, and each of the 8 query vectors
+    * probes its top-4 cells. */
   def ivfTop3(s: SparkSession, dir: String): DataFrame = {
-        val C = 16; val NProbe = 4
-        val emb = t(s, dir, "embeddings")
-          .withColumn("dv", transform(col("embedding"), x => x.cast("double")))
-          .select("vec_id", "dv").cache()
-        val dims = 64
-        def centroid(c: Int) = array((0 until dims).map { d =>
-          lit(mixToUnit(0x49564600L + c.toLong * dims + d) - 0.5)
-        }: _*)
-        // nearest centroid = argmax over a sims array — each dot product
-        // appears ONCE. (A reduce of when(struct,struct) pairs duplicates
-        // both subtrees per step → 2^C expression nodes; the analyzer
-        // never returns.)
-        val sims = array((0 until C).map(c =>
-          graft.functions.DotProduct.dot_product(col("dv"), centroid(c))): _*)
-        val cellExpr = array_position(col("_sims"), array_max(col("_sims")))
-        val cells = emb.withColumn("_sims", sims)
-          .withColumn("cell", cellExpr).drop("_sims").cache()
-        // top-NProbe cells per query: rank (−sim, cell-index) structs so
-        // array_sort needs no comparator lambda
-        val simsRanked = zip_with(col("_sims"),
-          transform(sequence(lit(1), lit(C)), i => i.cast("long")),
-          (sim, idx) => struct((-sim).as("neg"), idx.as("cell")))
-        val probeCells = transform(slice(array_sort(simsRanked), 1, NProbe),
-          x => x.getField("cell"))
-        val q = emb.filter(col("vec_id") < 8)
-          .withColumn("_sims", sims)
-          .withColumn("cell", explode(probeCells))
-          .select(col("vec_id").as("q_id"), col("dv").as("qv"), col("cell"))
-        val cands = cells.select(col("vec_id").as("c_id"), col("dv").as("cv"), col("cell"))
-        val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id").asc)
-        broadcast(q).join(cands, Seq("cell")).filter(col("q_id") =!= col("c_id"))
-          .withColumn("cos", Vectors.cosine(col("qv"), col("cv")))
-          .withColumn("rk", row_number().over(w).cast("long"))
-          .filter(col("rk") <= 3)
-          .select("q_id", "c_id", "rk", "cos")
-          .orderBy("q_id", "rk")
+    val cells = shardedAssign(t(s, dir, "embeddings"), P = 4, FixedC(16)).cells
+    val q = cells.filter(col("vec_id") < 8)
+      .select(col("vec_id").as("q_id"), col("dv").as("qv"),
+        explode(col("probes")).as("cell"))
+    val cands = cells.select(col("vec_id").as("c_id"), col("dv").as("cv"), col("cell"))
+    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id").asc)
+    broadcast(q).join(cands, Seq("cell")).filter(col("q_id") =!= col("c_id"))
+      .withColumn("cos", Vectors.cosine(col("qv"), col("cv")))
+      .withColumn("rk", row_number().over(w).cast("long"))
+      .filter(col("rk") <= 3)
+      .select("q_id", "c_id", "rk", "cos")
+      .orderBy("q_id", "rk")
   }
 
   private def queriesTail: Seq[QueryDef] = Seq(

@@ -17,10 +17,12 @@ import graft.pipeline.BigBugData
   *   - each sample's taxID-0 + taxID-1 reads sum to exactly 1,000,000, so
   *     rpm = reads/(total/1e6) = reads — an exact integer-valued double;
   *   - every species read count (and thus every dense-grid rpm, 0-cells
-  *     included) is ≡ 0 (mod 3), so Spark's Welford-style stddev_pop hits
-  *     only exactly-representable intermediates (means at k=1..4 divide
-  *     evenly in binary or by 3) — z-scores are bit-identical to ANY
-  *     algebraically-equivalent formula, which is what the oracle computes;
+  *     included) is ≡ 0 (mod 3), so the z-score fold's Welford-style
+  *     stddev_pop steps hit only exactly-representable intermediates
+  *     (means at k=1..4 divide evenly in binary or by 3) — z-scores are
+  *     bit-identical to ANY algebraically-equivalent formula in ANY
+  *     sample order, which is what the oracle computes (the fold order
+  *     stays pinned in PipelineSpec);
   *   - duplicate-row stats are identical across the duplicates, keeping
   *     last-row-wins order-free (the order-sensitive trap stays pinned in
   *     PipelineSpec);
@@ -63,7 +65,7 @@ object E2E {
   private val writtenBy = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
 
-  /** run the REAL sink path (K1/K2/F9: pivot wide, fixed header, single
+  /** run the REAL sink path (K1/K2/F9: wide lines, fixed header, single
     * CSV file) and read the produced file back as all-string columns —
     * the oracle recomputes the expected file content independently from
     * the TSVs, so equality proves the written bytes, not just the frame.

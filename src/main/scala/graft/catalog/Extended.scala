@@ -22,6 +22,10 @@ object Extended {
     s"${Staging.targetDir}/graft_json_src_${Staging.tag(sfDir)}"
   val JsonStageToken = "__GRAFT_JSON_STAGE__"
 
+  /** q53's staging root: the checkout's target/, like every other
+    * staging root, so two checkouts never share it */
+  val schemaEvoDir = s"${Staging.targetDir}/graft_schema_evo"
+
   val queries: Seq[QueryDef] = Seq(
 
     QueryDef(
@@ -581,10 +585,10 @@ object Extended {
         // NULL. The aggregate proves both directions of the merge. The
         // oracle replays the SAME files through DuckDB union_by_name —
         // equality checks the merged schema, null-fill, and values.
-        val root = "/root/repo/target/graft_schema_evo"
+        val root = Extended.schemaEvoDir
         // drifted batches = ingest fixture — staged once per (session,
         // CURRENT sfDir): the root is shared across sfDirs (the oracle
-        // hard-codes the path), so the global "q53" slot tracks which
+        // names the one root), so the global "q53" slot tracks which
         // dir the root holds and any dir switch rewrites it; the
         // mergeSchema read is what's measured
         Staging.once(s, "q53", dir, s"$root/b/_SUCCESS") {
@@ -608,15 +612,15 @@ object Extended {
             countDistinct(col("o_orderpriority")).as("n_prio_kinds"))
           .orderBy("bucket")
       },
-      Some("""SELECT o_custkey % 7 AS bucket,
+      Some(s"""SELECT o_custkey % 7 AS bucket,
           COUNT(*) AS n_rows,
           COUNT(o_totalprice) AS n_priced,
           COUNT(o_orderpriority) AS n_prioritized,
           CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sum_price,
           COUNT(DISTINCT o_orderpriority) AS n_prio_kinds
         FROM read_parquet(
-          ['/root/repo/target/graft_schema_evo/a/*.parquet',
-           '/root/repo/target/graft_schema_evo/b/*.parquet'],
+          ['$schemaEvoDir/a/*.parquet',
+           '$schemaEvoDir/b/*.parquet'],
           union_by_name=true)
         GROUP BY bucket ORDER BY bucket"""),
       "schema-evolution source: two parquet batches with drifted schemas " +

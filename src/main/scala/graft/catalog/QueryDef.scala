@@ -58,8 +58,8 @@ object Staging {
   /** Run `write` unless this session already staged `slot` for exactly
     * `want` (normally the sfDir) and `marker` still exists on disk.
     * Queries whose staging root embeds the sfDir use a per-dir slot;
-    * q53's root is SHARED across sfDirs (its oracle hard-codes the
-    * path), so its slot is global and `want` tracks which dir the
+    * q53's root is SHARED across sfDirs (its static oracle names the
+    * one root), so its slot is global and `want` tracks which dir the
     * root currently holds — switching dirs rewrites, same-dir repeats
     * skip. Entrants for one (session, slot) are serialized, so
     * concurrent queries never write the same root twice at once; other

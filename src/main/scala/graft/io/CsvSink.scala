@@ -57,12 +57,6 @@ object CsvSink {
   /** one CSV line (no terminator) of `cells`, in order */
   def line(cells: Seq[Column]): Column = to_csv(struct(cells: _*), options)
 
-  /** `df` with its columns renamed `_0`, `_1`, … by position, so no
-    * column name (a sample name may hold dots or backticks) is ever
-    * parsed as a reference */
-  def byPosition(df: DataFrame): DataFrame =
-    df.toDF(df.columns.indices.map(i => s"_$i"): _*)
-
   /** K1 for several outputs in ONE action. `tagged` has the columns
     * (out: Int, k1: Long, k2: Long, line: String): output `i` is written
     * to `outputs(i)._1` behind the header `outputs(i)._2`, its lines in
@@ -79,7 +73,9 @@ object CsvSink {
     * partition order, handed to `sink` only when there is at least one;
     * returns whether there was. */
   def withLines(df: DataFrame)(sink: Iterator[Array[Byte]] => Unit): Boolean = {
-    val pos = byPosition(df)
+    // columns renamed by position, so no name (a sample name may hold
+    // dots or backticks) is ever parsed as a reference
+    val pos = df.toDF(df.columns.indices.map(i => s"_$i"): _*)
     withRuns(pos.select(lit(0).as("out"), lit(0L).as("k1"), lit(0L).as("k2"),
         line(pos.columns.toSeq.map(col)).as("line"))) { runs =>
       val lines = runs(0).iterator.flatMap(r =>

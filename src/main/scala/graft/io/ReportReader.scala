@@ -2,6 +2,7 @@ package graft.io
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.schema.ReportSchema
 
 /** Report scans (reference S1–S3).
@@ -32,6 +33,27 @@ object ReportReader {
     * it with a forced multi-split file) */
   val OrderKey = "_orderkey"
 
+  /** prefix of the verbatim-text twin each report column keeps alongside
+    * its typed value (K4 sink fidelity: the reference echoes raw
+    * DictReader strings — `modify_reports.py:95–140` — so `0.10` must
+    * round-trip as `0.10`, not `0.1`) */
+  val RawPrefix = "_raw_"
+
+  /** S1 as a text scan with typed columns, for a batch or a streaming
+    * reader: `load` applies the report TSV's reader options and its
+    * all-string schema. Each column then exists both typed (canonical
+    * name, for all computation; `try_cast` nulls a malformed cell) and
+    * verbatim (the RawPrefix twin, for sinks that must echo the input
+    * text). */
+  def typedScan(load: (Map[String, String], StructType) => DataFrame): DataFrame =
+    load(
+      Map("sep" -> "\t", "header" -> "true", "comment" -> "#", "mode" -> "PERMISSIVE"),
+      StructType(ReportSchema.schema.fields.map(f => StructField(f.name, StringType))))
+      .select(ReportSchema.schema.fields.flatMap { f =>
+        Seq(col(f.name).try_cast(f.dataType).as(f.name),
+          col(f.name).as(s"$RawPrefix${f.name}"))
+      }.toSeq: _*)
+
   /** S1: TSV with 2 `#` comment lines + header row (`bigbugdata.py:250–254`).
     * The `comment` option also covers S2 files with no comment lines.
     * A user-supplied schema maps positionally, so the `%` header cell needs
@@ -42,37 +64,13 @@ object ReportReader {
     * and the row id, so A2's first-seen taxName and F1's last-wins
     * duplicate stats stay deterministic at any maxPartitionBytes.
     */
-  /** prefix of the verbatim-text twin each report column keeps alongside
-    * its typed value (K4 sink fidelity: the reference echoes raw
-    * DictReader strings — `modify_reports.py:95–140` — so `0.10` must
-    * round-trip as `0.10`, not `0.1`) */
-  val RawPrefix = "_raw_"
-
   def readReports(spark: SparkSession, paths: Seq[String]): DataFrame = {
     val argIdx = paths.map(sampleIdOf).distinct.zipWithIndex
     val idxExpr = coalesce(
       element_at(map(argIdx.flatMap { case (s, i) => Seq(lit(s), lit(i)) }: _*),
         col(ReportSchema.Sample)),
       lit(Int.MaxValue))
-    // Scan as strings, then cast: each column exists both typed (canonical
-    // name, for all computation) and verbatim (RawPrefix twin, for sinks
-    // that must echo the input text). try_cast nulls malformed cells, the
-    // same behavior the PERMISSIVE typed scan had.
-    val rawSchema = org.apache.spark.sql.types.StructType(
-      ReportSchema.schema.fields.map(f =>
-        org.apache.spark.sql.types.StructField(f.name,
-          org.apache.spark.sql.types.StringType)))
-    spark.read
-      .option("sep", "\t")
-      .option("header", "true")
-      .option("comment", "#")
-      .option("mode", "PERMISSIVE")
-      .schema(rawSchema)
-      .csv(paths: _*)
-      .select(ReportSchema.schema.fields.flatMap { f =>
-        Seq(col(f.name).try_cast(f.dataType).as(f.name),
-          col(f.name).as(s"$RawPrefix${f.name}"))
-      }.toSeq: _*)
+    typedScan((options, schema) => spark.read.options(options).schema(schema).csv(paths: _*))
       .withColumn(ReportSchema.Sample, sampleIdLastUnderscore(input_file_name()))
       .withColumn(RowId, monotonically_increasing_id())
       .withColumn(BlockStart, input_file_block_start())

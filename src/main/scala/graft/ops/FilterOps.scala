@@ -2,7 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.io.CsvSink
+import graft.io.{CsvSink, ReportReader}
+import graft.schema.ReportSchema
 
 /** Semi-join filters (reference J4/P6 — both `scripts/filter_*_by_taxid.py`).
   *
@@ -44,26 +45,21 @@ object FilterOps {
     * with `sampleName` = FIRST underscore token of the file name (F6 —
     * deliberately different from the main tool's rule) prepended.
     *
-    * Columns stay STRINGS end-to-end: the reference is a DictReader →
-    * DictWriter passthrough (`filter_reports_by_taxid.py:31–41`) that
-    * never parses a value, so `0.10` must reach the output as `0.10`.
-    * Typing here would reformat on emit; callers that need typed values
-    * cast at their use site, exactly like the reference does.
+    * Columns stay STRINGS end-to-end — the verbatim twins of the shared
+    * report scan ([[ReportReader.typedScan]]): the reference is a
+    * DictReader → DictWriter passthrough (`filter_reports_by_taxid.py:
+    * 31–41`) that never parses a value, so `0.10` must reach the output
+    * as `0.10`. Typing here would reformat on emit; callers that need
+    * typed values cast at their use site, exactly like the reference does.
     */
   def filterReportsByTaxids(spark: SparkSession, reportsGlob: String,
       taxids: DataFrame): DataFrame = {
-    val rawSchema = org.apache.spark.sql.types.StructType(
-      graft.schema.ReportSchema.schema.fieldNames.map(n =>
-        org.apache.spark.sql.types.StructField(n,
-          org.apache.spark.sql.types.StringType)))
-    val reports = spark.read
-      .option("sep", "\t").option("header", "true").option("comment", "#")
-      .schema(rawSchema)
-      .csv(reportsGlob)
-      .withColumn("sampleName",
-        graft.io.ReportReader.sampleIdFirstToken(input_file_name()))
+    val reports = ReportReader.typedScan((options, schema) =>
+        spark.read.options(options).schema(schema).csv(reportsGlob))
+      .select(ReportSchema.schema.fieldNames.map(n =>
+        col(ReportReader.RawPrefix + n).as(n)).toSeq: _*)
+      .withColumn("sampleName", ReportReader.sampleIdFirstToken(input_file_name()))
     filterByTaxids(reports, taxids)
-      .select(col("sampleName") +: graft.schema.ReportSchema.schema.fieldNames
-        .map(col).toSeq: _*)
+      .select(col("sampleName") +: ReportSchema.schema.fieldNames.map(col).toSeq: _*)
   }
 }

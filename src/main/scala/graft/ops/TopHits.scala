@@ -19,8 +19,9 @@ object TopHits {
     * cell consumes its ordinal — rank gaps are part of the contract
     * (`:183–188` + TODO comment).
     *
-    * @param grid the dense grid with `rrpm`, `z_score` and the per-cell
-    *   `stats` struct (kmers, dup, reads, cov, e_val) */
+    * @param grid one row per dense-grid cell (organism × sample) with
+    *   `rrpm`, `z_score` and the `stats` struct (kmers, dup, reads, cov,
+    *   e_val) */
   def tophits(grid: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col(Sample))
       .orderBy(col("rrpm").desc, col(TaxId).asc)

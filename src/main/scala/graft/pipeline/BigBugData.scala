@@ -11,23 +11,23 @@ import graft.schema.ReportSchema._
   * Reference stage → engine stage:
   *   fused scan (totals + stats + counts)  → one cached report scan,
   *                                           three derived frames
-  *   wide dicts, eager between steps       → long-format DataFrames,
-  *                                           single lazy plan; ONE pivot,
-  *                                           for both wide CSVs, at the
-  *                                           sink
+  *   `combined_taxa_data`, one dict per    → ONE cached row per organism,
+  *   organism, eager between steps           one array slot per sample
+  *                                           (reads, stats, rpm, z-score,
+  *                                           control rpm, rRPM)
   *   driver-side regex groups              → NcGroups (sample universe is
   *                                           the file list — never data)
   *
   * Shuffle boundaries land exactly where the math demands: groupBy
-  * (sample) for the collected totals, groupBy (taxID) for the organism
-  * metadata, groupBy (taxID, sample) for reads and stats and its left
-  * join onto the organism × sample grid, one window over taxID (z-score
-  * and control rpm), one window over sample (tophits), and groupBy
-  * (taxID, taxName, total) for the one pivot that renders both wide
-  * CSVs. One cached grid feeds all three outputs; one action renders
-  * their lines, sorts them within each partition and spills them to run
-  * files, which the driver merges into the CSVs (no global sort, no
-  * range-sampling job; see [[CsvSink]]).
+  * (sample) for the collected totals, groupBy (taxID, sample) for each
+  * cell's reads, stats and first row, groupBy (taxID) for the organism
+  * row, and one window over sample (tophits). The organism row needs no
+  * join and no window: rpm, z-score and rRPM are array expressions over
+  * its slots, and the wide CSVs render straight from its arrays. The
+  * long outputs are `posexplode` projections of it. One action renders
+  * the three CSVs' lines, sorts them within each partition and spills
+  * them to run files, which the driver merges into the CSVs (no global
+  * sort, no range-sampling job; see [[CsvSink]]).
   */
 object BigBugData {
 
@@ -42,7 +42,9 @@ object BigBugData {
       combined: DataFrame,   // long: taxID, sample, taxName, total, reads
       rrpm: DataFrame,       // long: + total_reads, rpm, z_score, nc_*, rrpm
       tophits: DataFrame,    // sampleName, taxID, taxName, rank, rRPM, stats…
-      orderedSamples: Seq[String])
+      orderedSamples: Seq[String],
+      grid: DataFrame,       // one row per organism, a slot per sample
+      samples: Seq[String])  // the grid's slots: samples in argument order
 
   /** Build the full dataflow; actions happen only in [[write]]. */
   def build(spark: SparkSession, params: Params): Outputs = {
@@ -66,55 +68,54 @@ object BigBugData {
       throw new IllegalStateException(
         "No taxID 0/1 rows (cannot compute total reads) for sample(s): " +
           missingTotals.mkString(", "))
-    val totals = spark.createDataFrame(
-      java.util.Arrays.asList(totalRows: _*), totalsAgg.schema)
 
     val taxa = TaxaOps.taxaRows(reports, params.rank)
-    val dense = TaxaOps.denseGrid(spark, TaxaOps.cellCounts(taxa),
-      TaxaOps.taxaMeta(taxa), sampleIds)
-
     val groups = NcGroups.resolve(sampleIds, params.groupPatterns)
     val sampleToNc = NcGroups.sampleToControl(sampleIds, groups)
+    // array slot i is the i-th sample in argument order
+    val slot = sampleIds.zipWithIndex.toMap
+    val totalOf = totalRows.map(r => r.getString(0) -> r.get(1)).toMap
     // the one cached grid: all three outputs read it
-    val grid = Normalize.zscoreRrpm(spark, Normalize.rpm(dense, totals),
-      sampleToNc).cache()
+    val grid = Normalize.normalize(
+      TaxaOps.organisms(TaxaOps.cellCounts(taxa), sampleIds.size),
+      sampleIds.map(totalOf), sampleIds.map(s => sampleToNc.get(s).map(slot))).cache()
+
+    // one long row per (organism, sample) cell
+    def slotOf(values: Seq[Any]) =
+      element_at(array(values.map(lit): _*), col("_slot") + 1)
+    val cells = grid
+      .select(col(TaxId), col(TaxName), col("total_reads_organism"),
+        posexplode(arrays_zip(col(Reads), col("stats"), col("rpm"),
+          col("z_score"), col("nc_rpm"), col("rrpm"))).as(Seq("_slot", "_c")))
+      .select(col("*"), col("_c.*"), slotOf(sampleIds).as(Sample),
+        slotOf(sampleIds.map(totalOf)).cast("long").as("total_reads"),
+        slotOf(sampleIds.map(sampleToNc.get(_).orNull)).cast("string").as("nc_sample"))
 
     Outputs(
-      grid.select(TaxId, Sample, TaxName, "total_reads_organism", Reads),
-      grid.select(Sample, TaxId, TaxName, "total_reads_organism", Reads,
+      cells.select(TaxId, Sample, TaxName, "total_reads_organism", Reads),
+      cells.select(Sample, TaxId, TaxName, "total_reads_organism", Reads,
         "total_reads", "rpm", "z_score", "nc_sample", "nc_rpm", "rrpm"),
-      TopHits.tophits(grid, params.nTophits),
-      ordered)
+      TopHits.tophits(cells, params.nTophits),
+      ordered,
+      grid,
+      sampleIds)
   }
 
-  /** The wide outputs' CSV lines (O1/O2): one pivot of `long` for every
-    * output in `valueCols`, each row rendering one line per value column,
-    * [taxID, taxName, Total # of Reads] ++ that value per ordered sample.
-    * Explicit pivot values skip Spark's distinct-collect job and pin
-    * column order. Columns are (out, k1, k2, line) as
-    * [[CsvSink.writeTagged]] reads them: out = index in `valueCols`,
-    * k1 = taxID (the row order), k2 = 0. */
-  def wideLines(long: DataFrame, valueCols: Seq[String],
-      orderedSamples: Seq[String]): DataFrame = {
-    val pivoted = long.groupBy(col(TaxId), col(TaxName),
-        col("total_reads_organism"))
-      .pivot(Sample, orderedSamples)
-      .agg(first(col(valueCols.head)), valueCols.tail.map(c => first(col(c))): _*)
-    // the pivot columns come sample-major: s1_v0, s1_v1, s2_v0, …
-    val wide = CsvSink.byPosition(pivoted)
-    val c = wide.columns.toSeq.map(col)
-    val nv = valueCols.size
-    wide.select(inline(array(valueCols.indices.map { v =>
-      struct(lit(v).as("out"), c.head.as("k1"), lit(0L).as("k2"),
-        CsvSink.line(c.take(3) ++ orderedSamples.indices.map(s => c(3 + s * nv + v)))
-          .as("line"))
+  /** The wide outputs' CSV lines (O1/O2): for each array in `arrays`, one
+    * line per organism row, [taxID, taxName, Total # of Reads] ++ the
+    * array's cells at `slots` (0-based), in that order. Columns are
+    * (out, k1, k2, line) as [[CsvSink.writeTagged]] reads them: out =
+    * index in `arrays`, k1 = taxID (the row order), k2 = 0. */
+  def wideLines(grid: DataFrame, arrays: Seq[String], slots: Seq[Int]): DataFrame =
+    grid.select(inline(array(arrays.zipWithIndex.map { case (a, v) =>
+      struct(lit(v).as("out"), col(TaxId).as("k1"), lit(0L).as("k2"),
+        CsvSink.line(Seq(col(TaxId), col(TaxName), col("total_reads_organism")) ++
+          slots.map(i => element_at(col(a), i + 1))).as("line"))
     }: _*)))
-  }
 
   /** Execute and write the three CSVs (K1/K2) with one action after the
-    * totals collect: combined and rrpm lines come from ONE pivot of the
-    * grid (see [[wideLines]]), whose hash aggregation collapses the S
-    * cells of an organism into one row; tophits lines are tagged with
+    * totals collect: combined and rrpm lines render from the organism
+    * rows' arrays (see [[wideLines]]); tophits lines are tagged with
     * (ordered-sample index, rank). The driver merges them in that order
     * into the files. */
   def write(spark: SparkSession, params: Params): Outputs = {
@@ -136,7 +137,7 @@ object BigBugData {
       CsvSink.line(tophitsHeader.map(col)).as("line"))
 
     CsvSink.writeTagged(
-      wideLines(out.rrpm, Seq(Reads, "rrpm"), out.orderedSamples)
+      wideLines(out.grid, Seq(Reads, "rrpm"), out.orderedSamples.map(out.samples.indexOf))
         .union(tophitsLines),
       Seq(combinedPath -> header, rrpmPath -> header,
         tophitsPath -> tophitsHeader))

@@ -283,11 +283,11 @@ class PipelineSpec extends SparkSuite {
 
   test("plan shape: the pruned report cache feeds ONE cached grid that " +
       "all three outputs read, and rrpm needs no self-join of the rpm grid") {
-    import org.apache.spark.sql.catalyst.expressions.Alias
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
     import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
     // every physical node, including those inside adaptive plans and
     // behind cached relations
     def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
@@ -313,15 +313,11 @@ class PipelineSpec extends SparkSuite {
         n == "pct" || n == "taxReads"), names)
     }
 
-    def fromRpmGrid(side: SparkPlan): Boolean = nodes(side).exists(
-      _.expressions.exists(_.exists {
-        case a: Alias => a.name == "rpm"
-        case _ => false
-      }))
-    rrpmNodes.collect { case j: BaseJoinExec => j }.foreach { j =>
-      assert(!(fromRpmGrid(j.left) && fromRpmGrid(j.right)),
-        s"rrpm plan self-joins the rpm grid:\n$j")
-    }
+    // the organism row carries every sample's cell: the grid joins
+    // nothing and runs no window
+    assert(rrpmNodes.collect { case j: BaseJoinExec => j }.isEmpty,
+      rrpmNodes.collect { case j: BaseJoinExec => j.nodeName })
+    assert(!rrpmNodes.exists(_.isInstanceOf[WindowExec]))
   }
 
   test("single-sample batch: zero stddev yields NaN z-score like scipy (trap 4)") {
@@ -501,15 +497,15 @@ class PipelineSpec extends SparkSuite {
 
   test("wide sink: sample names with dots and backticks are taken by position") {
     val s2 = spark; import s2.implicits._
-    import graft.schema.ReportSchema.{Sample, TaxId, TaxName}
+    import graft.schema.ReportSchema.{TaxId, TaxName}
     val samples = Seq("a.b", "c`d", "e")
-    val long = Seq((2L, "n2", 5L, "a.b", 1L, 0.5), (2L, "n2", 5L, "c`d", 2L, 1.5),
-      (2L, "n2", 5L, "e", 3L, 2.5), (1L, "n1", 4L, "a.b", 4L, 3.5),
-      (1L, "n1", 4L, "c`d", 5L, 4.5), (1L, "n1", 4L, "e", 6L, 5.5))
-      .toDF(TaxId, TaxName, "total_reads_organism", Sample, "r", "q")
+    // organism rows: one array slot per sample, in `samples` order
+    val grid = Seq((2L, "n2", 5L, Seq(1L, 2L, 3L), Seq(0.5, 1.5, 2.5)),
+      (1L, "n1", 4L, Seq(4L, 5L, 6L), Seq(3.5, 4.5, 5.5)))
+      .toDF(TaxId, TaxName, "total_reads_organism", "r", "q")
     val header = Seq(TaxId, TaxName, "Total # of Reads") ++ samples
     val dir = Files.createTempDirectory("graft_dots")
-    graft.io.CsvSink.writeTagged(BigBugData.wideLines(long, Seq("r", "q"), samples),
+    graft.io.CsvSink.writeTagged(BigBugData.wideLines(grid, Seq("r", "q"), samples.indices),
       Seq(s"$dir/r.csv" -> header, s"$dir/q.csv" -> header))
     def read(f: String) = new String(Files.readAllBytes(dir.resolve(f)), "UTF-8")
     assert(read("r.csv") ==
@@ -518,36 +514,24 @@ class PipelineSpec extends SparkSuite {
       "taxID,taxName,Total # of Reads,a.b,c`d,e\n1,n1,4,3.5,4.5,5.5\n2,n2,5,0.5,1.5,2.5\n")
   }
 
-  test("pivot sink golden bytes: CSV dialect on hard cells") {
+  test("wide sink golden bytes: CSV dialect on hard cells") {
     val s2 = spark; import s2.implicits._
-    import graft.schema.ReportSchema.{Sample, TaxId, TaxName}
+    import graft.schema.ReportSchema.{TaxId, TaxName}
     val samples = Seq("s1", "s2", "s3")
     // taxNames exercising the full CSV dialect: delimiter, quote,
     // backslash-with-quote, empty string, padded whitespace; doubles
     // exercising scientific notation and many digits
-    val long = Seq(
-      (1L, "plain name", 7L, "s1", 0.5),
-      (1L, "plain name", 7L, "s2", 1.0E7),
-      (1L, "plain name", 7L, "s3", 0.1 + 0.2),
-      (2L, "has,comma", 9L, "s1", 1.0),
-      (2L, "has,comma", 9L, "s2", -3.25),
-      (2L, "has,comma", 9L, "s3", 123456789.123456),
-      (3L, "q\"uote \\ba,ck", 0L, "s1", 0.0),
-      (3L, "q\"uote \\ba,ck", 0L, "s2", 2.0),
-      (3L, "q\"uote \\ba,ck", 0L, "s3", 4.5),
-      (4L, "", 3L, "s1", 1.5),
-      (4L, "", 3L, "s2", 2.5),
-      (4L, "", 3L, "s3", 3.5),
-      (5L, "  padded  ", 2L, "s1", 9.0),
-      (5L, "  padded  ", 2L, "s2", 8.0),
-      (5L, "  padded  ", 2L, "s3", 7.0),
-      (6L, null, 1L, "s1", Double.NaN),
-      (6L, null, 1L, "s2", Double.PositiveInfinity),
-      (6L, null, 1L, "s3", -0.0))
-      .toDF(TaxId, TaxName, "total_reads_organism", Sample, "v")
+    val grid = Seq(
+      (1L, "plain name", 7L, Seq(0.5, 1.0E7, 0.1 + 0.2)),
+      (2L, "has,comma", 9L, Seq(1.0, -3.25, 123456789.123456)),
+      (3L, "q\"uote \\ba,ck", 0L, Seq(0.0, 2.0, 4.5)),
+      (4L, "", 3L, Seq(1.5, 2.5, 3.5)),
+      (5L, "  padded  ", 2L, Seq(9.0, 8.0, 7.0)),
+      (6L, null, 1L, Seq(Double.NaN, Double.PositiveInfinity, -0.0)))
+      .toDF(TaxId, TaxName, "total_reads_organism", "v")
     val header = Seq(TaxId, TaxName, "Total # of Reads") ++ samples
     val path = Files.createTempDirectory("graft_golden").resolve("p.csv")
-    graft.io.CsvSink.writeTagged(BigBugData.wideLines(long, Seq("v"), samples),
+    graft.io.CsvSink.writeTagged(BigBugData.wideLines(grid, Seq("v"), samples.indices),
       Seq(path.toString -> header))
     // quote only on delimiter/quote (escape `\`), `""` for the empty
     // string, nothing for null, padding kept, doubles in Java's toString
@@ -562,6 +546,6 @@ class PipelineSpec extends SparkSuite {
       "5,  padded  ,2,9.0,8.0,7.0",
       "6,,1,NaN,Infinity,-0.0").mkString("", "\n", "\n")
     val got = new String(Files.readAllBytes(path), "UTF-8")
-    assert(got == expected, s"pivot sink bytes changed:\n$got")
+    assert(got == expected, s"wide sink bytes changed:\n$got")
   }
 }
