@@ -2,15 +2,15 @@ package graft.catalog
 
 import graft.Ckpt.StableCheckpoint
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 /** Hash-based approximate operators. Since round 6 every entry carries a
   * FULL DuckDB oracle: the catalog runs md5-derived signature families
   * (one digest per token/shingle, Kirsch–Mitzenmacher permutations,
-  * integer bit-votes — all recomputable in SQL), while the compiled
-  * xxhash64 Expressions remain the fast 100-TB path, pinned equivalent
-  * (d7 pair parity) or reference-equal (SimHashSig HOF parity) by spec.
+  * integer bit-votes — all recomputable in SQL); the compiled xxhash64
+  * SimHashSig stays pinned reference-equal to its HOF form by spec.
   *
   * These are the 100-TB scale paths: MinHash+LSH and SimHash replace the
   * O(n²) pairwise scan of d6_ngram_jaccard with band-bucket joins; the
@@ -51,19 +51,13 @@ object Approx {
   /** The d7 pipeline over any (doc_id, text) frame — factored out so
     * EdgeSpec can drive it with an adversarial near-identical corpus.
     *
-    * Two signature families, same LSH plan shape:
-    *  - fast (default): the compiled MinHashSig expression (xxhash64
-    *    core) + xxhash64 band keys — the 100 TB path.
-    *  - md5Sig=true: one md5 per shingle split into 32-bit halves,
-    *    permutation k = (h1 + k·h2) mod 2^32 (Kirsch–Mitzenmacher),
-    *    band key = the band's 4 sig values joined with '|'. Every step
-    *    is reproducible in DuckDB, so the catalog's d7 entry runs this
-    *    mode under a FULL SQL oracle (the d39 md5-nibble discipline);
-    *    EdgeSpec pins that both modes emit the identical verified pair
-    *    set on the test corpus. */
-  private[graft] def minhashLshPairs(docsIn: DataFrame,
-      md5Sig: Boolean = false): DataFrame =
-    minhashLshPairsWithStats(docsIn, md5Sig)._1
+    * One signature family: one md5 per shingle split into 32-bit halves,
+    * permutation k = (h1 + k·h2) mod 2^32 (Kirsch–Mitzenmacher), band
+    * key = the band's 4 sig values joined with '|'. Every step is
+    * reproducible in DuckDB, so the catalog's d7 entry runs the whole
+    * pipeline under a FULL SQL oracle (the d39 md5-nibble discipline). */
+  private[graft] def minhashLshPairs(docsIn: DataFrame): DataFrame =
+    minhashLshPairsWithStats(docsIn)._1
 
   /** minhashLshPairs plus the oversized-bucket guard's dropped-mass
     * accounting AS DATA (one row: dropped_groups, dropped_entries) —
@@ -71,8 +65,8 @@ object Approx {
     * guard join, so plan construction runs no eager job and a 100 TB
     * operator reads the dropped mass from a result, not a log line
     * (the d43 surface). */
-  private[graft] def minhashLshPairsWithStats(docsIn: DataFrame,
-      md5Sig: Boolean = false): (DataFrame, DataFrame) = {
+  private[graft] def minhashLshPairsWithStats(docsIn: DataFrame)
+      : (DataFrame, DataFrame) = {
     // Materialize tokens BEFORE building shingles: the shingle lambda
     // references the token array 3x per element, and CollapseProject
     // would inline the split() into every reference — ~750 regex
@@ -87,20 +81,15 @@ object Approx {
       .cache()
     // (doc, band, band_key) — keys ONLY: the expensive shingle arrays
     // must not ride through the bucket join + pair dedup
-    val sigDf =
-      if (md5Sig)
-        // compiled Md5MinHashKM: one digest + K integer lanes per
-        // shingle in a tight codegen loop — the HOF formulation of the
-        // same arithmetic ran interpreted lambdas per (shingle, lane)
-        // and cost ~3.4 s/pass at sf0.1 vs ~1 s compiled
-        docs.withColumn("sig",
-          graft.functions.Md5Sketch.md5_minhash_km(col("tk"), MinhashK))
-      else docs.withColumn("sig", minhashSig(col("tk")))
-    def bandKey(b: Column): Column = {
-      val bandSlice = slice(col("sig"), b * RowsPerBand + 1, lit(RowsPerBand))
-      if (md5Sig) concat_ws("|", transform(bandSlice, x => x.cast("string")))
-      else xxhash64(bandSlice, b)
-    }
+    // compiled Md5MinHashKM: one digest + K integer lanes per shingle
+    // in a tight codegen loop — the HOF formulation of the same
+    // arithmetic ran interpreted lambdas per (shingle, lane) and cost
+    // ~3.4 s/pass at sf0.1 vs ~1 s compiled
+    val sigDf = docs.withColumn("sig",
+      graft.functions.Md5Sketch.md5_minhash_km(col("tk"), MinhashK))
+    def bandKey(b: Column): Column = concat_ws("|", transform(
+      slice(col("sig"), b * RowsPerBand + 1, lit(RowsPerBand)),
+      x => x.cast("string")))
     val banded = sigDf
       .select("doc_id", "sig").cache() // barrier: sig once, not once per band
       .select(col("doc_id"),
@@ -137,12 +126,6 @@ object Approx {
       .orderBy("id_a", "id_b")
     (verified, stats)
   }
-
-  /** K minhash values via the compiled MinHashSig expression — the
-    * interpreted-HOF formulation (K lambdas over the token array) costs
-    * seconds per 5k docs; see MinHashSig. */
-  private def minhashSig(tokens: Column): Column =
-    graft.functions.MinHashSig.min_hash_sig(array_distinct(tokens), MinhashK)
 
   /** (doc_id, hi, lo) simhash words of a (doc_id, text) frame via the
     * compiled Md5SimHashWords kernel. `barrier = true` caches the raw
@@ -323,67 +306,63 @@ object Approx {
       SELECT q_id, c_id, rk, cos FROM ranked WHERE rk <= 3 ORDER BY q_id, rk"""
   }
 
-  /** e11/e12 each need the trained codebook; train once per
-    * (session, dir) — the checkpointed RDDs stay valid for the session
-    * lifetime, and the WeakHashMap lets a closed session's entries be
-    * collected (the E2E memoization discipline). Training is
-    * bit-deterministic, so memoization is invisible to results. */
-  private val trained = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, (DataFrame, DataFrame, DataFrame)]]())
-
-  private def lloydTrain(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val perDir = trained.synchronized {
-      var m = trained.get(s)
-      if (m == null) { m = scala.collection.mutable.Map.empty; trained.put(s, m) }
-      m
-    }
-    perDir.synchronized {
-      perDir.getOrElseUpdate(dir, {
-        val (corpus, cent, assign) = lloydTrainUncached(s, dir)
-        (PinnedCheckpoints.register(corpus),
-          PinnedCheckpoints.register(cent),
-          PinnedCheckpoints.register(assign))
-      })
-    }
-  }
-
-  /** integer fixed-point Lloyd k-means (K=8, 3 iterations; see e11's
-    * scaladoc for the determinism argument). Returns (quantized
-    * long-format corpus, final codebook c3, final training assignment
-    * a3). */
-  private def lloydTrainUncached(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame) = {
-    import Tables.t
-    val KCells = 8
-    val iters = 3
-    val qflat = t(s, dir, "embeddings")
+  /** Integer fixed-point Lloyd k-means over the embeddings cut into
+    * subspaces of `sub` dims: e11/e12 train one subspace of all 64 dims
+    * (m = 0, j = dim), e17 M = 8 subspaces of 8 (product quantization).
+    * Every coordinate quantizes to floor(x * 1e6) once; distances,
+    * argmin and centroid updates are then pure BIGINT math with a
+    * struct-min tie-break, so training is bit-deterministic (see e11's
+    * scaladoc). The subspace id m is just another key on the flattened
+    * (vec_id, m, j, q) frame, so ALL subspaces train in one grouped
+    * recurrence: per iteration one broadcast centroid join (M*K*sub
+    * rows) + two bounded aggregates. Codeword k of every subspace starts
+    * as vector k's subvector. Returns (the quantized corpus q0, the
+    * final codebook (m, cell, j, c), the last iteration's assignment
+    * (vec_id, m, cell)). */
+  private[graft] def lloyd(s: SparkSession, dir: String, sub: Int, K: Int,
+      iters: Int): (DataFrame, DataFrame, DataFrame) = {
+    val q0 = t(s, dir, "embeddings")
       .select(col("vec_id"), posexplode(col("embedding")))
-      .select(col("vec_id"), (col("pos") + 1).as("dim"),
+      .select(col("vec_id"),
+        expr(s"CAST(pos div $sub AS BIGINT)").as("m"),
+        expr(s"CAST(pos % $sub + 1 AS BIGINT)").as("j"),
         floor(col("col").cast("double") * 1000000L).as("q"))
-      .stableCheckpoint() // read twice per iteration x 3 iterations
-    var cent = qflat.filter(col("vec_id") < KCells)
-      .select(col("vec_id").as("cell"), col("dim"), col("q").as("c"))
+      .stableCheckpoint() // read twice per iteration + at serving
+    var cent = q0.filter(col("vec_id") < K)
+      .select(col("m"), col("vec_id").as("cell"), col("j"), col("q").as("c"))
       .stableCheckpoint()
-    var assign: DataFrame = null
+    var codes: DataFrame = null
     for (_ <- 1 to iters) {
-      val dists = qflat.join(broadcast(cent), "dim")
-        .groupBy(col("vec_id"), col("cell"))
+      val dists = q0.join(broadcast(cent), Seq("m", "j"))
+        .groupBy(col("vec_id"), col("m"), col("cell"))
         .agg(sum((col("q") - col("c")) * (col("q") - col("c"))).as("dist"))
-      assign = dists.groupBy("vec_id")
+      codes = dists.groupBy(col("vec_id"), col("m"))
         .agg(min(struct(col("dist"), col("cell"))).as("best"))
-        .select(col("vec_id"), col("best").getField("cell").as("cell"))
-      val upd = assign.join(qflat, "vec_id")
-        .groupBy(col("cell"), col("dim"))
+        .select(col("vec_id"), col("m"), col("best").getField("cell").as("cell"))
+      val upd = codes.join(q0, Seq("vec_id", "m"))
+        .groupBy(col("m"), col("cell"), col("j"))
         .agg(expr("sum(q) div count(1)").as("cn"))
-      cent = cent.join(upd, Seq("cell", "dim"), "left")
-        .select(col("cell"), col("dim"),
+      cent = cent.join(upd, Seq("m", "cell", "j"), "left")
+        .select(col("m"), col("cell"), col("j"),
           coalesce(col("cn"), col("c")).as("c"))
         .stableCheckpoint()
     }
-    (qflat, cent, assign)
+    (q0, cent, codes)
   }
+
+  /** [[lloyd]] at K = 8 once per (session, dir, layout) — e11 and e12
+    * share the 3-iteration codebook. Besides lloyd's three frames it
+    * holds the assignment checkpointed: e17's serving joins its codes on
+    * every call, while e11 reads the lazy plan (PlanSpec pins its
+    * broadcast shape). Training is bit-deterministic, so the memo is
+    * invisible to results. */
+  private def lloydTrain(s: SparkSession, dir: String, sub: Int, iters: Int)
+      : (DataFrame, DataFrame, DataFrame, DataFrame) =
+    Staging.memo(s, s"lloyd:$dir:$sub:$iters")(
+      (_: (DataFrame, DataFrame, DataFrame, DataFrame)) => true) {
+      val (q0, cent, codes) = lloyd(s, dir, sub, K = 8, iters)
+      (q0, cent, codes, codes.stableCheckpoint())
+    }
 
   /** the e11 training recurrence as oracle CTEs (q0, c0, d1..a3..c3) —
     * e11 selects from a3; e12 chains its serving CTEs on c3. */
@@ -409,71 +388,6 @@ object Approx {
           FROM embeddings, range(1, 65) t(i)),
         c0 AS (SELECT vec_id AS cell, dim, q AS c FROM q0 WHERE vec_id < 8),
         $steps"""
-  }
-
-  /** e17's trained-PQ codebooks, memoized per (session, dir) like
-    * lloydTrain (training is bit-deterministic, so memoization is
-    * invisible to results). Per-subspace integer fixed-point Lloyd:
-    * M = 8 subspaces of Sub = 8 dims, K = 8 codewords, 2 iterations;
-    * the subspace id m rides as a key, so ALL subspaces train in one
-    * grouped recurrence. Returns (q0 flattened corpus with (m, j)
-    * subspace coordinates, final codebook (m, cell, j, c), final codes
-    * (vec_id, m, cell)). */
-  private val pqTrained = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, (DataFrame, DataFrame, DataFrame)]]())
-
-  private def pqLloydTrain(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val perDir = pqTrained.synchronized {
-      var m = pqTrained.get(s)
-      if (m == null) { m = scala.collection.mutable.Map.empty; pqTrained.put(s, m) }
-      m
-    }
-    perDir.synchronized {
-      perDir.getOrElseUpdate(dir, {
-        val (q0, cent, codes) = pqLloydTrainUncached(s, dir)
-        (PinnedCheckpoints.register(q0),
-          PinnedCheckpoints.register(cent),
-          PinnedCheckpoints.register(codes))
-      })
-    }
-  }
-
-  private def pqLloydTrainUncached(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame) = {
-    import Tables.t
-    val K = 8
-    val iters = 2
-    val q0 = t(s, dir, "embeddings")
-      .select(col("vec_id"), posexplode(col("embedding")))
-      .select(col("vec_id"),
-        expr("CAST(pos div 8 AS BIGINT)").as("m"),
-        expr("CAST(pos % 8 + 1 AS BIGINT)").as("j"),
-        floor(col("col").cast("double") * 1000000L).as("q"))
-      .stableCheckpoint() // read twice per iteration + at serving
-    // init: codeword k of every subspace = vector k's subvector (the c0
-    // seeding rule e11 uses, applied per subspace)
-    var cent = q0.filter(col("vec_id") < K)
-      .select(col("m"), col("vec_id").as("cell"), col("j"), col("q").as("c"))
-      .stableCheckpoint()
-    var codes: DataFrame = null
-    for (_ <- 1 to iters) {
-      val dists = q0.join(broadcast(cent), Seq("m", "j"))
-        .groupBy(col("vec_id"), col("m"), col("cell"))
-        .agg(sum((col("q") - col("c")) * (col("q") - col("c"))).as("dist"))
-      codes = dists.groupBy(col("vec_id"), col("m"))
-        .agg(min(struct(col("dist"), col("cell"))).as("best"))
-        .select(col("vec_id"), col("m"), col("best").getField("cell").as("cell"))
-      val upd = codes.join(q0, Seq("vec_id", "m"))
-        .groupBy(col("m"), col("cell"), col("j"))
-        .agg(expr("sum(q) div count(1)").as("cn"))
-      cent = cent.join(upd, Seq("m", "cell", "j"), "left")
-        .select(col("m"), col("cell"), col("j"),
-          coalesce(col("cn"), col("c")).as("c"))
-        .stableCheckpoint()
-    }
-    (q0, cent, codes.stableCheckpoint())
   }
 
   /** e17's oracle: the per-subspace training recurrence unrolled (the
@@ -1665,49 +1579,34 @@ object Approx {
     * broadcast, so candidate volume per query is O(tables·(P+1)·64)
     * regardless of n — never a corpus scan. The count() is a
     * metadata-scale action (parquet row counts). */
-  // one-slot memo of the projection cache, KEYED on the canonicalized
-  // input plan: a repeated call with the SAME input (tests, BenchOne
-  // reruns, recall gates) reuses the cached corpus+projections frame —
-  // the returned frame is lazy, so an evict-on-every-call memo could
-  // unpersist a frame still backing an in-flight or about-to-be-timed
-  // job from the previous call, silently recomputing that work inside
-  // a warm measurement. A DIFFERENT input still evicts the old slot,
-  // so at most one cached copy is ever held.
-  private var lshPrevCache: Option[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      Int, DataFrame)] = None
-
   private[graft] def lshScaledTop3(embRaw: DataFrame): DataFrame = {
     val NTables = 8
     val dims = 64
+    // a one-slot session memo of the projection cache, KEYED on the
+    // canonicalized input plan: a repeated call with the SAME input
+    // (tests, BenchOne reruns, recall gates) reuses the cached
+    // corpus+projections frame — the returned frame is lazy, so an
+    // evict-on-every-call memo could unpersist a frame still backing an
+    // in-flight or about-to-be-timed job from the previous call,
+    // silently recomputing that work inside a warm measurement. A
+    // DIFFERENT input releases the old frame, so at most one cached
+    // copy per session is ever held. Reuse also requires the frame to
+    // still be cached: bench hygiene clearCache()s between queries, and
+    // an uncached frame would lose the CollapseProject barrier below
+    // (the kernel would inline into every element_at reference).
     val key = embRaw.queryExecution.analyzed.canonicalized
-    val (p, withS) = synchronized {
-      // reuse requires the cache entry to still be LIVE: bench hygiene
-      // clearCache()s between queries, and an uncached memo frame would
-      // lose the CollapseProject barrier below (the kernel would inline
-      // into every element_at reference) — rebuild and re-cache instead
-      def live(df: DataFrame): Boolean =
-        df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-      lshPrevCache match {
-        case Some((k, pMemo, cached)) if k == key && live(cached) =>
-          (pMemo, cached)
-        case prev =>
-          prev.foreach(_._3.unpersist(blocking = false))
-          val pNew = scaledPlanes(embRaw.count())
-          val emb = embRaw
-            .withColumn("dv",
-              transform(col("embedding"), x => x.cast("double")))
-            .select("vec_id", "dv")
-          // cache barrier AFTER the kernel column: the 8·P per-table
-          // bucket folds below each read _s — without the barrier
-          // CollapseProject would inline the kernel into every
-          // element_at reference
-          val fresh = emb.withColumn("_s", graft.functions.IvfKernels
-              .ivf_sims(col("dv"), lshFlatPlanes(NTables * pNew, dims), dims))
-            .cache()
-          lshPrevCache = Some((key, pNew, fresh))
-          (pNew, fresh)
-      }
+    val (_, p, withS) = Staging.memo(embRaw.sparkSession, "lsh")(
+      (e: (LogicalPlan, Int, DataFrame)) => e._1 == key &&
+        e._3.storageLevel != org.apache.spark.storage.StorageLevel.NONE) {
+      val pNew = scaledPlanes(embRaw.count())
+      val emb = embRaw
+        .withColumn("dv", transform(col("embedding"), x => x.cast("double")))
+        .select("vec_id", "dv")
+      // cache barrier AFTER the kernel column: the 8·P per-table bucket
+      // folds below each read _s
+      (key, pNew, emb.withColumn("_s", graft.functions.IvfKernels
+          .ivf_sims(col("dv"), lshFlatPlanes(NTables * pNew, dims), dims))
+        .cache())
     }
     val tableBuckets = (0 until NTables).map { tb =>
       val bkt = (0 until p).map { b =>
@@ -2033,20 +1932,16 @@ object Approx {
 
     QueryDef(
       "d7_minhash_lsh",
-      // md5Sig mode: same LSH plan as the fast path (band bucket join,
-      // oversized-bucket guard, exact-Jaccard verify) but with
       // DuckDB-recomputable md5 signatures, so the WHOLE pipeline —
-      // banding, bucketing, candidate generation, verification — sits
-      // under an exact SQL oracle. EdgeSpec pins fast == md5 on the
-      // verified pair output.
+      // banding, bucketing, candidate generation, oversized-bucket
+      // guard, verification — sits under an exact SQL oracle
       (s, dir) => minhashLshPairs(
-        t(s, dir, "documents").select(col("doc_id"), col("text")),
-        md5Sig = true),
+        t(s, dir, "documents").select(col("doc_id"), col("text"))),
       Some(d7OracleSql),
       "MinHash+LSH near-dup: shingle→minhash→band→bucket-join with an " +
         "oversized-bucket guard; candidates verified with exact Jaccard " +
-        "(scale path for d6); md5 signature family carries a full SQL " +
-        "oracle, xxhash64 family is the fast path (EdgeSpec pins parity)"),
+        "(scale path for d6); the md5 signature family carries a full " +
+        "SQL oracle"),
 
     QueryDef(
       "d8_simhash",
@@ -2179,8 +2074,7 @@ object Approx {
         // — the VALUE 0 is the load-bearing assertion here; EdgeSpec
         // pins the nonzero counts on adversarial mega-group corpora.
         val (_, lshStats) = minhashLshPairsWithStats(
-          t(s, dir, "documents").select(col("doc_id"), col("text")),
-          md5Sig = true)
+          t(s, dir, "documents").select(col("doc_id"), col("text")))
         val items = t(s, dir, "lineitem")
           .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
           .distinct()
@@ -3196,8 +3090,8 @@ object Approx {
         // <= 1e-6 per coordinate — at 100 TB you train on a sample and
         // serve approximate cells anyway; determinism is worth far more
         // than the 7th decimal.
-        val (_, _, assign) = lloydTrain(s, dir)
-        assign.orderBy("vec_id")
+        val (_, _, assign, _) = lloydTrain(s, dir, sub = 64, iters = 3)
+        assign.select("vec_id", "cell").orderBy("vec_id")
       },
       Some(s"""WITH $kmeansCtes
         SELECT vec_id, cell FROM a3 ORDER BY vec_id"""),
@@ -3220,8 +3114,8 @@ object Approx {
         // (the IVF bargain); the re-rank join attaches two quantized
         // arrays per candidate pair — e7's ADC would slot in here when
         // even the shortlist vectors are too wide to read.
-        val (qflat, cent, _) = lloydTrain(s, dir)
-        val d4 = qflat.join(broadcast(cent), "dim")
+        val (q0, cent, _, _) = lloydTrain(s, dir, sub = 64, iters = 3)
+        val d4 = q0.join(broadcast(cent), Seq("m", "j"))
           .groupBy(col("vec_id"), col("cell"))
           .agg(sum((col("q") - col("c")) * (col("q") - col("c"))).as("dist"))
           .stableCheckpoint() // feeds BOTH the assignment and the probes
@@ -3299,7 +3193,7 @@ object Approx {
         // so the ENTIRE train→encode→serve pipeline carries one exact
         // SQL oracle (the unrolled recurrence); CatalogSpec pins recall
         // vs exact integer L2 top-3.
-        val (q0, cent, codes) = pqLloydTrain(s, dir)
+        val (q0, cent, _, codes) = lloydTrain(s, dir, sub = 8, iters = 2)
         // trained codewords attached to each corpus code: (c_id, m, j, c)
         val cc = codes.join(broadcast(cent), Seq("m", "cell"))
           .select(col("vec_id").as("c_id"), col("m"), col("j"), col("c"))

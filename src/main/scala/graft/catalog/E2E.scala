@@ -30,7 +30,7 @@ import graft.pipeline.BigBugData
   */
 object E2E {
 
-  val reportsDir = "/root/repo/data/e2e_reports"
+  val reportsDir: String = Staging.checkoutPath("data/e2e_reports")
 
   private[catalog] def reportPaths: Seq[String] = {
     val files = Option(new java.io.File(reportsDir).listFiles())
@@ -54,32 +54,27 @@ object E2E {
     * the checkout's gitignored target/ is safer than /tmp */
   private val sinkDir = s"${Staging.targetDir}/graft_e2e_sink"
 
-  /** one BigBugData.write per SESSION for the three sink queries (the
-    * round-3 review point: three catalog entries each re-ran the full
-    * pipeline and rewrote all three CSVs). The first sink query in a
-    * session writes; the other two verify the SAME written files — which
-    * is also the stronger check, since all three files come from one
-    * pipeline run exactly as the reference produces them. Weak keys keep
-    * retired sessions collectable; a missing file (external cleanup)
-    * forces a rewrite. */
-  private val writtenBy = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-
   /** run the REAL sink path (K1/K2/F9: wide lines, fixed header, single
     * CSV file) and read the produced file back as all-string columns —
     * the oracle recomputes the expected file content independently from
     * the TSVs, so equality proves the written bytes, not just the frame.
     * Shared with Scripts.bb_e2e_filter_rrpm, which re-scans the written
-    * rrpm CSV through the filter tool (S5 on real produced bytes). */
+    * rrpm CSV through the filter tool (S5 on real produced bytes).
+    *
+    * One BigBugData.write per SESSION (a session memo): the first sink
+    * query in a session writes; the others verify the SAME written
+    * files — which is also the stronger check, since all three files
+    * come from one pipeline run exactly as the reference produces them.
+    * Concurrent entrants write once; a missing file (external cleanup)
+    * forces a rewrite. */
   private[catalog] def writeAndRead(s: SparkSession, which: String): DataFrame = {
-    val filesPresent = Seq("combined", "rrpm", "tophits").forall(w =>
-      java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$sinkDir/${w}_species.csv")))
-    if (writtenBy.get(s) == null || !filesPresent) {
+    val outs = Seq("combined", "rrpm", "tophits")
+      .map(w => java.nio.file.Paths.get(s"$sinkDir/${w}_species.csv"))
+    Staging.memo(s, "e2e_sink")((_: Unit) =>
+        outs.forall(java.nio.file.Files.exists(_))) {
       BigBugData.write(s, BigBugData.Params(
         reportPaths, resultsDir = sinkDir, rank = "species", nTophits = 3,
         groupPatterns = Seq(("Negative", "CF_"))))
-      writtenBy.put(s, java.lang.Boolean.TRUE)
     }
     s.read.option("header", "true").csv(s"$sinkDir/${which}_species.csv")
   }

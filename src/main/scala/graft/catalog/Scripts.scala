@@ -33,8 +33,8 @@ import graft.io.ReportReader
   */
 object Scripts {
 
-  private val synthDir = "/root/repo/data/e2e_synth"
-  private val filterDir = "/root/repo/data/e2e_filter"
+  private val synthDir = Staging.checkoutPath("data/e2e_synth")
+  private val filterDir = Staging.checkoutPath("data/e2e_filter")
   private val synthOut = s"${Staging.targetDir}/graft_e2e_synth"
 
   /** deterministic clock for F10: local midnight, Jan 1 2026 — formats as

@@ -183,26 +183,14 @@ object TextDocs {
     * (rarest-first ordering keeps those buckets small by
     * construction), pair-verify on array columns — never a
     * corpus x corpus product. */
-  /** d32 and d36 both need the pair set; compute once per
-    * (session, dir) and hand back a localCheckpoint — checkpointed RDDs
-    * survive `clearCache()` (a memoized .cache() would silently
-    * recompute after it), and the WeakHashMap lets closed sessions'
-    * entries be collected. */
-  private val setsimMemo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, DataFrame]]())
-
-  private def setsimPairs(s: SparkSession, dir: String): DataFrame = {
-    val perDir = setsimMemo.synchronized {
-      var m = setsimMemo.get(s)
-      if (m == null) { m = scala.collection.mutable.Map.empty; setsimMemo.put(s, m) }
-      m
-    }
-    perDir.synchronized {
-      perDir.getOrElseUpdate(dir, PinnedCheckpoints.register(
-        setsimPairsUncached(s, dir).stableCheckpoint()))
-    }
-  }
+  /** d32, d36 and d37 all need the pair set; a session memo computes
+    * it once per (session, dir) and hands back a localCheckpoint —
+    * checkpointed RDDs survive `clearCache()` (a memoized .cache() would
+    * silently recompute after it), and the memo pins them against the
+    * between-query unpersist. */
+  private def setsimPairs(s: SparkSession, dir: String): DataFrame =
+    Staging.memo(s, s"setsim:$dir")((_: DataFrame) => true)(
+      setsimPairsUncached(s, dir).stableCheckpoint())
 
   private def setsimPairsUncached(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -440,16 +428,7 @@ object TextDocs {
         val (d, pairs) = ngramPairs(s, dir)
         val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
         val nodes = d.select(col("doc_id").as("node"))
-        // algorithm flag: min-label + pointer doubling by default (right
-        // for the shallow components dedup produces); `stars` switches to
-        // large-star/small-star for adversarial high-diameter graphs —
-        // identical output either way, so the oracle pins both
-        val cc = s.conf.getOption("spark.graft.cc.algorithm") match {
-          case Some("stars") =>
-            graft.operators.ConnectedComponents.largeSmallStar(nodes, edges)
-          case _ =>
-            graft.operators.ConnectedComponents.minLabel(nodes, edges)
-        }
+        val cc = graft.operators.ConnectedComponents.largeSmallStar(nodes, edges)
         cc.select(col("node").as("doc_id"), col("cluster").as("cluster_id"),
             (col("cluster") === col("node")).as("is_rep"))
           .orderBy("doc_id")
@@ -1706,7 +1685,7 @@ object TextDocs {
             size(toks(col("text"))).cast("long").as("quality"))
         val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
         val nodes = docs.select(col("doc_id").as("node"))
-        val cc = graft.operators.ConnectedComponents.minLabel(nodes, edges)
+        val cc = graft.operators.ConnectedComponents.largeSmallStar(nodes, edges)
         val labeled = cc.select(col("node").as("doc_id"), col("cluster"))
           .join(docs, "doc_id")
         val reps = labeled.groupBy("cluster")

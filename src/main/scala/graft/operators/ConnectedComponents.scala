@@ -4,107 +4,35 @@ import graft.Ckpt.StableCheckpoint
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Connected components by minimum-label propagation — the step AFTER
-  * pairwise near-dup detection in a dedup pipeline: pairs → clusters →
-  * one representative per cluster.
+/** Connected components — the step AFTER pairwise near-dup detection in
+  * a dedup pipeline: pairs → clusters → one representative per cluster
+  * (d11 over the d6 pair graph, d37 over the setsim pair set).
   *
-  * Each iteration every node takes the minimum label among itself and its
-  * neighbors; convergence is reached in O(component diameter) iterations.
-  * Near-dup components are shallow (dups of a common source), so the
-  * iteration count stays small even at corpus scale. All per-iteration
-  * work is distributed (join + groupBy on the edge list); the driver only
-  * steers the loop and checks the changed-row count. `localCheckpoint`
-  * truncates the lineage each round — without it the plan doubles per
-  * iteration.
-  *
-  * At 100 TB with adversarial (high-diameter) graphs, the alternating
-  * large-star/small-star algorithm (Kiveris et al., "Connected Components
-  * in MapReduce and Beyond") converges in O(log²) rounds with the same
-  * join-shaped building blocks; min-label propagation is the right
-  * default for the shallow components dedup actually produces.
+  * One algorithm, alternating large-star/small-star (Kiveris et al.,
+  * "Connected Components in MapReduce and Beyond"): it converges in
+  * O(log² n) rounds on ANY graph shape, including the deep, id-shuffled
+  * chains a near-dup corpus can contain. Min-label propagation with a
+  * label-of-label step is no substitute: that step halves the distance
+  * to the minimum only where ids increase along the chain, so a
+  * 101-node path with shuffled ids needs ~39 rounds and a 2,003-node one
+  * over a thousand (EdgeSpec pins both shapes). All per-round work is
+  * distributed (join + groupBy on the edge list); the driver only steers
+  * the loop and tests for the fixpoint. `localCheckpoint` truncates the
+  * lineage each round — without it the plan doubles per iteration.
   */
 object ConnectedComponents {
 
-  /** @param nodes single column `node` — every vertex (singletons kept)
-    * @param edges columns `src`, `dst` — undirected (symmetrized here)
-    * @return columns `node`, `cluster` (= min node id reachable)
-    */
-  def minLabel(nodes: DataFrame, edges: DataFrame, maxIter: Int = 30): DataFrame = {
-    // symmetrized edge set, materialized ONCE: every round joins against
-    // it, and an un-materialized pair-mining plan upstream (an all-pairs
-    // jaccard verify, an LSH bucket join) would otherwise re-execute in
-    // full on every iteration — measured as the dominant cost of d11
-    // before this checkpoint
-    val sym = edges.select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .filter(col("src") =!= col("dst"))
-      .stableCheckpoint()
-    // iterate ONLY over edge-endpoint nodes: a node with no edges is its
-    // own cluster and needs no propagation, so the singleton majority of
-    // a corpus (at 100 TB the pair graph is a vanishing fraction of the
-    // nodes) never enters a round's shuffles — it joins back once at the
-    // end. Round 0 is FUSED: labels start as identity, so the first
-    // neighbor-min propagation is a plain groupBy with no label join.
-    var labels = sym.groupBy(col("src").as("node"))
-      .agg(min(col("dst")).as("_nbr"))
-      .select(col("node"), least(col("node"), col("_nbr")).as("cluster"))
-      .stableCheckpoint()
-    var it = 0
-    var done = false
-    while (!done && it < maxIter) {
-      val nbrMin = sym.join(labels, sym("dst") === labels("node"))
-        .groupBy(col("src")).agg(min(col("cluster")).as("_nbr_min"))
-      // materialize: the pointer-doubling join below reads stepped TWICE
-      // (as probe and as map) — without the checkpoint the edge join +
-      // groupBy would run twice per iteration
-      val stepped = labels
-        .join(nbrMin, labels("node") === nbrMin("src"), "left")
-        .select(labels("node"), col("cluster").as("_old"),
-          least(col("cluster"), coalesce(col("_nbr_min"), col("cluster")))
-            .as("cluster"))
-        .stableCheckpoint()
-      // pointer doubling: also take the label OF the current label, so the
-      // distance to the component minimum halves each round — convergence
-      // in O(log diameter) instead of O(diameter), which is what keeps a
-      // long near-dup chain (a deep path component) inside maxIter
-      val asMap = stepped.select(col("node").as("_m_node"),
-        col("cluster").as("_m_cluster"))
-      // checkpoint next too: it becomes the next round's `labels`, which
-      // is referenced twice (edge join + stepped base) — materializing
-      // keeps per-iteration plans constant-depth
-      val next = stepped
-        .join(asMap, stepped("cluster") === col("_m_node"), "left")
-        .select(stepped("node"), col("_old"),
-          least(stepped("cluster"), coalesce(col("_m_cluster"), stepped("cluster")))
-            .as("cluster"))
-        .stableCheckpoint()
-      val changed = next.filter(col("cluster") =!= col("_old")).count()
-      labels = next.drop("_old")
-      done = changed == 0L
-      it += 1
-    }
-    require(done, s"connected components did not converge in $maxIter iterations")
-    // singletons re-enter here, once — never per round
-    nodes.select(col("node")).distinct()
-      .join(labels, Seq("node"), "left")
-      .select(col("node"), coalesce(col("cluster"), col("node")).as("cluster"))
-  }
-
-  /** Alternating large-star/small-star connected components (Kiveris et
-    * al., "Connected Components in MapReduce and Beyond") — the
-    * adversarial-graph fallback the min-label scaladoc above points at.
-    * Converges in O(log² n) rounds on ANY graph shape, including the
-    * deep-chain components that stress propagation approaches; every
-    * round is two groupBy-join passes over the edge list (no state
-    * besides the edges themselves, so memory is edge-bounded).
-    *
-    * large-star: every node u links its LARGER neighbors to
+  /** large-star: every node u links its LARGER neighbors to
     * m = min(Γ(u) ∪ u); small-star (on larger→smaller oriented edges)
     * collapses each node's smaller neighborhood onto its minimum. At the
-    * fixpoint the edges form stars rooted at component minima.
+    * fixpoint the edges form stars rooted at component minima. Every
+    * round is two groupBy-join passes over the edge list (no state
+    * besides the edges themselves, so memory is edge-bounded) and one
+    * aggregate that tests for stars.
     *
-    * Same contract as [[minLabel]]: `nodes(node)`, `edges(src,dst)` →
-    * `(node, cluster = component minimum)`, singletons kept.
+    * @param nodes single column `node` — every vertex (singletons kept)
+    * @param edges columns `src`, `dst` — undirected
+    * @return columns `node`, `cluster` (= min node id reachable)
     */
   def largeSmallStar(nodes: DataFrame, edges: DataFrame,
       maxIter: Int = 25): DataFrame = {
@@ -115,7 +43,7 @@ object ConnectedComponents {
         least(col("src"), col("dst")).as("v"))
       .distinct().stableCheckpoint()
     var it = 0
-    var done = e.isEmpty
+    var done = isStars(e)
     while (!done && it < maxIter) {
       // LARGE-STAR over the symmetric neighborhood: m = min(Γ(a) ∪ a);
       // emit (v, m) for every neighbor v > a
@@ -130,22 +58,30 @@ object ConnectedComponents {
       // SMALL-STAR on the (u > v)-oriented output: collapse each node's
       // smaller neighborhood (and itself) onto its minimum neighbor
       val minsS = large.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val next = large.join(minsS, "u")
+      e = large.join(minsS, "u")
         .filter(col("v") =!= col("m"))
         .select(col("v").as("u"), col("m").as("v"))
         .unionByName(minsS.select(col("u"), col("m").as("v")))
         .distinct().stableCheckpoint()
-      // fixpoint when the edge SET is unchanged (both sides distinct:
-      // equal counts + empty one-way difference ⇔ equality)
-      done = next.count() == e.count() && next.except(e).isEmpty
-      e = next
+      done = isStars(e)
       it += 1
     }
-    require(done, s"large/small-star did not converge in $maxIter iterations")
+    require(done, s"connected components did not converge in $maxIter iterations")
     val lab = e.groupBy(col("u")).agg(min(col("v")).as("cluster"))
       .select(col("u").as("node"), col("cluster"))
     nodes.select(col("node")).distinct()
       .join(lab, Seq("node"), "left")
       .select(col("node"), coalesce(col("cluster"), col("node")).as("cluster"))
   }
+
+  /** The fixpoint test, one job: the (u > v)-oriented edge set is a
+    * union of stars — every u has exactly one v, and no v is itself a u
+    * — so each center is its component's minimum. Stars are a fixpoint
+    * of both steps, so the loop stops without a confirming round. */
+  private def isStars(e: DataFrame): Boolean =
+    e.select(col("u").as("x"), lit(1L).as("out"), lit(0L).as("in"))
+      .unionByName(e.select(col("v").as("x"), lit(0L).as("out"), lit(1L).as("in")))
+      .groupBy(col("x")).agg(sum(col("out")).as("out"), sum(col("in")).as("in"))
+      .filter(col("out") > 1 || (col("out") === 1 && col("in") > 0))
+      .isEmpty
 }

@@ -2,7 +2,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 object BenchOne {
   /** Optional runtime confs from SPARK_GRAFT_CONF, e.g.
-    * `spark.graft.cc.algorithm=stars`: entries are k=v joined by ','; an
+    * `spark.sql.shuffle.partitions=8`: entries are k=v joined by ','; an
     * entry without '=' is a usage error — fail with the offending entry,
     * not a bare MatchError. (Conf VALUES containing ',' are not
     * representable in this flat format; pass such confs via a dedicated

@@ -619,9 +619,12 @@ class CatalogSpec extends SparkSuite {
     assert(r1.map(_._1).distinct.length == r1.length)
     assert(r1.forall { case (_, c) => c >= 0 && c < 8 })
     assert(r1.map(_._2).distinct.length > 1, "training must differentiate")
-    val r2 = SparkEntry.queries("e11_kmeans_train")(spark, sf).collect()
+    // the catalog entry reads a session memo, so re-train outside it
+    def train() = graft.catalog.Approx.lloyd(spark, sf, sub = 64, K = 8,
+        iters = 3)._3.select("vec_id", "cell").orderBy("vec_id").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
-    assert(r1.sameElements(r2),
+    val (r2, r3) = (train(), train())
+    assert(r1.sameElements(r2) && r2.sameElements(r3),
       "re-training must reproduce the identical codebook assignment")
   }
 
@@ -1123,6 +1126,128 @@ class CatalogSpec extends SparkSuite {
     }
     threads.foreach(_.join())
     assert(writes.get == 1, s"${writes.get} writes for one staged slot")
+  }
+
+  test("Staging.memo: concurrent entrants for one key compute once, " +
+      "while another key computes alongside them") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    val s2 = spark.newSession()
+    val builds = new AtomicInteger()
+    // a build of key "a" holds until key "b" has built: if one lock
+    // covered both keys, "b" would wait out the latch's bound
+    val bBuilt = new CountDownLatch(1)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val threads = Seq("a", "a", "a", "b").map { key =>
+      val th = new Thread(() => seen.add(
+        graft.catalog.Staging.memo(s2, key)((_: String) => true) {
+          builds.incrementAndGet()
+          if (key == "a") assert(bBuilt.await(20, TimeUnit.SECONDS))
+          else bBuilt.countDown()
+          key
+        }))
+      th.start(); th
+    }
+    threads.foreach(_.join())
+    assert(builds.get == 2, s"${builds.get} builds for two keys")
+    assert(seen.toArray.toSeq.sortBy(_.toString) == Seq("a", "a", "a", "b"))
+  }
+
+  test("bb_e2e sink: concurrent entrants in one session write the CSVs once") {
+    import org.apache.spark.sql.execution.QueryExecution
+    val s2 = spark.newSession()
+    val funcs = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      private def record(f: String, qe: QueryExecution) =
+        funcs.put(if (qe.logical.toString.contains("graft_marker")) "marker" else f)
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = record(f, qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        record(f, qe)
+    }
+    s2.listenerManager.register(listener)
+    try {
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      val threads = Seq("bb_e2e_sink_combined", "bb_e2e_sink_rrpm").map { n =>
+        val th = new Thread(() =>
+          try { start.await(); SparkEntry.queries(n)(s2, sf).collect() }
+          catch { case e: Throwable => errors.add(e) })
+        th.start(); th
+      }
+      start.countDown()
+      threads.foreach(_.join())
+      assert(errors.isEmpty, errors.toArray.mkString("\n"))
+      // listener events arrive in order: the marker comes after both
+      // entrants' executions
+      s2.sql("SELECT 'graft_marker'").collect()
+      val ran = Iterator.continually(
+          funcs.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile(f => f != null && f != "marker").toList
+      // BigBugData.write writes all three CSVs with one foreachPartition
+      assert(ran.count(_ == "foreachPartition") == 1, ran)
+    } finally s2.listenerManager.unregister(listener)
+  }
+
+  test("session memos rebuild an entry whose marker file was deleted or " +
+      "whose cached frame was unpersisted, and hold one LSH frame") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val marker = java.nio.file.Files.createTempDirectory("graft_stage")
+      .resolve("_SUCCESS")
+    var writes = 0
+    def stage(): Unit =
+      graft.catalog.Staging.once(spark, "rebuild", "dir", marker.toString) {
+        writes += 1
+        java.nio.file.Files.write(marker, Array.emptyByteArray)
+      }
+    stage(); stage()
+    assert(writes == 1)
+    java.nio.file.Files.delete(marker)
+    stage()
+    assert(writes == 2, "a deleted marker must restage")
+
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    def run(in: org.apache.spark.sql.DataFrame) = {
+      val out = graft.catalog.Approx.lshScaledTop3(in)
+      val rows = out.collect().toSeq
+      (rows, out.queryExecution.withCachedData.collect {
+        case r: InMemoryRelation => r.cacheBuilder }.distinct)
+    }
+    val (rowsA, a) = run(emb)
+    val (rowsB, b) = run(emb)
+    assert(a.length == 1 && a == b, "a repeated call reuses the live frame")
+    spark.catalog.clearCache()
+    val (rowsC, c) = run(emb)
+    assert(c.length == 1 && c != a, "an unpersisted frame must be rebuilt")
+    assert(rowsA == rowsB && rowsA == rowsC)
+    assert(c.head.isCachedColumnBuffersLoaded)
+    run(emb.filter(col("vec_id") < 300))
+    assert(!c.head.isCachedColumnBuffersLoaded,
+      "a call on another input releases the session's previous frame")
+  }
+
+  test("lshScaledTop3 called from two sessions on one corpus answers in " +
+      "each caller's own session") {
+    val s2 = spark.newSession()
+    for (s <- Seq(spark, s2, spark, s2)) {
+      val out = graft.catalog.Approx.lshScaledTop3(
+        s.read.parquet(s"$sf/embeddings.parquet"))
+      assert(out.sparkSession eq s)
+      assert(out.count() > 0)
+    }
+  }
+
+  test("memo frames survive Bench's between-query hygiene: e11, e12, e17 " +
+      "and d32 answer again") {
+    val names = Seq("e11_kmeans_train", "e12_ivf_trained", "e17_pq_trained",
+      "d32_setsim_join")
+    def runAll() = names.map(n => SparkEntry.queries(n)(spark, sf).collect().toSeq)
+    val before = runAll()
+    // graft.Bench's hygiene between two queries
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs
+      .filter { case (id, _) => !graft.catalog.PinnedCheckpoints.contains(id) }
+      .values.foreach(_.unpersist(blocking = true))
+    assert(runAll() == before)
   }
 
   test("Staging.tag: hashCode-colliding dirs get distinct roots") {

@@ -131,19 +131,18 @@ class EdgeSpec extends SparkSuite {
     assert(native == windowed, s"native=$native windowed=$windowed")
   }
 
-  test("ConnectedComponents: a 100-deep chain converges within maxIter " +
-      "(pointer doubling gives O(log diameter) rounds)") {
+  test("ConnectedComponents: a 100-deep chain converges within maxIter") {
     val s2 = spark; import s2.implicits._
     val edges = (0L until 99L).map(i => (i, i + 1)).toDF("src", "dst")
     val nodes = (0L to 99L).toDF("node")
-    val got = graft.operators.ConnectedComponents.minLabel(nodes, edges)
+    val got = graft.operators.ConnectedComponents.largeSmallStar(nodes, edges)
       .collect().map(r => r.getAs[Long]("node") -> r.getAs[Long]("cluster"))
     assert(got.length == 100 && got.forall(_._2 == 0L),
       "every chain node must resolve to the minimum label 0")
   }
 
   test("ConnectedComponents.largeSmallStar: a 2000-deep path (adversarial " +
-      "diameter) converges in O(log^2) rounds and matches minLabel") {
+      "diameter) converges in O(log^2) rounds and matches a union-find") {
     val s2 = spark; import s2.implicits._
     // a path graph is the worst case for plain (non-doubled) propagation:
     // diameter 1999 would exhaust any reasonable maxIter. The star
@@ -161,30 +160,52 @@ class EdgeSpec extends SparkSuite {
     assert(got.length == p && got.forall(_._2 == 0L),
       "every path node must resolve to the component minimum 0")
 
-    // cross-check the two algorithms on a mixed random graph: several
-    // components, singletons, and a triangle
+    // a mixed random graph — several components, singletons, and a
+    // triangle — against a union-find on the driver
     val rnd = new scala.util.Random(7)
-    val mixed = ((0 until 300).map { _ =>
-      val a = rnd.nextInt(120).toLong; val b = rnd.nextInt(120).toLong
-      (a, b)
-    } ++ Seq((200L, 201L), (201L, 202L), (202L, 200L))).toDF("src", "dst")
-    val mixedNodes = ((0L until 120L) ++ Seq(200L, 201L, 202L, 999L))
-      .toDF("node")
-    def m(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val a = m(graft.operators.ConnectedComponents.minLabel(mixedNodes, mixed))
-    val b = m(graft.operators.ConnectedComponents.largeSmallStar(mixedNodes, mixed))
-    assert(a == b, s"algorithms disagree: ${a.toSet.diff(b.toSet)}")
+    val mixedEdges = (0 until 300).map { _ =>
+      (rnd.nextInt(120).toLong, rnd.nextInt(120).toLong)
+    } ++ Seq((200L, 201L), (201L, 202L), (202L, 200L))
+    val mixedNodes = (0L until 120L) ++ Seq(200L, 201L, 202L, 999L)
+    val parent = scala.collection.mutable.Map(mixedNodes.map(n => n -> n): _*)
+    def find(n: Long): Long =
+      if (parent(n) == n) n else { val r = find(parent(n)); parent(n) = r; r }
+    mixedEdges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val want = mixedNodes.map(n => n -> find(n)).toMap
+    val cc = graft.operators.ConnectedComponents.largeSmallStar(
+        mixedNodes.toDF("node"), mixedEdges.toDF("src", "dst"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(cc == want, s"disagrees with union-find: ${cc.toSet.diff(want.toSet)}")
   }
 
-  test("d11 under spark.graft.cc.algorithm=stars matches the default") {
-    val sf = "/root/testdata/sf0.001"
-    val dflt = SparkEntry.queries("d11_dedup_clusters")(spark, sf).collect()
-    spark.conf.set("spark.graft.cc.algorithm", "stars")
-    try {
-      val stars = SparkEntry.queries("d11_dedup_clusters")(spark, sf).collect()
-      assert(dflt.toSeq == stars.toSeq)
-    } finally spark.conf.unset("spark.graft.cc.algorithm")
+  test("d11 and d37 resolve a 101-doc near-dup chain with shuffled ids " +
+      "into one cluster") {
+    val s2 = spark; import s2.implicits._
+    // chain position i holds doc id i*37 mod 101, so the minimum ids
+    // are scattered along the path. d11 (any shared 3-shingle, ids < 150):
+    // doc i is blocks B(i) B(i+1), so only neighbours share shingles.
+    // d37 (exact setsim, Jaccard >= 0.5): doc i is blocks C(i)..C(i+3) of
+    // 5 tokens; neighbours share 13 of 23 distinct shingles (0.57),
+    // docs two apart 8 of 28 (0.29).
+    def block(tag: String, i: Int) = (0 until 5).map(j => s"$tag${i}w$j")
+    def perm(i: Int): Long = (i * 37L) % 101
+    val d11Docs = (0 to 100).map(i =>
+      (perm(i), (block("a", i) ++ block("a", i + 1)).mkString(" ")))
+    val d37Docs = (0 to 100).map(i =>
+      (1000L + perm(i), (i to i + 3).flatMap(block("c", _)).mkString(" ")))
+    val dir = java.nio.file.Files.createTempDirectory("graft_chain").toString
+    (d11Docs ++ d37Docs).toDF("doc_id", "text")
+      .write.parquet(s"$dir/documents.parquet")
+    val d11 = SparkEntry.queries("d11_dedup_clusters")(spark, dir).collect()
+      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("cluster_id")).toMap
+    assert(d11 == d11Docs.map(_._1 -> 0L).toMap, d11)
+    val d37 = SparkEntry.queries("d37_canonical_select")(spark, dir).collect()
+      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("cluster_id")).toMap
+    assert(d37 == (d11Docs.map(d => d._1 -> d._1) ++
+      d37Docs.map(_._1 -> 1000L)).toMap, d37)
   }
 
   test("ConnectedComponents: chain, pair, and singleton resolve to min labels") {
@@ -193,7 +214,7 @@ class EdgeSpec extends SparkSuite {
     // singleton 20 (no edges at all)
     val edges = Seq((2L, 1L), (2L, 3L), (4L, 3L), (10L, 11L)).toDF("src", "dst")
     val nodes = Seq(1L, 2L, 3L, 4L, 10L, 11L, 20L).toDF("node")
-    val got = graft.operators.ConnectedComponents.minLabel(nodes, edges)
+    val got = graft.operators.ConnectedComponents.largeSmallStar(nodes, edges)
       .collect().map(r => r.getAs[Long]("node") -> r.getAs[Long]("cluster")).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 20L -> 20L))
@@ -230,28 +251,6 @@ class EdgeSpec extends SparkSuite {
     assert(st.getAs[Long]("dropped_groups") == 8L
       && st.getAs[Long]("dropped_entries") == 40000L,
       s"stats must expose the dropped mega-buckets: $st")
-  }
-
-  test("minhashLshPairs: the xxhash64 fast family and the md5 oracle " +
-      "family emit the identical verified pair set") {
-    // The two signature families bucket differently, but both candidate
-    // sets pass through the same exact-Jaccard >= 0.5 verification; on
-    // this corpus (near-dups are high-jaccard, so per-band collision
-    // probability is near 1 for true pairs in BOTH families) the final
-    // verified outputs must coincide row for row — the parity pin that
-    // lets the catalog run md5 mode under the SQL oracle while the 100 TB
-    // path stays on the compiled xxhash64 expression.
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    def rows(md5Mode: Boolean) =
-      graft.catalog.Approx.minhashLshPairs(docs, md5Sig = md5Mode)
-        .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"),
-          r.getAs[Double]("jaccard"))).toSet
-    val fast = rows(false)
-    val md5m = rows(true)
-    assert(fast.nonEmpty, "corpus must contain near-dup pairs")
-    assert(fast == md5m,
-      s"families diverge: fast-only=${fast -- md5m} md5-only=${md5m -- fast}")
   }
 
   test("cooccurPairs: a 500-item mega-basket is dropped (bounded pair " +
