@@ -182,12 +182,11 @@ object Bench {
       s"\"" + k + "\":[" + t1v + "," + p2(k)._1 + "]"
     }.mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
-    val failedJson = failed.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failedNames = failed.toSeq.sorted
     // derive the record from the names the passes ACTUALLY excluded
     // (catalog keys ∩ skip), not the raw env set — with the startup
     // require these coincide, but the artifact should state what ran
-    val skippedJson = SparkEntry.queries.keys.filter(skip).toSeq.sorted
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
+    val skipped = SparkEntry.queries.keys.filter(skip).toSeq.sorted
     val env = {
       val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
       // heap matters as much as load: an undersized pool inflates the
@@ -203,17 +202,37 @@ object Bench {
         s""""epoch_ms":${System.currentTimeMillis()}}"""
     }
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"passes":$passes,"failed":$failedJson,"skipped":$skippedJson,"sf":"$sfDir","env":$env}"""
-    // The driver captures only a TAIL of stdout: with 75+ queries the
-    // single JSON line grows past the capture window and the leading
-    // "value" is lost (round-3 BENCH artifact had parsed:null). Persist
-    // the full JSON to a file and close stdout with a short final line
-    // carrying the total, so truncation can never lose the headline.
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"passes":$passes,"failed":${jsonArray(failedNames)},"skipped":${jsonArray(skipped)},"sf":"$sfDir","env":$env}"""
+    // only a TAIL of stdout survives capture, which the full JSON
+    // outgrows: it goes to a file, stdout ends with the contract line
     val benchFile = Paths.get("target/bench.json")
-    if (benchFile.getParent != null) Files.createDirectories(benchFile.getParent)
+    Files.createDirectories(benchFile.getParent)
     Files.writeString(benchFile, json + "\n")
-    println(json)
-    println(s"TOTAL $total sec (full per-query JSON: target/bench.json)")
+    println(contractLine(total, results.size, failedNames, skipped.size,
+      sfDir, sentinelAfter / sentinelBefore))
     spark.stop()
   }
+
+  val ContractMaxChars = 400
+
+  /** the run's last stdout line: one JSON object of at most
+    * `ContractMaxChars` with the headline total, the query, failed and
+    * skipped counts, the first failed names (at most 10, fewer when
+    * they would not fit), the corpus and the bandwidth-sentinel ratio.
+    * The full per-query record is target/bench.json. */
+  def contractLine(total: Double, queries: Int, failed: Seq[String],
+      skipped: Int, sf: String, sentinelRatio: Double): String = {
+    def num(x: Double) = if (x.isFinite) x.toString else "null"
+    def line(names: Seq[String]) =
+      s"""{"metric":"total","value":${num(total)},"unit":"sec",""" +
+        s""""queries":$queries,"failed":${failed.size},""" +
+        s""""failed_names":${jsonArray(names)},"skipped":$skipped,""" +
+        s""""sf":${jsonStr(sf)},"sentinel_ratio":${num(sentinelRatio)}}"""
+    (failed.size.min(10) to 0 by -1).iterator.map(k => line(failed.take(k)))
+      .find(_.length <= ContractMaxChars).getOrElse(line(Nil))
+  }
+
+  private def jsonStr(x: String) =
+    "\"" + x.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+  private def jsonArray(xs: Seq[String]) = xs.map(jsonStr).mkString("[", ",", "]")
 }

@@ -1,10 +1,10 @@
 package graft.catalog
 
 import graft.Ckpt.StableCheckpoint
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.operators.PrefixScan
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types._
 
 /** Event-stream queries: JSON access, pivot, time windows, sessionization —
   * plus the bb_* family, which re-expresses the reference pipeline's exact
@@ -13,9 +13,7 @@ import org.apache.spark.sql.types._
   * DuckDB oracle can check each stage.
   */
 object Events {
-  import Tables.t
-
-  private def d2(c: Column): Column = c.cast(DecimalType(12, 2))
+  import Tables.{d2, t}
 
   private val eventTypes = Seq("click", "error", "purchase", "signup", "view")
 
@@ -462,37 +460,23 @@ object Events {
         // Interval-overlap concurrency: each event holds a resource for
         // 10 minutes — how many are held at every instant? The classic
         // sweep: explode intervals to +1/-1 boundary events, then a
-        // GLOBAL running sum. `SUM() OVER (ORDER BY t)` plans as
-        // Exchange SinglePartition — one task sums the world — so this
-        // generalizes q54's scalable-rownum machinery from counting to
-        // summing: range-partition by the sweep order, partial-sum
-        // within each partition, add per-partition PREFIX offsets
-        // (driver sees one sum per partition — partition metadata, not
-        // rows). Tie order (t, delta DESC, event_id) starts-before-ends
-        // at the same instant, so touching intervals overlap —
-        // identical on both engines, fully deterministic.
+        // GLOBAL running sum — a `PrefixScan` Sum, since `SUM() OVER
+        // (ORDER BY t)` plans as Exchange SinglePartition. Tie order
+        // (t, delta DESC, event_id) starts-before-ends at the same
+        // instant, so touching intervals overlap — identical on both
+        // engines, fully deterministic.
         val ev = t(s, dir, "events")
           .select(col("event_id"), unix_micros(col("ts")).as("t0"))
         val bounds = ev
           .select(col("event_id"), col("t0").as("t"), lit(1L).as("delta"))
           .unionAll(ev.select(col("event_id"),
             (col("t0") + 600000000L).as("t"), lit(-1L).as("delta")))
-        val parted = bounds
-          .repartitionByRange(col("t"), col("delta").desc, col("event_id"))
-          .withColumn("pid", spark_partition_id())
-          .stableCheckpoint() // pin pid assignment across the two jobs
-        val sums = parted.groupBy("pid").agg(sum(col("delta")).as("ps"))
-          .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-        var acc = 0L
-        val offsets = sums.map { case (pid, v) =>
-          val o = (pid, acc); acc += v; o
-        }.toSeq
-        import s.implicits._
-        val offDf = offsets.toDF("pid", "off")
-        val w = Window.partitionBy(col("pid"))
-          .orderBy(col("t"), col("delta").desc, col("event_id"))
+        val scan = PrefixScan(bounds, Nil,
+          Seq(col("t"), col("delta").desc, col("event_id")),
+          Seq(PrefixScan.Sum("off", col("delta"))))
+        val w = scan.window
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        parted.join(broadcast(offDf), "pid")
+        scan.frame
           .withColumn("concurrent", col("off") + sum(col("delta")).over(w))
           .select(timestamp_micros(col("t")).as("bt"), col("event_id"),
             col("delta"), col("concurrent"))
@@ -821,10 +805,8 @@ object Events {
         // float CDF compare can flip the argmax). Scale shape: the
         // corpus collapses to per-distinct-value counts first (one
         // aggregate with map-side combine); the global running CDFs
-        // over that bounded support use the q81 machinery — range
-        // partition + per-partition partials + broadcast prefix
-        // offsets, never Exchange SinglePartition; n1/n2 fall out of
-        // the same partition-sums collect (metadata, not rows).
+        // over that bounded support are two `PrefixScan` Sums (never
+        // Exchange SinglePartition), and n1/n2 are the scan's totals.
         val cents = (d2(col("value")) * 100).cast("long")
         val e = t(s, dir, "events")
           .filter(col("event_type").isin("click", "purchase"))
@@ -833,23 +815,14 @@ object Events {
         val byVal = e.groupBy(col("c"))
           .agg(sum(col("is1")).as("c1"),
             sum(lit(1L) - col("is1")).as("c2"))
-        val parted = byVal.repartitionByRange(col("c"))
-          .withColumn("pid", spark_partition_id())
-          .stableCheckpoint() // pin pid assignment across the two jobs
-        val sums = parted.groupBy("pid")
-          .agg(sum(col("c1")).as("s1"), sum(col("c2")).as("s2"))
-          .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-          .sortBy(_._1)
-        var a1 = 0L; var a2 = 0L
-        val offsets = sums.map { case (pid, v1, v2) =>
-          val o = (pid, a1, a2); a1 += v1; a2 += v2; o
-        }.toSeq
-        val n1 = a1; val n2 = a2
-        import s.implicits._
-        val offDf = offsets.toDF("pid", "off1", "off2")
-        val w = Window.partitionBy(col("pid")).orderBy(col("c"))
+        val scan = PrefixScan(byVal, Nil, Seq(col("c")),
+          Seq(PrefixScan.Sum("off1", col("c1")),
+            PrefixScan.Sum("off2", col("c2"))))
+        val (n1, n2) = scan.totals.headOption
+          .fold((0L, 0L))(r => (r.getLong(0), r.getLong(1)))
+        val w = scan.window
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        parted.join(broadcast(offDf), "pid")
+        scan.frame
           .withColumn("cum1", col("off1") + sum(col("c1")).over(w))
           .withColumn("cum2", col("off2") + sum(col("c2")).over(w))
           .withColumn("dn", abs(col("cum1") * n2 - col("cum2") * n1))

@@ -1,6 +1,7 @@
 package graft.catalog
 
 import graft.Ckpt.StableCheckpoint
+import graft.operators.PrefixScan
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -10,9 +11,7 @@ import org.apache.spark.sql.types._
   * next, each with an exact DuckDB oracle.
   */
 object Extended {
-  import Tables.t
-
-  private def d2(c: Column): Column = c.cast(DecimalType(12, 2))
+  import Tables.{d2, t}
 
   /** q61's JSON staging dir, keyed to the scale-factor dir so dumps for
     * two SFs can never race each other's oracle reads. The oracle SQL
@@ -630,33 +629,14 @@ object Extended {
     QueryDef(
       "q54_scalable_rownum",
       (s, dir) => {
-        // global row numbering WITHOUT the single-reducer window:
-        // `ROW_NUMBER() OVER (ORDER BY x)` plans as Exchange
-        // SinglePartition — one task sorts the world. The scalable
-        // pattern (the zipWithIndex idiom): range-partition by the key,
-        // number within each partition, add per-partition offsets. The
-        // only driver-side data is ONE count per partition — partition
-        // metadata, not rows. localCheckpoint pins the sampled range
-        // boundaries so the counts job and the numbering job see the
-        // SAME pid assignment (range sampling is seeded per execution).
-        import org.apache.spark.sql.expressions.Window
-        val parted = t(s, dir, "documents")
-          .select(col("doc_id"), col("source"))
-          .repartitionByRange(col("doc_id"))
-          .withColumn("pid", spark_partition_id())
-          .stableCheckpoint()
-        val counts = parted.groupBy("pid").agg(count(lit(1)).as("n"))
-          .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-        var acc = 0L
-        val offsets = counts.map { case (pid, n) =>
-          val o = (pid, acc); acc += n; o
-        }.toSeq
-        import s.implicits._
-        val offDf = offsets.toDF("pid", "off")
-        val w = Window.partitionBy(col("pid")).orderBy(col("doc_id"))
-        parted.join(broadcast(offDf), "pid")
-          .withColumn("rid", col("off") + row_number().over(w).cast("long"))
-          .select(col("doc_id"), col("rid"))
+        // global row numbering WITHOUT the single-reducer window
+        // (`ROW_NUMBER() OVER (ORDER BY x)` sorts the world in one
+        // task): the zipWithIndex idiom, row_number within each range
+        // partition plus `PrefixScan`'s per-partition count offsets.
+        val scan = PrefixScan(t(s, dir, "documents").select(col("doc_id")),
+          Nil, Seq(col("doc_id")), Seq(PrefixScan.Sum("off", lit(1L))))
+        scan.frame.select(col("doc_id"),
+          (col("off") + row_number().over(scan.window).cast("long")).as("rid"))
           .orderBy("doc_id")
       },
       Some("""SELECT doc_id,
@@ -1460,12 +1440,10 @@ object Extended {
         // quadratic NOT EXISTS self-join; the 2-D skyline collapses to
         // ONE descending running max — a point survives iff its y is
         // the max of its x-group AND strictly above every y seen at
-        // larger x. That running max is GLOBAL, so it runs through the
-        // q81 machinery (range partition by x desc + per-partition max
-        // + broadcast prefix offsets) instead of a SinglePartition
-        // window — the driver sees one value per partition. Dates
-        // compare as epoch days (exact ints). CatalogSpec cross-checks
-        // against the quadratic dominance definition at sf0.001.
+        // larger x. That running max is GLOBAL, so it is a
+        // `PrefixScan` Max ordered by x desc, not a SinglePartition
+        // window. Dates compare as epoch days (exact ints). CatalogSpec
+        // cross-checks the quadratic dominance definition at sf0.001.
         import org.apache.spark.sql.expressions.Window
         val pts = t(s, dir, "orders")
           .select(col("o_orderkey"), col("o_totalprice").as("price"),
@@ -1473,25 +1451,11 @@ object Extended {
             datediff(col("o_orderdate").cast("date"),
               lit("1970-01-01").cast("date")).as("yd"))
         val gx = pts.groupBy(col("price")).agg(max(col("yd")).as("gyd"))
-        val parted = gx.repartitionByRange(col("price").desc)
-          .withColumn("pid", spark_partition_id())
-          .stableCheckpoint() // pin pid assignment across the two jobs
-        val pmax = parted.groupBy("pid").agg(max(col("gyd")).as("pm"))
-          .collect().map(r => r.getInt(0) -> r.getInt(1)).sortBy(_._1)
-        var run: Option[Int] = None
-        val offsets = pmax.map { case (pid, pm) =>
-          val o = (pid, run.map(_.toLong))
-          run = Some(run.fold(pm)(math.max(_, pm)))
-          o
-        }.toSeq
-        import s.implicits._
-        val offDf = offsets.toDF("pid", "off")
-        val w = Window.partitionBy(col("pid")).orderBy(col("price").desc)
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val ranked = parted
-          .withColumn("wmax", max(col("gyd")).over(w).cast("long"))
-          .join(broadcast(offDf), "pid")
-          .withColumn("maxgt", greatest(col("wmax"), col("off")))
+        val scan = PrefixScan(gx, Nil, Seq(col("price").desc),
+          Seq(PrefixScan.Max("off", col("gyd"))))
+        val w = scan.window.rowsBetween(Window.unboundedPreceding, -1)
+        val ranked = scan.frame.withColumn("maxgt",
+          greatest(max(col("gyd")).over(w).cast("long"), col("off")))
         pts.join(ranked.select("price", "gyd", "maxgt"), "price")
           .filter(col("yd") === col("gyd") &&
             (col("maxgt").isNull || col("gyd") > col("maxgt")))

@@ -1,6 +1,7 @@
 package graft.catalog
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.types.DecimalType
 
 /** One catalog entry: a Spark query over the testdata corpus plus (when
   * SQL-expressible) the exact DuckDB oracle the driver hash-compares
@@ -118,6 +119,9 @@ object Tables {
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
     else spark.read.parquet(s"$dir/$name.parquet")
+
+  /** a money column as exact DECIMAL(12,2), the oracle's CAST */
+  def d2(c: Column): Column = c.cast(DecimalType(12, 2))
 
   /** `events.ts` has shipped as BOTH parquet TIMESTAMP(NANOS) (earlier
     * corpora) and TIMESTAMP(MICROS) (current corpora), so the reader

@@ -17,10 +17,8 @@ import org.apache.spark.sql.types._
   * operation tree exactly.
   */
 object Relational {
-  import Tables.t
+  import Tables.{d2, t}
 
-  private val D12 = DecimalType(12, 2)
-  private def d2(c: Column): Column = c.cast(D12)
   private def d4(c: Column): Column = c.cast(DecimalType(4, 2))
   // decimal(3,2) literal 1.00 — keeps decimal widths small on both engines
   private val one = lit(new java.math.BigDecimal("1.00"))

@@ -1,6 +1,7 @@
 package graft.catalog
 
 import graft.Ckpt.StableCheckpoint
+import graft.operators.PrefixScan
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -1037,31 +1038,20 @@ object TextDocs {
         // shard writer has to produce the identical order). Seeded hash
         // as sort key gives that: key = md5(epoch ':' doc_id), a fresh
         // independent permutation per epoch, no RNG state anywhere.
-        // Global position comes from the q54 scalable-rownum pattern
-        // (range partition on the key + per-partition offsets) — the
-        // naive ROW_NUMBER() OVER (ORDER BY key) would funnel the corpus
-        // through one reducer. Shard id = pos/64 then feeds the shard
-        // writer. Two epochs materialized side by side prove the
+        // Global position comes from q54's scalable row numbering over
+        // (k, doc_id) — the naive ROW_NUMBER() OVER (ORDER BY key) would
+        // funnel the corpus through one reducer. Shard id = pos/64 feeds
+        // the shard writer. Two epochs side by side prove the
         // permutations differ while each stays reproducible.
-        import org.apache.spark.sql.expressions.Window
         val frames = Seq(0, 1).map { e =>
           val keyed = t(s, dir, "documents")
             .select(col("doc_id"),
               md5(concat(lit(s"$e:"), col("doc_id").cast("string"))).as("k"))
-            .repartitionByRange(col("k"))
-            .withColumn("pid", spark_partition_id())
-            .stableCheckpoint()
-          val counts = keyed.groupBy("pid").agg(count(lit(1)).as("n"))
-            .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-          var acc = 0L
-          val offsets = counts.map { case (pid, n) =>
-            val o = (pid, acc); acc += n; o
-          }.toSeq
-          import s.implicits._
-          val offDf = offsets.toDF("pid", "off")
-          val w = Window.partitionBy(col("pid")).orderBy(col("k"), col("doc_id"))
-          keyed.join(broadcast(offDf), "pid")
-            .withColumn("pos", col("off") + row_number().over(w).cast("long"))
+          val scan = PrefixScan(keyed, Nil, Seq(col("k"), col("doc_id")),
+            Seq(PrefixScan.Sum("off", lit(1L))))
+          scan.frame
+            .withColumn("pos",
+              col("off") + row_number().over(scan.window).cast("long"))
             .select(lit(e).as("epoch"), col("doc_id"), col("pos"),
               floor((col("pos") - lit(1)) / lit(64)).as("shard"))
         }

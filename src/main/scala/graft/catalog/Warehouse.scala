@@ -1,9 +1,8 @@
 package graft.catalog
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Warehouse-layout tier: the physical-design levers that decide whether
   * a 100 TB table is queryable at all — bucketed co-located joins
@@ -15,10 +14,8 @@ import org.apache.spark.sql.types._
   * any row lost or mangled by the layout rewrite diverges the hash.
   */
 object Warehouse {
-  import Tables.t
+  import Tables.{d2, t}
   import Staging.tag
-
-  private def d2(c: Column): Column = c.cast(DecimalType(12, 2))
 
   val queries: Seq[QueryDef] = Seq(
 

@@ -1,11 +1,11 @@
 package graft.operators
 
-import graft.Ckpt.StableCheckpoint
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** Distributed order-statistic selection: the value at the k-th smallest
   * rank (1-based, duplicates counted) per group, WITHOUT a per-group
@@ -16,18 +16,16 @@ import org.apache.spark.sql.types._
   * tiny (3 return flags over a 100 TB lineitem puts a third of the corpus
   * in one task). This operator keeps the discrete-percentile semantics
   * (an EXISTING value, the ceil-rank element — the q78/q88 contract) but
-  * distributes the work with the q54/d27/q81 prefix-offset discipline:
+  * distributes the work with the `PrefixScan` prefix-offset discipline
+  * (the one q54/d27/q81/q86/q93 use):
   *
   *   1. collapse rows to a per-(grp, v) count histogram (map-side
   *      combine; one shuffle whose reduce keys are value-level, never
   *      group-level);
-  *   2. range-partition the histogram by (grp, v) and pin the partition
-  *      assignment with localCheckpoint (range sampling is seeded per
-  *      execution — the counts job and the pick job must see the SAME
-  *      pid);
-  *   3. collect ONE subtotal per (partition, grp) — partition metadata
-  *      (≤ parts × |grp| rows), not data — and turn it into per-partition
-  *      prefix offsets on the driver;
+  *   2-3. `PrefixScan`: one Sum of the counts per grp over `parts`
+  *      range chunks of (grp, v) — one pinned checkpoint, ≤ parts ×
+  *      |grp| subtotals on the driver (metadata, not data), broadcast
+  *      prefix offsets, and per-group totals for `validateTargets`;
   *   4. running-count WITHIN each (pid, grp) slice (a window over one
   *      range chunk, so every sort is bounded by the range-partition
   *      size, and slices of the same group sort in parallel), add the
@@ -117,64 +115,32 @@ object RankSelect {
       grp: String, v: String, targets: DataFrame, parts: Int = 32,
       minDistributedBytes: Long = 32L << 20,
       validateTargets: Boolean = false): DataFrame = {
-    val spark = hist.sparkSession
-    if (sourceBytes < minDistributedBytes) {
+    val running = if (sourceBytes < minDistributedBytes) {
       // small path: same interval math, one running-count window over
       // the duplicate-collapsed histogram
-      if (validateTargets) {
-        val totals = hist.groupBy(col(grp)).agg(sum(col("_c")).as("_tot"))
-        failOnUncovered(targets, totals, grp)
-      }
+      if (validateTargets) failOnUncovered(targets,
+        hist.groupBy(col(grp)).agg(sum(col("_c")).as("_tot")), grp)
       val w = Window.partitionBy(col(grp)).orderBy(col(v))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      return hist
-        .withColumn("_end", sum(col("_c")).over(w))
-        .withColumn("_start", col("_end") - col("_c") + 1)
-        .join(broadcast(targets), Seq(grp))
-        .filter(col("k").between(col("_start"), col("_end")))
-        .drop("_c", "_start", "_end")
-    }
-    val parted = hist.repartitionByRange(parts, col(grp), col(v))
-      .withColumn("_pid", spark_partition_id())
-      .stableCheckpoint()
-    // one subtotal per (partition, group): metadata, not rows
-    val subtotals = parted.groupBy(col("_pid"), col(grp))
-      .agg(sum(col("_c")).as("_pc"))
-      .collect().map(r => (r.getInt(0), r.get(1), r.getLong(2)))
-    if (validateTargets) {
+      hist.withColumn("_end", sum(col("_c")).over(w))
+    } else {
+      val scan = PrefixScan(hist, Seq(grp), Seq(col(v)),
+        Seq(PrefixScan.Sum("_off", col("_c"))), Some(parts))
       // group totals are already on the driver — reuse them
-      val totals = subtotals.groupBy(_._2).view.mapValues(_.map(_._3).sum)
-      val totSchema = StructType(Seq(
-        parted.schema(grp).copy(name = grp),
-        StructField("_tot", LongType, nullable = false)))
-      val totDf = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          totals.toSeq.map { case (g, t) => Row(g, t) }, 1), totSchema)
-      failOnUncovered(targets, totDf, grp)
+      if (validateTargets) failOnUncovered(targets,
+        hist.sparkSession.createDataFrame(scan.totals.asJava, StructType(Seq(
+          hist.schema(grp), StructField("_tot", LongType, nullable = false)))),
+        grp)
+      val w = scan.window
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      scan.frame.withColumn("_end", col("_off") + sum(col("_c")).over(w))
+        .drop("_pid", "_off")
     }
-    val offsets = subtotals.groupBy(_._2).iterator.flatMap {
-      case (g, rows) =>
-        var acc = 0L
-        rows.sortBy(_._1).map { case (pid, _, c) =>
-          val o = (pid, g, acc); acc += c; o
-        }
-    }.toSeq
-    val offSchema = StructType(Seq(
-      StructField("_pid", IntegerType, nullable = false),
-      parted.schema(grp).copy(name = grp),
-      StructField("_off", LongType, nullable = false)))
-    val offDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        offsets.map { case (pid, g, off) => Row(pid, g, off) }, 1),
-      offSchema)
-    val w = Window.partitionBy(col("_pid"), col(grp)).orderBy(col(v))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    parted.join(broadcast(offDf), Seq("_pid", grp))
-      .withColumn("_end", col("_off") + sum(col("_c")).over(w))
+    running
       .withColumn("_start", col("_end") - col("_c") + 1)
       .join(broadcast(targets), Seq(grp))
       .filter(col("k").between(col("_start"), col("_end")))
-      .drop("_pid", "_c", "_off", "_start", "_end")
+      .drop("_c", "_start", "_end")
   }
 
   /** raise on any target rank outside [1, group size] (or naming a group

@@ -558,6 +558,75 @@ class EdgeSpec extends SparkSuite {
     assert(gotForced == expect, "forced windowed path on RDD-backed frame")
   }
 
+  test("PrefixScan == sort-based running aggregates: inclusive Sum and " +
+      "exclusive Max, with and without groups (one of them null), over 8 " +
+      "range partitions; empty and one-row input") {
+    val s2 = spark; import s2.implicits._
+    import graft.operators.PrefixScan
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.expressions.Window
+    def mix(i: Long): Long = { // splitmix-ish, deterministic
+      var z = i * 0x9E3779B97F4A7C15L
+      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
+      (z ^ (z >>> 27)) & Long.MaxValue
+    }
+    // skewed groups plus a null group, 25 order values (heavy ties,
+    // broken by the unique id), signed measure values
+    val rows = (0L until 2000L).map { i =>
+      val g = if (i % 97 == 0) null
+        else if (i % 10 < 7) "a" else if (i % 10 < 9) "b" else "c"
+      (g, i, mix(i) % 25L, mix(i + 7) % 21L - 10L)
+    }
+    val df = rows.toDF("grp", "id", "o", "x")
+    val order = Seq(col("o"), col("id"))
+    def scans(in: org.apache.spark.sql.DataFrame, groups: Seq[String]) = {
+      val sumScan = PrefixScan(in, groups, order,
+        Seq(PrefixScan.Sum("off", col("x"))), Some(8))
+      val maxScan = PrefixScan(in, groups, order,
+        Seq(PrefixScan.Max("off", col("x"))), Some(8))
+      val inclusive = sumScan.window
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val exclusive = maxScan.window.rowsBetween(Window.unboundedPreceding, -1)
+      val sums = sumScan.frame
+        .select(col("id"), col("off") + sum(col("x")).over(inclusive))
+        .as[(Long, Long)].collect().toMap
+      val maxes = maxScan.frame
+        .select(col("id"), greatest(max(col("x")).over(exclusive), col("off")))
+        .collect().map(r => r.getLong(0) -> Option(r.get(1))).toMap
+      (sumScan, maxScan, sums, maxes)
+    }
+    for (groups <- Seq(Nil, Seq("grp"))) {
+      // reference: each group sorted by (o, id) on the driver
+      val byGroup = rows.groupBy(r => if (groups.isEmpty) Nil else Seq(r._1))
+        .map { case (g, rs) => g -> rs.sortBy(r => (r._3, r._2)) }
+      val sumRef = byGroup.values.flatMap { rs =>
+        rs.map(_._2).zip(rs.scanLeft(0L)(_ + _._4).tail)
+      }.toMap
+      val maxRef = byGroup.values.flatMap { rs =>
+        rs.map(_._2).zip(rs.scanLeft(Option.empty[Long]) { (m, r) =>
+          Some(m.fold(r._4)(_ max r._4))
+        })
+      }.toMap
+      val (sumScan, maxScan, sums, maxes) = scans(df, groups)
+      assert(sumScan.frame.select("_pid").distinct().count() == 8)
+      assert(sums == sumRef, s"inclusive Sum diverged (groups=$groups)")
+      assert(maxes == maxRef, s"exclusive Max diverged (groups=$groups)")
+      assert(sumScan.totals.toSet == byGroup.map { case (g, rs) =>
+        Row.fromSeq(g :+ rs.map(_._4).sum) }.toSet)
+      assert(maxScan.totals.toSet == byGroup.map { case (g, rs) =>
+        Row.fromSeq(g :+ rs.map(_._4).max) }.toSet)
+      // empty input: an empty result and no totals, not a failure
+      val (eSum, eMax, eSums, eMaxes) = scans(df.filter(lit(false)), groups)
+      assert(eSums.isEmpty && eMaxes.isEmpty)
+      assert(eSum.totals.isEmpty && eMax.totals.isEmpty)
+      // one row: its own value inclusive, nothing before it exclusive
+      val one = rows(5)
+      val (_, _, oSums, oMaxes) = scans(df.filter(col("id") === one._2), groups)
+      assert(oSums == Map(one._2 -> one._4))
+      assert(oMaxes == Map(one._2 -> None))
+    }
+  }
+
   test("q88's ntileNth degrades tiny groups (< 4 rows) to the exact " +
       "ntile bucket set — no spurious partial rows for empty trailing " +
       "quartiles, NTH_VALUE(3) null when the frame has < 3 rows") {

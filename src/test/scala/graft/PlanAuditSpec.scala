@@ -12,8 +12,9 @@ package graft
   *     moves one partial row per task — constant data — which is the
   *     only funnel-to-one-task shape that survives scale. A
   *     SinglePartition under anything else (a global window sort, a
-  *     global row_number) is the single-reducer pattern q54/q81/q86/
-  *     q93/d25/d27/RankSelect exist to avoid.
+  *     global row_number) is the single-reducer pattern d25 and
+  *     `operators/PrefixScan` (q54/d27/q81/q86/q93/RankSelect) exist
+  *     to avoid.
   *  3. BroadcastNestedLoopJoin only where a BOUNDED broadcast side
   *     justifies a non-equi or constant-key join (the allowlist below,
   *     each with its bound); a BNLJ outside the list means an unbounded
@@ -105,7 +106,7 @@ class PlanAuditSpec extends SparkSuite {
     * fixture, or the entry is a semantics pin whose corpus-scale twin is
     * named. (spark_partition_id()-keyed windows are exempted
     * structurally in the rule itself — that key scales with the cluster
-    * by construction; it IS the q54/d27/RankSelect discipline.) */
+    * by construction; it IS the `PrefixScan` discipline.) */
   private val lowCardWindowAllowed: Map[String, String] = Map(
     "bb_e2e_tophits" -> ("per-sample top-K (reference contract W1): key " +
       "count = #samples, grows with the corpus (4 on the fixture); " +
@@ -186,7 +187,7 @@ class PlanAuditSpec extends SparkSuite {
       lp.collect { case w: LWindow => w }.foreach { w =>
         // STRUCTURAL exemption: a partition key derived from
         // spark_partition_id() has cardinality = the shuffle width by
-        // construction — it IS the q54/d27/q81/RankSelect prefix-offset
+        // construction — it IS the `PrefixScan` prefix-offset
         // discipline this rule exists to steer windows toward. Resolve
         // key attributes through the child's aliases to find it.
         val aliases = w.child.collect { case p => p.expressions }.flatten
@@ -200,14 +201,13 @@ class PlanAuditSpec extends SparkSuite {
           }
         // a localCheckpoint/RDD barrier truncates the logical plan, so
         // a pid computed before it resolves to an opaque attribute —
-        // fall back on the repo-wide naming convention for partition-id
-        // keys ("pid"/"_pid", always spark_partition_id-derived; q54/
-        // d27/q81/q86/q93/RankSelect). A future query must not reuse
-        // these names for a genuinely low-cardinality key.
+        // fall back on the name of `PrefixScan`'s partition-id column
+        // ("_pid", always spark_partition_id-derived). A future query
+        // must not reuse it for a genuinely low-cardinality key.
         val pidKeyed = w.partitionSpec.exists { e =>
           resolve(e).exists(_.isInstanceOf[SparkPartitionID]) ||
             e.collect { case ar: AttributeReference => ar.name }
-              .exists(n => n == "pid" || n == "_pid")
+              .contains("_pid")
         }
         if (w.partitionSpec.nonEmpty && !pidKeyed) {
           val proj = Project(w.partitionSpec.zipWithIndex.map {

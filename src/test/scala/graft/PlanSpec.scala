@@ -595,6 +595,16 @@ class PlanSpec extends SparkSuite {
     }
     assert(p.contains("BroadcastHashJoin"),
       s"offsets/targets must attach by broadcast:\n$p")
+    // the same pin for every other PrefixScan caller in the catalog
+    for (q <- Seq("q54_scalable_rownum", "d27_corpus_shuffle",
+        "q81_concurrency", "q93_ks_drift", "q86_skyline")) {
+      val ws = plan(q).linesIterator
+        .filter(_.contains("windowspecdefinition")).toSeq
+      assert(ws.nonEmpty, s"$q: expected a Window node")
+      ws.foreach { l =>
+        assert(l.contains("_pid"), s"$q: window must partition by _pid, got: $l")
+      }
+    }
   }
 
   test("e11: the 512-row centroid table joins by broadcast each " +
@@ -652,7 +662,7 @@ class PlanSpec extends SparkSuite {
     // the Window (the per-row CDF sweep) must sort within pid hash
     // partitions — the only SinglePartition allowed is the final 1-row
     // max merge, which moves one partial per task, not the support
-    assert(p.contains("hashpartitioning(pid"),
+    assert(p.contains("hashpartitioning(_pid"),
       s"the CDF window must run inside pid partitions:\n$p")
     assert(p.contains("BroadcastExchange"),
       s"prefix offsets must attach by broadcast:\n$p")
