@@ -343,6 +343,50 @@ class PipelineSpec extends SparkSuite {
     assert(e.getMessage.contains("BAD_1"))
   }
 
+  /** A1 edge cases: A has duplicate taxID 1 rows, B's taxID 1 row sits at
+    * the target rank and its taxID 0 row at a non-target one, and N's
+    * taxID 0/1 reads cells are all non-numeric */
+  private lazy val totalsEdges: Seq[Row] = {
+    val dir = Files.createTempDirectory("graft_totals_edges")
+    val paths = Seq(
+      writeReport(dir, "A_report.tsv", Seq(
+        "50.0\t500000\t500000\t0\t0\t0\t0\tunclassified\tunclassified",
+        "30.0\t300000\t300000\t9\t0\t0\t1\troot\troot",
+        "20.0\t200000\t200000\t9\t0\t0\t1\troot\troot",
+        "0.1\t5\t5\t50\t1.0\t0.5\t10\tspecies\tTen")),
+      writeReport(dir, "B_report.tsv", Seq(
+        "40.0\t400000\t400000\t0\t0\t0\t0\tU\tunclassified",
+        "60.0\t600000\t600000\t9\t0\t0\t1\tspecies\troot",
+        "0.1\t2\t2\t20\t1.0\t0.5\t10\tspecies\tTen")),
+      writeReport(dir, "N_report.tsv", Seq(
+        "50.0\tx\t500000\t0\t0\t0\t0\tunclassified\tunclassified",
+        "50.0\tn/a\t500000\t9\t0\t0\t1\troot\troot",
+        "0.1\t3\t3\t30\t1.0\t0.5\t10\tspecies\tTen")))
+    BigBugData.build(spark, BigBugData.Params(
+      paths, Files.createTempDirectory("graft_totals_edges_out").toString))
+      .rrpm.collect().toSeq
+  }
+
+  test("A1: duplicate taxID 0/1 rows are summed") {
+    assert(cell(totalsEdges, 10, "A", "total_reads") == 1000000L) // 5e5+3e5+2e5
+    assert(cell(totalsEdges, 10, "A", "rpm") == 5.0)
+  }
+
+  test("A1: taxID 0/1 rows count at any rank and never become taxa") {
+    assert(cell(totalsEdges, 10, "B", "total_reads") == 1000000L)
+    assert(cell(totalsEdges, 10, "B", "rpm") == 2.0)
+    assert(totalsEdges.map(_.getAs[Long]("taxID")).toSet == Set(10L))
+  }
+
+  test("A1: a sample whose taxID 0/1 reads are all non-numeric has a null " +
+      "total, so its rpm, z-score and rRPM cells are null") {
+    for (f <- Seq("total_reads", "rpm", "z_score", "rrpm"))
+      assert(cell(totalsEdges, 10, "N", f) == null, f)
+    // the other samples' z-scores skip the null cell: (5 - 3.5) / 1.5
+    assert(cell(totalsEdges, 10, "A", "z_score") == 1.0)
+    assert(cell(totalsEdges, 10, "B", "z_score") == -1.0)
+  }
+
   test("NC group resolution: cardinality errors (P5)") {
     import graft.ops.NcGroups
     val ids = Seq("CF_DNA_Negative1", "CF_DNA_Negative2", "CF_DNA_1")
