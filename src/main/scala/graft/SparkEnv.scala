@@ -12,8 +12,10 @@ import org.apache.spark.sql.SparkSession
   */
 object SparkEnv {
   def builder(defaultMaster: String): SparkSession.Builder = {
+    // list a report batch's files on the driver, with no job at any count
     val b0 = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", defaultMaster))
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", Int.MaxValue.toLong)
     // Reliable-checkpoint mode writes one full-dataset copy PER
     // stableCheckpoint() call; iterative operators (PageRank, connected
     // components, k-means) checkpoint per iteration, so without cleanup

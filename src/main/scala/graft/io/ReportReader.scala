@@ -84,9 +84,9 @@ object ReportReader {
     * empty prefix).
     */
   def sampleIdLastUnderscore(pathCol: Column): Column = {
-    val base = element_at(split(pathCol, "/"), -1)
-    when(base.contains("_"), regexp_replace(base, "_[^_]*$", ""))
-      .otherwise(lit(""))
+    val base = substring_index(pathCol, "/", -1)
+    when(base.contains("_"), base.substr(lit(1),
+      length(base) - length(substring_index(base, "_", -1)) - 1)).otherwise(lit(""))
   }
 
   /** F6: the *different* rule used by `filter_reports_by_taxid.py:29` —

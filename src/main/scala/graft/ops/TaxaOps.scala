@@ -9,24 +9,33 @@ import graft.io.ReportReader.{ArgIdx, OrderKey}
   * organism rows (reference P1/P2, A1–A3; `bigbugdata.py:256–302`).
   *
   * The scan and the cell aggregate are LONG, `(sample, taxID, …)`; the
-  * grid is the reference's own relation, ONE row per organism
+  * batch repartitions its scan by taxID once, so the cell and organism
+  * aggregates share a stage. The grid is the reference's own relation,
+  * ONE row per organism
   * (`combined_taxa_data: dict[int, dict]`, `:286–302`) holding an array
   * per measure with one slot per sample. Every later step reads or writes
   * those arrays: no cross join, no window over taxID, no pivot.
   */
 object TaxaOps {
 
-  /** A1: per-sample total reads = Σ reads over taxID ∈ {0,1}
-    * (`bigbugdata.py:258–261`). Dimension-sized (one row per sample). */
-  def sampleTotals(reports: DataFrame): DataFrame =
-    reports.filter(col(TaxId).isin(TotalTaxIds: _*))
-      .groupBy(col(Sample))
-      .agg(sum(col(Reads)).as("total_reads"))
+  /** A1's rows: taxID 0 and 1, at any rank (`bigbugdata.py:258–261`) */
+  val isTotal: Column = col(TaxId).isin(TotalTaxIds: _*)
+
+  /** A1: per-sample total reads = Σ reads over its [[isTotal]] rows,
+    * summed as a cell is ([[cellReads]]): null when none is numeric. */
+  def sampleTotals(rows: DataFrame): DataFrame =
+    rows.filter(isTotal).groupBy(col(Sample)).agg(cellReads.as("total_reads"))
+
+  /** A1 in the batch: [[isTotal]] rows fold into taxID TotalKey, one cell
+    * per sample, so [[organisms]] yields the totals as one more row. */
+  val TotalKey: Long = 0L
+  def foldTotals(rows: DataFrame): DataFrame =
+    rows.withColumn(TaxId, when(isTotal, lit(TotalKey)).otherwise(col(TaxId)))
 
   /** P1+P2: taxa rows = rank == target, excluding the total rows
-    * (`bigbugdata.py:258–266`). */
-  def taxaRows(reports: DataFrame, rank: String): DataFrame =
-    reports.filter(!col(TaxId).isin(TotalTaxIds: _*) && col(Rank) === rank)
+    * (`bigbugdata.py:258–266`); a null taxID is neither. */
+  def isTaxon(rank: String): Column = !isTotal && col(Rank) === rank
+  def taxaRows(reports: DataFrame, rank: String): DataFrame = reports.filter(isTaxon(rank))
 
   /** A2's cell reads: duplicate rows accumulate (`+=`, `bigbugdata.py:300–302`) */
   val cellReads: Column = sum(col(Reads)).as(Reads)
@@ -57,8 +66,9 @@ object TaxaOps {
     * cell of the scan's i-th sample in argument order (its ArgIdx). A
     * sample without a report row gets reads 0 (`:289–291` pre-fills
     * every sample with 0) and null stats: the grid is dense, since
-    * z-scores and rRPM run over zero cells too. `nSamples` must count ALL
-    * batch samples (even ones with no taxa rows).
+    * z-scores and rRPM run over zero cells too; so does a report cell
+    * without numeric reads, but in the total row it stays null (A1).
+    * `nSamples` must count ALL batch samples (even ones with no taxa rows).
     */
   def organisms(counts: DataFrame, nSamples: Int): DataFrame = {
     val slot = col("first")(OrderKey)(ArgIdx)
@@ -69,7 +79,8 @@ object TaxaOps {
       .agg(
         trim(min(col("first"))(TaxName)).as(TaxName),
         sum(col(Reads)).as("total_reads_organism"),
-        collect_list(cell(slot, coalesce(col(Reads), lit(0L)), col("stats")))
+        collect_list(cell(slot, coalesce(col(Reads),
+          when(col(TaxId) =!= TotalKey, lit(0L))), col("stats")))
           .as("_cells"))
       // the report cells plus a 0-filled cell for every slot they miss,
       // in slot order

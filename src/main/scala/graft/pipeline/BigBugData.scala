@@ -9,8 +9,8 @@ import graft.schema.ReportSchema._
 /** The reference's `run()` (`bigbugdata.py:225–366`) as one lazy Spark DAG.
   *
   * Reference stage → engine stage:
-  *   fused scan (totals + stats + counts)  → one cached report scan,
-  *                                           three derived frames
+  *   fused scan (totals + stats + counts)  → one uncached scan, one
+  *                                           exchange by taxID
   *   `combined_taxa_data`, one dict per    → ONE cached row per organism,
   *   organism, eager between steps           one array slot per sample
   *                                           (reads, stats, rpm, z-score,
@@ -18,12 +18,13 @@ import graft.schema.ReportSchema._
   *   driver-side regex groups              → NcGroups (sample universe is
   *                                           the file list — never data)
   *
-  * Shuffle boundaries land exactly where the math demands: groupBy
-  * (sample) for the collected totals, groupBy (taxID, sample) for each
-  * cell's reads, stats and first row, groupBy (taxID) for the organism
-  * row, and one window over sample (tophits). The organism row needs no
-  * join and no window: rpm, z-score and rRPM are array expressions over
-  * its slots, and the wide CSVs render straight from its arrays. The
+  * Shuffle boundaries land exactly where the math demands: ONE exchange
+  * by taxID feeds the groupBy (taxID, sample) for each cell's reads,
+  * stats and first row and the groupBy (taxID) for the organism row (the
+  * totals are one more such row), and one window over sample ranks
+  * tophits. The organism row needs no join and no window: rpm, z-score
+  * and rRPM are array expressions over its slots, and the wide CSVs
+  * render straight from its arrays. The
   * long outputs are `posexplode` projections of it. One action renders
   * the three CSVs' lines, sorts them within each partition and spills
   * them to run files, which the driver merges into the CSVs (no global
@@ -52,33 +53,34 @@ object BigBugData {
     val sampleIds = samplePaths.map(_._1)
     val ordered = ReportReader.orderedSampleIds(sampleIds)
 
-    // cache only the columns the pipeline reads: the verbatim text twins
-    // stay out of the cache, and CSV column pruning skips pct/taxReads
-    val reports = ReportReader.readReports(spark, samplePaths.map(_._2))
-      .select(Sample, TaxId, Rank, TaxName, Reads, Kmers, Dup, Cov,
-        ReportReader.OrderKey)
-      .cache()
+    // one pass: A1's rows (folded into one total cell per sample) and the
+    // target rank's, hash-partitioned by taxID once for both aggregates
+    val organisms = TaxaOps.organisms(TaxaOps.cellCounts(TaxaOps.foldTotals(
+      ReportReader.readReports(spark, samplePaths.map(_._2))
+        .filter(TaxaOps.isTotal || TaxaOps.isTaxon(params.rank)))
+      .repartition(col(TaxId))), sampleIds.size).cache()
+    val isTotal = col(TaxId) === TaxaOps.TotalKey
 
-    // one job collects the totals for both the trap-10 check and rpm
-    val totalsAgg = TaxaOps.sampleTotals(reports)
-    val totalRows = totalsAgg.collect()
+    // one job collects the total row for both the trap-10 check and rpm:
+    // per slot, the total reads, and null stats if no taxID 0/1 row
+    val total = organisms.filter(isTotal).select(Reads, "stats").collect()
+      .headOption.map(r => r.getSeq[Any](0).zip(r.getSeq[Any](1)))
+      .getOrElse(sampleIds.map(_ => (null, null)))
     // fail loudly where the reference would KeyError (§7.4 trap 10)
-    val missingTotals = sampleIds.filterNot(totalRows.map(_.getString(0)).toSet)
+    val missingTotals = sampleIds.zip(total).collect { case (s, (_, null)) => s }
     if (missingTotals.nonEmpty)
       throw new IllegalStateException(
         "No taxID 0/1 rows (cannot compute total reads) for sample(s): " +
           missingTotals.mkString(", "))
 
-    val taxa = TaxaOps.taxaRows(reports, params.rank)
     val groups = NcGroups.resolve(sampleIds, params.groupPatterns)
     val sampleToNc = NcGroups.sampleToControl(sampleIds, groups)
     // array slot i is the i-th sample in argument order
     val slot = sampleIds.zipWithIndex.toMap
-    val totalOf = totalRows.map(r => r.getString(0) -> r.get(1)).toMap
-    // the one cached grid: all three outputs read it
-    val grid = Normalize.normalize(
-      TaxaOps.organisms(TaxaOps.cellCounts(taxa), sampleIds.size),
-      sampleIds.map(totalOf), sampleIds.map(s => sampleToNc.get(s).map(slot))).cache()
+    val totals = total.map(_._1)
+    // the grid all three outputs read: the cached rows but the total row
+    val grid = Normalize.normalize(organisms.filter(!isTotal),
+      totals, sampleIds.map(s => sampleToNc.get(s).map(slot)))
 
     // one long row per (organism, sample) cell
     def slotOf(values: Seq[Any]) =
@@ -88,7 +90,7 @@ object BigBugData {
         posexplode(arrays_zip(col(Reads), col("stats"), col("rpm"),
           col("z_score"), col("nc_rpm"), col("rrpm"))).as(Seq("_slot", "_c")))
       .select(col("*"), col("_c.*"), slotOf(sampleIds).as(Sample),
-        slotOf(sampleIds.map(totalOf)).cast("long").as("total_reads"),
+        slotOf(totals).cast("long").as("total_reads"),
         slotOf(sampleIds.map(sampleToNc.get(_).orNull)).cast("string").as("nc_sample"))
 
     Outputs(

@@ -281,11 +281,14 @@ class PipelineSpec extends SparkSuite {
       ("B_NC", 10L, 1, 1.0), ("B_NC", 20L, 2, 1.0)))
   }
 
-  test("plan shape: the pruned report cache feeds ONE cached grid that " +
-      "all three outputs read, and rrpm needs no self-join of the rpm grid") {
-    import org.apache.spark.sql.execution.SparkPlan
+  test("plan shape: one uncached scan and ONE exchange feed the cached " +
+      "organism rows that all three outputs read, and rrpm needs no " +
+      "self-join of the rpm grid") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     import org.apache.spark.sql.execution.window.WindowExec
     // every physical node, including those inside adaptive plans and
@@ -301,23 +304,34 @@ class PipelineSpec extends SparkSuite {
       _.queryExecution.withCachedData.collect { case r: InMemoryRelation => r.cacheBuilder })
     assert(read.forall(_.size == 1), read.map(_.map(_.cachedName)))
     assert(read.flatten.forall(_ eq read.head.head),
-      "combined, rrpm and tophits must read the same cached grid")
+      "combined, rrpm and tophits must read the same cached organism rows")
 
-    val rrpmNodes = nodes(out.rrpm.queryExecution.executedPlan)
-    val reportCache = rrpmNodes.collect { case s: InMemoryTableScanExec => s.relation }
-      .filter(_.output.exists(_.name == ReportReader.OrderKey))
-    assert(reportCache.nonEmpty, "the report scan must be cached")
-    reportCache.foreach { r =>
-      val names = r.output.map(_.name)
-      assert(!names.exists(n => n.startsWith(ReportReader.RawPrefix) ||
-        n == "pct" || n == "taxReads"), names)
+    for (df <- Seq(out.combined, out.rrpm, out.tophits)) {
+      val all = nodes(df.queryExecution.executedPlan)
+      assert(all.count(_.isInstanceOf[FileSourceScanExec]) == 1)
+      // no cached relation of report rows: the one cache holds organisms
+      val cached = all.collect { case s: InMemoryTableScanExec => s.relation }
+      assert(cached.map(_.cacheBuilder).distinct.size == 1)
+      cached.foreach(r => assert(!r.output.exists(_.name == ReportReader.OrderKey),
+        r.output.map(_.name)))
     }
+
+    // between the scan and the organism aggregate (the cached plan's
+    // top aggregate) runs exactly one exchange
+    val cachedPlan = nodes(read.head.head.cachedPlan)
+    val aggAt = cachedPlan.indexWhere(_.isInstanceOf[BaseAggregateExec])
+    val scanAt = cachedPlan.indexWhere(_.isInstanceOf[FileSourceScanExec])
+    assert(aggAt >= 0 && scanAt > aggAt)
+    assert(cachedPlan.slice(aggAt, scanAt).count(_.isInstanceOf[ShuffleExchangeLike]) == 1,
+      cachedPlan.map(_.nodeName))
 
     // the organism row carries every sample's cell: the grid joins
     // nothing and runs no window
-    assert(rrpmNodes.collect { case j: BaseJoinExec => j }.isEmpty,
-      rrpmNodes.collect { case j: BaseJoinExec => j.nodeName })
-    assert(!rrpmNodes.exists(_.isInstanceOf[WindowExec]))
+    val gridNodes = nodes(out.grid.queryExecution.executedPlan) ++
+      nodes(out.rrpm.queryExecution.executedPlan)
+    assert(gridNodes.collect { case j: BaseJoinExec => j }.isEmpty,
+      gridNodes.collect { case j: BaseJoinExec => j.nodeName })
+    assert(!gridNodes.exists(_.isInstanceOf[WindowExec]))
   }
 
   test("single-sample batch: zero stddev yields NaN z-score like scipy (trap 4)") {
@@ -357,7 +371,9 @@ class PipelineSpec extends SparkSuite {
       writeReport(dir, "B_report.tsv", Seq(
         "40.0\t400000\t400000\t0\t0\t0\t0\tU\tunclassified",
         "60.0\t600000\t600000\t9\t0\t0\t1\tspecies\troot",
-        "0.1\t2\t2\t20\t1.0\t0.5\t10\tspecies\tTen")),
+        "0.1\t2\t2\t20\t1.0\t0.5\t10\tspecies\tTen",
+        // a non-numeric taxID is neither a total nor a taxon
+        "0.1\t4\t4\t40\t1.0\t0.5\tx7\tspecies\tBad")),
       writeReport(dir, "N_report.tsv", Seq(
         "50.0\tx\t500000\t0\t0\t0\t0\tunclassified\tunclassified",
         "50.0\tn/a\t500000\t9\t0\t0\t1\troot\troot",
@@ -375,7 +391,7 @@ class PipelineSpec extends SparkSuite {
   test("A1: taxID 0/1 rows count at any rank and never become taxa") {
     assert(cell(totalsEdges, 10, "B", "total_reads") == 1000000L)
     assert(cell(totalsEdges, 10, "B", "rpm") == 2.0)
-    assert(totalsEdges.map(_.getAs[Long]("taxID")).toSet == Set(10L))
+    assert(totalsEdges.map(_.getAs[Any]("taxID")).toSet == Set(10L))
   }
 
   test("A1: a sample whose taxID 0/1 reads are all non-numeric has a null " +
@@ -485,6 +501,42 @@ class PipelineSpec extends SparkSuite {
       marker()
       assert(drainToMarker() == Seq("collect", "foreachPartition"))
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("BigBugData.write over 33 report paths lists them on the driver: " +
+      "no \"Listing leaf files\" job") {
+    val dir = Files.createTempDirectory("graft_listing")
+    val paths = (1 to 33).map(i => writeReport(dir, s"L${i}_report.tsv", Seq(
+      "50.0\t500\t500\t0\t0\t0\t0\tunclassified\tunclassified",
+      "50.0\t500\t500\t9\t0\t0\t1\troot\troot",
+      s"0.1\t$i\t$i\t10\t1.0\t0.5\t10\tspecies\tTen")))
+    val descriptions = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        descriptions.put(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    // listener events arrive in order: the job starts before the marker
+    // job's are exactly the write's
+    def marker(): Unit = {
+      spark.sparkContext.setJobDescription("graft_marker")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+    }
+    def drainToMarker(): Seq[String] =
+      Iterator.continually(descriptions.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile(d => d != null && d != "graft_marker").toList
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      marker()
+      drainToMarker()
+      BigBugData.write(spark, BigBugData.Params(paths,
+        Files.createTempDirectory("graft_listing_out").toString))
+      marker()
+      val jobs = drainToMarker()
+      assert(jobs.nonEmpty)
+      assert(!jobs.exists(_.startsWith("Listing leaf files")), jobs)
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("CsvSink ships no line through the task results and merges the " +
