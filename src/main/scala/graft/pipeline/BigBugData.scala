@@ -59,11 +59,11 @@ object BigBugData {
       ReportReader.readReports(spark, samplePaths.map(_._2))
         .filter(TaxaOps.isTotal || TaxaOps.isTaxon(params.rank)))
       .repartition(col(TaxId))), sampleIds.size).cache()
-    val isTotal = col(TaxId) === TaxaOps.TotalKey
+    val isTotalRow = col(TaxId) === TaxaOps.TotalKey
 
     // one job collects the total row for both the trap-10 check and rpm:
     // per slot, the total reads, and null stats if no taxID 0/1 row
-    val total = organisms.filter(isTotal).select(Reads, "stats").collect()
+    val total = organisms.filter(isTotalRow).select(Reads, "stats").collect()
       .headOption.map(r => r.getSeq[Any](0).zip(r.getSeq[Any](1)))
       .getOrElse(sampleIds.map(_ => (null, null)))
     // fail loudly where the reference would KeyError (§7.4 trap 10)
@@ -79,7 +79,7 @@ object BigBugData {
     val slot = sampleIds.zipWithIndex.toMap
     val totals = total.map(_._1)
     // the grid all three outputs read: the cached rows but the total row
-    val grid = Normalize.normalize(organisms.filter(!isTotal),
+    val grid = Normalize.normalize(organisms.filter(!isTotalRow),
       totals, sampleIds.map(s => sampleToNc.get(s).map(slot)))
 
     // one long row per (organism, sample) cell
