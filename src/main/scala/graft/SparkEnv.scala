@@ -12,9 +12,9 @@ import org.apache.spark.sql.SparkSession
   */
 object SparkEnv {
   def builder(defaultMaster: String): SparkSession.Builder = {
-    // list a report batch's files on the driver, with no job at any count
     val b0 = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", defaultMaster))
+      // list a report batch's files on the driver, with no job at any count
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold", Int.MaxValue.toLong)
     // Reliable-checkpoint mode writes one full-dataset copy PER
     // stableCheckpoint() call; iterative operators (PageRank, connected
