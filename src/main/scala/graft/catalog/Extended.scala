@@ -2206,13 +2206,16 @@ object Extended {
         // Deterministic per-group reservoir — exactly K uniform
         // samples per stratum WITHOUT replacement (q98 samples at a
         // RATE; this guarantees the count): order each group by an
-        // md5 coin and keep the first K=5. The row_number-filter
-        // idiom is the one WindowTopKRewrite turns into the native
-        // O(K) TopKPerKey operator under the engine's session
-        // extensions — per-group state is K rows no matter how hot
-        // the group (the skew corpus's 30%-hot event_type pays the
-        // same memory as a cold one). Replayable: the coin is a
-        // function of the event id alone.
+        // md5 coin and keep the first K=5. Spark's own
+        // InferWindowGroupLimit plans the row_number filter as a
+        // WindowGroupLimit on each side of the event_type exchange: the
+        // partial one streams each map task's sorted groups and ships
+        // at most K rows per group, so the shuffle and the window's
+        // buffer hold K rows per group per map task no matter how hot
+        // the group (the skew corpus's 30%-hot event_type pays what a
+        // cold one pays; only the map-side sort, which spills, sees
+        // every row). Replayable: the coin is a function of the event
+        // id alone.
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("event_type"))
           .orderBy(col("coin"), col("event_id"))
@@ -2234,8 +2237,8 @@ object Extended {
         QUALIFY rn <= 5
         ORDER BY event_type, rn"""),
       "deterministic per-group reservoir (exactly K=5 per stratum, " +
-        "md5-coin order): the row_number idiom the native TopKPerKey " +
-        "rewrite bounds to O(K) state per group — hot groups pay what " +
+        "md5-coin order): Spark's WindowGroupLimit keeps K rows per " +
+        "group per map task before the shuffle — hot groups pay what " +
         "cold ones pay; auditor-replayable"),
 
     QueryDef(

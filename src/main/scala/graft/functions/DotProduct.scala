@@ -14,9 +14,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * same left-to-right IEEE addition order (results hash-match the DuckDB
   * `list_reduce` oracle bit-for-bit), AND the same null behavior —
   * zip_with pads the shorter array with nulls and `acc + null` is null,
-  * so unequal lengths or any null element yield NULL. Matching the idiom
-  * completely is what makes [[graft.plans.DotProductRewrite]] a legal
-  * rewrite on arbitrary user queries, not just the engine's own.
+  * so unequal lengths or any null element yield NULL.
   */
 case class DotProduct(left: Expression, right: Expression)
     extends BinaryExpression {

@@ -1,32 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** SparkSessionExtensions entry point: registers the engine's native
-  * expressions for SQL callers —
+/** SQL names for the engine's native expressions —
   *
   *   spark.sql("SELECT rolling_hash(text), min_hash_sig(tokens, 32) …")
   *
-  * Activate with
-  *   .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-  * or `SparkSession.builder().withExtensions(new GraftExtensions)`.
+  * works once [[GraftExtensions.register]] has run on the session.
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftExtensions.rollingHashDesc)
-    ext.injectFunction(GraftExtensions.minHashSigDesc)
-    ext.injectFunction(GraftExtensions.simHashSigDesc)
-    ext.injectFunction(GraftExtensions.cosineSimDesc)
-    ext.injectOptimizerRule(_ => graft.plans.DotProductRewrite)
-    ext.injectOptimizerRule(_ => graft.plans.WindowTopKRewrite)
-    ext.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
-  }
-}
-
 object GraftExtensions {
 
   val rollingHashDesc: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (

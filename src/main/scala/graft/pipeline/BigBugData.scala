@@ -40,12 +40,21 @@ object BigBugData {
       groupPatterns: Seq[(String, String)] = Nil)
 
   final case class Outputs(
-      combined: DataFrame,   // long: taxID, sample, taxName, total, reads
-      rrpm: DataFrame,       // long: + total_reads, rpm, z_score, nc_*, rrpm
+      cells: DataFrame,      // one long row per (organism, sample) cell
       tophits: DataFrame,    // sampleName, taxID, taxName, rank, rRPM, stats…
       orderedSamples: Seq[String],
       grid: DataFrame,       // one row per organism, a slot per sample
-      samples: Seq[String])  // the grid's slots: samples in argument order
+      samples: Seq[String]) { // the grid's slots: samples in argument order
+    // the long outputs; [[write]] renders from `grid` and never reads
+    // them, so they are built (and analyzed) on first read only
+    /** taxID, sample, taxName, total, reads */
+    lazy val combined: DataFrame =
+      cells.select(TaxId, Sample, TaxName, "total_reads_organism", Reads)
+    /** combined's columns + total_reads, rpm, z_score, nc_*, rrpm */
+    lazy val rrpm: DataFrame =
+      cells.select(Sample, TaxId, TaxName, "total_reads_organism", Reads,
+        "total_reads", "rpm", "z_score", "nc_sample", "nc_rpm", "rrpm")
+  }
 
   /** Build the full dataflow; actions happen only in [[write]]. */
   def build(spark: SparkSession, params: Params): Outputs = {
@@ -93,13 +102,7 @@ object BigBugData {
         slotOf(totals).cast("long").as("total_reads"),
         slotOf(sampleIds.map(sampleToNc.get(_).orNull)).cast("string").as("nc_sample"))
 
-    Outputs(
-      cells.select(TaxId, Sample, TaxName, "total_reads_organism", Reads),
-      cells.select(Sample, TaxId, TaxName, "total_reads_organism", Reads,
-        "total_reads", "rpm", "z_score", "nc_sample", "nc_rpm", "rrpm"),
-      TopHits.tophits(cells, params.nTophits),
-      ordered,
-      grid,
+    Outputs(cells, TopHits.tophits(cells, params.nTophits), ordered, grid,
       sampleIds)
   }
 

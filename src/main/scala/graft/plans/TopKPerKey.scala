@@ -50,10 +50,9 @@ case class TopKPerKey(
 object TopKPerKey {
 
   /** Wrap `df` with the native operator: registers the strategy on the
-    * DataFrame's session (caller-supplied sessions don't carry the
-    * GraftExtensions builder config), resolves key/order attributes by
-    * name, and exposes the rank as column `rk` (long). `order` entries are
-    * (columnName, ascending). */
+    * DataFrame's session (the one place it is installed), resolves
+    * key/order attributes by name, and exposes the rank as column `rk`
+    * (long). `order` entries are (columnName, ascending). */
   def of(df: org.apache.spark.sql.DataFrame, keyNames: Seq[String],
       orderSpec: Seq[(String, Boolean)], k: Int): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending}

@@ -3,38 +3,25 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.operators.AsOfJoin
 
-/** Edge-case specs for the round-3 hardening fixes: DotProductRewrite
-  * seed-sign legality, AsOfJoin tie determinism, Tables.events conf
+/** Edge-case specs for the round-3 hardening fixes: DotProduct's
+  * empty-array sign, AsOfJoin tie determinism, Tables.events conf
   * isolation, raw-text sink fidelity. */
 class EdgeSpec extends SparkSuite {
 
-  test("DotProductRewrite does NOT fire on a -0.0 seed (sign-bit legality)") {
+  test("DotProduct is bit-identical to the HOF fold, and +0.0 on empty arrays") {
     val s2 = spark; import s2.implicits._
-    val df = Seq((Array.empty[Double], Array.empty[Double])).toDF("a", "b")
-    val hof = df.select(
-      aggregate(zip_with(col("a"), col("b"), (x, y) => x * y),
-        lit(-0.0), (acc, v) => acc + v).as("dot"))
-    val rewritten = graft.plans.DotProductRewrite(hof.queryExecution.analyzed)
-    assert(!rewritten.toString.contains("dot_product"),
-      "rule must not rewrite a fold seeded with -0.0")
-    // the HOF itself keeps the negative zero: 1/-0.0 = -Inf
-    val v = hof.collect().head.getDouble(0)
-    assert(1.0 / v == Double.NegativeInfinity)
-  }
-
-  test("DotProductRewrite on empty arrays returns +0.0, same as the HOF") {
-    val s2 = spark; import s2.implicits._
-    val df = Seq((Array.empty[Double], Array.empty[Double])).toDF("a", "b")
-    val hof = df.select(
-      aggregate(zip_with(col("a"), col("b"), (x, y) => x * y),
-        lit(0.0), (acc, v) => acc + v).as("dot"))
-    val rewritten = graft.plans.DotProductRewrite(hof.queryExecution.analyzed)
-    assert(rewritten.toString.contains("dot_product"), "rule should fire on +0.0")
-    val viaRule = org.apache.spark.sql.GraftBridge.ofRows(spark, rewritten)
-      .collect().head.getDouble(0)
-    val direct = hof.collect().head.getDouble(0)
-    assert(java.lang.Double.doubleToRawLongBits(viaRule) ==
-      java.lang.Double.doubleToRawLongBits(direct), "must be bit-identical (+0.0)")
+    val df = Seq((Array(1.0, 2.0, 3.0), Array(4.0, 5.0, 6.0)),
+      (Array(0.5, -1.0, 2.5), Array(1.5, 2.0, -0.5)),
+      (Array.empty[Double], Array.empty[Double])).toDF("a", "b")
+    val got = df.select(
+        graft.functions.DotProduct.dot_product(col("a"), col("b")),
+        aggregate(zip_with(col("a"), col("b"), (x, y) => x * y),
+          lit(0.0), (acc, v) => acc + v))
+      .collect().map(r => (r.getDouble(0), r.getDouble(1)))
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    got.foreach { case (dot, hof) =>
+      assert(bits(dot) == bits(hof), s"dot_product $dot != HOF fold $hof") }
+    assert(bits(got.last._1) == 0L, "empty arrays must give +0.0")
   }
 
   test("AsOfJoin: right rows tied on (key, time) resolve deterministically") {

@@ -271,23 +271,6 @@ class ExtensionsSpec extends SparkSuite {
       s"pq_encode must run inside WholeStageCodegen:\n$p")
   }
 
-  test("DotProductRewrite: HOF dot-product idiom becomes the compiled " +
-      "expression with identical results") {
-    val s2 = spark; import s2.implicits._
-    val df = Seq((Array(1.0, 2.0, 3.0), Array(4.0, 5.0, 6.0)),
-      (Array(0.5, -1.0, 2.5), Array(1.5, 2.0, -0.5))).toDF("a", "b")
-    val hof = df.select(
-      aggregate(zip_with(col("a"), col("b"), (x, y) => x * y),
-        lit(0.0), (acc, v) => acc + v).as("dot"))
-    val expected = hof.collect().map(_.getDouble(0)).toSeq
-    // apply the rule directly to the analyzed plan
-    val rewritten = graft.plans.DotProductRewrite(hof.queryExecution.analyzed)
-    assert(rewritten.toString.contains("dot_product"),
-      s"rule did not fire:\n${hof.queryExecution.analyzed}")
-    val viaRule = org.apache.spark.sql.GraftBridge.ofRows(spark, rewritten)
-    assert(viaRule.collect().map(_.getDouble(0)).toSeq == expected)
-  }
-
   test("SimHashSig matches the per-bit HOF reference formulation exactly") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"),
@@ -696,47 +679,6 @@ class ExtensionsSpec extends SparkSuite {
       litArr(goodDv.updated(3, null: java.lang.Double)),
       superCb, b, cs, ci, dims, 4, 2).eval(null) == null,
       "null-holed input must null")
-  }
-
-  test("WindowTopKRewrite: the row_number-filter idiom plans as the " +
-      "native TopKPerKeyExec and returns the identical rows") {
-    import org.apache.spark.sql.expressions.Window
-    // a session with the engine extensions loaded, sharing the suite's
-    // context (newSession keeps the SparkContext, fresh session state)
-    val s2 = spark.newSession()
-    s2.experimental.extraOptimizations =
-      s2.experimental.extraOptimizations :+ graft.plans.WindowTopKRewrite
-    s2.experimental.extraStrategies =
-      s2.experimental.extraStrategies :+ graft.plans.TopKPerKeyStrategy
-    val df = s2.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-    val w = Window.partitionBy(col("l_returnflag"))
-      .orderBy(col("l_extendedprice").desc, col("l_orderkey"),
-        col("l_linenumber"))
-    def topk(d: org.apache.spark.sql.DataFrame) = d
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 5)
-      .select("l_returnflag", "l_orderkey", "l_linenumber", "rn")
-    val rewritten = topk(df)
-    val physical = rewritten.queryExecution.executedPlan.toString
-    assert(physical.contains("TopKPerKey"),
-      s"the idiom must plan through the native operator:\n$physical")
-    assert(!physical.contains("Window [") &&
-      !physical.contains("WindowGroupLimit"),
-      "both the buffering window AND Spark's own group-limit (which " +
-        s"forces the wide sort) must be gone:\n$physical")
-    // identical rows vs the un-rewritten window formulation (total order,
-    // so the results are unique)
-    val plain = topk(spark.read
-      .parquet("/root/testdata/sf0.001/lineitem.parquet"))
-    assert(!plain.queryExecution.executedPlan.toString
-      .contains("TopKPerKeyExec"), "control session must NOT rewrite")
-    val a = rewritten.collect().map(_.toSeq).toSet
-    val b = plain.collect().map(_.toSeq).toSet
-    assert(a == b, "rewrite must be result-preserving")
-    // a filter the rule must NOT touch: rank() instead of row_number()
-    val ranked = df.withColumn("rn", rank().over(w)).filter(col("rn") <= 5)
-    assert(!ranked.queryExecution.executedPlan.toString
-      .contains("TopKPerKeyExec"), "rank() must not be rewritten")
   }
 
   test("salted aggregation equals plain aggregation on skewed data") {

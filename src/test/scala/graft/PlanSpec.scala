@@ -107,6 +107,17 @@ class PlanSpec extends SparkSuite {
       s"sort below the operator must cover the keys only:\n$sortLine")
   }
 
+  test("q103: the reservoir's row_number filter plans a WindowGroupLimit " +
+      "below the key exchange (K rows per group reach the shuffle)") {
+    val p = SparkEntry.queries("q103_reservoir")(spark, sf)
+      .queryExecution.executedPlan.toString
+    val at = p.indexOf("Exchange hashpartitioning(event_type")
+    assert(at >= 0, s"the window must shuffle by event_type:\n$p")
+    assert(p.substring(at).linesIterator.exists(l =>
+        l.contains("WindowGroupLimit") && l.contains(", 5, Partial")),
+      s"a K=5 partial WindowGroupLimit must feed the exchange:\n$p")
+  }
+
   test("dot_product and cosine_sim run INSIDE WholeStageCodegen " +
       "(no CodegenFallback break in the ANN inner loop)") {
     // non-literal input — a literal would constant-fold to LocalTableScan
