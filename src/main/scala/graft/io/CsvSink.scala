@@ -7,8 +7,14 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, StructsToCsv}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** CSV sinks (reference K1/K2/K3): fixed column order, header row, ONE
   * file per output (`csv.DictWriter`, `bigbugdata.py:208–222`).
@@ -17,21 +23,22 @@ import org.apache.spark.sql.functions._
   * inside the executors, with Spark's own CSV generator (`to_csv`, the
   * generator behind `DataFrameWriter.csv`) under the writer options the
   * sink has always used, so quoting, escaping and number formatting are
-  * the CSV writer's. ONE action ([[writeTagged]], [[withLines]]) then
-  * has every task spill its partition's lines, per output, into a local
-  * run file, sorted within the partition where the output has an order.
-  * The driver merges each output's runs (a k-way merge: one open stream
-  * and one pending line per run) into the target behind a header line it
-  * renders itself ([[csvCell]]). No range-sampling job, no exchange for a
-  * global sort, no committed part files.
+  * the CSV writer's ([[lines]] runs the same generator on the driver).
+  * ONE action ([[writeTagged]], [[withLines]]) then has every task spill
+  * its partition's lines, per output, into a local run file, sorted
+  * within the partition where the output has an order. The driver merges
+  * each output's runs (a k-way merge: one open stream and one pending
+  * line per run) into the target behind a header line it renders itself
+  * ([[csvCell]]). No range-sampling job, no exchange for a global sort,
+  * no committed part files.
   *
   * Driver memory: no line reaches the driver through the task results
-  * (each task returns nothing), so `spark.driver.maxResultSize` never
-  * applies and the driver holds one pending line per run, not the
-  * outputs. The runs live in a temporary directory that the tasks and the
-  * driver must both see (one machine, or a shared file system), as the
-  * part files of the old concatenating sink did; it is deleted after the
-  * write.
+  * (a task returns only its [[Side]] result, if any), so
+  * `spark.driver.maxResultSize` never applies to the lines and the
+  * driver holds one pending line per run, not the outputs. The runs live
+  * in a temporary directory that the tasks and the driver must both see
+  * (one machine, or a shared file system), as the part files of the old
+  * concatenating sink did; it is deleted after the write.
   */
 object CsvSink {
 
@@ -57,16 +64,55 @@ object CsvSink {
   /** one CSV line (no terminator) of `cells`, in order */
   def line(cells: Seq[Column]): Column = to_csv(struct(cells: _*), options)
 
+  /** `rows` (of `schema`) as CSV lines, rendered on the driver by the
+    * expression [[line]] compiles to, so the bytes are `to_csv`'s; runs
+    * no job */
+  def lines(schema: StructType, rows: Seq[InternalRow]): Iterator[Array[Byte]] = {
+    val toCsv = StructsToCsv(options.asScala.toMap,
+      BoundReference(0, schema, nullable = false), Some(SQLConf.get.sessionLocalTimeZone))
+    rows.iterator.map(r => toCsv.eval(InternalRow(r)).asInstanceOf[UTF8String].getBytes)
+  }
+
+  /** ONE action over `df`'s partitions, in Catalyst's row format (a row
+    * is reused for the next: copy what is kept): `f` maps a task's rows
+    * to its result rows, which are collected on the driver. Listeners see
+    * a "collect" of `df`. */
+  def collectPartitions(df: DataFrame)(
+      f: Iterator[InternalRow] => Iterator[InternalRow]): Array[InternalRow] =
+    SQLExecution.withNewExecutionId(df.queryExecution, Some("collect")) {
+      df.queryExecution.toRdd.mapPartitions(f).collect()
+    }
+
+  /** A task's fold over the rows it spills (all of the tagged frame's
+    * columns, in partition order): [[writeTagged]] offers it each row,
+    * then ships its result rows to the driver as the task's result. */
+  trait Side {
+    def offer(r: InternalRow): Unit
+    def result: Iterator[InternalRow]
+  }
+
+  private object NoSide extends Side {
+    def offer(r: InternalRow): Unit = ()
+    def result: Iterator[InternalRow] = Iterator.empty
+  }
+
   /** K1 for several outputs in ONE action. `tagged` has the columns
-    * (out: Int, k1: Long, k2: Long, line: String): output `i` is written
-    * to `outputs(i)._1` behind the header `outputs(i)._2`, its lines in
-    * (k1, k2) order (null k1 first, as `orderBy` ascending puts it). An
-    * output without lines gets the header alone. */
-  def writeTagged(tagged: DataFrame, outputs: Seq[(String, Seq[String])]): Unit =
-    withRuns(tagged.sortWithinPartitions("out", "k1", "k2")) { runs =>
-      outputs.zipWithIndex.foreach { case ((target, header), i) =>
-        writeLines(target, header, merge(runs(i)))
-      }
+    * (k1: Long, k2: Long), then one line column (String) per output: a
+    * row's i-th line, unless null, goes to `outputs(i)._1` behind the
+    * header `outputs(i)._2`, each output's lines in (k1, k2) order (null
+    * k1 first, as `orderBy` ascending puts it). An output without lines
+    * gets the header alone. The same action folds each task's rows into
+    * a `side()` (columns after the line columns are the side's alone)
+    * and returns every task's [[Side]] result rows; they are collected on
+    * the driver, so keep them small. */
+  def writeTagged(tagged: DataFrame, outputs: Seq[(String, Seq[String])],
+      side: () => Side = () => NoSide): Array[InternalRow] =
+    withRuns(tagged.sortWithinPartitions("k1", "k2"), outputs.size, side) {
+      (runs, results) =>
+        outputs.zipWithIndex.foreach { case ((target, header), i) =>
+          writeLines(target, header, merge(runs(i)))
+        }
+        results
     }
 
   /** K3 in ONE action: `df`'s rows (columns by position) as CSV lines in
@@ -76,13 +122,14 @@ object CsvSink {
     // columns renamed by position, so no name (a sample name may hold
     // dots or backticks) is ever parsed as a reference
     val pos = df.toDF(df.columns.indices.map(i => s"_$i"): _*)
-    withRuns(pos.select(lit(0).as("out"), lit(0L).as("k1"), lit(0L).as("k2"),
-        line(pos.columns.toSeq.map(col)).as("line"))) { runs =>
-      val lines = runs(0).iterator.flatMap(r =>
-        Iterator.unfold(())(_ => if (r.advance()) Some((r.line, ())) else None))
-      val any = lines.hasNext
-      if (any) sink(lines)
-      any
+    withRuns(pos.select(lit(0L).as("k1"), lit(0L).as("k2"),
+        line(pos.columns.toSeq.map(col)).as("line")), 1) {
+      (runs, _) =>
+        val lines = runs(0).iterator.flatMap(r =>
+          Iterator.unfold(())(_ => if (r.advance()) Some((r.line, ())) else None))
+        val any = lines.hasNext
+        if (any) sink(lines)
+        any
     }
   }
 
@@ -105,15 +152,21 @@ object CsvSink {
     w.flush()
   }
 
-  /** Run the ONE action that spills `tagged` (columns out, k1, k2, line;
-    * each partition already in its outputs' order) into run files, then
-    * hand `f` an output index's runs in partition order. */
-  private def withRuns[A](tagged: DataFrame)(f: (Int => Seq[Run]) => A): A = {
+  /** Run the ONE action that spills `tagged` (columns k1, k2, then `n`
+    * line columns; each partition already in (k1, k2) order) into run
+    * files, then hand `f` an output index's runs in partition order and
+    * the tasks' side results. */
+  private def withRuns[A](tagged: DataFrame, n: Int, side: () => Side = () => NoSide)(
+      f: (Int => Seq[Run], Array[InternalRow]) => A): A = {
     val dir = Files.createTempDirectory("graft_csv")
     val d = dir.toString
     val opened = mutable.ArrayBuffer.empty[Run]
     try {
-      tagged.foreachPartition((rows: Iterator[Row]) => spill(d, rows))
+      val results = collectPartitions(tagged) { rows =>
+        val s = side()
+        spill(d, n, rows.map { r => s.offer(r); r })
+        s.result
+      }
       val RunName = """o(\d+)-p(\d+)""".r
       val runs = listDir(dir).flatMap { p =>
         p.getFileName.toString match {
@@ -121,13 +174,12 @@ object CsvSink {
           case _ => None
         }
       }
-      f { out =>
+      f(out =>
         runs.filter(_._1 == out).sortBy(_._2).map { case (_, _, p) =>
           val r = new Run(p)
           opened += r
           r
-        }
-      }
+        }, results)
     } finally {
       opened.foreach(_.close())
       listDir(dir).foreach(Files.delete)
@@ -144,26 +196,32 @@ object CsvSink {
     * records (k1 is null, k1, k2, line length, line bytes); a run is
     * published under its final name only once complete, so a retried task
     * replaces its own runs */
-  private def spill(dir: String, rows: Iterator[Row]): Unit = {
+  private def spill(dir: String, n: Int, rows: Iterator[InternalRow]): Unit = {
     val ctx = TaskContext.get()
     val part = ctx.partitionId()
-    val runs = mutable.LinkedHashMap.empty[Int, (Path, DataOutputStream)]
+    val runs = new Array[(Path, DataOutputStream)](n)
     try rows.foreach { r =>
-      val out = runs.getOrElseUpdate(r.getInt(0), {
-        val tmp = Paths.get(dir,
-          s"o${r.getInt(0)}-p$part.${ctx.attemptNumber()}.tmp")
-        tmp -> new DataOutputStream(
-          new BufferedOutputStream(Files.newOutputStream(tmp), 1 << 16))
-      })._2
-      out.writeBoolean(r.isNullAt(1))
-      out.writeLong(if (r.isNullAt(1)) 0L else r.getLong(1))
-      out.writeLong(r.getLong(2))
-      val bytes = r.getString(3).getBytes(UTF_8)
-      out.writeInt(bytes.length)
-      out.write(bytes)
-    } finally runs.values.foreach(_._2.close())
-    runs.foreach { case (o, (tmp, _)) =>
-      Files.move(tmp, Paths.get(dir, s"o$o-p$part"),
+      var o = 0
+      while (o < n) {
+        if (!r.isNullAt(2 + o)) {
+          if (runs(o) == null) {
+            val tmp = Paths.get(dir, s"o$o-p$part.${ctx.attemptNumber()}.tmp")
+            runs(o) = tmp -> new DataOutputStream(
+              new BufferedOutputStream(Files.newOutputStream(tmp), 1 << 16))
+          }
+          val out = runs(o)._2
+          out.writeBoolean(r.isNullAt(0))
+          out.writeLong(if (r.isNullAt(0)) 0L else r.getLong(0))
+          out.writeLong(r.getLong(1))
+          val bytes = r.getUTF8String(2 + o).getBytes
+          out.writeInt(bytes.length)
+          out.write(bytes)
+        }
+        o += 1
+      }
+    } finally runs.foreach(r => if (r != null) r._2.close())
+    runs.zipWithIndex.foreach { case (r, o) =>
+      if (r != null) Files.move(r._1, Paths.get(dir, s"o$o-p$part"),
         StandardCopyOption.ATOMIC_MOVE)
     }
   }

@@ -300,13 +300,16 @@ class PipelineSpec extends SparkSuite {
       case _ => p.children.flatMap(nodes)
     })
     val out = fixture._1
-    val read = Seq(out.combined, out.rrpm, out.tophits).map(
+    // tophits ranks its candidates on the driver: the tasks' heaps read
+    // this frame of the organism rows
+    val candidates = out.grid.select(graft.ops.TopHits.inputs: _*)
+    val read = Seq(out.combined, out.rrpm, candidates).map(
       _.queryExecution.withCachedData.collect { case r: InMemoryRelation => r.cacheBuilder })
     assert(read.forall(_.size == 1), read.map(_.map(_.cachedName)))
     assert(read.flatten.forall(_ eq read.head.head),
-      "combined, rrpm and tophits must read the same cached organism rows")
+      "combined, rrpm and the tophits candidates must read the same cached organism rows")
 
-    for (df <- Seq(out.combined, out.rrpm, out.tophits)) {
+    for (df <- Seq(out.combined, out.rrpm, candidates)) {
       val all = nodes(df.queryExecution.executedPlan)
       assert(all.count(_.isInstanceOf[FileSourceScanExec]) == 1)
       // no cached relation of report rows: the one cache holds organisms
@@ -499,8 +502,83 @@ class PipelineSpec extends SparkSuite {
         rank = "species", nTophits = 2,
         groupPatterns = Seq(("Negative", "CF_DNA"))))
       marker()
-      assert(drainToMarker() == Seq("collect", "foreachPartition"))
+      assert(drainToMarker() == Seq("collect", "collect"))
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("a warm BigBugData.write runs one Spark job after the totals " +
+      "collect, and that action plans no exchange and no window above " +
+      "the organism cache") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.window.WindowExec
+    val params = BigBugData.Params(
+      reportPaths = fixture._2,
+      resultsDir = Files.createTempDirectory("graft_one_job_out").toString,
+      rank = "species", nTophits = 2,
+      groupPatterns = Seq(("Negative", "CF_DNA")))
+    BigBugData.write(spark, params) // warm
+    // per job, its SQL execution; per execution, its plan; None marks
+    // the marker (listener events arrive in order)
+    val jobs = new java.util.concurrent.LinkedBlockingQueue[Option[Long]]()
+    val plans = new java.util.concurrent.LinkedBlockingQueue[Option[QueryExecution]]()
+    val jobListener = new org.apache.spark.scheduler.SparkListener {
+      // the marker's SQL query runs a job too: only its count job marks
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val execution = Option(e.properties.getProperty("spark.sql.execution.id"))
+        if (e.properties.getProperty("spark.job.description") != "graft_marker")
+          jobs.put(Some(execution.get.toLong))
+        else if (execution.isEmpty) jobs.put(None)
+      }
+    }
+    val planListener = new org.apache.spark.sql.util.QueryExecutionListener {
+      private def record(qe: QueryExecution) =
+        plans.put(if (qe.logical.toString.contains("graft_marker")) None else Some(qe))
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = record(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = record(qe)
+    }
+    def marker(): Unit = {
+      spark.sparkContext.setJobDescription("graft_marker")
+      try {
+        spark.sql("SELECT 'graft_marker'").collect()
+        spark.sparkContext.parallelize(Seq(1), 1).count()
+      } finally spark.sparkContext.setJobDescription(null)
+    }
+    def drainToMarker[A](q: java.util.concurrent.LinkedBlockingQueue[Option[A]]): Seq[A] =
+      Iterator.continually(q.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile(a => a != null && a.isDefined).map(_.get).toList
+    spark.sparkContext.addSparkListener(jobListener)
+    spark.listenerManager.register(planListener)
+    try {
+      marker()
+      drainToMarker(jobs); drainToMarker(plans)
+      BigBugData.write(spark, params)
+      marker()
+      val executions = drainToMarker(plans)
+      assert(executions.size == 2, executions.map(_.logical.nodeName))
+      // the jobs by execution, in order: the totals collect's, then the
+      // write's one action's
+      val ran = drainToMarker(jobs)
+      val byExecution = ran.distinct.map(x => x -> ran.count(_ == x))
+      assert(byExecution.size == 2 && byExecution.last._2 == 1, byExecution)
+      // every node of the write's plan above the cached relation,
+      // including those inside adaptive plans and query stages
+      def above(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+        case a: AdaptiveSparkPlanExec => above(a.executedPlan)
+        case q: QueryStageExec => above(q.plan)
+        case _: InMemoryTableScanExec => Nil
+        case _ => p.children.flatMap(above)
+      })
+      val write = above(executions.last.executedPlan)
+      assert(write.exists(_.isInstanceOf[InMemoryTableScanExec]), write.map(_.nodeName))
+      assert(!write.exists(p => p.isInstanceOf[ShuffleExchangeLike] ||
+        p.isInstanceOf[WindowExec]), write.map(_.nodeName))
+    } finally {
+      spark.listenerManager.unregister(planListener)
+      spark.sparkContext.removeSparkListener(jobListener)
+    }
   }
 
   test("BigBugData.write over 33 report paths lists them on the driver: " +
@@ -547,10 +625,9 @@ class PipelineSpec extends SparkSuite {
     // k1, plus one null k1
     val k1 = coalesce(col("k1"), lit(-1L))
     val lines = spark.range(0, 20000, 1, 4)
-      .select(lit(0).as("out"), ((col("id") * 7919) % 20000).as("k1"),
-        lit(0L).as("k2"))
-      .union(spark.range(1).select(lit(0), lit(null).cast("long"), lit(0L)))
-      .select(col("out"), col("k1"), col("k2"),
+      .select(((col("id") * 7919) % 20000).as("k1"), lit(0L).as("k2"))
+      .union(spark.range(1).select(lit(null).cast("long"), lit(0L)))
+      .select(col("k1"), col("k2"),
         concat(coalesce(col("k1").cast("string"), lit("null")) +: lit(",") +:
           (0 until 6).map(i => sha2((k1 * 6 + i).cast("string"), 256)): _*)
           .as("line"))

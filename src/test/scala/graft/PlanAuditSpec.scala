@@ -26,8 +26,8 @@ class PlanAuditSpec extends SparkSuite {
 
   /** queries allowed a BroadcastNestedLoopJoin, and why the broadcast
     * side is bounded:
-    * - bb_e2e_combined / bb_e2e_rrpm / bb_e2e_tophits: the 1-row
-    *   control/total frame attaches to the sample universe
+    * - bb_e2e_combined / bb_e2e_rrpm: the 1-row control/total frame
+    *   attaches to the sample universe
     * - d6_ngram_jaccard: the pedagogical exact baseline, hard-bounded
     *   to doc_id < 150 on BOTH sides (d32 is the full-corpus twin)
     * - d15/d28/d33/d35/q18/q84/q87: a 1-row global statistic (corpus
@@ -42,7 +42,7 @@ class PlanAuditSpec extends SparkSuite {
     * - q31_range_join: the 3-row bucket dimension joins on a range
     *   predicate */
   private val bnljAllowed = Set(
-    "bb_e2e_combined", "bb_e2e_rrpm", "bb_e2e_tophits",
+    "bb_e2e_combined", "bb_e2e_rrpm",
     "d6_ngram_jaccard",
     "d15_tfidf_topterms", "d28_temperature_mix",
     "e18_e2e_vector_pipeline", "e18c_e2e_sharded_pipeline",
@@ -108,9 +108,6 @@ class PlanAuditSpec extends SparkSuite {
     * structurally in the rule itself — that key scales with the cluster
     * by construction; it IS the `PrefixScan` discipline.) */
   private val lowCardWindowAllowed: Map[String, String] = Map(
-    "bb_e2e_tophits" -> ("per-sample top-K (reference contract W1): key " +
-      "count = #samples, grows with the corpus (4 on the fixture); " +
-      "per-key frame bounded by the rank-filtered taxa universe"),
     "bb_tophits" -> ("same W1 shape over the events analog: per-user " +
       "top-K, user count grows with the corpus, per-key frame bounded " +
       "by the event-type universe"),

@@ -82,6 +82,80 @@ class PropertySpec extends SparkSuite {
     }
   }
 
+  test("tophits heaps equal the window form over generated grids: rrpm " +
+      "ties across partitions, null/NaN/0.0/-0.0 rrpm, K = 0 and K > T, a " +
+      "sample with no report rows, null stats in the top K, 1/3/8 partitions") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types._
+    import graft.ops.TopHits
+    val statsType = StructType(Seq(StructField("kmers", LongType),
+      StructField("dup", DoubleType), StructField("reads", LongType),
+      StructField("cov", DoubleType), StructField("e_val", DoubleType)))
+    val gridType = StructType(Seq(StructField("taxID", LongType),
+      StructField("taxName", StringType), StructField("rrpm", ArrayType(DoubleType)),
+      StructField("z_score", ArrayType(DoubleType)), StructField("stats", ArrayType(statsType))))
+    // few distinct values, so rrpm ties span organisms and partitions
+    val rrpmGen = Gen.oneOf[java.lang.Double](null, Double.NaN, 0.0, -0.0, 1.0, 2.5, 7.0)
+    val zGen = Gen.oneOf[java.lang.Double](null, Double.NaN, -1.5, 0.0, 2.0)
+    val statsGen: Gen[Row] = Gen.frequency(1 -> Gen.const(null: Row), 2 -> (for {
+      kmers <- Gen.choose(0L, 99L)
+      reads <- Gen.choose(1L, 9L)
+      dup <- Gen.oneOf(0.5, 1.0)
+    } yield Row(kmers, dup, reads, 0.25, kmers.toDouble / reads * 0.25)))
+    // organism rows over `nSlots` report samples plus one last sample
+    // with no report rows (every stats cell null)
+    val gridGen = for {
+      nSlots <- Gen.choose(1, 4)
+      nTaxa <- Gen.choose(0, 12)
+      taxIds <- Gen.pick(nTaxa, 10L to 60L)
+      rows <- Gen.sequence[Seq[Row], Row](taxIds.map(t => for {
+        rrpm <- Gen.listOfN(nSlots + 1, rrpmGen)
+        z <- Gen.listOfN(nSlots + 1, zGen)
+        stats <- Gen.listOfN(nSlots, statsGen)
+      } yield Row(t, s"T$t", rrpm, z, stats :+ null)))
+    } yield (nSlots + 1, rows)
+    // the window form TopHits ran before the heaps, over exploded cells
+    def window(grid: DataFrame, samples: Seq[String], k: Int): DataFrame = {
+      val cells = grid.select(col("taxID"), col("taxName"),
+          posexplode(arrays_zip(col("rrpm"), col("z_score"), col("stats"))).as(Seq("_slot", "_c")))
+        .select(col("taxID"), col("taxName"), col("_c.*"),
+          element_at(array(samples.map(lit): _*), col("_slot") + 1).as("sample"))
+      val w = Window.partitionBy(col("sample")).orderBy(col("rrpm").desc, col("taxID").asc)
+      cells.withColumn("rank", row_number().over(w))
+        .filter(col("rank") <= k)
+        .filter(col("stats").isNotNull)
+        .select(col("sample").as("sampleName"), col("taxID"), col("taxName"),
+          col("rank"), col("rrpm").as("rRPM"),
+          col("stats.kmers"), col("stats.dup"), col("stats.reads"),
+          col("stats.cov"), col("stats.e_val"), col("z_score"))
+    }
+    var gaps = 0
+    forSamples(gridGen, 10) { case (nSlots, rows) =>
+      val samples = (0 until nSlots).map(i => s"S$i")
+      for (k <- Seq(0, 1, 3, rows.size + 2)) {
+        val want = window(spark.createDataFrame(
+          spark.sparkContext.parallelize(rows, 1), gridType), samples, k)
+        val wantSeq = want.collect().toSeq
+          .sortBy(r => (samples.indexOf(r.getString(0)), r.getInt(3)))
+        gaps += wantSeq.groupBy(_.getString(0)).values
+          .count(rs => rs.map(_.getInt(3)) != (1 to rs.size))
+        // rows compare by their rendering, which tells -0.0 from 0.0
+        val wantRows = wantSeq.map(_.toString)
+        for (parts <- Seq(1, 3, 8)) {
+          val grid = spark.createDataFrame(spark.sparkContext.parallelize(rows, parts), gridType)
+          val got = TopHits.tophits(grid, samples, samples.indices, k)
+          assert(got.schema.map(f => f.name -> f.dataType) ==
+            want.schema.map(f => f.name -> f.dataType))
+          assert(got.collect().toSeq.map(_.toString) == wantRows,
+            s"k=$k, $parts partitions, grid ${rows.mkString("; ")}")
+        }
+      }
+    }
+    assert(gaps > 0, "no generated grid put a null-stats cell inside the top K")
+  }
+
   test("asof join with carried value: tied right rows yield the " +
       "lexicographically-greatest value, deterministically") {
     val rowsGen = Gen.zip(Gen.listOfN(8, Gen.choose(0L, 20L)),
