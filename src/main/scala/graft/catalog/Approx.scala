@@ -81,7 +81,7 @@ object Approx {
       .cache()
     // (doc, band, band_key) — keys ONLY: the expensive shingle arrays
     // must not ride through the bucket join + pair dedup
-    // compiled Md5MinHashKM: one digest + K integer lanes per shingle
+    // compiled md5_minhash_km: one digest + K integer lanes per shingle
     // in a tight codegen loop — the HOF formulation of the same
     // arithmetic ran interpreted lambdas per (shingle, lane) and cost
     // ~3.4 s/pass at sf0.1 vs ~1 s compiled
@@ -128,7 +128,7 @@ object Approx {
   }
 
   /** (doc_id, hi, lo) simhash words of a (doc_id, text) frame via the
-    * compiled Md5SimHashWords kernel. `barrier = true` caches the raw
+    * compiled md5_simhash_words kernel. `barrier = true` caches the raw
     * word array so downstream fan-out (banding + both verify sides of
     * d44) evaluates the kernel once per doc — streaming callers must
     * pass false (persist is illegal on a streaming frame; the kernel
@@ -1467,7 +1467,7 @@ object Approx {
     * function of C (fixed seed base, ivfFlatCentroids), so the memo key
     * needs no content fingerprint; sharing one instance across every
     * ScaledC assignment at that C (the member and eval probe columns,
-    * and every scaled entry in one session) keeps case-class equality on IvfProbes2B — and with it codegen
+    * and every scaled entry in one session) keeps case-class equality on the ivf_probes2b call — and with it codegen
     * CSE — intact, and re-broadcasts nothing. applicationId scopes the
     * memo to the live SparkContext (a fresh context gets fresh
     * broadcasts; entries of a stopped context are a few stale handles,
@@ -1483,7 +1483,7 @@ object Approx {
   /** the two-level probe-kernel column of the ScaledC tiers (built by
     * shardedAssign for members and reused by evalProbesByC): identical
     * arithmetic either way — below BcastCMin the child codebook rides
-    * inline; at/above it ships as a broadcast (IvfProbes2B) so a corpus-scaled C doesn't serialize
+    * inline; at/above it ships as a broadcast (ivf_probes2b) so a corpus-scaled C doesn't serialize
     * megabytes into every task binary. */
   private[graft] def probes2Col(spark: SparkSession, c: Int, smax: Int,
       dims: Int, p: Int): Column = {
@@ -1560,7 +1560,7 @@ object Approx {
   }
 
   /** e2b's hyperplane components flattened [plane*dims + d] for the
-    * compiled IvfSims kernel (plane index = table*P + bit). Distinct
+    * compiled ivf_sims kernel (plane index = table*P + bit). Distinct
     * seed base from e2's planes and the IVF centroids. */
   private[graft] val LshSeedBase = 0x4C534800L
   private[graft] def lshFlatPlanes(nPlanes: Int, dims: Int = 64): Array[Double] =
@@ -1570,7 +1570,7 @@ object Approx {
     * P = scaledPlanes(n), Hamming-1 multiprobe on the query side (the
     * exact bucket plus each one-bit flip — P+1 probes per table), then
     * e2's exact-cosine re-rank tail. All 8·P projections run through
-    * the compiled IvfSims codebook kernel — a literal plane array at
+    * the compiled ivf_sims codebook kernel — a literal plane array at
     * P=16 would put 8·16·64 doubles into the plan. Sign convention is
     * STRICTLY positive (`s > 0.0`), matching the oracle's CASE.
     *
@@ -1827,7 +1827,7 @@ object Approx {
 
   /** shared PQ corpus encode: vec_id, dv, code1..codeM, sse — e6 emits
     * it, e7 serves from it. Round 7: the M×K×Sub distance grid runs in
-    * the compiled PqEncode kernel (one codegen'd loop pass per vector)
+    * the compiled pq_encode kernel (one codegen'd loop pass per vector)
     * instead of nested interpreted HOF lambdas — identical fold order,
     * so the oracle stays bit-exact (measured 1.36→~0.4 s at sf0.1).
     * Deliberately NOT memoized across calls: the .cache() below is a
@@ -1891,7 +1891,7 @@ object Approx {
         val enc = pqEncode(s, dir)
         val q = enc.filter(col("vec_id") < 8)
           .select(col("vec_id").as("q_id"), col("dv").as("qv"))
-        // Σ_m ||q_sub(m) − cb[m][code_m]||² in the compiled PqAdc
+        // Σ_m ||q_sub(m) − cb[m][code_m]||² in the compiled pq_adc
         // kernel — fold order identical to the oracle's bare `+` chains
         // (init-0.0 folds are exact: all terms ≥ 0, and 0.0 + x == x)
         val codesArr = array((1 to PqM).map(m => col(s"code$m")): _*)
@@ -1949,7 +1949,7 @@ object Approx {
         // 64-bit simhash: bit j is set iff the sum over distinct tokens
         // of (+1 if token-hash bit j set, else -1) is positive. Catalog
         // mode hashes tokens with ONE md5 each via the compiled
-        // Md5SimHashWords kernel (votes folded into two 32-bit words in
+        // md5_simhash_words kernel (votes folded into two 32-bit words in
         // a tight codegen loop — the HOF formulations measured 17 s,
         // then 2.7 s; the kernel ~0.3 s at sf0.1), so every bit-vote is
         // recomputable in DuckDB and the signature carries a FULL
@@ -2165,7 +2165,7 @@ object Approx {
         // corpus. Recall lost to deeper buckets is bought back with
         // Hamming-1 multiprobe: each query probes its exact bucket plus
         // the P one-bit-flip neighbors in every table. All 8·P
-        // projections run through the compiled IvfSims codebook kernel
+        // projections run through the compiled ivf_sims codebook kernel
         // (a literal plane array at P=16 would put 8·16·64 doubles into
         // the plan); the oracle re-derives the SAME P from COUNT(*) and
         // regenerates the SAME planes by emulating mixToUnit in HUGEINT
@@ -2294,7 +2294,7 @@ object Approx {
         // corpus (scaledCAt: mean cell <= 32 on a power-of-two ladder),
         // so within-cell pair work stays linear instead of N²/C at fixed
         // C=16 — measured 225 s → ~2 s at sf0.5. Coarse scoring runs
-        // through the compiled TWO-LEVEL IvfProbes2 kernel: S ≈ √C
+        // through the compiled TWO-LEVEL ivf_probes2 kernel: S ≈ √C
         // supers, then only the top-2 supers' children — O(√C·dims) per
         // row, so assignment is O(n^1.5) at C ∝ n instead of the flat
         // kernel's O(n²) (round-11's named scale-killer). The oracle

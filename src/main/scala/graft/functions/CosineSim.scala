@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.DoubleType
 
 /** Fused cosine similarity of two double arrays in ONE pass.
   *
@@ -22,32 +19,6 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * Null semantics mirror DotProduct (and the HOF idiom): unequal lengths
   * or any null element yield NULL.
   */
-case class CosineSim(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "cosine_sim"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    CosineSim.cosineOrNull(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  /** full whole-stage codegen (round-3 review item): one shared kernel
-    * for both paths, boxed null for the mismatch/null-element cases. */
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val tmp = ctx.freshName("cosRes")
-      s"""
-        java.lang.Double $tmp = graft.functions.CosineSim.cosineOrNull($a, $b);
-        if ($tmp == null) { ${ev.isNull} = true; }
-        else { ${ev.value} = $tmp.doubleValue(); }
-      """
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): CosineSim = copy(left = newLeft, right = newRight)
-}
-
 object CosineSim {
 
   /** shared interpreted + codegen kernel; boxed so NULL is expressible */
@@ -71,5 +42,6 @@ object CosineSim {
   }
 
   def cosine_sim(a: Column, b: Column): Column =
-    GraftBridge.column(CosineSim(GraftBridge.expression(a), GraftBridge.expression(b)))
+    KernelCall.column(this, "cosine_sim", "cosineOrNull", DoubleType, Seq(a, b),
+      mayReturnNull = true)
 }

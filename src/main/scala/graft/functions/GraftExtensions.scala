@@ -1,52 +1,40 @@
 package graft.functions
 
+import org.apache.spark.sql.{Column, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
 /** SQL names for the engine's native expressions —
   *
   *   spark.sql("SELECT rolling_hash(text), min_hash_sig(tokens, 32) …")
   *
-  * works once [[GraftExtensions.register]] has run on the session.
+  * works once [[GraftExtensions.register]] has run on the session. Each
+  * name builds its Column builder's [[KernelCall]].
   */
 object GraftExtensions {
 
-  val rollingHashDesc: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("rolling_hash"),
-    new ExpressionInfo(classOf[RollingHash].getName, "rolling_hash"),
-    (exprs: Seq[Expression]) => RollingHash(exprs.head))
+  /** runtime registration for an existing session (tests, notebooks) */
+  def register(spark: SparkSession): Unit = {
+    def function(name: String)(build: Seq[Expression] => Column): Unit =
+      spark.sessionState.functionRegistry.registerFunction(FunctionIdentifier(name),
+        new ExpressionInfo(classOf[KernelCall].getName, name),
+        (exprs: Seq[Expression]) => GraftBridge.expression(build(exprs)))
+    def col(e: Expression): Column = GraftBridge.column(e)
 
-  val minHashSigDesc: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("min_hash_sig"),
-    new ExpressionInfo(classOf[MinHashSig].getName, "min_hash_sig"),
-    (exprs: Seq[Expression]) => {
+    function("rolling_hash")(es => RollingHash.rolling_hash(col(es.head)))
+    function("min_hash_sig") { exprs =>
       if (exprs.length != 2)
         throw new IllegalArgumentException(
           s"min_hash_sig(tokens, k) takes 2 arguments, got ${exprs.length}")
       val k = exprs(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v.toInt
+        case Literal(v: Int, _) => v
+        case Literal(v: Long, _) => v.toInt
         case other => throw new IllegalArgumentException(
           s"min_hash_sig k must be an integer literal, got: ${other.sql}")
       }
-      MinHashSig(exprs.head, k)
-    })
-
-  val simHashSigDesc: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("sim_hash_sig"),
-    new ExpressionInfo(classOf[SimHashSig].getName, "sim_hash_sig"),
-    (exprs: Seq[Expression]) => SimHashSig(exprs.head))
-
-  val cosineSimDesc: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("cosine_sim"),
-    new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),
-    (exprs: Seq[Expression]) => CosineSim(exprs(0), exprs(1)))
-
-  /** runtime registration for an existing session (tests, notebooks) */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    Seq(rollingHashDesc, minHashSigDesc, simHashSigDesc, cosineSimDesc).foreach {
-      case (id, info, builder) => reg.registerFunction(id, info, builder)
+      MinHashSig.min_hash_sig(col(exprs.head), k)
     }
+    function("sim_hash_sig")(es => SimHashSig.sim_hash_sig(col(es.head)))
+    function("cosine_sim")(es => CosineSim.cosine_sim(col(es(0)), col(es(1))))
   }
 }

@@ -2,9 +2,6 @@ package graft.functions
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -18,8 +15,8 @@ import org.apache.spark.sql.types._
   * These kernels run the IDENTICAL arithmetic as one tight loop over a
   * flattened centroid codebook that rides as a reference object in the
   * generated class — plan size O(1). Approx.shardedAssign scores every
-  * IVF catalog entry through them: the flat IvfProbes for the fixed-C
-  * tier (e8/e16), the two-level IvfProbes2/IvfProbes2B for the
+  * IVF catalog entry through them: the flat ivf_probes for the fixed-C
+  * tier (e8/e16), the two-level ivf_probes2/ivf_probes2b for the
   * count-scaled tiers.
   *
   * Bit-exactness contract (what keeps the e8/e8b oracles green): each
@@ -63,7 +60,9 @@ object IvfKernels {
   }
 
   def ivf_sims(dv: Column, cb: Array[Double], dims: Int): Column =
-    GraftBridge.column(IvfSims(GraftBridge.expression(dv), cb, dims))
+    KernelCall.column(this, "ivf_sims", "simsOrNull",
+      ArrayType(DoubleType, containsNull = false), Seq(dv), Seq(cb, dims),
+      mayReturnNull = true)
 
   /** top-P probe cells (1-based) by (sim DESC, cell ASC) in one pass:
     * O(C·dims) multiplies + O(C·P) insertion, vs the declarative
@@ -112,7 +111,7 @@ object IvfKernels {
   }
 
   def ivf_probes(dv: Column, cb: Array[Double], dims: Int, p: Int): Column =
-    GraftBridge.column(IvfProbes(GraftBridge.expression(dv), cb, dims, p))
+    probes("ivf_probes", "probesOrNull", dv, Seq(cb, dims, p))
 
   /** Two-level coarse assignment — the sub-quadratic replacement for the
     * flat scan at corpus-scaled C (Approx.scaledCAt grows C ∝ n, so the
@@ -214,8 +213,8 @@ object IvfKernels {
   def ivf_probes2(dv: Column, superCb: Array[Double], cb: Array[Double],
       childStart: Array[Int], childIds: Array[Int], dims: Int, p: Int,
       sProbes: Int): Column =
-    GraftBridge.column(IvfProbes2(GraftBridge.expression(dv), superCb, cb,
-      childStart, childIds, dims, p, sProbes))
+    probes("ivf_probes2", "probes2OrNull", dv,
+      Seq(superCb, cb, childStart, childIds, dims, p, sProbes))
 
   /** broadcast-codebook variant of ivf_probes2 for corpus-scaled C: at
     * C=8192 the inline child codebook is C·dims·8 = 4.0 MiB serialized
@@ -231,149 +230,13 @@ object IvfKernels {
   def ivf_probes2b(dv: Column, superCb: Array[Double],
       cbB: Broadcast[Array[Double]], childStart: Array[Int],
       childIds: Array[Int], dims: Int, p: Int, sProbes: Int): Column =
-    GraftBridge.column(IvfProbes2B(GraftBridge.expression(dv), superCb, cbB,
-      childStart, childIds, dims, p, sProbes))
-}
+    probes("ivf_probes2b", "probes2OrNull", dv,
+      Seq(superCb, cbB, childStart, childIds, dims, p, sProbes))
 
-case class IvfSims(child: Expression, cb: Array[Double], dims: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "ivf_sims"
-
-  override def nullSafeEval(a: Any): Any =
-    IvfKernels.simsOrNull(a.asInstanceOf[ArrayData], cb, dims)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cbRef = ctx.addReferenceObj("ivfCodebook", cb, "double[]")
-    nullSafeCodeGen(ctx, ev, a => {
-      val tmp = ctx.freshName("ivfSims")
-      s"""
-        org.apache.spark.sql.catalyst.util.ArrayData $tmp =
-          graft.functions.IvfKernels.simsOrNull($a, $cbRef, $dims);
-        if ($tmp == null) { ${ev.isNull} = true; }
-        else { ${ev.value} = $tmp; }
-      """
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): IvfSims =
-    copy(child = newChild)
-}
-
-/** the two-level probe expression (see IvfKernels.probes2OrNull for the
-  * full determinism contract); the flattened super codebook, child
-  * codebook, and child-index arrays ride as reference objects in the
-  * generated class exactly like IvfProbes' codebook */
-case class IvfProbes2(child: Expression, superCb: Array[Double],
-    cb: Array[Double], childStart: Array[Int], childIds: Array[Int],
-    dims: Int, p: Int, sProbes: Int) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "ivf_probes2"
-
-  override def nullSafeEval(a: Any): Any =
-    IvfKernels.probes2OrNull(a.asInstanceOf[ArrayData], superCb, cb,
-      childStart, childIds, dims, p, sProbes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val supRef = ctx.addReferenceObj("ivfSuperCodebook", superCb, "double[]")
-    val cbRef = ctx.addReferenceObj("ivfCodebook", cb, "double[]")
-    val csRef = ctx.addReferenceObj("ivfChildStart", childStart, "int[]")
-    val ciRef = ctx.addReferenceObj("ivfChildIds", childIds, "int[]")
-    nullSafeCodeGen(ctx, ev, a => {
-      val tmp = ctx.freshName("ivfProbes2")
-      s"""
-        org.apache.spark.sql.catalyst.util.ArrayData $tmp =
-          graft.functions.IvfKernels.probes2OrNull($a, $supRef, $cbRef,
-            $csRef, $ciRef, $dims, $p, $sProbes);
-        if ($tmp == null) { ${ev.isNull} = true; }
-        else { ${ev.value} = $tmp; }
-      """
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): IvfProbes2 =
-    copy(child = newChild)
-}
-
-/** IvfProbes2 with the CHILD codebook behind a SparkContext.broadcast
-  * (see IvfKernels.ivf_probes2b for why): identical arithmetic and
-  * determinism contract — both eval paths call the same
-  * probes2OrNull — only the transport of the C·dims array differs.
-  * Codegen resolves `value()` ONCE into a mutable field at generated-
-  * class init (one BlockManager lookup per partition init, a local
-  * array read per row — never a per-row value() call); the interpreted
-  * path calls `.value` per eval, which TorrentBroadcast caches after
-  * the first fetch. The broadcast handle serializes at a few hundred
-  * bytes, so the expression's task-binary footprint is the small
-  * inline arrays only. Instances for the same C share one broadcast
-  * via Approx.cbBcast's driver-side memo, so case-class equality (and
-  * with it codegen CSE / canonicalization) holds across call sites. */
-case class IvfProbes2B(child: Expression, superCb: Array[Double],
-    cbB: Broadcast[Array[Double]], childStart: Array[Int],
-    childIds: Array[Int], dims: Int, p: Int, sProbes: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "ivf_probes2b"
-
-  override def nullSafeEval(a: Any): Any =
-    IvfKernels.probes2OrNull(a.asInstanceOf[ArrayData], superCb, cbB.value,
-      childStart, childIds, dims, p, sProbes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val supRef = ctx.addReferenceObj("ivfSuperCodebook", superCb, "double[]")
-    val bRef = ctx.addReferenceObj("ivfCbBcast", cbB,
-      "org.apache.spark.broadcast.Broadcast")
-    // resolved once per generated-class init: the per-row loop reads a
-    // plain double[] field, exactly like the inline variant
-    val cbField = ctx.addMutableState("double[]", "ivfCbResolved",
-      v => s"$v = (double[]) $bRef.value();")
-    val csRef = ctx.addReferenceObj("ivfChildStart", childStart, "int[]")
-    val ciRef = ctx.addReferenceObj("ivfChildIds", childIds, "int[]")
-    nullSafeCodeGen(ctx, ev, a => {
-      val tmp = ctx.freshName("ivfProbes2b")
-      s"""
-        org.apache.spark.sql.catalyst.util.ArrayData $tmp =
-          graft.functions.IvfKernels.probes2OrNull($a, $supRef, $cbField,
-            $csRef, $ciRef, $dims, $p, $sProbes);
-        if ($tmp == null) { ${ev.isNull} = true; }
-        else { ${ev.value} = $tmp; }
-      """
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): IvfProbes2B =
-    copy(child = newChild)
-}
-
-case class IvfProbes(child: Expression, cb: Array[Double], dims: Int, p: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "ivf_probes"
-
-  override def nullSafeEval(a: Any): Any =
-    IvfKernels.probesOrNull(a.asInstanceOf[ArrayData], cb, dims, p)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cbRef = ctx.addReferenceObj("ivfCodebook", cb, "double[]")
-    nullSafeCodeGen(ctx, ev, a => {
-      val tmp = ctx.freshName("ivfProbes")
-      s"""
-        org.apache.spark.sql.catalyst.util.ArrayData $tmp =
-          graft.functions.IvfKernels.probesOrNull($a, $cbRef, $dims, $p);
-        if ($tmp == null) { ${ev.isNull} = true; }
-        else { ${ev.value} = $tmp; }
-      """
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): IvfProbes =
-    copy(child = newChild)
+  /** the probe kernels' call: 1-based cell ids, null on out-of-contract
+    * input */
+  private def probes(name: String, method: String, dv: Column,
+      constants: Seq[Any]): Column =
+    KernelCall.column(this, name, method, ArrayType(LongType, containsNull = false),
+      Seq(dv), constants, mayReturnNull = true)
 }

@@ -1,9 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -101,30 +98,10 @@ object Md5Sketch {
   }
 
   def md5_minhash_km(c: Column, k: Int): Column =
-    GraftBridge.column(Md5MinHashKM(GraftBridge.expression(c), k))
+    KernelCall.column(this, "md5_minhash_km", "minhashKM",
+      ArrayType(LongType, containsNull = false), Seq(c), Seq(k))
 
   def md5_simhash_words(c: Column): Column =
-    GraftBridge.column(Md5SimHashWords(GraftBridge.expression(c)))
-}
-
-case class Md5MinHashKM(child: Expression, k: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "md5_minhash_km"
-  override def nullSafeEval(input: Any): Any =
-    Md5Sketch.minhashKM(input.asInstanceOf[ArrayData], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Md5Sketch.minhashKM($c, $k)")
-  override protected def withNewChildInternal(newChild: Expression): Md5MinHashKM =
-    copy(child = newChild)
-}
-
-case class Md5SimHashWords(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "md5_simhash_words"
-  override def nullSafeEval(input: Any): Any =
-    Md5Sketch.simhashWords(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Md5Sketch.simhashWords($c)")
-  override protected def withNewChildInternal(newChild: Expression): Md5SimHashWords =
-    copy(child = newChild)
+    KernelCall.column(this, "md5_simhash_words", "simhashWords",
+      ArrayType(LongType, containsNull = false), Seq(c))
 }

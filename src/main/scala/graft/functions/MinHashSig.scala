@@ -1,9 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.types._
@@ -21,23 +18,6 @@ import org.apache.spark.sql.types._
   * d7 LSH signature stage stays inside WholeStageCodegen with no
   * per-row interpreted hand-off.
   */
-case class MinHashSig(child: Expression, k: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "min_hash_sig"
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashSig.signature(input.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.MinHashSig.signature($c, $k)")
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-    copy(child = newChild)
-}
-
 object MinHashSig {
 
   /** shared interpreted + codegen kernel (never null: empty input array
@@ -64,5 +44,6 @@ object MinHashSig {
   }
 
   def min_hash_sig(c: Column, k: Int): Column =
-    GraftBridge.column(MinHashSig(GraftBridge.expression(c), k))
+    KernelCall.column(this, "min_hash_sig", "signature",
+      ArrayType(LongType, containsNull = false), Seq(c), Seq(k))
 }

@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -90,70 +87,14 @@ object PqKernels {
 
   def pq_encode(dv: Column, cb: Array[Double], M: Int, K: Int,
       sub: Int): Column =
-    GraftBridge.column(PqEncode(GraftBridge.expression(dv), cb, M, K, sub))
+    KernelCall.column(this, "pq_encode", "encodeOrNull", StructType(Seq(
+        StructField("codes", ArrayType(LongType, containsNull = false),
+          nullable = false),
+        StructField("sse", DoubleType, nullable = false))),
+      Seq(dv), Seq(cb, M, K, sub), mayReturnNull = true)
 
   def pq_adc(qv: Column, codes: Column, cb: Array[Double], M: Int, K: Int,
       sub: Int): Column =
-    GraftBridge.column(
-      PqAdc(GraftBridge.expression(qv), GraftBridge.expression(codes),
-        cb, M, K, sub))
-}
-
-case class PqEncode(child: Expression, cb: Array[Double], m: Int, k: Int,
-    sub: Int) extends UnaryExpression {
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("codes", ArrayType(LongType, containsNull = false),
-      nullable = false),
-    StructField("sse", DoubleType, nullable = false)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "pq_encode"
-
-  override def nullSafeEval(a: Any): Any =
-    PqKernels.encodeOrNull(a.asInstanceOf[ArrayData], cb, m, k, sub)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cbRef = ctx.addReferenceObj("pqCodebook", cb, "double[]")
-    nullSafeCodeGen(ctx, ev, a => {
-      val tmp = ctx.freshName("pqEnc")
-      s"""
-        org.apache.spark.sql.catalyst.InternalRow $tmp =
-          graft.functions.PqKernels.encodeOrNull(
-          $a, $cbRef, $m, $k, $sub);
-        if ($tmp == null) { ${ev.isNull} = true; }
-        else { ${ev.value} = $tmp; }
-      """
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): PqEncode =
-    copy(child = newChild)
-}
-
-case class PqAdc(left: Expression, right: Expression, cb: Array[Double],
-    m: Int, k: Int, sub: Int) extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "pq_adc"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    PqKernels.adcOrNull(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-      cb, m, k, sub)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cbRef = ctx.addReferenceObj("pqCodebook", cb, "double[]")
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val tmp = ctx.freshName("pqAdc")
-      s"""
-        java.lang.Double $tmp = graft.functions.PqKernels.adcOrNull(
-          $a, $b, $cbRef, $m, $k, $sub);
-        if ($tmp == null) { ${ev.isNull} = true; }
-        else { ${ev.value} = $tmp.doubleValue(); }
-      """
-    })
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): PqAdc = copy(left = newLeft, right = newRight)
+    KernelCall.column(this, "pq_adc", "adcOrNull", DoubleType, Seq(qv, codes),
+      Seq(cb, M, K, sub), mayReturnNull = true)
 }

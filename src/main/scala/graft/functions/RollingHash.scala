@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Polynomial rolling hash (Rabin–Karp style) over a string's UTF-8 bytes:
@@ -16,35 +13,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * for the training-data pipeline surface (content-defined chunking /
   * incremental near-dup detection at 100 TB scale).
   */
-case class RollingHash(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "rolling_hash"
-
-  private val Mod = (1L << 61) - 1
-
-  override def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[UTF8String].getBytes
-    var h = 0L
-    var i = 0
-    while (i < bytes.length) {
-      // h*31 stays < 2^66; split to avoid overflow: use Math.floorMod on
-      // 128-bit-safe decomposition — h < 2^61, 31*h < 2^66 overflows Long,
-      // so reduce via (h << 5 - h) with intermediate mod.
-      h = RollingHash.mulMod31(h, bytes(i) & 0xffL)
-      i += 1
-    }
-    java.lang.Long.valueOf(h)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.RollingHash.hashBytes($c.getBytes())")
-
-  override protected def withNewChildInternal(newChild: Expression): RollingHash =
-    copy(child = newChild)
-}
-
 object RollingHash {
   private val Mod = (1L << 61) - 1
 
@@ -62,7 +30,6 @@ object RollingHash {
     r
   }
 
-  /** codegen entry point */
   def hashBytes(bytes: Array[Byte]): Long = {
     var h = 0L
     var i = 0
@@ -70,7 +37,10 @@ object RollingHash {
     h
   }
 
+  /** the kernel both evaluation paths call */
+  def hash(s: UTF8String): Long = hashBytes(s.getBytes)
+
   /** Column API (Spark 4: Column <-> Expression via the sql-package bridge) */
   def rolling_hash(c: Column): Column =
-    GraftBridge.column(RollingHash(GraftBridge.expression(c)))
+    KernelCall.column(this, "rolling_hash", "hash", LongType, Seq(c))
 }

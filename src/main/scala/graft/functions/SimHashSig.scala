@@ -1,12 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.expressions.XXH64
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.LongType
 
 /** 64-bit SimHash of a string array in ONE compiled pass: each element is
   * xxhash64'd once (seed 42 — identical values to Spark's `xxhash64`
@@ -21,23 +18,6 @@ import org.apache.spark.sql.types._
   * (same shape as CosineSim/RollingHash), so the d8 signature stage
   * fuses into the scan with no per-row interpreted hand-off.
   */
-case class SimHashSig(child: Expression)
-    extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "sim_hash_sig"
-
-  override def nullSafeEval(input: Any): Any =
-    SimHashSig.signature(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.SimHashSig.signature($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHashSig =
-    copy(child = newChild)
-}
-
 object SimHashSig {
 
   /** shared interpreted + codegen kernel */
@@ -73,5 +53,5 @@ object SimHashSig {
   }
 
   def sim_hash_sig(c: Column): Column =
-    GraftBridge.column(SimHashSig(GraftBridge.expression(c)))
+    KernelCall.column(this, "sim_hash_sig", "signature", LongType, Seq(c))
 }

@@ -96,18 +96,18 @@ object CsvSink {
     def result: Iterator[InternalRow] = Iterator.empty
   }
 
-  /** K1 for several outputs in ONE action. `tagged` has the columns
-    * (k1: Long, k2: Long), then one line column (String) per output: a
-    * row's i-th line, unless null, goes to `outputs(i)._1` behind the
-    * header `outputs(i)._2`, each output's lines in (k1, k2) order (null
-    * k1 first, as `orderBy` ascending puts it). An output without lines
+  /** K1 for several outputs in ONE action. `tagged` has the column
+    * (k1: Long), then one line column (String) per output: a row's i-th
+    * line, unless null, goes to `outputs(i)._1` behind the header
+    * `outputs(i)._2`, each output's lines in k1 order (null k1 first, as
+    * `orderBy` ascending puts it). An output without lines
     * gets the header alone. The same action folds each task's rows into
     * a `side()` (columns after the line columns are the side's alone)
     * and returns every task's [[Side]] result rows; they are collected on
     * the driver, so keep them small. */
   def writeTagged(tagged: DataFrame, outputs: Seq[(String, Seq[String])],
       side: () => Side = () => NoSide): Array[InternalRow] =
-    withRuns(tagged.sortWithinPartitions("k1", "k2"), outputs.size, side) {
+    withRuns(tagged.sortWithinPartitions("k1"), outputs.size, side) {
       (runs, results) =>
         outputs.zipWithIndex.foreach { case ((target, header), i) =>
           writeLines(target, header, merge(runs(i)))
@@ -122,7 +122,7 @@ object CsvSink {
     // columns renamed by position, so no name (a sample name may hold
     // dots or backticks) is ever parsed as a reference
     val pos = df.toDF(df.columns.indices.map(i => s"_$i"): _*)
-    withRuns(pos.select(lit(0L).as("k1"), lit(0L).as("k2"),
+    withRuns(pos.select(lit(0L).as("k1"),
         line(pos.columns.toSeq.map(col)).as("line")), 1) {
       (runs, _) =>
         val lines = runs(0).iterator.flatMap(r =>
@@ -152,8 +152,8 @@ object CsvSink {
     w.flush()
   }
 
-  /** Run the ONE action that spills `tagged` (columns k1, k2, then `n`
-    * line columns; each partition already in (k1, k2) order) into run
+  /** Run the ONE action that spills `tagged` (column k1, then `n` line
+    * columns; each partition already in k1 order) into run
     * files, then hand `f` an output index's runs in partition order and
     * the tasks' side results. */
   private def withRuns[A](tagged: DataFrame, n: Int, side: () => Side = () => NoSide)(
@@ -193,7 +193,7 @@ object CsvSink {
   }
 
   /** executor side: one run file per output the partition has lines for,
-    * records (k1 is null, k1, k2, line length, line bytes); a run is
+    * records (k1 is null, k1, line length, line bytes); a run is
     * published under its final name only once complete, so a retried task
     * replaces its own runs */
   private def spill(dir: String, n: Int, rows: Iterator[InternalRow]): Unit = {
@@ -203,7 +203,7 @@ object CsvSink {
     try rows.foreach { r =>
       var o = 0
       while (o < n) {
-        if (!r.isNullAt(2 + o)) {
+        if (!r.isNullAt(1 + o)) {
           if (runs(o) == null) {
             val tmp = Paths.get(dir, s"o$o-p$part.${ctx.attemptNumber()}.tmp")
             runs(o) = tmp -> new DataOutputStream(
@@ -212,8 +212,7 @@ object CsvSink {
           val out = runs(o)._2
           out.writeBoolean(r.isNullAt(0))
           out.writeLong(if (r.isNullAt(0)) 0L else r.getLong(0))
-          out.writeLong(r.getLong(1))
-          val bytes = r.getUTF8String(2 + o).getBytes
+          val bytes = r.getUTF8String(1 + o).getBytes
           out.writeInt(bytes.length)
           out.write(bytes)
         }
@@ -232,7 +231,6 @@ object CsvSink {
     private var in: DataInputStream = _
     var k1Null = false
     var k1 = 0L
-    var k2 = 0L
     var line: Array[Byte] = _
     def advance(): Boolean = {
       if (in == null)
@@ -243,7 +241,6 @@ object CsvSink {
         case b =>
           k1Null = b != 0
           k1 = in.readLong()
-          k2 = in.readLong()
           line = new Array[Byte](in.readInt())
           in.readFully(line)
           true
@@ -252,12 +249,10 @@ object CsvSink {
     def close(): Unit = if (in != null) in.close()
   }
 
-  /** (k1 nulls first, k2) — the smallest comes first */
+  /** k1, nulls first — the smallest comes first */
   private val runOrder: Ordering[Run] = (a: Run, b: Run) => {
-    var c = java.lang.Boolean.compare(!a.k1Null, !b.k1Null)
-    if (c == 0) c = java.lang.Long.compare(a.k1, b.k1)
-    if (c == 0) c = java.lang.Long.compare(a.k2, b.k2)
-    c
+    val c = java.lang.Boolean.compare(!a.k1Null, !b.k1Null)
+    if (c == 0) java.lang.Long.compare(a.k1, b.k1) else c
   }
 
   /** k-way merge of sorted runs: every run open at once, one pending line

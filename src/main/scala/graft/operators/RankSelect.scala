@@ -4,8 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-import scala.jdk.CollectionConverters._
 
 /** Distributed order-statistic selection: the value at the k-th smallest
   * rank (1-based, duplicates counted) per group, WITHOUT a per-group
@@ -24,8 +22,8 @@ import scala.jdk.CollectionConverters._
   *      group-level);
   *   2-3. `PrefixScan`: one Sum of the counts per grp over `parts`
   *      range chunks of (grp, v) — one pinned checkpoint, ≤ parts ×
-  *      |grp| subtotals on the driver (metadata, not data), broadcast
-  *      prefix offsets, and per-group totals for `validateTargets`;
+  *      |grp| subtotals on the driver (metadata, not data) and
+  *      broadcast prefix offsets;
   *   4. running-count WITHIN each (pid, grp) slice (a window over one
   *      range chunk, so every sort is bounded by the range-partition
   *      size, and slices of the same group sort in parallel), add the
@@ -58,9 +56,7 @@ import scala.jdk.CollectionConverters._
   * range (k < 1 or k > group size) matches no histogram interval and
   * silently produces NO output row — by design (the caller owns rank
   * validity; q78/q88 derive k from the group sizes so the case cannot
-  * arise). Pass `validateTargets = true` to fail fast instead: one
-  * extra metadata-sized job joins the targets against the per-group
-  * totals and raises on any uncovered rank. Ties: with duplicates the
+  * arise). Ties: with duplicates the
   * k-th smallest VALUE is identical under any tie-breaking total order,
   * so callers whose nominal order adds unique-key tie-breaks (q88's
   * (p, ok, ln)) select the same value.
@@ -103,34 +99,25 @@ object RankSelect {
 
   def valueAtRanks(df: DataFrame, grp: String, v: String,
       targets: DataFrame, parts: Int = 32,
-      minDistributedBytes: Long = 32L << 20,
-      validateTargets: Boolean = false): DataFrame =
+      minDistributedBytes: Long = 32L << 20): DataFrame =
     valueAtRanksFromHist(histogram(df, grp, v), inputBytes(df), grp, v,
-      targets, parts, minDistributedBytes, validateTargets)
+      targets, parts, minDistributedBytes)
 
   /** rank selection over a pre-built histogram (see `histogram` for the
     * column contract). `sourceBytes` feeds the size gate — pass
     * `inputBytes(sourceDf)` (or 0 / Long.MaxValue to force a path). */
   def valueAtRanksFromHist(hist: DataFrame, sourceBytes: Long,
       grp: String, v: String, targets: DataFrame, parts: Int = 32,
-      minDistributedBytes: Long = 32L << 20,
-      validateTargets: Boolean = false): DataFrame = {
+      minDistributedBytes: Long = 32L << 20): DataFrame = {
     val running = if (sourceBytes < minDistributedBytes) {
       // small path: same interval math, one running-count window over
       // the duplicate-collapsed histogram
-      if (validateTargets) failOnUncovered(targets,
-        hist.groupBy(col(grp)).agg(sum(col("_c")).as("_tot")), grp)
       val w = Window.partitionBy(col(grp)).orderBy(col(v))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       hist.withColumn("_end", sum(col("_c")).over(w))
     } else {
       val scan = PrefixScan(hist, Seq(grp), Seq(col(v)),
         Seq(PrefixScan.Sum("_off", col("_c"))), Some(parts))
-      // group totals are already on the driver — reuse them
-      if (validateTargets) failOnUncovered(targets,
-        hist.sparkSession.createDataFrame(scan.totals.asJava, StructType(Seq(
-          hist.schema(grp), StructField("_tot", LongType, nullable = false)))),
-        grp)
       val w = scan.window
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       scan.frame.withColumn("_end", col("_off") + sum(col("_c")).over(w))
@@ -141,20 +128,5 @@ object RankSelect {
       .join(broadcast(targets), Seq(grp))
       .filter(col("k").between(col("_start"), col("_end")))
       .drop("_c", "_start", "_end")
-  }
-
-  /** raise on any target rank outside [1, group size] (or naming a group
-    * absent from the data) — one metadata-sized job over the broadcast
-    * targets, opt-in via `validateTargets` */
-  private def failOnUncovered(targets: DataFrame, totals: DataFrame,
-      grp: String): Unit = {
-    val bad = targets.join(totals, Seq(grp), "left")
-      .filter(col("_tot").isNull || col("k") < 1L || col("k") > col("_tot"))
-      .select(col(grp), col("k"), col("_tot"))
-      .limit(5).collect()
-    require(bad.isEmpty,
-      s"RankSelect: target rank(s) outside [1, group size]: " +
-        bad.map(r => s"(${r.get(0)}, k=${r.get(1)}, n=${r.get(2)})")
-          .mkString(", "))
   }
 }

@@ -123,13 +123,13 @@ object BigBugData {
   }
 
   /** The wide outputs' CSV lines (O1/O2), one row per organism row, as
-    * [[CsvSink.writeTagged]] reads them: k1 = taxID (the row order), k2 =
-    * 0, then for each array in `arrays` its line, [taxID, taxName, Total
+    * [[CsvSink.writeTagged]] reads them: k1 = taxID (the row order), then
+    * for each array in `arrays` its line, [taxID, taxName, Total
     * # of Reads] ++ the array's cells at `slots` (0-based), in that order;
     * then the `side` columns. */
   def wideLines(grid: DataFrame, arrays: Seq[String], slots: Seq[Int],
       side: Seq[Column] = Nil): DataFrame =
-    grid.select(Seq(col(TaxId).as("k1"), lit(0L).as("k2")) ++
+    grid.select(Seq(col(TaxId).as("k1")) ++
       arrays.zipWithIndex.map { case (a, v) =>
         CsvSink.line(Seq(col(TaxId), col(TaxName), col("total_reads_organism")) ++
           slots.map(i => element_at(col(a), i + 1))).as(s"line$v")
@@ -153,7 +153,7 @@ object BigBugData {
     val candidates = CsvSink.writeTagged(
       wideLines(out.grid, arrays, out.orderedSlots, TopHits.inputs),
       Seq(combinedPath -> header, rrpmPath -> header),
-      () => new TopHits.Heaps(grid, slots, k, at = 2 + arrays.size))
+      () => new TopHits.Heaps(grid, slots, k, at = 1 + arrays.size))
     val tophits = TopHits.schema(grid)
     CsvSink.writeLines(tophitsPath, tophits.fieldNames.toSeq, CsvSink.lines(tophits,
       TopHits.rank(candidates.toSeq, grid, out.samples, out.orderedSlots, k)))

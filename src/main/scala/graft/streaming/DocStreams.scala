@@ -123,7 +123,7 @@ object DocStreams {
       .distinct()
 
   /** the historical simhash band index — d44's pigeonhole decomposition
-    * (4 exact-match 16-bit bands over the compiled Md5SimHashWords
+    * (4 exact-match 16-bit bands over the compiled md5_simhash_words
     * signature) of every accepted doc, carrying its (hi, lo) words so a
     * probe verifies Hamming in the joined row. 4 rows per historical
     * doc, durable in a table (the historyHashes discipline: restart

@@ -45,9 +45,10 @@ class CatalogSpec extends SparkSuite {
       .collect().map(_.getLong(0)).toSeq
     assert(got == inputs.map(refHash))
     // interpreted eval path
-    val interp = inputs.map(s => RollingHash(
-      org.apache.spark.sql.catalyst.expressions.Literal(
-        org.apache.spark.unsafe.types.UTF8String.fromString(s)))
+    import org.apache.spark.sql.GraftBridge
+    val interp = inputs.map(s => GraftBridge.expression(RollingHash.rolling_hash(
+      GraftBridge.column(org.apache.spark.sql.catalyst.expressions.Literal(
+        org.apache.spark.unsafe.types.UTF8String.fromString(s)))))
       .eval(null).asInstanceOf[Long])
     assert(interp == inputs.map(refHash))
   }

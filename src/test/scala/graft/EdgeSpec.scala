@@ -489,22 +489,6 @@ class EdgeSpec extends SparkSuite {
       // interval filter must not emit the value twice
       assert(got.size == expect.size)
     }
-    // validateTargets: an out-of-range rank fails fast on both paths
-    // (silently-no-row remains the documented default)
-    val badTargets = Seq(("a", 999999L), ("zz", 1L)).toDF("grp", "k")
-    for (minBytes <- Seq(Long.MaxValue, 0L)) {
-      val e = intercept[IllegalArgumentException] {
-        graft.operators.RankSelect.valueAtRanks(df, "grp", "v",
-          badTargets, parts = 8, minDistributedBytes = minBytes,
-          validateTargets = true).collect()
-      }
-      assert(e.getMessage.contains("outside [1, group size]"))
-      // and valid targets pass the validation un-dropped
-      val ok = graft.operators.RankSelect.valueAtRanks(df, "grp", "v",
-        targets, parts = 8, minDistributedBytes = minBytes,
-        validateTargets = true).count()
-      assert(ok == expect.size)
-    }
     // size-gate fallback for non-file-backed leaves (the r9 fix): a
     // localCheckpointed frame's LogicalRDD leaf is not a
     // LogicalRelation, so the file-size sum would read 0 and silently

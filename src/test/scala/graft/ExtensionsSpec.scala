@@ -6,6 +6,12 @@ import graft.operators.SaltedAgg
 
 class ExtensionsSpec extends SparkSuite {
 
+  /** a kernel builder's expression evaluated on the interpreted path */
+  private def interpreted(c: org.apache.spark.sql.Column): Any =
+    org.apache.spark.sql.GraftBridge.expression(c).eval(null)
+  private def column(e: org.apache.spark.sql.catalyst.expressions.Expression) =
+    org.apache.spark.sql.GraftBridge.column(e)
+
   test("SQL callers can use rolling_hash / min_hash_sig / sim_hash_sig " +
       "after registration") {
     GraftExtensions.register(spark)
@@ -45,8 +51,8 @@ class ExtensionsSpec extends SparkSuite {
       org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.DoubleType))
     val interp = cases.map { case (a, b) =>
-      (Option(graft.functions.DotProduct(lit(a), lit(b)).eval(null)),
-        Option(graft.functions.CosineSim(lit(a), lit(b)).eval(null)))
+      (Option(interpreted(graft.functions.DotProduct.dot_product(column(lit(a)), column(lit(b))))),
+        Option(interpreted(graft.functions.CosineSim.cosine_sim(column(lit(a)), column(lit(b))))))
     }
     // NaN == NaN for this comparison (both paths must produce it)
     def same(x: Option[Any], y: Option[Any]) = (x, y) match {
@@ -84,9 +90,9 @@ class ExtensionsSpec extends SparkSuite {
       org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.StringType))
     val interp = cases.map { xs =>
-      val mh = graft.functions.MinHashSig(lit(xs), 8).eval(null)
+      val mh = interpreted(graft.functions.MinHashSig.min_hash_sig(column(lit(xs)), 8))
         .asInstanceOf[ArrayData].toLongArray().toSeq
-      val sh = graft.functions.SimHashSig(lit(xs)).eval(null)
+      val sh = interpreted(graft.functions.SimHashSig.sim_hash_sig(column(lit(xs))))
         .asInstanceOf[Long]
       (mh, sh)
     }
@@ -154,9 +160,9 @@ class ExtensionsSpec extends SparkSuite {
         org.apache.spark.sql.types.ArrayType(
           org.apache.spark.sql.types.StringType))
       val interp = cases.map { xs =>
-        (graft.functions.Md5MinHashKM(lit0(xs), 32).eval(null)
+        (interpreted(graft.functions.Md5Sketch.md5_minhash_km(column(lit0(xs)), 32))
           .asInstanceOf[ArrayData].toLongArray().toSeq,
-          graft.functions.Md5SimHashWords(lit0(xs)).eval(null)
+          interpreted(graft.functions.Md5Sketch.md5_simhash_words(column(lit0(xs))))
             .asInstanceOf[ArrayData].toLongArray().toSeq)
       }
       assert(interp == got.toSeq,
@@ -242,12 +248,11 @@ class ExtensionsSpec extends SparkSuite {
       def litD(xs: Seq[Double]) = Literal(
         ArrayData.toArrayData(xs.toArray), ArrayType(DoubleType))
       val interp = cases.map { dv =>
-        val row = graft.functions.PqEncode(litD(dv), cb, M, K, sub)
-          .eval(null).asInstanceOf[InternalRow]
+        val row = interpreted(graft.functions.PqKernels.pq_encode(column(litD(dv)), cb, M, K, sub)).asInstanceOf[InternalRow]
         val codes = row.getArray(0).toLongArray().toSeq
-        val adc = graft.functions.PqAdc(litD(q),
-          Literal(ArrayData.toArrayData(codes.toArray),
-            ArrayType(LongType)), cb, M, K, sub).eval(null)
+        val adc = interpreted(graft.functions.PqKernels.pq_adc(column(litD(q)),
+          column(Literal(ArrayData.toArrayData(codes.toArray),
+            ArrayType(LongType))), cb, M, K, sub))
           .asInstanceOf[Double]
         (codes, row.getDouble(1), adc)
       }
@@ -361,7 +366,7 @@ class ExtensionsSpec extends SparkSuite {
         if (x == null) null else x.doubleValue()).toArray[Any]),
       ArrayType(DoubleType))
     val goodDv = (0 until dims).map(d => java.lang.Double.valueOf(d * 0.01))
-    val interp = graft.functions.IvfSims(litArr(goodDv), cb, dims).eval(null)
+    val interp = interpreted(graft.functions.IvfKernels.ivf_sims(column(litArr(goodDv)), cb, dims))
       .asInstanceOf[ArrayData].toDoubleArray().toSeq
     val viaDf = emb.limit(1)
       .select(graft.functions.IvfKernels.ivf_sims(
@@ -369,11 +374,10 @@ class ExtensionsSpec extends SparkSuite {
           i => i.cast("double") * lit(0.01)), cb, dims))
       .collect().head.getAs[scala.collection.Seq[Double]](0).toSeq
     assert(interp == viaDf, "interpreted != codegen")
-    assert(graft.functions.IvfSims(
-      litArr(goodDv.take(dims - 1)), cb, dims).eval(null) == null)
-    assert(graft.functions.IvfSims(
-      litArr(goodDv.updated(3, null: java.lang.Double)), cb, dims)
-      .eval(null) == null)
+    assert(interpreted(graft.functions.IvfKernels.ivf_sims(
+      column(litArr(goodDv.take(dims - 1))), cb, dims)) == null)
+    assert(interpreted(graft.functions.IvfKernels.ivf_sims(
+      column(litArr(goodDv.updated(3, null: java.lang.Double))), cb, dims)) == null)
     // 2b) IvfProbes == the declarative zip_with→array_sort probe tail
     //     (and its element 1 == the array_position cell argmax) on real
     //     vectors, plus the same null edges
@@ -392,29 +396,25 @@ class ExtensionsSpec extends SparkSuite {
         s"vec ${r.getLong(0)} probes")
       assert(k.head == r.getLong(3), s"vec ${r.getLong(0)} cell argmax")
     }
-    val interpProbes = graft.functions.IvfProbes(litArr(goodDv), cb, dims, 4)
-      .eval(null).asInstanceOf[ArrayData].toLongArray().toSeq
+    val interpProbes = interpreted(graft.functions.IvfKernels.ivf_probes(column(litArr(goodDv)), cb, dims, 4)).asInstanceOf[ArrayData].toLongArray().toSeq
     val codegenProbes = emb.limit(1)
       .select(graft.functions.IvfKernels.ivf_probes(
         transform(sequence(lit(0), lit(dims - 1)),
           i => i.cast("double") * lit(0.01)), cb, dims, 4))
       .collect().head.getAs[scala.collection.Seq[Long]](0).toSeq
     assert(interpProbes == codegenProbes, "probes interpreted != codegen")
-    assert(graft.functions.IvfProbes(
-      litArr(goodDv.take(dims - 1)), cb, dims, 4).eval(null) == null)
-    assert(graft.functions.IvfProbes(
-      litArr(goodDv.updated(3, null: java.lang.Double)), cb, dims, 4)
-      .eval(null) == null)
+    assert(interpreted(graft.functions.IvfKernels.ivf_probes(
+      column(litArr(goodDv.take(dims - 1))), cb, dims, 4)) == null)
+    assert(interpreted(graft.functions.IvfKernels.ivf_probes(
+      column(litArr(goodDv.updated(3, null: java.lang.Double))), cb, dims, 4)) == null)
     // 2c) NaN-sim guard: a NaN element makes every dot product NaN —
     //     the two formulations rank NaN at opposite ends (array_sort
     //     puts -NaN last, Double.compare first), so BOTH kernels
     //     declare the row out of contract and return null, in the
     //     interpreted AND codegen paths alike
     val nanDv = goodDv.updated(3, java.lang.Double.valueOf(Double.NaN))
-    assert(graft.functions.IvfSims(litArr(nanDv), cb, dims)
-      .eval(null) == null, "interpreted IvfSims on NaN dv")
-    assert(graft.functions.IvfProbes(litArr(nanDv), cb, dims, 4)
-      .eval(null) == null, "interpreted IvfProbes on NaN dv")
+    assert(interpreted(graft.functions.IvfKernels.ivf_sims(column(litArr(nanDv)), cb, dims)) == null, "interpreted IvfSims on NaN dv")
+    assert(interpreted(graft.functions.IvfKernels.ivf_probes(column(litArr(nanDv)), cb, dims, 4)) == null, "interpreted IvfProbes on NaN dv")
     val nanDvCol = transform(sequence(lit(0), lit(dims - 1)),
       i => when(i === 3, lit(Double.NaN)).otherwise(i.cast("double") * lit(0.01)))
     val codegenNaN = emb.limit(1).select(
@@ -580,9 +580,8 @@ class ExtensionsSpec extends SparkSuite {
         if (x == null) null else x.doubleValue()).toArray[Any]),
       ArrayType(DoubleType))
     val goodDv = (0 until dims).map(d => java.lang.Double.valueOf(d * 0.01))
-    val interp = graft.functions.IvfProbes2(litArr(goodDv), supCb, cb16,
-        cs16, ci16, dims, 4, 2)
-      .eval(null).asInstanceOf[ArrayData].toLongArray().toSeq
+    val interp = interpreted(graft.functions.IvfKernels.ivf_probes2(column(litArr(goodDv)), supCb, cb16,
+        cs16, ci16, dims, 4, 2)).asInstanceOf[ArrayData].toLongArray().toSeq
     val viaCodegen = emb.limit(1)
       .select(graft.functions.IvfKernels.ivf_probes2(
         transform(sequence(lit(0), lit(dims - 1)),
@@ -590,14 +589,14 @@ class ExtensionsSpec extends SparkSuite {
         dims, 4, 2))
       .collect().head.getAs[scala.collection.Seq[Long]](0).toSeq
     assert(interp == viaCodegen, "probes2 interpreted != codegen")
-    assert(graft.functions.IvfProbes2(litArr(goodDv.take(dims - 1)),
-      supCb, cb16, cs16, ci16, dims, 4, 2).eval(null) == null)
-    assert(graft.functions.IvfProbes2(
-      litArr(goodDv.updated(3, null: java.lang.Double)),
-      supCb, cb16, cs16, ci16, dims, 4, 2).eval(null) == null)
-    assert(graft.functions.IvfProbes2(
-      litArr(goodDv.updated(3, java.lang.Double.valueOf(Double.NaN))),
-      supCb, cb16, cs16, ci16, dims, 4, 2).eval(null) == null,
+    assert(interpreted(graft.functions.IvfKernels.ivf_probes2(column(litArr(goodDv.take(dims - 1))),
+      supCb, cb16, cs16, ci16, dims, 4, 2)) == null)
+    assert(interpreted(graft.functions.IvfKernels.ivf_probes2(
+      column(litArr(goodDv.updated(3, null: java.lang.Double))),
+      supCb, cb16, cs16, ci16, dims, 4, 2)) == null)
+    assert(interpreted(graft.functions.IvfKernels.ivf_probes2(
+      column(litArr(goodDv.updated(3, java.lang.Double.valueOf(Double.NaN)))),
+      supCb, cb16, cs16, ci16, dims, 4, 2)) == null,
       "NaN dv must null the row (rank-consistency contract)")
     // the integer-square ladder both engines derive S from: smallest
     // power of two s with s*s >= C, C ∈ [8, 4096] → s ∈ [4, 64]
@@ -633,14 +632,14 @@ class ExtensionsSpec extends SparkSuite {
     assert(java.util.Arrays.equals(b.value, cb),
       "broadcast content must equal ivfFlatCentroids(C) verbatim")
     // probes2Col switches transport at the threshold: broadcast at
-    // BcastCMin, inline below it — asserted on the expression class so
+    // BcastCMin, inline below it — asserted on the kernel name so
     // a silent fallback to the 4-MiB-task-binary path can't reappear
     def exprOf(col: org.apache.spark.sql.Column) =
       org.apache.spark.sql.GraftBridge.expression(col)
     assert(exprOf(Approx.probes2Col(spark, c, Approx.ivfSmax, dims, 4))
-      .isInstanceOf[graft.functions.IvfProbes2B])
+      .prettyName == "ivf_probes2b")
     assert(exprOf(Approx.probes2Col(spark, c / 2, Approx.ivfSmax, dims, 4))
-      .isInstanceOf[graft.functions.IvfProbes2])
+      .prettyName == "ivf_probes2")
     // bit-identical outputs, both in ONE codegen'd projection
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .withColumn("dv", transform(col("embedding"), x => x.cast("double")))
@@ -662,9 +661,8 @@ class ExtensionsSpec extends SparkSuite {
         if (x == null) null else x.doubleValue()).toArray[Any]),
       ArrayType(DoubleType))
     val goodDv = (0 until dims).map(d => java.lang.Double.valueOf(d * 0.01))
-    val interp = graft.functions.IvfProbes2B(litArr(goodDv), superCb, b,
-        cs, ci, dims, 4, 2)
-      .eval(null).asInstanceOf[ArrayData].toLongArray().toSeq
+    val interp = interpreted(graft.functions.IvfKernels.ivf_probes2b(column(litArr(goodDv)), superCb, b,
+        cs, ci, dims, 4, 2)).asInstanceOf[ArrayData].toLongArray().toSeq
     val viaCodegen = emb.limit(1)
       .select(graft.functions.IvfKernels.ivf_probes2b(
         transform(sequence(lit(0), lit(dims - 1)),
@@ -672,12 +670,12 @@ class ExtensionsSpec extends SparkSuite {
         dims, 4, 2))
       .collect().head.getAs[scala.collection.Seq[Long]](0).toSeq
     assert(interp == viaCodegen, "probes2b interpreted != codegen")
-    assert(graft.functions.IvfProbes2B(litArr(goodDv.take(dims - 1)),
-      superCb, b, cs, ci, dims, 4, 2).eval(null) == null,
+    assert(interpreted(graft.functions.IvfKernels.ivf_probes2b(column(litArr(goodDv.take(dims - 1))),
+      superCb, b, cs, ci, dims, 4, 2)) == null,
       "ragged input must null")
-    assert(graft.functions.IvfProbes2B(
-      litArr(goodDv.updated(3, null: java.lang.Double)),
-      superCb, b, cs, ci, dims, 4, 2).eval(null) == null,
+    assert(interpreted(graft.functions.IvfKernels.ivf_probes2b(
+      column(litArr(goodDv.updated(3, null: java.lang.Double))),
+      superCb, b, cs, ci, dims, 4, 2)) == null,
       "null-holed input must null")
   }
 

@@ -625,9 +625,9 @@ class PipelineSpec extends SparkSuite {
     // k1, plus one null k1
     val k1 = coalesce(col("k1"), lit(-1L))
     val lines = spark.range(0, 20000, 1, 4)
-      .select(((col("id") * 7919) % 20000).as("k1"), lit(0L).as("k2"))
-      .union(spark.range(1).select(lit(null).cast("long"), lit(0L)))
-      .select(col("k1"), col("k2"),
+      .select(((col("id") * 7919) % 20000).as("k1"))
+      .union(spark.range(1).select(lit(null).cast("long")))
+      .select(col("k1"),
         concat(coalesce(col("k1").cast("string"), lit("null")) +: lit(",") +:
           (0 until 6).map(i => sha2((k1 * 6 + i).cast("string"), 256)): _*)
           .as("line"))
